@@ -12,7 +12,8 @@ object Bench {
     val warmDir = "/root/testdata/sf0.001"
     if (new java.io.File(warmDir).isDirectory && warmDir != sfDir)
       SparkEntry.queries.foreach { case (_, fn) =>
-        try fn(spark, warmDir).count() catch { case _: Throwable => () }
+        try Scope.open(_ => fn(spark, warmDir).count())
+        catch { case _: Throwable => () }
       }
     // Median of `reps` INTERLEAVED catalogue passes: single-run numbers on
     // a shared box swing 4-6x with co-tenant load. Back-to-back reps of
@@ -28,27 +29,23 @@ object Bench {
     val failed = scala.collection.mutable.Set[String]()
     for (_ <- 1 to reps; name <- names) {
       val fn = SparkEntry.queries(name)
-      // operators may persist signature frames; drop them between runs
-      // so earlier runs' caches don't pressure (or serve) later ones.
-      // ALSO drop the module-level operator memos (verified minhash
-      // pairs, ANN cell models): they deliberately survive clearCache
-      // for in-production reuse, but a timed bench run must compute
-      // from the parquet inputs alone — a rep served by a previous
-      // rep's fit would understate the gate (r16 honesty fix).
-      spark.sharedState.cacheManager.clearCache()
-      graft.operators.Dedup.clearPairsMemo()
-      graft.operators.Similarity.clearCellModels()
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() }
-      catch { case e: Throwable =>
-        // name the failure: r16's driver bench recorded 117 silent -1s
-        // with zero diagnostic — a swallowed exception class/message is
-        // the difference between "box hiccup" and "engine bug"
-        failed += name
-        System.err.println(s"[bench] FAIL $name: " +
-          s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(300)}")
+      // one scope per gate run: its cached frames and memos (verified
+      // minhash pairs, ANN cell models) die with the run, so a rep is
+      // never served by a previous rep's fit (r16 honesty fix). The
+      // scope closes after the clock stops.
+      Scope.open { _ =>
+        val t0 = System.nanoTime()
+        try { fn(spark, sfDir).count() }
+        catch { case e: Throwable =>
+          // name the failure: r16's driver bench recorded 117 silent -1s
+          // with zero diagnostic — a swallowed exception class/message is
+          // the difference between "box hiccup" and "engine bug"
+          failed += name
+          System.err.println(s"[bench] FAIL $name: " +
+            s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(300)}")
+        }
+        timesByQuery(name) ::= (System.nanoTime() - t0) / 1e9
       }
-      timesByQuery(name) ::= (System.nanoTime() - t0) / 1e9
     }
     val results = names.map { name =>
       val ts = timesByQuery(name).sorted

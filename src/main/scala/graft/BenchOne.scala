@@ -11,10 +11,7 @@ object BenchOne {
     val spark = Sessions.local()
     val names = a(0).split(",").toSeq
     val dir = if (a.length > 1) a(1) else "/root/testdata/sf0.1"
-    for (r <- 1 to 3; n <- names) {
-      spark.sharedState.cacheManager.clearCache()
-      graft.operators.Dedup.clearPairsMemo()
-      graft.operators.Similarity.clearCellModels()
+    for (r <- 1 to 3; n <- names) Scope.open { _ =>
       val t0 = System.nanoTime()
       SparkEntry.queries(n)(spark, dir).count()
       println(f"[benchone] $n rep$r ${(System.nanoTime() - t0) / 1e9}%.2f s")

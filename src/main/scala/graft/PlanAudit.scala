@@ -179,23 +179,6 @@ object PlanAudit {
     math.max(1L, math.min(par.toLong, (bytes + perTask - 1) / perTask)).toInt
   }
 
-  /** Run `body` with a session conf temporarily overridden — the
-    * single-threaded wrapper the fit paths use to turn AQE off around
-    * their driver-loop jobs (dozens of tiny collect jobs over persisted
-    * KB-scale frames: adaptive re-planning is pure overhead there,
-    * measured ~0.2 s/job at sf0.1). NOT thread-safe — callers wrap the
-    * whole concurrent region, never the per-thread work. */
-  def withConf[T](spark: SparkSession, key: String, value: String)(
-      body: => T): T = {
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   /** Dev tool: dump formatted physical plans for representative gates. */
   def main(args: Array[String]): Unit = {
     val spark = Sessions.local()

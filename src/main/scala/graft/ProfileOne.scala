@@ -49,15 +49,14 @@ object ProfileOne {
       catch { case _: Throwable => () }
     Thread.sleep(500)
     for (n <- names) {
-      spark.sharedState.cacheManager.clearCache()
-      graft.operators.Dedup.clearPairsMemo()
-      graft.operators.Similarity.clearCellModels()
       jobs.synchronized { jobs.clear(); taskTimeMs = 0L }
       val cg0 = codegenCount.getCount
       val cgMs0 = codegenCount.getSnapshot.getMean * codegenCount.getCount
-      val t0 = System.nanoTime()
-      SparkEntry.queries(n)(spark, dir).count()
-      val wall = (System.nanoTime() - t0) / 1e9
+      val wall = Scope.open { _ =>
+        val t0 = System.nanoTime()
+        SparkEntry.queries(n)(spark, dir).count()
+        (System.nanoTime() - t0) / 1e9
+      }
       Thread.sleep(300) // let listener events drain
       val (snap, tt) = jobs.synchronized { (jobs.toList, taskTimeMs) }
       val jobSum = snap.map(j => math.max(0L, j.end - j.start)).sum / 1e3

@@ -44,7 +44,7 @@ object RunHb {
       java.nio.file.Paths.get(args(0))), "UTF-8")
     val program = HbParser.parse(text)
     val spark = Sessions.local()
-    try {
+    try Scope.open { _ =>
       val source = Providers.fromHeader(spark, program.header, dataDir)
       val result = Graft.run(program, source)
       if (format == "html") {

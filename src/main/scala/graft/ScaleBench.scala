@@ -34,15 +34,14 @@ object ScaleBench {
       spark.conf.set("spark.sql.files.maxPartitionBytes", b.toString))
     // warmup pass (janino/codegen, file listing) at the small sf
     names.foreach { n =>
-      try SparkEntry.queries(n)(spark, dirs.head).count()
+      try Scope.open(_ => SparkEntry.queries(n)(spark, dirs.head).count())
       catch { case e: Throwable =>
         System.err.println(s"[scale] warmup $n failed: ${e.getMessage}")
       }
     }
     val times = scala.collection.mutable
       .Map[(String, String), List[Double]]().withDefaultValue(Nil)
-    for (_ <- 1 to reps; n <- names; d <- dirs) {
-      spark.sharedState.cacheManager.clearCache()
+    for (_ <- 1 to reps; n <- names; d <- dirs) Scope.open { _ =>
       val t0 = System.nanoTime()
       try SparkEntry.queries(n)(spark, d).count()
       catch { case e: Throwable =>

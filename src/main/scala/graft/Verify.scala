@@ -17,9 +17,9 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      spark.sharedState.cacheManager.clearCache()
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      // one scope per gate: what the gate caches dies with its write
+      try Scope.open(_ => fn(spark, sfDir).coalesce(1).write
+        .mode("overwrite").parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }

@@ -193,17 +193,12 @@ object Configurations {
       memo.getOrElseUpdate(name, {
         val c = configs.getOrElse(name,
           throw new NoSuchElementException(s"no configuration '$name'"))
-        def compute: DataFrame = {
-          // label the EAGER jobs a configuration fires while it builds
-          // (statement fits, decon gram collects, scrub digests) with
-          // the configuration name (guide §1.5) — the profile/UI view
-          // of a multi-stage pipeline is unreadable without it
-          val sc0 = spark.sparkContext
-          val prevDesc = sc0.getLocalProperty("spark.job.description")
-          sc0.setJobDescription(s"hb conf:$name")
-          try computeInner(configs, name, visiting)
-          finally sc0.setJobDescription(prevDesc)
-        }
+        // label the EAGER jobs a configuration fires while it builds
+        // (statement fits, decon gram collects, scrub digests) with
+        // the configuration name (guide §1.5) — the profile/UI view
+        // of a multi-stage pipeline is unreadable without it
+        def compute: DataFrame = graft.Scope.labeled(s"hb conf:$name")(
+          computeInner(configs, name, visiting))
         def computeInner(configs: Map[String, Conf], name: String,
             visiting: Set[String]): DataFrame = {
           val c = configs(name)
@@ -247,7 +242,9 @@ object Configurations {
             lc.getOrCompute(key)(compute)
           case None => compute
         }
-        if (truncatePlans) resolved.localCheckpoint(false) else resolved
+        if (truncatePlans)
+          graft.Scope.checkpoint(resolved, s"hb conf:$name", eager = false)
+        else resolved
       })
     }
   }

@@ -40,6 +40,16 @@ import Ast._
   * windows are keyed (no single-partition WindowExec anywhere); once an
   * aggregation consumes them (post-`group by` frames are small) windows
   * fall back to the faithful whole-frame form.
+  *
+  * Materialisation lifetime ([[graft.Scope]]): `run` returns a lazy
+  * frame, but fit-bearing statements fire their fits while it builds,
+  * and the output action belongs to the caller. So `run` joins the
+  * scope that encloses it. Fit inputs and emit layouts are cached in
+  * that scope and released when the caller closes it after its action
+  * (Verify and Bench open one per gate, the Gateway one per request).
+  * With no scope open they are not cached at all and recompute per
+  * consumer. Operator intermediates live in the operator's own nested
+  * scope and are released before the statement returns.
   */
 object Engine {
 
@@ -135,50 +145,29 @@ object Engine {
   private def spread(df: DataFrame): DataFrame =
     graft.PlanAudit.repartitionIfLayoutBound(df)
 
-  /** In-run persist for a frame that an EAGER statement fit (or a
-    * two-pass emit layout) is about to consume alongside the
-    * statement's own output: each eager consumer otherwise re-executes
-    * the frame's whole upstream chain (guide §6 scan reuse — r16
-    * profiled hb_pretrain_e2e's curation chain executing 3×; the
-    * dedup→split→encode pipelines pay the same shape). Only frames
-    * whose plan carries a shuffle or broadcast build are persisted —
-    * a scan-narrow frame recomputes for one cheap scan and caching it
-    * would only pressure storage. `force = true` persists regardless
-    * (the emit layouts: their input embeds the encode projection,
-    * expensive per row yet exchange-free). Opt out with
-    * `graft.engine.persistFitInputs=false` (e.g. a session whose
-    * chains are huge relative to executor storage and cheap to
-    * recompute). Persisted frames stay registered until the session's
-    * cache clear (Verify/Bench clear per gate) — a long-lived
-    * production session should unpersist gate outputs it keeps. */
-  private def fitInput(df: DataFrame, force: Boolean = false): DataFrame = {
-    val on = df.sparkSession.conf
-      .get("graft.engine.persistFitInputs", "true").toBoolean
-    if (!on) return df
-    def expensive: Boolean =
-      try df.queryExecution.sparkPlan.collectFirst {
-        case e: org.apache.spark.sql.execution.exchange.Exchange => e
-      }.isDefined
-      catch { case _: Throwable => false }
-    if (force || expensive)
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else df
-  }
-
-  /** Fill a persisted frame BEFORE an action whose plan reads it from
-    * two branches (the emit layout ⋈ placement shape): AQE materializes
-    * independent leaf stages concurrently, and each branch reaching the
-    * UNFILLED cache recomputes the whole upstream chain — the encode
-    * projection twice, exactly what the persist was meant to prevent.
-    * One labeled count builds the cache once. (Fit-bearing statements
-    * need no fill: the eager fit collect is the first consumer and
-    * fills the cache before the output action exists.) */
-  private def fillCache(df: DataFrame): DataFrame = {
-    val sc0 = df.sparkSession.sparkContext
-    val prev = sc0.getLocalProperty("spark.job.description")
-    sc0.setJobDescription("hb emit: materialize encoded frame")
-    try df.count() finally sc0.setJobDescription(prev)
-    df
+  /** The input of an EAGER statement fit, cached in the enclosing
+    * [[graft.Scope]] when its chain shuffles: the fit and the
+    * statement's own output both consume it, and each eager consumer
+    * otherwise re-executes the whole upstream chain (guide §6 scan reuse
+    * — r16 profiled hb_pretrain_e2e's curation chain executing 3×). A
+    * scan-narrow chain recomputes for one cheap scan, so it is left
+    * alone. "Shuffles" is read off the OPTIMIZED LOGICAL plan — an
+    * aggregate, join, window, repartition or global sort — because the
+    * physical exchanges of aggregates and joins only appear after
+    * EnsureRequirements, and planning that far per statement would cost
+    * a second physical planning. With no scope open the frame is not
+    * cached: its consumers outlive this call, and only the caller that
+    * runs the output action can say when they are done. */
+  private def fitInput(df: DataFrame, kind: String): DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join,
+      RepartitionOperation, Sort, Window => WindowNode}
+    val shuffles = df.queryExecution.optimizedPlan.exists {
+      case _: Aggregate | _: Join | _: WindowNode | _: RepartitionOperation =>
+        true
+      case s: Sort => s.global
+      case _ => false
+    }
+    if (shuffles) graft.Scope.cache(df, s"hb $kind: fit input") else df
   }
 
   def applyStatement(f: HbFrame, st: Statement): HbFrame = st match {
@@ -449,7 +438,8 @@ object Engine {
       // frame key (row set and key unchanged); the fit pass and the
       // encode output share one persisted input when the chain is
       // shuffle-bearing (fitInput)
-      f.copy(df = graft.operators.Vocab.fitEncode(fitInput(f.df), KEY, c, n))
+      f.copy(df = graft.operators.Vocab.fitEncode(fitInput(f.df, "encode"),
+        KEY, c, n))
 
     case TopBy(k, sc, st) =>
       // stratified selection keyed on the frame index (the tie-break);
@@ -471,7 +461,7 @@ object Engine {
       // frequency-truncation knob (BpeSpec pins the property; the
       // library-level t_bpe_* gates keep exercising the distributed
       // loop). Same for every statement fit below.
-      val bpeBase = fitInput(f.df)
+      val bpeBase = fitInput(f.df, "bpe")
       f.copy(df = spread(bpeBase).withColumn("bpe",
         graft.operators.Bpe.encodeColFast(
           col(c), graft.operators.Bpe.fitLocal(bpeBase, c, n,
@@ -480,7 +470,7 @@ object Engine {
     case WordPieceEnc(c, n) =>
       // likelihood-ranked fit (bounded driver rows) + the native greedy
       // encode as a pure narrow map — no join, row set unchanged
-      val wpBase = fitInput(f.df)
+      val wpBase = fitInput(f.df, "wordpiece")
       // one word-frame pass drives the merge fit AND the alphabet
       val (_, vocab) = graft.operators.WordPiece
         .fitLocalWithVocab(wpBase, c, n, minCount = 1L)
@@ -494,7 +484,7 @@ object Engine {
     case UnigramEnc(c, n) =>
       // candidate fit + one Viterbi-EM round (bounded model rows), then
       // the native compiled DP encode as a pure narrow map
-      val ugBase = fitInput(f.df)
+      val ugBase = fitInput(f.df, "unigram")
       val model = graft.operators.Unigram.fitEm(ugBase, c, n)
       f.copy(df = spread(ugBase)
         .withColumn("__ups", graft.operators.Unigram.encodeCol(col(c), model))
@@ -506,7 +496,7 @@ object Engine {
     case BpeBytesEnc(c, n) =>
       // byte-level twin: case/whitespace-preserving, lossless under
       // `decode bytes`; same bounded-fit + narrow-encode shape
-      val bbBase = fitInput(f.df)
+      val bbBase = fitInput(f.df, "bpe bytes")
       f.copy(df = spread(bbBase).withColumn("bpe",
         graft.operators.Bpe.encodeBytesCol(col(c),
           graft.operators.Bpe.fitLocal(bbBase, c, n, minCount = 1L,
@@ -529,7 +519,7 @@ object Engine {
       // from the fit corpus (segmentedCorpus — tag text contributes
       // zero piece statistics) and each occurrence ONE dedicated id
       // above the sorted piece layout
-      val ugiBase = fitInput(f.df)
+      val ugiBase = fitInput(f.df, "unigram ids")
       val ugFit = graft.functions.SpecialTokens
         .segmentedCorpus(ugiBase, c, tags)
       val model = graft.operators.Unigram.fitEm(ugFit, c, n)
@@ -549,7 +539,7 @@ object Engine {
       // vocabulary, emitted as vocabFrame-layout id arrays; `tags`
       // reserve specials exactly as `bpe ids`' clause (fit-excluded,
       // dedicated ids N+1+k, case-exact through the lowercasing walk)
-      val wpiBase = fitInput(f.df)
+      val wpiBase = fitInput(f.df, "wordpiece ids")
       val wpFit = graft.functions.SpecialTokens
         .segmentedCorpus(wpiBase, c, tags)
       // one word-frame pass drives the merge fit AND the alphabet
@@ -576,7 +566,7 @@ object Engine {
       // later `decode ids` statement — can export/round-trip/decode
       // the EXACT fit without a second training pass — schema
       // inspection costs zero Spark jobs.
-      val biBase = fitInput(f.df)
+      val biBase = fitInput(f.df, "bpe ids")
       val merges = graft.operators.Bpe.fitLocal(biBase, c, n,
         minCount = 1L, byteLevel = true, specials = tags)
       f.copy(df = spread(biBase)
@@ -617,11 +607,12 @@ object Engine {
         require(!f.df.columns.contains(c),
           s"sft: frame already has a '$c' column — rename it first"))
       val sftSp = graft.operators.Sft.Specials
-      // force-persist: the rendered projection is consumed by the eager
-      // byte fit AND every downstream pass, and is expensive per row
-      // even when the chain carries no exchange
-      val renderedDf = fitInput(spread(f.df).withColumn("rendered",
-        graft.operators.Sft.render(col(pc), col(rc))), force = true)
+      // cached whatever the chain: the rendered projection is consumed
+      // by the eager byte fit AND every downstream pass, and is
+      // expensive per row even when the chain carries no exchange
+      val renderedDf = graft.Scope.cache(spread(f.df).withColumn(
+        "rendered", graft.operators.Sft.render(col(pc), col(rc))),
+        "hb sft: rendered frame")
       val sftMerges = graft.operators.Bpe.fitLocal(renderedDf,
         "rendered", n, minCount = 1L, byteLevel = true, specials = sftSp)
       f.copy(df = renderedDf
@@ -759,13 +750,13 @@ object Engine {
       // layout over the id COUNTS, then the spanning emit; the DSL
       // surface renders id arrays as space-joined strings (the `bpe`
       // convention — row-printable, oracle-comparable)
-      // force-persist: the layout pass (id counts) and the placement
-      // join both consume the frame, whose plan embeds the per-row
-      // encode projection — without the persist the encode runs once
-      // per pass (guide §8: decide with small rows, but re-attaching
-      // must not recompute the heavy rows)
-      val withN = fillCache(fitInput(
-        f.df.withColumn("__n", size(col(c))), force = true))
+      // cached whatever the chain: the layout pass (id counts) and the
+      // placement join both consume the frame, whose plan embeds the
+      // per-row encode projection — uncached the encode runs once per
+      // pass (guide §8: decide with small rows, but re-attaching must
+      // not recompute the heavy rows)
+      val withN = graft.Scope.cache(f.df.withColumn("__n", size(col(c))),
+        "hb emit: encoded frame")
       val layout = graft.operators.Packing.packedLayout(withN, KEY,
         "__n", budget, shards)
       val placed = layout.join(withN.select(col(KEY), col(c)), KEY)
@@ -794,9 +785,9 @@ object Engine {
       // the artifact as per-sequence `loss_bounds` when present —
       // bin_offset + loss_start per doc, exact under aligned bins
       val hasLoss = f.df.columns.contains("loss_start")
-      // force-persist + fill — see EmitPacked
-      val withN = fillCache(fitInput(
-        f.df.withColumn("__n", size(col(c))), force = true))
+      // cached whatever the chain — see EmitPacked
+      val withN = graft.Scope.cache(f.df.withColumn("__n", size(col(c))),
+        "hb emit: encoded frame")
       val layout = graft.operators.Packing.binLayout(withN, KEY, "__n",
         budget, shards, decreasing = true, bestFit = true)
       val carried = col(KEY) +: col(c) +:

@@ -179,7 +179,7 @@ object Bpe {
     // reliable) checkpointing trades executor-loss recovery for speed —
     // right for a driver-bounded iterative fit; a multi-tenant
     // production cluster would use checkpoint() on a shared path.
-    var vocab = wordFrame(df, textCol).localCheckpoint(true)
+    var vocab = graft.Scope.checkpoint(wordFrame(df, textCol), "bpe: words")
     val merges = Seq.newBuilder[Merge]
     var rank = 1
     var done = false
@@ -199,9 +199,9 @@ object Bpe {
         case Some(row) =>
           val m = Merge(rank, row.getString(0), row.getString(1))
           merges += m
-          vocab = vocab.select(col("__w"), col("__f"),
-            applyMerge(col("__syms"), m.left, m.right).as("__syms"))
-            .localCheckpoint(true)
+          vocab = graft.Scope.checkpoint(vocab.select(col("__w"), col("__f"),
+            applyMerge(col("__syms"), m.left, m.right).as("__syms")),
+            s"bpe: round $rank")
           rank += 1
       }
     }
@@ -264,10 +264,10 @@ object Bpe {
   private def fitDeltaFrom(vocab0: DataFrame, nMerges: Int,
       minCount: Long): Seq[Merge] = {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
-    var vocab = vocab0.localCheckpoint(true)
-    var counts = pairRows(vocab)
-      .groupBy(col("__l"), col("__r")).agg(sum(col("__f")).as("__c"))
-      .localCheckpoint(true)
+    var vocab = graft.Scope.checkpoint(vocab0, "bpe: words")
+    var counts = graft.Scope.checkpoint(pairRows(vocab)
+      .groupBy(col("__l"), col("__r")).agg(sum(col("__f")).as("__c")),
+      "bpe: pair counts")
     val merges = Seq.newBuilder[Merge]
     var rank = 1
     var done = false
@@ -300,17 +300,16 @@ object Bpe {
               .as("__p"))
             .select(col("__p.__l").as("__l"), col("__p.__r").as("__r"),
               col("__p.__f").as("__f"))
-          val nextCounts = counts
+          val nextCounts = graft.Scope.checkpoint(counts
             .select(col("__l"), col("__r"), col("__c").as("__f"))
             .union(deltas)
             .groupBy(col("__l"), col("__r"))
             .agg(sum(col("__f")).as("__c"))
-            .filter(col("__c") > 0)
-            .localCheckpoint(true)
-          val nextVocab = vocab.select(col("__w"), col("__f"),
-            when(hp, applyMerge(col("__syms"), m.left, m.right))
-              .otherwise(col("__syms")).as("__syms"))
-            .localCheckpoint(true)
+            .filter(col("__c") > 0), s"bpe: round $rank counts")
+          val nextVocab = graft.Scope.checkpoint(vocab.select(col("__w"),
+            col("__f"), when(hp, applyMerge(col("__syms"), m.left, m.right))
+              .otherwise(col("__syms")).as("__syms")),
+            s"bpe: round $rank words")
           counts = nextCounts; vocab = nextVocab
           rank += 1
       }

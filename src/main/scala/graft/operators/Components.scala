@@ -42,33 +42,39 @@ object Components {
     *
     * Execution strategy is size-adaptive (the broadcast-join
     * discipline): when the edge list fits the driver
-    * (`graft.cc.driverMaxEdges`, default 1M pairs ≈ tens of MB — the
-    * same bounded-collect class as a broadcast relation), one
+    * (`graft.cc.driverMaxEdges`, default 1M pairs — about 100–200 MB of
+    * collected boxed rows on the driver, the same bounded-collect class
+    * as a broadcast relation), one
     * union-find pass on the driver replaces the O(log n) iterated
     * shuffle rounds — a verified near-dup edge list is bounded by the
     * corpus's TRUE duplicate rate, so in practice this is the common
     * case even at large corpora; above the bound the distributed
     * pointer-jumping loop runs unchanged. Both paths compute the same
     * pure function (min reachable id), asserted in ComponentsSpec. The
-    * size probe is one `limit(n+1)` collect of the (long, long) pairs —
-    * when under the bound, that collect IS the input to union-find, so
-    * the probe costs no extra pass. */
+    * edge frame is cached in the operator's scope before the size probe
+    * (one `limit(n+1)` collect of the (long, long) pairs): under the
+    * bound that collect IS the input to union-find, and above it the
+    * distributed loop reads the cached edges instead of running the
+    * edge plan a second time. */
   def connectedComponents(edges: DataFrame, aCol: String, bCol: String,
-      out: String = "component", maxRounds: Int = 40): DataFrame = {
-    val e0 = edges
+      out: String = "component", maxRounds: Int = 40): DataFrame =
+      graft.Scope.nested { sc =>
+    val e0 = sc.cache(edges
       .select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))
       .filter(col("u").isNotNull && col("v").isNotNull &&
-        col("u") =!= col("v"))
+        col("u") =!= col("v")), "cc: edges")
     val maxDriverEdges = edges.sparkSession.conf
       .get("graft.cc.driverMaxEdges", (1L << 20).toString).toLong
-    if (maxDriverEdges > 0 && maxDriverEdges < Int.MaxValue) {
-      val probe = e0.limit(maxDriverEdges.toInt + 1).collect()
-      if (probe.length <= maxDriverEdges) {
-        return driverComponents(edges.sparkSession,
-          probe.map(r => (r.getLong(0), r.getLong(1))), out)
-      }
+    val probe =
+      if (maxDriverEdges > 0 && maxDriverEdges < Int.MaxValue)
+        Some(e0.limit(maxDriverEdges.toInt + 1).collect())
+          .filter(_.length <= maxDriverEdges)
+      else None
+    probe match {
+      case Some(es) => driverComponents(edges.sparkSession,
+        es.map(r => (r.getLong(0), r.getLong(1))), out)
+      case None => distributedComponents(e0, out, maxRounds)
     }
-    distributedComponents(e0, out, maxRounds)
   }
 
   /** Driver union-find over a bounded edge array → (id, minimum
@@ -111,12 +117,11 @@ object Components {
     // twice (the pointer jump), so an un-truncated logical plan doubles
     // per round and analysis/explain go exponential long before the data
     // does (measured: OOM at ~10 rounds on a 200-node path)
-    val sym = e0.union(e0.select(col("v").as("u"), col("u").as("v")))
-      .distinct()
-      .localCheckpoint(true)
-    var labels = sym.select(col("u").as("id")).distinct()
-      .withColumn("lbl", col("id"))
-      .localCheckpoint(true)
+    val sym = graft.Scope.checkpoint(
+      e0.union(e0.select(col("v").as("u"), col("u").as("v"))).distinct(),
+      "cc: symmetric edges")
+    var labels = graft.Scope.checkpoint(sym.select(col("u").as("id"))
+      .distinct().withColumn("lbl", col("id")), "cc: labels")
     var round = 0
     var changed = 1L
     while (changed > 0 && round < maxRounds) {
@@ -134,12 +139,11 @@ object Components {
           least(col("lbl"), coalesce(col("nl"), col("lbl"))).as("lbl"))
       // (2) pointer jump: lbl''(u) = lbl'(lbl'(u)) — label values are
       // node ids, so the lookup is a self-join; chains halve every round
-      val next = l1.as("x")
+      val next = graft.Scope.checkpoint(l1.as("x")
         .join(l1.select(col("id").as("jid"), col("lbl").as("jl")).as("y"),
           col("x.lbl") === col("jid"), "left")
         .select(col("x.id").as("id"), col("x.ol").as("ol"),
-          coalesce(col("jl"), col("x.lbl")).as("lbl"))
-        .localCheckpoint(true)
+          coalesce(col("jl"), col("x.lbl")).as("lbl")), s"cc: round $round")
       changed = next.filter(col("lbl") =!= col("ol")).count()
       labels = next.select("id", "lbl")
       round += 1

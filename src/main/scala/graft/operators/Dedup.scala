@@ -11,55 +11,22 @@ import org.apache.spark.sql.types._
   * judged duplicates of a lower-id row. Pair-level output is available
   * via the `*Pairs`/candidates forms.
   *
-  * Cache lifecycle: every operator that persists an intermediate
-  * signature frame eagerly materializes its (small) drop/pair list via
-  * `localCheckpoint` and unpersists the signatures before returning —
-  * composing several dedups in one job leaves nothing registered in the
-  * CacheManager. Scale design per operator in SCALE.md.
+  * Cache lifecycle: signature frames are (a) expensive to compute —
+  * Catalyst happily inlines the HOF signature expressions into every
+  * reference site (measured 128 copies of the token hashing in the
+  * pre-barrier simhash plan) — and (b) referenced twice by the candidate
+  * self-joins, which get no ReusedExchange. So every operator caches its
+  * compact (id + fixed-width signature) frames in a nested
+  * [[graft.Scope]] — filled once before the self-join's concurrent leaf
+  * stages read them (r17: d_ngram_jaccard profiled 4 concurrent
+  * recomputations of the same shingle+minhash pass unfilled) —
+  * checkpoints its small drop/pair list, and releases the signatures on
+  * return: composing several dedups in one job leaves nothing registered
+  * in the CacheManager (asserted in DedupSpec). Scale design per
+  * operator in SCALE.md.
   */
 object Dedup {
-
-  /** Signature frames are (a) expensive to compute — Catalyst happily
-    * inlines the HOF signature expressions into every reference site,
-    * recomputing them per reference (measured 128 copies of the token
-    * hashing in the pre-barrier simhash plan) — and (b) referenced twice
-    * by the candidate self-joins, which get no ReusedExchange. Caching
-    * the tiny signature relation (id + fixed-width signature, a few
-    * hundred bytes/row regardless of document size) fixes both: one
-    * computation, both join branches read the InMemoryRelation. */
-  private def cached(df: DataFrame): DataFrame =
-    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-  /** Eagerly materialize `result` (always a small id/pair frame — never
-    * the survivor set itself), then release the signature caches it was
-    * computed from. The checkpoint blocks live outside the CacheManager
-    * and are GC-cleaned, so operators leave no persisted relations
-    * behind (asserted in DedupSpec). */
-  private def materializeThenRelease(result: DataFrame,
-      sigs: DataFrame*): DataFrame = {
-    val out = result.localCheckpoint(true)
-    sigs.foreach(_.unpersist(false))
-    out
-  }
-
-  /** Fill a cached signature frame BEFORE the candidate self-join
-    * consumes it (r17, guide §2.6 flip side): AQE materializes a
-    * query's independent leaf stages CONCURRENTLY, and every branch of
-    * the band self-join + verify joins that reaches an UNFILLED cache
-    * recomputes the whole signature projection — d_ngram_jaccard
-    * profiled 4 concurrent ~0.8 s stage jobs totalling 53 s of task
-    * time, four computations of the same shingle+minhash pass. One
-    * labeled count() builds the cache once (counting a frame derived
-    * from another cached frame fills BOTH); every later branch reads
-    * blocks. Cost: one small job; the frames are compact (id +
-    * fixed-width signature) at any corpus size. */
-  private def fill(df: DataFrame, what: String): DataFrame = {
-    val sc0 = df.sparkSession.sparkContext
-    val prev = sc0.getLocalProperty("spark.job.description")
-    sc0.setJobDescription(s"dedup: materialize $what")
-    try df.count() finally sc0.setJobDescription(prev)
-    df
-  }
+  import graft.Scope
 
   /** Normalized-text digest (the exact-dedup identity). */
   def fingerprint(textCol: Column): Column =
@@ -182,64 +149,43 @@ object Dedup {
     // signature frame (id + numPerms longs) needs caching for the
     // candidate self-join
     val sh = shingleFrame(df, textCol, idCol, Nil, 3, "__sh", portable)
-    val sig = fill(cached(sigFrame(sh, "__sh", numPerms)), "signatures")
-    materializeThenRelease(bandPairs(bandFrame(sig, numPerms, bands)), sig)
+    Scope.nested { s =>
+      val sig = s.cache(sigFrame(sh, "__sh", numPerms), "dedup: signatures")
+      Scope.checkpoint(bandPairs(bandFrame(sig, numPerms, bands)),
+        "dedup: candidate pairs")
+    }
   }
-
-  /** JVM-wide memo for verified minhash pair frames, keyed by the
-    * corpus's CANONICALIZED analyzed plan + every signature/verify
-    * parameter — the same plan-identity scheme Spark's own CacheManager
-    * uses for cache lookup, so a near-dup dedup and the clustering pass
-    * over the same corpus (e.g. `dedup minhash` + `cluster minhash`, or
-    * a survivors query next to a components query) pay for ONE
-    * shingle→signature→band→verify computation. Bounded-memory
-    * contract: only the VERIFIED edge list is memoized — its size is
-    * bounded by the corpus's true near-dup rate (every row is a real
-    * pair at ≥ threshold), never by band-collision volume; the
-    * unverified candidate frame and the signature frames are NOT
-    * memoized (signatures are released per computation as before). The
-    * memoized frame is localCheckpoint-backed, so Verify's per-gate
-    * `clearCache()` does not invalidate it. A plan-hash collision
-    * cannot return wrong pairs: hits re-verify deep plan equality.
-    * Like any plan-keyed cache, entries go stale if the underlying
-    * files are rewritten mid-JVM — call [[clearPairsMemo]] then. */
-  private val pairsMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      DataFrame)]
-
-  /** Drop every memoized pair frame (e.g. after overwriting a corpus
-    * path within one JVM). */
-  def clearPairsMemo(): Unit = pairsMemo.clear()
 
   /** VERIFIED MinHash near-dup pairs: (id_a < id_b) candidate pairs from
     * LSH banding whose exact shingle Jaccard ≥ threshold — the edge list
     * for transitive grouping (Components.connectedComponents) and the
     * drop evidence for [[minhashLsh]]. Eagerly materialized; signature
-    * caches released; memoized per corpus plan (see [[pairsMemo]]). */
+    * caches released.
+    *
+    * Memoised in the enclosing [[graft.Scope]] under the corpus's
+    * CANONICALIZED analyzed plan + every signature/verify parameter —
+    * the plan-identity scheme Spark's own CacheManager uses for cache
+    * lookup — so a near-dup dedup and the clustering pass over the same
+    * corpus within one output action (`dedup minhash` + `cluster
+    * minhash`, or a survivors query next to a components query) pay for
+    * ONE shingle→signature→band→verify computation. Only the VERIFIED
+    * edge list is memoised: its size is bounded by the corpus's true
+    * near-dup rate, never by band-collision volume. */
   def minhashPairs(df: DataFrame, textCol: String, idCol: String,
       threshold: Double = 0.5, numPerms: Int = 64,
       bands: Int = 16, portable: Boolean = false): DataFrame = {
-    val plan = df.queryExecution.analyzed.canonicalized
-    val key = s"${plan.hashCode}|$textCol|$idCol|$threshold|$numPerms|" +
-      s"$bands|$portable"
-    val hit = pairsMemo.get(key)
-    if (hit != null && hit._1 == plan) hit._2
-    else {
-      val pairs = computeMinhashPairs(df, textCol, idCol, threshold,
-        numPerms, bands, portable)
-      pairsMemo.put(key, (plan, pairs))
-      pairs
-    }
+    val key = ("minhashPairs", df.queryExecution.analyzed.canonicalized,
+      textCol, idCol, threshold, numPerms, bands, portable)
+    Scope.memo(key)(computeMinhashPairs(df, textCol, idCol, threshold,
+      numPerms, bands, portable))
   }
 
   private def computeMinhashPairs(df: DataFrame, textCol: String,
       idCol: String, threshold: Double, numPerms: Int,
-      bands: Int, portable: Boolean): DataFrame = {
-    val sh = cached(shingleFrame(df, textCol, idCol, Nil, 3, "__sh",
-      portable))
-    // one count builds the sh AND sig caches before the self-join's
-    // concurrent leaf stages read them (see fill)
-    val sig = fill(cached(sigFrame(sh, "__sh", numPerms)), "signatures")
+      bands: Int, portable: Boolean): DataFrame = Scope.nested { s =>
+    val sh = s.cache(shingleFrame(df, textCol, idCol, Nil, 3, "__sh",
+      portable), "dedup: shingles")
+    val sig = s.cache(sigFrame(sh, "__sh", numPerms), "dedup: signatures")
     // size-ratio prune: J(A,B) ≤ min(|A|,|B|)/max(|A|,|B|), so pairs with
     // mismatched set sizes cannot reach the threshold — cheap integer
     // comparisons ahead of the O(|A|+|B|) intersect
@@ -256,7 +202,7 @@ object Dedup {
         floor(jaccard(col("sa.__sh"), col("sb.__sh")) * lit(1e9))
           .cast("long"))
       .select(col("id_a"), col("id_b"), col("jacc_fp"))
-    materializeThenRelease(pairs, sh, sig)
+    Scope.checkpoint(pairs, "dedup: verified pairs")
   }
 
   /** VERIFIED cross-frame MinHash near-dup pairs: (id_l, id_r) with
@@ -276,9 +222,9 @@ object Dedup {
       threshold: Double = 0.5, numPerms: Int = 64,
       bands: Int = 16, portable: Boolean = false,
       refStore: Option[(graft.cache.LineageCache, String)] = None)
-      : DataFrame = {
-    val shL = cached(shingleFrame(left, textCol, leftId, Nil, 3, "__sh",
-      portable))
+      : DataFrame = Scope.nested { s =>
+    val shL = s.cache(shingleFrame(left, textCol, leftId, Nil, 3, "__sh",
+      portable), "dedup: shingles L")
     // Incremental-ingest tier: with `refStore = (cache, refKey)` set,
     // the REFERENCE side's shingle and signature frames persist as
     // parquet artifacts under LineageCache content keys (the cell-model
@@ -302,11 +248,12 @@ object Dedup {
             numPerms.toString, portable.toString)))(compute)
         case None => compute
       }
-    val shR = cached(stored("shingles")(
-      shingleFrame(right, textCol, rightId, Nil, 3, "__sh", portable)))
-    val sigL = fill(cached(sigFrame(shL, "__sh", numPerms)), "signatures L")
-    val sigR = fill(cached(stored("sigs")(sigFrame(shR, "__sh", numPerms))),
-      "signatures R")
+    val shR = s.cache(stored("shingles")(
+      shingleFrame(right, textCol, rightId, Nil, 3, "__sh", portable)),
+      "dedup: shingles R")
+    val sigL = s.cache(sigFrame(shL, "__sh", numPerms), "dedup: signatures L")
+    val sigR = s.cache(stored("sigs")(sigFrame(shR, "__sh", numPerms)),
+      "dedup: signatures R")
     val bandL = bandFrame(sigL, numPerms, bands)
     val bandR = bandFrame(sigR, numPerms, bands)
     val cand = bandL.as("a").join(bandR.as("b"),
@@ -320,7 +267,7 @@ object Dedup {
         size(col("sb.__sh")) >= size(col("sa.__sh")) * threshold &&
         jaccard(col("sa.__sh"), col("sb.__sh")) >= threshold)
       .select(col("id_l"), col("id_r"))
-    materializeThenRelease(pairs, shL, shR, sigL, sigR)
+    Scope.checkpoint(pairs, "dedup: verified pairs")
   }
 
   /** Every `corpus` row plus a `neardup` flag: true iff the row is a
@@ -405,13 +352,14 @@ object Dedup {
     * via 16-bit chunk banding (pigeonhole-complete for maxHamming ≤ 3 with
     * 4 chunks). `portable` picks the token hasher (see simhash). */
   def simhashDedup(df: DataFrame, textCol: String, idCol: String,
-      maxHamming: Int = 3, portable: Boolean = false): DataFrame = {
+      maxHamming: Int = 3, portable: Boolean = false): DataFrame =
+      Scope.nested { s =>
     // the signature is one expression over one tokenization pass now —
     // only the compact (id, signature) frame needs caching for the
     // chunk self-join
-    val sim = fill(cached(graft.PlanAudit.repartitionIfLayoutBound(df)
+    val sim = s.cache(graft.PlanAudit.repartitionIfLayoutBound(df)
       .select(col(idCol).as("__id"),
-        simhash(col(textCol), portable).as("__simhash"))), "simhashes")
+        simhash(col(textCol), portable).as("__simhash")), "dedup: simhashes")
     val chunks = sim.withColumn("__c", explode(array(
       (0 until 4).map(k => struct(lit(k).as("cidx"),
         shiftright(col("__simhash"), 16 * k).bitwiseAND(lit(0xFFFFL))
@@ -423,7 +371,7 @@ object Dedup {
       .filter(bit_count(col("a.__simhash").bitwiseXOR(col("b.__simhash")))
         <= maxHamming)
       .select(col("b.__id").as("__drop")).distinct()
-    df.join(materializeThenRelease(drops, sim),
+    df.join(Scope.checkpoint(drops, "dedup: drops"),
       col(idCol) === col("__drop"), "left_anti")
   }
 
@@ -441,10 +389,11 @@ object Dedup {
     * ^bands; 64 perms/64 bands ≈ 2e-14 at t=0.6). */
   def ngramJaccard(df: DataFrame, textCol: String, idCol: String,
       blockCols: Seq[String], threshold: Double = 0.6,
-      n: Int = 3, numPerms: Int = 64, bands: Int = 32): DataFrame = {
-    val sh = cached(shingleFrame(df, textCol, idCol, blockCols, n, "__g"))
-    // one count builds the sh AND sig caches — see fill
-    val sig = fill(cached(sigFrame(sh, "__g", numPerms)), "signatures")
+      n: Int = 3, numPerms: Int = 64, bands: Int = 32): DataFrame =
+      Scope.nested { s =>
+    val sh = s.cache(shingleFrame(df, textCol, idCol, blockCols, n, "__g"),
+      "dedup: shingles")
+    val sig = s.cache(sigFrame(sh, "__g", numPerms), "dedup: signatures")
     val blockEq = blockCols.map(c => col(s"sa.$c") === col(s"sb.$c"))
       .foldLeft(lit(true))(_ && _)
     val sizePrune =
@@ -456,7 +405,7 @@ object Dedup {
       .filter(blockEq && sizePrune &&
         jaccard(col("sa.__g"), col("sb.__g")) >= threshold)
       .select(col("id_b").as("__drop")).distinct()
-    df.join(materializeThenRelease(drops, sh, sig),
+    df.join(Scope.checkpoint(drops, "dedup: drops"),
       col(idCol) === col("__drop"), "left_anti")
   }
 
@@ -466,8 +415,9 @@ object Dedup {
     * in DedupSpec. Use `ngramJaccard` (LSH candidates) at scale. */
   def ngramJaccardBlocked(df: DataFrame, textCol: String, idCol: String,
       blockCols: Seq[String], threshold: Double = 0.6,
-      n: Int = 3): DataFrame = {
-    val g = cached(shingleFrame(df, textCol, idCol, blockCols, n, "__g"))
+      n: Int = 3): DataFrame = Scope.nested { s =>
+    val g = s.cache(shingleFrame(df, textCol, idCol, blockCols, n, "__g"),
+      "dedup: shingles")
     val cond = blockCols.map(c => col(s"a.$c") === col(s"b.$c"))
       .reduce(_ && _) && col("a.__id") < col("b.__id")
     val sizePrune =
@@ -476,7 +426,7 @@ object Dedup {
     val drops = g.as("a").join(g.as("b"), cond)
       .filter(sizePrune && jaccard(col("a.__g"), col("b.__g")) >= threshold)
       .select(col("b.__id").as("__drop")).distinct()
-    df.join(materializeThenRelease(drops, g),
+    df.join(Scope.checkpoint(drops, "dedup: drops"),
       col(idCol) === col("__drop"), "left_anti")
   }
 }

@@ -60,7 +60,7 @@ object KMeansDet {
   /** Fit on the non-null feature rows of `df`. `tieBreak` must complete
     * the feature columns to a total order (any unique row id). */
   def fit(df: DataFrame, features: Seq[String], tieBreak: Seq[Column],
-      k: Int, iters: Int = 10): Model = {
+      k: Int, iters: Int = 10): Model = graft.Scope.nested { sc =>
     // k = 1 is legal (the reference's `k-means (1)` reduces the whole
     // frame to one cluster): init picks the single median row, every
     // iteration computes the global mean, assignExpr degenerates to
@@ -68,68 +68,63 @@ object KMeansDet {
     require(k >= 1, s"k must be >= 1, got $k")
     require(iters > 0, s"iters must be > 0, got $iters")
     require(features.nonEmpty, "k-means needs at least one feature column")
-    val pts = df
+    val pts = sc.cache(df
       .select(features.map(f => col(f).cast(DoubleType).as(f))
         :+ struct(tieBreak: _*).as("__tb"): _*)
       // post-cast guard: catches nulls, non-castable values AND NaN —
       // a NaN feature would pass isNotNull but vanish from the decimal
       // sum while still counting in count(), silently skewing centroids
-      .filter(features.map(f => usable(col(f))).reduce(_ && _))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // the ordinal pass counts per partition anyway — its total IS n,
-      // so no separate count() job (and the range-sample pass fills the
-      // cache instead)
-      val order = features.map(col(_).asc) :+ col("__tb").asc
-      // ordinal width follows the FRAME's partitioning, not the shuffle
-      // constant: the fit frame is small/projected, and a 32-way range
-      // exchange of a 1-partition frame is pure task overhead (r16)
-      val (ordDf, n) = Ordinals.withGlobalOrdinalTotal(pts, "__rn", order,
-        numPartitions = pts.rdd.getNumPartitions max 1)
-      require(n >= k, s"k-means needs at least k=$k rows, got $n")
-      val ranks = (0 until k).map(j => ((2L * j + 1) * n) / (2L * k) + 1)
-      // k rows collect; the rank order is applied DRIVER-side (an
-      // orderBy here planned a range exchange + sampling job per fit)
-      val initRows = ordDf
-        .filter(col("__rn").isin(ranks: _*))
-        .select(col("__rn") +: features.map(col): _*)
+      .filter(features.map(f => usable(col(f))).reduce(_ && _)),
+      "kmdet: points")
+    val order = features.map(col(_).asc) :+ col("__tb").asc
+    // ordinal width follows the FRAME's partitioning, not the shuffle
+    // constant: the fit frame is small/projected, and a 32-way range
+    // exchange of a 1-partition frame is pure task overhead (r16)
+    val (ordDf, n) = Ordinals.withGlobalOrdinalTotal(pts, "__rn", order,
+      numPartitions = pts.rdd.getNumPartitions max 1)
+    require(n >= k, s"k-means needs at least k=$k rows, got $n")
+    val ranks = (0 until k).map(j => ((2L * j + 1) * n) / (2L * k) + 1)
+    // k rows collect; the rank order is applied DRIVER-side (an
+    // orderBy here planned a range exchange + sampling job per fit)
+    val initRows = ordDf
+      .filter(col("__rn").isin(ranks: _*))
+      .select(col("__rn") +: features.map(col): _*)
+      .collect()
+      .sortBy(_.getLong(0))
+    var cents = initRows.map(r =>
+      features.indices.map(i => r.getDouble(i + 1)).toArray)
+    // the k quantile ranks are distinct for any n >= k, so this only
+    // fires on a broken ordinal — but a short centroid array would
+    // otherwise surface as an opaque index error in assignExpr
+    require(cents.length == k,
+      s"init produced ${cents.length} centroids, expected $k")
+    for (_ <- 1 to iters) {
+      // per-cluster exact-decimal means (queries.Det shape: decimal sum
+      // is order-independent, the one decimal→double cast rounds the
+      // same everywhere)
+      val aggs = features.map { f =>
+        (sum(col(f).cast(dec6)).cast(DoubleType) / count(col(f)))
+          .as(s"__m_$f")
+      }
+      val stats = pts
+        .groupBy(assignExprCols(cents, features.map(col)).as("__cl"))
+        .agg(aggs.head, aggs.tail: _*)
         .collect()
-        .sortBy(_.getLong(0))
-      var cents = initRows.map(r =>
-        features.indices.map(i => r.getDouble(i + 1)).toArray)
-      // the k quantile ranks are distinct for any n >= k, so this only
-      // fires on a broken ordinal — but a short centroid array would
-      // otherwise surface as an opaque index error in assignExpr
-      require(cents.length == k,
-        s"init produced ${cents.length} centroids, expected $k")
-      for (_ <- 1 to iters) {
-        // per-cluster exact-decimal means (queries.Det shape: decimal sum
-        // is order-independent, the one decimal→double cast rounds the
-        // same everywhere)
-        val aggs = features.map { f =>
-          (sum(col(f).cast(dec6)).cast(DoubleType) / count(col(f)))
-            .as(s"__m_$f")
-        }
-        val stats = pts
-          .groupBy(assignExprCols(cents, features.map(col)).as("__cl"))
-          .agg(aggs.head, aggs.tail: _*)
-          .collect()
-          .map(r => r.getAs[Int]("__cl") ->
-            features.map(f => r.getAs[Double](s"__m_$f")).toArray)
-          .toMap
-        cents = cents.zipWithIndex.map { case (prev, j) =>
-          stats.getOrElse(j, prev) // empty cluster keeps its centroid
-        }
+        .map(r => r.getAs[Int]("__cl") ->
+          features.map(f => r.getAs[Double](s"__m_$f")).toArray)
+        .toMap
+      cents = cents.zipWithIndex.map { case (prev, j) =>
+        stats.getOrElse(j, prev) // empty cluster keeps its centroid
       }
-      // canonical relabel: output id = rank of the centroid in
-      // lexicographic order (original id breaks exact-tie centroids)
-      val sortedIdx = cents.indices.sortWith { (a, b) =>
-        val c = lexCompare(cents(a), cents(b)); if (c != 0) c < 0 else a < b
-      }
-      val perm = Array.ofDim[Int](k)
-      sortedIdx.zipWithIndex.foreach { case (j, rank) => perm(j) = rank }
-      Model(cents, perm)
-    } finally { pts.unpersist() }
+    }
+    // canonical relabel: output id = rank of the centroid in
+    // lexicographic order (original id breaks exact-tie centroids)
+    val sortedIdx = cents.indices.sortWith { (a, b) =>
+      val c = lexCompare(cents(a), cents(b)); if (c != 0) c < 0 else a < b
+    }
+    val perm = Array.ofDim[Int](k)
+    sortedIdx.zipWithIndex.foreach { case (j, rank) => perm(j) = rank }
+    Model(cents, perm)
   }
 
   /** Canonical cluster-id expression for a fitted model over arbitrary
@@ -153,13 +148,7 @@ object KMeansDet {
   def withCluster(df: DataFrame, features: Seq[String],
       tieBreak: Seq[Column], k: Int, iters: Int = 10,
       out: String = "cluster"): DataFrame = {
-    // AQE off around the Lloyd driver loop (iters tiny collect jobs
-    // over the persisted points frame — adaptive re-planning is pure
-    // latency there); the labeled output below plans normally
-    val m = graft.PlanAudit.withConf(df.sparkSession,
-      "spark.sql.adaptive.enabled", "false") {
-      fit(df, features, tieBreak, k, iters)
-    }
+    val m = fit(df, features, tieBreak, k, iters)
     df.withColumn(out, labelExpr(m, features.map(col)))
   }
 
@@ -199,56 +188,52 @@ object KMeansDet {
     * `oracleSql` replicates it given a relation that extracts the `d`
     * elements as columns. Rows that are not `usableVec` are skipped. */
   def fitVec(df: DataFrame, vecCol: String, d: Int, tieBreak: Seq[Column],
-      k: Int, iters: Int = 10): Model = {
+      k: Int, iters: Int = 10): Model = graft.Scope.nested { sc =>
     require(k >= 1, s"k must be >= 1, got $k")
     require(iters > 0, s"iters must be > 0, got $iters")
     require(d >= 1, s"need at least one dimension, got $d")
     def el(i: Int) = element_at(col("__vec"), i + 1)
-    val pts = df
+    val pts = sc.cache(df
       .select(transform(col(vecCol), _.cast(DoubleType)).as("__vec"),
         struct(tieBreak: _*).as("__tb"))
-      .filter(usableVec(col("__vec"), d))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // see fit: the ordinal pass's total is n, no separate count() job
-      val order = (0 until d).map(i => el(i).asc) :+ col("__tb").asc
-      // see fit: ordinal width follows the frame's partitioning
-      val (ordDf, n) = Ordinals.withGlobalOrdinalTotal(pts, "__rn", order,
-        numPartitions = pts.rdd.getNumPartitions max 1)
-      require(n >= k, s"k-means needs at least k=$k rows, got $n")
-      val ranks = (0 until k).map(j => ((2L * j + 1) * n) / (2L * k) + 1)
-      // driver-side rank sort — see fit
-      val initRows = ordDf
-        .filter(col("__rn").isin(ranks: _*))
-        .select(col("__rn"), col("__vec"))
+      .filter(usableVec(col("__vec"), d)), "kmdet: points")
+    val order = (0 until d).map(i => el(i).asc) :+ col("__tb").asc
+    // see fit: ordinal width follows the frame's partitioning
+    val (ordDf, n) = Ordinals.withGlobalOrdinalTotal(pts, "__rn", order,
+      numPartitions = pts.rdd.getNumPartitions max 1)
+    require(n >= k, s"k-means needs at least k=$k rows, got $n")
+    val ranks = (0 until k).map(j => ((2L * j + 1) * n) / (2L * k) + 1)
+    // driver-side rank sort — see fit
+    val initRows = ordDf
+      .filter(col("__rn").isin(ranks: _*))
+      .select(col("__rn"), col("__vec"))
+      .collect()
+      .sortBy(_.getLong(0))
+    var cents = initRows.map(_.getSeq[Double](1).toArray)
+    require(cents.length == k,
+      s"init produced ${cents.length} centroids, expected $k")
+    for (_ <- 1 to iters) {
+      val aggs = (0 until d).map { i =>
+        (sum(el(i).cast(dec6)).cast(DoubleType) / count(el(i)))
+          .as(s"__m_$i")
+      }
+      val stats = pts
+        .groupBy(assignExprVec(cents, col("__vec")).as("__cl"))
+        .agg(aggs.head, aggs.tail: _*)
         .collect()
-        .sortBy(_.getLong(0))
-      var cents = initRows.map(_.getSeq[Double](1).toArray)
-      require(cents.length == k,
-        s"init produced ${cents.length} centroids, expected $k")
-      for (_ <- 1 to iters) {
-        val aggs = (0 until d).map { i =>
-          (sum(el(i).cast(dec6)).cast(DoubleType) / count(el(i)))
-            .as(s"__m_$i")
-        }
-        val stats = pts
-          .groupBy(assignExprVec(cents, col("__vec")).as("__cl"))
-          .agg(aggs.head, aggs.tail: _*)
-          .collect()
-          .map(r => r.getAs[Int]("__cl") ->
-            (0 until d).map(i => r.getAs[Double](s"__m_$i")).toArray)
-          .toMap
-        cents = cents.zipWithIndex.map { case (prev, j) =>
-          stats.getOrElse(j, prev)
-        }
+        .map(r => r.getAs[Int]("__cl") ->
+          (0 until d).map(i => r.getAs[Double](s"__m_$i")).toArray)
+        .toMap
+      cents = cents.zipWithIndex.map { case (prev, j) =>
+        stats.getOrElse(j, prev)
       }
-      val sortedIdx = cents.indices.sortWith { (a, b) =>
-        val c = lexCompare(cents(a), cents(b)); if (c != 0) c < 0 else a < b
-      }
-      val perm = Array.ofDim[Int](k)
-      sortedIdx.zipWithIndex.foreach { case (j, rank) => perm(j) = rank }
-      Model(cents, perm)
-    } finally { pts.unpersist() }
+    }
+    val sortedIdx = cents.indices.sortWith { (a, b) =>
+      val c = lexCompare(cents(a), cents(b)); if (c != 0) c < 0 else a < b
+    }
+    val perm = Array.ofDim[Int](k)
+    sortedIdx.zipWithIndex.foreach { case (j, rank) => perm(j) = rank }
+    Model(cents, perm)
   }
 
   /** Fit `vecCols.size` SAME-DIMENSION vector columns of one frame with
@@ -272,19 +257,19 @@ object KMeansDet {
     * on the subspace id through a CASE of [[graft.functions.ArgminDist]]
     * kernels — centroids ride as codegen reference objects, so the
     * generated source is identical across iterations (one compile per
-    * fit, as in fitVec).
-    *
-    * NOT thread-safe against concurrent session-conf mutation (callers
-    * toggle AQE around it single-threadedly, as with fitVec). */
+    * fit, as in fitVec). */
   def fitVecMulti(df: DataFrame, vecCols: Seq[String], d: Int,
       tieBreak: Seq[Column], k: Int, iters: Int = 10): Seq[Model] =
     fitVecMultiSpec(df, vecCols.map(c => (c, d, k)), tieBreak, iters)
 
   /** The general form of [[fitVecMulti]]: each entry of `specs` is
     * (vector column, its dimension, its k) — mixed dimensions and
-    * cluster counts share the one fused Lloyd loop (pqTopK fuses its m
-    * d/m-dim codebooks AND the d-dim IVF coarse-cell fit this way).
-    * Per-entry mathematics identical to [[fitVec]] (KMeansDetSpec). */
+    * cluster counts share the one fused Lloyd loop. Per-entry
+    * mathematics identical to [[fitVec]] (KMeansDetSpec). pqTopK fuses
+    * only its m d/m-dim codebooks here and deliberately keeps the d-dim
+    * IVF coarse-cell fit OUT of the fused loop: the round aggregate
+    * widens to the largest dimension for every exploded row, and fusing
+    * the IVF fit measured 5 → 38 s of task time (d=64, m=8). */
   def fitVecMultiSpec(df: DataFrame, specs: Seq[(String, Int, Int)],
       tieBreak: Seq[Column], iters: Int = 10): Seq[Model] = {
     require(iters > 0, s"iters must be > 0, got $iters")
@@ -306,25 +291,17 @@ object KMeansDet {
     val usableBySub = specs.zipWithIndex.map { case ((_, dd, _), s) =>
       col("__s") === lit(s) && usableVec(col("__vec"), dd)
     }.reduce(_ || _)
-    val pts = df
-      .select(struct(tieBreak: _*).as("__tb"),
-        posexplode(array(specs.map { case (c, _, _) =>
-          transform(col(c), _.cast(DoubleType)) }: _*)))
-      .withColumnRenamed("pos", "__s")
-      .withColumnRenamed("col", "__vec")
-      .filter(usableBySub)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sc0 = df.sparkSession.sparkContext
-    def labeled[T](desc: String)(body: => T): T = {
-      val prev = sc0.getLocalProperty("spark.job.description")
-      sc0.setJobDescription(desc)
-      try body finally sc0.setJobDescription(prev)
-    }
-    try {
-      // materialize ONCE before the concurrent init scans (the r15/r16
-      // lesson: a concurrent first fill recomputes the projection per
-      // future); this count also warms every block the loop reads
-      labeled("kmdet-multi: materialize")(pts.count())
+    graft.Scope.nested { sc =>
+      // filled ONCE before the concurrent init scans (the r15/r16 lesson:
+      // a concurrent first fill recomputes the projection per future); the
+      // fill also warms every block the loop reads
+      val pts = sc.cache(df
+        .select(struct(tieBreak: _*).as("__tb"),
+          posexplode(array(specs.map { case (c, _, _) =>
+            transform(col(c), _.cast(DoubleType)) }: _*)))
+        .withColumnRenamed("pos", "__s")
+        .withColumnRenamed("col", "__vec")
+        .filter(usableBySub), "kmdet-multi: points")
       val partsN = (try pts.rdd.getNumPartitions
         catch { case _: Throwable => 1 }) max 1
       // per-subspace quantile init — independent ordinal job chains,
@@ -336,7 +313,8 @@ object KMeansDet {
           implicit val ec =
             scala.concurrent.ExecutionContext.fromExecutor(pool)
           val futs = (0 until m).map { s =>
-            scala.concurrent.Future { labeled(s"kmdet-multi: init $s") {
+            scala.concurrent.Future {
+              graft.Scope.labeled(s"kmdet-multi: init $s") {
               val k = ks(s)
               val sub = pts.filter(col("__s") === s)
               val order =
@@ -380,7 +358,7 @@ object KMeansDet {
           (sum(el(i).cast(dec6)).cast(DoubleType) / count(el(i)))
             .as(s"__m_$i")
         }
-        val stats = labeled(s"kmdet-multi: round $t")(pts
+        val stats = graft.Scope.labeled(s"kmdet-multi: round $t")(pts
           .groupBy(col("__s"), assign.as("__cl"))
           .agg(aggs.head, aggs.tail: _*)
           .collect())
@@ -405,7 +383,7 @@ object KMeansDet {
         sortedIdx.zipWithIndex.foreach { case (j, rank) => perm(j) = rank }
         Model(cs, perm)
       }
-    } finally { pts.unpersist() }
+    }
   }
 
   /** Canonical cluster id for an array<double> column; NULL for rows

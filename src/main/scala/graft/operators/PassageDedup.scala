@@ -96,14 +96,11 @@ object PassageDedup {
     * repeated-passage mass (per doc by its own length), never by
     * corpus size. Reconstruction is a per-row HOF filter — narrow. */
   def scrub(df: DataFrame, idCol: String, textCol: String,
-      k: Int = 8): DataFrame = {
-    val w = fill(positionedWindows(df, idCol, textCol, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      k: Int = 8): DataFrame = graft.Scope.nested { s =>
+    val w = s.cache(positionedWindows(df, idCol, textCol, k), windowsLabel)
     val rep = w.groupBy("fp").agg(count(lit(1)).as("__n"))
       .filter(col("__n") > 1).select("fp")
-    val out = scrubWith(df, idCol, textCol, k, w, rep)
-    w.unpersist(false)
-    out
+    scrubWith(df, idCol, textCol, k, w, rep)
   }
 
   /** Cross-corpus REMOVAL — decontamination that EDITS instead of
@@ -123,47 +120,37 @@ object PassageDedup {
     * contaminated mass, never by corpus size. */
   def scrubAgainst(df: DataFrame, idCol: String, textCol: String,
       ref: DataFrame, refIdCol: String, refTextCol: String,
-      k: Int = 8): DataFrame = {
-    val w = fill(positionedWindows(df, idCol, textCol, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      k: Int = 8): DataFrame = graft.Scope.nested { s =>
+    val w = s.cache(positionedWindows(df, idCol, textCol, k), windowsLabel)
     val evid = broadcast(
       positionedWindows(ref, refIdCol, refTextCol, k)
         .select("fp").distinct())
-    val out = scrubWith(df, idCol, textCol, k, w, evid)
-    w.unpersist(false)
-    out
+    scrubWith(df, idCol, textCol, k, w, evid)
   }
 
-  /** Fill the persisted windows frame BEFORE the multi-branch consumers
-    * (repeat counts + per-doc counts + coverage join) — AQE
-    * materializes a query's independent leaf stages concurrently, and
-    * each branch reaching the UNFILLED cache recomputes the whole
-    * window explode (the r17 Dedup.fill finding; t_curation_e2e
-    * profiled 2 concurrent 0.55 s duplicate window passes). */
-  private def fill(df: DataFrame): DataFrame = {
-    val sc0 = df.sparkSession.sparkContext
-    val prev = sc0.getLocalProperty("spark.job.description")
-    sc0.setJobDescription("passagededup: materialize windows")
-    try df.count() finally sc0.setJobDescription(prev)
-    df
-  }
+  /** The windows frame feeds several branches (repeat counts + per-doc
+    * counts + coverage join), so each operator caches it in its nested
+    * scope — filled before AQE's concurrent leaf stages read it
+    * (t_curation_e2e profiled 2 concurrent 0.55 s duplicate window
+    * passes unfilled) and released on return. */
+  private val windowsLabel = "passagededup: windows"
 
   /** The shared removal core: coverage from `w ⋈ evid` (any frame of
     * `fp`s to remove), then the narrow hash-set reconstruction. The
-    * coverage frame is eagerly checkpointed before the caller
-    * unpersists `w`. */
+    * coverage frame is eagerly checkpointed before the caller's scope
+    * releases `w`. */
   private def scrubWith(df: DataFrame, idCol: String, textCol: String,
       k: Int, w: DataFrame, evid: DataFrame): DataFrame = {
     Seq("scrubbed", "n_tokens", "n_removed", "__cov").foreach { c =>
       require(!df.columns.contains(c),
         s"input already has a '$c' column — rename it before scrub")
     }
-    val cov = w.join(evid, "fp")
+    val cov0 = w.join(evid, "fp")
       .select(col(idCol),
         explode(sequence(col("start"), col("start") + lit(k - 1)))
           .as("__pos"))
       .groupBy(idCol).agg(collect_set(col("__pos")).as("__cov"))
-      .localCheckpoint(true)
+    val cov = graft.Scope.checkpoint(cov0, "passagededup: coverage")
     val tk = Decontaminate.tokens(col(textCol))
     df.join(cov, Seq(idCol), "left")
       .withColumn("__tk", tk)
@@ -190,9 +177,9 @@ object PassageDedup {
     * signal; docs with fewer than k tokens have no windows and a null
     * fraction. */
   def docStats(df: DataFrame, idCol: String, textCol: String,
-      k: Int = 8, sampleMod: Int = 1): DataFrame = {
-    val w = fill(windows(df, idCol, textCol, k, sampleMod)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      k: Int = 8, sampleMod: Int = 1): DataFrame =
+      graft.Scope.nested { s =>
+    val w = s.cache(windows(df, idCol, textCol, k, sampleMod), windowsLabel)
     val rep = w.groupBy("fp").agg(count(lit(1)).as("__n"))
       .filter(col("__n") > 1).select("fp")
     val perDoc = w.groupBy(idCol).agg(count(lit(1)).as("n_windows"))
@@ -207,8 +194,6 @@ object PassageDedup {
       .withColumn("repeated_frac",
         when(col("n_windows") > 0,
           col("n_repeated").cast(DoubleType) / col("n_windows")))
-    val out = stats.localCheckpoint(true)
-    w.unpersist(false)
-    out
+    graft.Scope.checkpoint(stats, "passagededup: stats")
   }
 }

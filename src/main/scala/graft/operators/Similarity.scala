@@ -96,24 +96,18 @@ object Similarity {
         col("cosine"))
   }
 
-  /** Driver-side memo for deterministic cell models. The IVF index and
-    * the KMeans cosine dedup quantize the SAME (corpus, L2-normalized,
-    * k, iters) cells; a pipeline that runs both in one JVM should pay
+  /** Memo for deterministic cell models. The IVF index and the KMeans
+    * cosine dedup quantize the SAME (corpus, L2-normalized, k, iters)
+    * cells; a pipeline that runs both in one output action should pay
     * for one Lloyd fit, not two — each fit is `iters`+1 full passes of
-    * driver-loop jobs, the dominant cost of both operators. The
-    * operator cannot see data identity, so sharing is OPT-IN via an
-    * explicit caller-provided corpus key (callers must change the key
-    * when the corpus changes); k/iters/d are folded into the map key so
-    * differently-parameterized fits never collide. Entries are k·d
-    * doubles — bounded. */
-  private val cellModels =
-    new java.util.concurrent.ConcurrentHashMap[String, KMeansDet.Model]
-
-  /** Test hook: forget every in-JVM model (simulates a fresh session —
-    * the persistent tier below is what must survive this). */
-  private[graft] def clearCellModels(): Unit = cellModels.clear()
-
-  /** Persistent tier under the in-memory memo: with `modelStore` set,
+    * driver-loop jobs, the dominant cost of both operators. The operator
+    * cannot see data identity, so sharing is OPT-IN via an explicit
+    * caller-provided corpus key (callers must change the key when the
+    * corpus changes); k/iters/d are folded into the memo key so
+    * differently-parameterized fits never collide. The in-memory tier is
+    * [[graft.Scope.memo]] — it lives as long as the enclosing scope.
+    * Entries are k·d doubles — bounded. */
+  /** Persistent tier under the scope memo: with `modelStore` set,
     * a fitted model is ALSO saved as a k×d-row parquet artifact keyed
     * by `LineageCache.key("cellmodel", modelKey|k|iters|d)` — the same
     * content-keyed scheme that checkpoints transformation chains — and
@@ -132,44 +126,33 @@ object Similarity {
       KMeansDet.fitVec(e, vecCol, d, tieBreak, k, iters)
     modelKey match {
       case Some(key) =>
-        cellModels.computeIfAbsent(s"$key|k=$k|it=$iters|d=$d",
-          _ => store match {
-            case Some(lc) =>
-              val ak = lc.key("cellmodel",
-                Seq(key, k.toString, iters.toString, d.toString))
-              modelFromDf(lc.getOrCompute(ak)(
-                modelToDf(e.sparkSession, fit())))
-            case None => fit()
-          })
+        graft.Scope.memo(("cellmodel", key, k, iters, d))(store match {
+          case Some(lc) =>
+            val ak = lc.key("cellmodel",
+              Seq(key, k.toString, iters.toString, d.toString))
+            modelFromDf(lc.getOrCompute(ak)(
+              modelToDf(e.sparkSession, fit())))
+          case None => fit()
+        })
       case None => fit()
     }
   }
 
-  /** The m per-subspace PQ codebooks through the [[cellModels]] memo,
-    * fit FUSED ([[KMeansDet.fitVecMulti]] — one aggregate job per Lloyd
-    * round for all m subspaces instead of m·iters tiny jobs; guide §2
-    * job-latency floor). Memo keys are exactly the per-subspace
-    * `fitCellsMemo` keys, so a later per-subspace consumer (or an
-    * earlier one) shares the same entries. All-or-nothing memo read: a
-    * partial hit re-fits everything (deterministic — identical values
-    * land back). Only for callers WITHOUT a persistent store (the
+  /** The m per-subspace PQ codebooks, fit FUSED
+    * ([[KMeansDet.fitVecMulti]] — one aggregate job per Lloyd round for
+    * all m subspaces instead of m·iters tiny jobs; guide §2 job-latency
+    * floor), memoised as one entry under `modelKey` like
+    * [[fitCellsMemo]]. Only for callers WITHOUT a persistent store (the
     * store tier stays on the per-subspace path). */
   private def fitSubspacesMemo(modelKey: Option[String], frame: DataFrame,
       m: Int, sub: Int, tieBreak: Seq[Column], codes: Int,
       iters: Int): Seq[KMeansDet.Model] = {
-    // memo keys EXACTLY as fitCellsMemo would build them, so the fused
-    // fit shares entries with any per-subspace consumer
-    def subKey(s: Int) = modelKey.map(k0 =>
-      s"$k0|pq$s/$m|k=$codes|it=$iters|d=$sub")
-    val hit = modelKey.isDefined &&
-      (0 until m).forall(s => cellModels.containsKey(subKey(s).get))
-    if (hit) (0 until m).map(s => cellModels.get(subKey(s).get))
-    else {
-      val ms = KMeansDet.fitVecMultiSpec(frame,
-        (0 until m).map(s => (s"__pq$s", sub, codes)), tieBreak, iters)
-      if (modelKey.isDefined)
-        (0 until m).foreach(s => cellModels.put(subKey(s).get, ms(s)))
-      ms
+    def fit() = KMeansDet.fitVecMultiSpec(frame,
+      (0 until m).map(s => (s"__pq$s", sub, codes)), tieBreak, iters)
+    modelKey match {
+      case Some(key) =>
+        graft.Scope.memo(("pq codebooks", key, m, codes, iters, sub))(fit())
+      case None => fit()
     }
   }
 
@@ -204,20 +187,21 @@ object Similarity {
     * depends on multi-probe covering boundary pairs, not on the cells
     * being the k-means optimum — and each extra iteration is a full
     * corpus pass in the driver loop. `modelKey` opts into the shared
-    * cell-model memo (see cellModels). */
+    * cell-model memo (see fitCellsMemo). */
   def ivfTopK(corpus: DataFrame, queryIds: Column => Column, idCol: String,
       vecCol: String, k: Int, nCells: Int = 16, nprobe: Int = 4,
       fitFraction: Double = 1.0, seed: Long = 42L,
       deterministic: Boolean = false, fitIters: Int = 3,
       modelKey: Option[String] = None,
-      modelStore: Option[graft.cache.LineageCache] = None): DataFrame = {
+      modelStore: Option[graft.cache.LineageCache] = None): DataFrame =
+      graft.Scope.nested { s =>
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
     val spark = corpus.sparkSession
-    // persisted: the quantize/normalize/vectorize projection feeds the
+    // cached: the quantize/normalize/vectorize projection feeds the
     // KMeans fit (multiple passes), the assignment transform, and the
     // query probe — uncached each consumer recomputes the HOF chain
-    val e = corpus
+    val e = s.cache(corpus
       .select(col(idCol),
         transform(col(vecCol), _.cast(DoubleType)).as("__dv"))
       // cluster the L2-NORMALIZED vectors: Euclidean KMeans on the unit
@@ -232,27 +216,21 @@ object Similarity {
         x => x / greatest(col("__l2"), lit(1e-30))))
       .withColumn("__features", array_to_vector(col("__na")))
       .withColumn("__v", quantize(col("__dv")))
-      .withColumn("__nrm", normQ(col("__v")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("__nrm", normQ(col("__v"))), "ivf: vectors")
     // fitFraction < 1 trains the quantizer on a sample (see
     // cosineDedupKMeans) — the scale knob; the default keeps the full
     // fit because cell quality directly buys recall for top-k queries
     // (measured: 0.54 → 0.38 recall@10 on near-random data at 0.2)
-    // assigned feeds the probe and the scoring joins — cache it, return
-    // the (queries × k)-row result eagerly, release the cache
+    // assigned feeds the probe and the scoring joins — cache it (filled
+    // before those two branches race it), return the (queries × k)-row
+    // result eagerly
     val (assigned, cents) = if (deterministic) {
       val d = vecDim(e, "__na")
-      // AQE off around the Lloyd driver loop (tiny collect jobs over
-      // the persisted frame — see pqTopK); single-threaded here
-      val m = graft.PlanAudit.withConf(spark,
-        "spark.sql.adaptive.enabled", "false") {
-        fitCellsMemo(modelKey, modelStore, e, "__na", d,
-          Seq(col(idCol)), nCells, fitIters)
-      }
+      val m = fitCellsMemo(modelKey, modelStore, e, "__na", d,
+        Seq(col(idCol)), nCells, fitIters)
       val asg = e
         .withColumn("__cell", KMeansDet.labelExprVec(m, col("__na"), d))
         .select(col(idCol), col("__v"), col("__nrm"), col("__cell"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       (asg, KMeansDet.canonicalCentroids(m).zipWithIndex
         .map { case (c, i) => (i, c) }.toSeq)
     } else {
@@ -267,14 +245,11 @@ object Similarity {
         .setFeaturesCol("__features").fit(fitFrame)
       (model.transform(e)
         .select(col(idCol), col("__v"), col("__nrm"),
-          col("prediction").as("__cell"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
+          col("prediction").as("__cell")),
         model.clusterCenters.zipWithIndex.map { case (c, i) =>
           (i, c.toArray) }.toSeq)
     }
-    // fill the assignment cache before its two consumer branches (query
-    // probe + cell-scoring join) race it — see fillCache
-    fillCache(assigned)
+    s.cache(assigned, "ivf: cell assignment")
     val centDf = spark.createDataFrame(cents).toDF("__cell", "__cvd")
       .withColumn("__cv", quantize(col("__cvd")))
       .withColumn("__cnrm", normQ(col("__cv")))
@@ -296,14 +271,10 @@ object Similarity {
         dotQ(col("__qv"), col("__v")) / (col("__qn") * col("__nrm")))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col(idCol))
-    val topk = scored.withColumn("rank", row_number().over(w))
+    graft.Scope.checkpoint(scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank"), col(idCol).as("neighbor_id"),
-        col("cosine"))
-      .localCheckpoint(true)
-    assigned.unpersist(false)
-    e.unpersist(false)
-    topk
+        col("cosine")), "ivf: output")
   }
 
   /** Product-quantization ANN with asymmetric distance (Jégou et al.,
@@ -353,7 +324,8 @@ object Similarity {
       vecCol: String, k: Int, m: Int = 4, codes: Int = 16,
       fitIters: Int = 3, rerank: Int = 0, nCells: Int = 0,
       nprobe: Int = 4, modelKey: Option[String] = None,
-      modelStore: Option[graft.cache.LineageCache] = None): DataFrame = {
+      modelStore: Option[graft.cache.LineageCache] = None): DataFrame =
+      graft.Scope.nested { sc =>
     val spark = corpus.sparkSession
     // decouple the fit/code/ADC stages from the input's FILE layout:
     // a few-row-group corpus file caps the scan (and everything narrow
@@ -374,32 +346,25 @@ object Similarity {
         sqrt(aggregate(col("__dv"), lit(0.0), (a, x) => a + x * x)))
       .withColumn("__na", transform(col("__dv"),
         x => x / greatest(col("__l2"), lit(1e-30))))
-    val sc0 = spark.sparkContext
-    def labeled[T](desc: String)(body: => T): T = {
-      val prev = sc0.getLocalProperty("spark.job.description")
-      sc0.setJobDescription(desc)
-      try body finally sc0.setJobDescription(prev)
-    }
     // dim off the RAW vector column (transform/normalize preserve
     // element count): the probe over e0 paid the spread exchange and
     // the HOF chain for a max(size) aggregate
-    val d = labeled("pq: dim probe")(vecDim(corpus, vecCol))
+    val d = graft.Scope.labeled("pq: dim probe")(vecDim(corpus, vecCol))
     require(m > 0 && d % m == 0, s"dim $d must split into m=$m subspaces")
     val sub = d / m
-    val sliced = (0 until m).foldLeft(e0) { (df, s) =>
-      df.withColumn(s"__pq$s", slice(col("__na"), s * sub + 1, sub))
-    }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materialize the shared sliced frame ONCE before the fits: an r15
-    // attempt at concurrent fits raced its materialization (every fit's
-    // first job recomputed the projection) and measured slower; filled
-    // first, the m per-subspace Lloyd fits are independent driver-loop
+    // the shared sliced frame is cached and filled ONCE before the fits:
+    // an r15 attempt at concurrent fits raced its materialization (every
+    // fit's first job recomputed the projection) and measured slower;
+    // filled first, the m per-subspace Lloyd fits are independent driver-loop
     // job chains and overlap cleanly (guide §2.6 — actions are only
     // sequential because the driver calls them sequentially). Each fit
     // is a handful of tiny jobs, so a small pool is plenty; results are
     // deterministic regardless of scheduling (independent subspaces).
     // Measured r16 at sf0.1 (honest cold fit, no persisted store):
     // s_ann_pq 8 sequential fits ~5 s of fit wall → ~1.6 s concurrent.
-    labeled("pq: materialize sliced")(sliced.count())
+    val sliced = sc.cache((0 until m).foldLeft(e0) { (df, s) =>
+      df.withColumn(s"__pq$s", slice(col("__na"), s * sub + 1, sub))
+    }, "pq: sliced")
     // the fits read a DATA-PROPORTIONAL view of the materialized frame:
     // `sliced` is deliberately wide for the ADC/encode stages (layout
     // decoupling above), but a Lloyd fit over it is ~120 tiny jobs and
@@ -413,51 +378,44 @@ object Similarity {
         catch { case _: Throwable => fitPar }))
         sliced.coalesce(fitPar)
       else sliced
+    // the pool's threads are created here, so they inherit this call's
+    // scope and job label (the IVF fit's memo lands in the caller's scope)
     val fitPool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(m + 1, 4))
     implicit val fitEc =
       scala.concurrent.ExecutionContext.fromExecutor(fitPool)
-    // AQE off for the whole fit phase (set BEFORE the futures launch,
-    // restored after the last one drains — a single-threaded toggle
-    // around the concurrent region): the fits are dozens of tiny
-    // collect jobs over persisted KB-scale frames where adaptive
-    // re-planning only adds latency. The ADC/probe stages below run
-    // with AQE restored.
-    val (models, cellModel) = graft.PlanAudit.withConf(spark,
-      "spark.sql.adaptive.enabled", "false") {
-      // the m codebooks in ONE fused Lloyd loop (fitVecMultiSpec — one
-      // aggregate job per round for all m subspaces; r16 ran m
-      // concurrent per-fit driver loops = m·iters tiny jobs of
-      // job-launch latency). The d-dim IVF cell fit stays a CONCURRENT
-      // future, NOT part of the fused loop: fusing mixed dimensions
-      // widens the round aggregate to the largest dim for every
-      // exploded row (measured 5 → 38 s of task time at d=64, m=8 —
-      // the fused aggregate evaluated 64 decimal sum/count pairs on
-      // every 8-dim subspace row). The persistent-store tier keeps the
-      // per-fit path (each artifact loads/saves independently).
-      val cf =
-        if (nCells > 0) Some(scala.concurrent.Future {
-          fitCellsMemo(modelKey, modelStore, fitFrame, "__na", d,
-            Seq(col(idCol)), nCells, fitIters)
-        })
-        else None
-      val ms =
-        if (modelStore.isEmpty)
-          fitSubspacesMemo(modelKey, fitFrame, m, sub, Seq(col(idCol)),
-            codes, fitIters)
-        else {
-          val modelFuts = (0 until m).map { s =>
-            scala.concurrent.Future {
-              fitCellsMemo(modelKey.map(k0 => s"$k0|pq$s/$m"), modelStore,
-                fitFrame, s"__pq$s", sub, Seq(col(idCol)), codes, fitIters)
-            }
+    // the m codebooks in ONE fused Lloyd loop (fitVecMultiSpec — one
+    // aggregate job per round for all m subspaces; r16 ran m
+    // concurrent per-fit driver loops = m·iters tiny jobs of
+    // job-launch latency). The d-dim IVF cell fit stays a CONCURRENT
+    // future, NOT part of the fused loop: fusing mixed dimensions
+    // widens the round aggregate to the largest dim for every
+    // exploded row (measured 5 → 38 s of task time at d=64, m=8 —
+    // the fused aggregate evaluated 64 decimal sum/count pairs on
+    // every 8-dim subspace row). The persistent-store tier keeps the
+    // per-fit path (each artifact loads/saves independently).
+    val cf =
+      if (nCells > 0) Some(scala.concurrent.Future {
+        fitCellsMemo(modelKey, modelStore, fitFrame, "__na", d,
+          Seq(col(idCol)), nCells, fitIters)
+      })
+      else None
+    val models =
+      if (modelStore.isEmpty)
+        fitSubspacesMemo(modelKey, fitFrame, m, sub, Seq(col(idCol)),
+          codes, fitIters)
+      else {
+        val modelFuts = (0 until m).map { s =>
+          scala.concurrent.Future {
+            fitCellsMemo(modelKey.map(k0 => s"$k0|pq$s/$m"), modelStore,
+              fitFrame, s"__pq$s", sub, Seq(col(idCol)), codes, fitIters)
           }
-          modelFuts.map(f => scala.concurrent.Await
-            .result(f, scala.concurrent.duration.Duration.Inf))
         }
-      (ms, cf.map(f => scala.concurrent.Await
-        .result(f, scala.concurrent.duration.Duration.Inf)))
-    }
+        modelFuts.map(f => scala.concurrent.Await
+          .result(f, scala.concurrent.duration.Duration.Inf))
+      }
+    val cellModel = cf.map(f => scala.concurrent.Await
+      .result(f, scala.concurrent.duration.Duration.Inf))
     // quantized codebooks + per-code self-dots, driver-side (m·codes·sub
     // longs — bounded by the codebook contract)
     val cq: Seq[Seq[Seq[Long]]] = models.map(mod =>
@@ -565,9 +523,7 @@ object Similarity {
         .select(col("query_id"), col("rank"),
           col(idCol).as("neighbor_id"), col("cosine"))
     })
-    val topkCk = labeled("pq: output")(topk.localCheckpoint(true))
-    sliced.unpersist(false)
-    topkCk
+    graft.Scope.checkpoint(topk, "pq: output")
   }
 
   /** MMR diversity re-rank (Carbonell & Goldstein, "The Use of MMR…",
@@ -735,80 +691,64 @@ object Similarity {
     * (hundreds+) completes without the driver drowning in plan
     * analysis (KCenterSpec pins k=64 against a driver reference). */
   def kCenterSelect(corpus: DataFrame, idCol: String, vecCol: String,
-      k: Int): DataFrame = {
+      k: Int): DataFrame = graft.Scope.nested { sc =>
     require(k >= 1, s"k must be >= 1, got $k")
     val spark = corpus.sparkSession
     val idType = corpus.schema(idCol).dataType
-    val e = corpus
+    val e = sc.cache(corpus
       .select(col(idCol), quantize(col(vecCol)).as("__v"))
       .withColumn("__nrm", normQ(col("__v")))
       // zero-norm vectors carry no direction; a null id would poison
       // the seed convention (nulls sort first) and the =!= removals
-      .filter(col("__nrm") > 0 && col(idCol).isNotNull)
-      .persist()
-    try {
-      def simFp(cv: Seq[Long]): Column = {
-        val cl = typedlit(cv)
-        floor(dotQ(col("__v"), cl) / (col("__nrm") * normQ(cl)) * lit(1e9))
-          .cast(LongType)
+      .filter(col("__nrm") > 0 && col(idCol).isNotNull), "kcenter: vectors")
+    def simFp(cv: Seq[Long]): Column = {
+      val cl = typedlit(cv)
+      floor(dotQ(col("__v"), cl) / (col("__nrm") * normQ(cl)) * lit(1e9))
+        .cast(LongType)
+    }
+    val seed = e.orderBy(col(idCol)).limit(1)
+      .select(col(idCol), col("__v")).collect()
+    val picked = scala.collection.mutable.ArrayBuffer[
+      (Any, Seq[Long], Option[Long])]()
+    seed.foreach(r => picked += ((r.get(0), r.getSeq[Long](1), None)))
+    var cur = e.filter(seed.map(r => col(idCol) =!= lit(r.get(0)))
+      .foldLeft(lit(true))(_ && _))
+      .withColumn("__ms", lit(Long.MinValue))
+    var rank = picked.size
+    while (rank >= 1 && rank < k) {
+      val lastVec = picked.last._2
+      cur = cur.withColumn("__ms", greatest(col("__ms"), simFp(lastVec)))
+      val next = cur.orderBy(col("__ms").asc, col(idCol).asc).limit(1)
+        .select(col(idCol), col("__v"), col("__ms")).collect()
+      if (next.isEmpty) rank = -1 // corpus exhausted
+      else {
+        val r = next.head
+        picked += ((r.get(0), r.getSeq[Long](1), Some(r.getLong(2))))
+        cur = cur.filter(col(idCol) =!= lit(r.get(0)))
+        rank += 1
+        // bound the plan: each pick chains one Project + one Filter
+        // onto `cur`, so after k picks analysis is O(k) per round —
+        // O(k²) total, and at coreset-realistic k (hundreds+) the
+        // driver chokes on plan analysis before any data moves.
+        // Truncate the lineage every 32 picks (eager localCheckpoint:
+        // one bounded materialization of the running-max frame, which
+        // only ever SHRINKS). KCenterSpec runs k=64 against a
+        // driver-side reference across the truncation boundary.
+        if (rank % 32 == 0)
+          cur = graft.Scope.checkpoint(cur, "kcenter: running max")
       }
-      val seed = e.orderBy(col(idCol)).limit(1)
-        .select(col(idCol), col("__v")).collect()
-      val picked = scala.collection.mutable.ArrayBuffer[
-        (Any, Seq[Long], Option[Long])]()
-      seed.foreach(r => picked += ((r.get(0), r.getSeq[Long](1), None)))
-      var cur = e.filter(seed.map(r => col(idCol) =!= lit(r.get(0)))
-        .foldLeft(lit(true))(_ && _))
-        .withColumn("__ms", lit(Long.MinValue))
-      var rank = picked.size
-      while (rank >= 1 && rank < k) {
-        val lastVec = picked.last._2
-        cur = cur.withColumn("__ms", greatest(col("__ms"), simFp(lastVec)))
-        val next = cur.orderBy(col("__ms").asc, col(idCol).asc).limit(1)
-          .select(col(idCol), col("__v"), col("__ms")).collect()
-        if (next.isEmpty) rank = -1 // corpus exhausted
-        else {
-          val r = next.head
-          picked += ((r.get(0), r.getSeq[Long](1), Some(r.getLong(2))))
-          cur = cur.filter(col(idCol) =!= lit(r.get(0)))
-          rank += 1
-          // bound the plan: each pick chains one Project + one Filter
-          // onto `cur`, so after k picks analysis is O(k) per round —
-          // O(k²) total, and at coreset-realistic k (hundreds+) the
-          // driver chokes on plan analysis before any data moves.
-          // Truncate the lineage every 32 picks (eager localCheckpoint:
-          // one bounded materialization of the running-max frame, which
-          // only ever SHRINKS). KCenterSpec runs k=64 against a
-          // driver-side reference across the truncation boundary.
-          if (rank % 32 == 0) cur = cur.localCheckpoint(true)
-        }
-      }
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("rank",
-          org.apache.spark.sql.types.IntegerType, nullable = false),
-        org.apache.spark.sql.types.StructField(idCol, idType),
-        org.apache.spark.sql.types.StructField("maxsim_fp", LongType)))
-      val rows = picked.zipWithIndex.map { case ((id, _, ms), i) =>
-        org.apache.spark.sql.Row(i + 1, id,
-          ms.map(java.lang.Long.valueOf).orNull)
-      }
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(rows.toList.asJava, schema)
-    } finally e.unpersist()
-  }
-
-  /** Fill a persisted signature frame BEFORE its multi-branch consumers
-    * (banded self-join + verify joins): AQE materializes independent
-    * leaf stages concurrently, and every branch reaching the UNFILLED
-    * cache recomputes the signature projection (the r17 Dedup.fill
-    * finding — d_ngram_jaccard profiled 4× duplicate signature
-    * passes). One labeled count builds the cache once. */
-  private def fillCache(df: DataFrame): DataFrame = {
-    val sc0 = df.sparkSession.sparkContext
-    val prev = sc0.getLocalProperty("spark.job.description")
-    sc0.setJobDescription("similarity: materialize signatures")
-    try df.count() finally sc0.setJobDescription(prev)
-    df
+    }
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("rank",
+        org.apache.spark.sql.types.IntegerType, nullable = false),
+      org.apache.spark.sql.types.StructField(idCol, idType),
+      org.apache.spark.sql.types.StructField("maxsim_fp", LongType)))
+    val rows = picked.zipWithIndex.map { case ((id, _, ms), i) =>
+      org.apache.spark.sql.Row(i + 1, id,
+        ms.map(java.lang.Long.valueOf).orNull)
+    }
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.toList.asJava, schema)
   }
 
   /** RP-LSH signature projection shared by the three entry points below:
@@ -871,9 +811,11 @@ object Similarity {
     * side; never an all-pairs stage. */
   def rpLshTopK(corpus: DataFrame, queryIds: Column => Column,
       idCol: String, vecCol: String, k: Int, nBands: Int = 16,
-      seed: Long = 42L, portable: Boolean = false): DataFrame = {
-    val e = fillCache(sigFrame(corpus, idCol, vecCol, seed, portable)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      seed: Long = 42L, portable: Boolean = false): DataFrame =
+      graft.Scope.nested { sc =>
+    // cached and filled: the banded join and the verify join both read it
+    val e = sc.cache(sigFrame(corpus, idCol, vecCol, seed, portable),
+      sigLabel)
     val banded = bandRows(e, idCol, nBands)
     val qBands = banded.filter(queryIds(col(idCol)))
       .select(col(idCol).as("query_id"), col("__band"), col("__bv"))
@@ -889,14 +831,13 @@ object Similarity {
         dotQ(col("__qv"), col("__v")) / (col("__qn") * col("__nrm")))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col(idCol))
-    val topk = scored.withColumn("rank", row_number().over(w))
+    graft.Scope.checkpoint(scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank"), col(idCol).as("neighbor_id"),
-        col("cosine"))
-      .localCheckpoint(true)
-    e.unpersist(false)
-    topk
+        col("cosine")), "rplsh: output")
   }
+
+  private val sigLabel = "similarity: signatures"
 
   /** Corpus-scale cosine near-dup via RP-LSH banding — the SELF-JOIN
     * counterpart of `rpLshTopK`, with the scale-safe band geometry AS THE
@@ -911,10 +852,9 @@ object Similarity {
     * drops list is checkpointed, the cache released (Dedup lifecycle). */
   def rpLshNearDup(df: DataFrame, idCol: String, vecCol: String,
       threshold: Double = 0.95, nBands: Int = 8, seed: Long = 42L)
-      : DataFrame = {
-    val e = fillCache(sigFrame(df.select(col(idCol).as("__id"),
-        col(vecCol).as("__vec")), "__id", "__vec", seed)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      : DataFrame = graft.Scope.nested { sc =>
+    val e = sc.cache(sigFrame(df.select(col(idCol).as("__id"),
+        col(vecCol).as("__vec")), "__id", "__vec", seed), sigLabel)
     val banded = bandRows(e, "__id", nBands)
     val cand = banded.as("a").join(banded.as("b"),
       col("a.__band") === col("b.__band") &&
@@ -930,9 +870,8 @@ object Similarity {
       .filter(dotQ(col("__va"), col("__vb")) /
         (col("__na") * col("__nb")) >= threshold)
       .select(col("__idb").as("__drop")).distinct()
-    val dropsCk = drops.localCheckpoint(true)
-    e.unpersist(false)
-    df.join(dropsCk, col(idCol) === col("__drop"), "left_anti")
+    df.join(graft.Scope.checkpoint(drops, "rplsh: drops"),
+      col(idCol) === col("__drop"), "left_anti")
   }
 
   /** Candidate-pair count at a given band geometry — the observable the
@@ -981,11 +920,12 @@ object Similarity {
       fitFraction: Double = 0.2, seed: Long = 42L,
       deterministic: Boolean = false, fitIters: Int = 3,
       modelKey: Option[String] = None,
-      modelStore: Option[graft.cache.LineageCache] = None): DataFrame = {
+      modelStore: Option[graft.cache.LineageCache] = None): DataFrame =
+      graft.Scope.nested { sc =>
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
     val spark = df.sparkSession
-    val e = df
+    val e = sc.cache(df
       .select(col(idCol).as("__id"),
         transform(col(vecCol), _.cast(DoubleType)).as("__dv"))
       .withColumn("__l2",
@@ -995,8 +935,7 @@ object Similarity {
         x => x / greatest(col("__l2"), lit(1e-30))))
       .withColumn("__features", array_to_vector(col("__na")))
       .withColumn("__v", quantize(col("__dv")))
-      .withColumn("__nrm", normQ(col("__v")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("__nrm", normQ(col("__v"))), "kmeans dedup: vectors")
     // deterministic: KMeansDet over the normalized vectors, FULL-corpus
     // fit (sampling would reintroduce engine dependence) — cell ids and
     // therefore the whole dedup re-derive in SQL (d_embed_cosine_kmeans
@@ -1009,12 +948,8 @@ object Similarity {
       // function of the vector multiset + tieBreak values, and both
       // operators feed it the same L2-normalized corpus) — so a shared
       // modelKey makes the dedup reuse the index's fit verbatim
-      // AQE off around the Lloyd driver loop (see pqTopK)
-      val m = graft.PlanAudit.withConf(df.sparkSession,
-        "spark.sql.adaptive.enabled", "false") {
-        fitCellsMemo(modelKey, modelStore, e, "__na", d,
-          Seq(col("__id")), nCells, fitIters)
-      }
+      val m = fitCellsMemo(modelKey, modelStore, e, "__na", d,
+        Seq(col("__id")), nCells, fitIters)
       KMeansDet.canonicalCentroids(m).zipWithIndex
         .map { case (c, i) => (i, c) }.toSeq
     } else {
@@ -1047,8 +982,7 @@ object Similarity {
       .filter(dotQ(col("a.__v"), col("b.__v")) /
         (col("a.__nrm") * col("b.__nrm")) >= threshold)
       .select(col("b.__id").as("__drop")).distinct()
-    val dropsCk = drops.localCheckpoint(true)
-    e.unpersist(false)
-    df.join(dropsCk, col(idCol) === col("__drop"), "left_anti")
+    df.join(graft.Scope.checkpoint(drops, "kmeans dedup: drops"),
+      col(idCol) === col("__drop"), "left_anti")
   }
 }

@@ -116,11 +116,9 @@ object Unigram {
     * One persisted distinct-word frame serves both phases (one corpus
     * scan instead of two). */
   def fitEm(df: DataFrame, textCol: String, topMulti: Int,
-      maxPieceLen: Int = 6): Seq[Piece] = {
-    val w = words(df, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try refitWords(w, fitWords(w, topMulti, maxPieceLen), maxPieceLen)
-    finally w.unpersist(false)
+      maxPieceLen: Int = 6): Seq[Piece] = graft.Scope.nested { sc =>
+    val w = sc.cache(words(df, textCol), "unigram: words")
+    refitWords(w, fitWords(w, topMulti, maxPieceLen), maxPieceLen)
   }
 
   /** SentencePiece's outer loop (Kudo 2018 §3.2): seed a LARGE
@@ -152,14 +150,12 @@ object Unigram {
     * integer DP per round — model-sized, never data-sized. */
   def fitTarget(df: DataFrame, textCol: String, targetVocab: Int,
       maxPieceLen: Int = 6, seedMult: Int = 4,
-      prunePermille: Int = 250): Seq[Piece] = {
+      prunePermille: Int = 250): Seq[Piece] = graft.Scope.nested { sc =>
     require(targetVocab >= 2, s"targetVocab must be >= 2, got $targetVocab")
     require(seedMult >= 2, s"seedMult must be >= 2, got $seedMult")
     require(prunePermille >= 1 && prunePermille <= 1000,
       s"prunePermille must be in [1, 1000], got $prunePermille")
-    val w = words(df, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    val w = sc.cache(words(df, textCol), "unigram: words")
     var pieces = fitWords(w, seedMult * targetVocab, maxPieceLen)
     val nChars = pieces.count(isSingleCp)
     require(targetVocab >= nChars,
@@ -189,7 +185,6 @@ object Unigram {
       }
     }
     refitWords(w, pieces, maxPieceLen)
-    } finally w.unpersist(false)
   }
 
   /** Persistent fit — the [[Bpe.fitStored]] contract for the

@@ -102,7 +102,8 @@ object WordPiece {
       minCount: Long = 2L): Seq[Merge] = {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
     require(minCount >= 1L, s"minCount must be >= 1, got $minCount")
-    var vocab = wordFrame(df, textCol).localCheckpoint(true)
+    var vocab = graft.Scope.checkpoint(wordFrame(df, textCol),
+      "wordpiece: words")
     val merges = Seq.newBuilder[Merge]
     var rank = 1
     var done = false
@@ -134,10 +135,9 @@ object WordPiece {
           val m = Merge(rank, row.getAs[String]("__l"),
             row.getAs[String]("__r"), row.getAs[Long]("__s"))
           merges += m
-          vocab = vocab.select(col("__w"), col("__f"),
+          vocab = graft.Scope.checkpoint(vocab.select(col("__w"), col("__f"),
             applyMergeAs(col("__syms"), m.left, m.right, m.merged)
-              .as("__syms"))
-            .localCheckpoint(true)
+              .as("__syms")), s"wordpiece: round $rank")
           rank += 1
       }
     }
@@ -176,20 +176,18 @@ object WordPiece {
     * `wordFrame` twice — once for the merge trainer's truncated
     * collect, once for the alphabet collect — i.e. two full
     * tokenize+explode+aggregate passes over the corpus. The frame is
-    * persisted for the two bounded collects and released; results are
+    * cached for the two bounded collects and released; results are
     * bit-identical (same frame, same collects). */
   def fitLocalWithVocab(df: DataFrame, textCol: String, nMerges: Int,
       minCount: Long = 2L,
-      maxWords: Int = 1 << 20): (Seq[Merge], Seq[String]) = {
-    val wf = wordFrame(df, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+      maxWords: Int = 1 << 20): (Seq[Merge], Seq[String]) =
+    graft.Scope.nested { sc =>
+      val wf = sc.cache(wordFrame(df, textCol), "wordpiece: words")
       val merges = fitLocalFromFrame(wf, nMerges, minCount, maxWords)
       val chars = wf.select(explode(col("__syms")).as("__u"))
         .distinct().collect().map(_.getString(0)) // alphabet-bounded
       (merges, (chars.toSeq ++ merges.map(_.merged)).distinct.sorted)
-    } finally wf.unpersist(false)
-  }
+    }
 
   private def fitLocalFromFrame(wf: DataFrame, nMerges: Int,
       minCount: Long, maxWords: Int): Seq[Merge] = {

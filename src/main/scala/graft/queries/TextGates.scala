@@ -1636,9 +1636,9 @@ object TextGates {
         // + C4-signal subtree computes ONCE, the same lineage-truncation
         // discipline PassageDedup applies to its windows frame. Only the
         // two columns the fan-out needs survive the checkpoint.
-        val quality = decon.filter(nTok >= 20 && dupFrac <= 0.3 &&
-          nStop * lit(1.0) / nTok >= 0.01)
-          .select("doc_id", "text").localCheckpoint()
+        val quality = graft.Scope.checkpoint(decon.filter(nTok >= 20 &&
+          dupFrac <= 0.3 && nStop * lit(1.0) / nTok >= 0.01)
+          .select("doc_id", "text"), "t_curation_e2e: quality")
         val stats = graft.operators.PassageDedup.docStats(
           quality, "doc_id", "text", k = 8)
           .filter(col("n_windows") === 0 || col("repeated_frac") <= 0.5)
@@ -1705,10 +1705,11 @@ object TextGates {
       // ONE corpus-wide counting pass feeds both outputs: the merged
       // spans materialize once (tiny — actual duplication only) and
       // drive the span report AND the scrub
-      val spanRows = graft.operators.SubstringDedup.spansFromWindows(
-        graft.operators.SubstringDedup.duplicatedWindows(
-          docs, "doc_id", "text", 8), "doc_id", 8)
-        .localCheckpoint(true)
+      val spanRows = graft.Scope.checkpoint(
+        graft.operators.SubstringDedup.spansFromWindows(
+          graft.operators.SubstringDedup.duplicatedWindows(
+            docs, "doc_id", "text", 8), "doc_id", 8),
+        "d_substring_dedup: spans")
       val spans = spanRows
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_spans"),
@@ -1979,12 +1980,13 @@ object TextGates {
           slice(tk, lit(3), g).as("c")),
         t3 => concat_ws("_", t3.getField("a"), t3.getField("b"),
           t3.getField("c")))
-      // in-run persist: the trigram assembly feeds THREE eager passes
-      // (fitLocal word count, vocabulary collect, the encode output) —
-      // the fit fills the cache serially, the rest read blocks (r17,
-      // guide §6 scan reuse)
-      val fx = docs.select(col("doc_id"), array_join(tri, " ").as("fx"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // cached in the gate's scope: the trigram assembly feeds THREE
+      // eager passes (fitLocal word count, vocabulary collect, the encode
+      // output) — one fill, the rest read blocks (r17, guide §6 scan
+      // reuse)
+      val fx = graft.Scope.cache(
+        docs.select(col("doc_id"), array_join(tri, " ").as("fx")),
+        "t_wordpiece_train_big: trigrams")
       // vocabulary from the FULL frame (alphabet-complete, so the
       // greedy encode never UNKs and the reconstruction is exact);
       // fit + alphabet share one word-frame pass (r17)
@@ -2080,10 +2082,11 @@ object TextGates {
           slice(tk, lit(3), g).as("c")),
         t3 => concat_ws("_", t3.getField("a"), t3.getField("b"),
           t3.getField("c")))
-      // in-run persist — see t_wordpiece_train_big (fit + encode output
-      // share one trigram assembly)
-      val fx = docs.select(col("doc_id"), array_join(tri, " ").as("fx"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // cached in the gate's scope — see t_wordpiece_train_big (fit +
+      // encode output share one trigram assembly)
+      val fx = graft.Scope.cache(
+        docs.select(col("doc_id"), array_join(tri, " ").as("fx")),
+        "t_bpe_train_big: trigrams")
       // fit on the FULL frame with the production truncation knob
       // engaged (top 8k words by (freq desc, word asc) — the 16k/27k
       // frames truncate at every sf, which also pins the gate's fit
@@ -3112,10 +3115,10 @@ object TextGates {
       // downstream reference (fit scan, two encodes, two decodes)
       // would re-evaluate them per row — truncate once (tiny frame:
       // one string pair per doc), the standard pipeline practice
-      val sc = graft.operators.SpanCorrupt.corrupt(
+      val sc = graft.Scope.checkpoint(graft.operators.SpanCorrupt.corrupt(
         t(s, d, "documents"), "doc_id", "text", rateK = 6)
-        .select(col("doc_id"), col("inp"), col("tgt"))
-        .localCheckpoint(true)
+        .select(col("doc_id"), col("inp"), col("tgt")),
+        "t_span_corrupt_ids: corrupted")
       val sp = graft.operators.SpanCorrupt.extraIdSpecials(64)
       val merges = graft.operators.Bpe.fitLocal(sc, "inp", 6,
         minCount = 1L, byteLevel = true, specials = sp)

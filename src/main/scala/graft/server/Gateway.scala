@@ -111,7 +111,10 @@ final class Gateway(
         respond(ex, 401, "unauthorized")
       } else {
         val path = ex.getRequestURI.getPath
-        (ex.getRequestMethod, path) match {
+        // one scope per request: frames cached while resolving (fit
+        // inputs, emit layouts) live until the response rows are taken
+        // or the lineage parquet is written, then are released
+        graft.Scope.open { _ => (ex.getRequestMethod, path) match {
           case ("PUT", "/admin/configuration") => putConfiguration(ex)
           case ("PUT", "/admin/transformation") => putTransformation(ex)
           case ("GET", p) if p.startsWith("/data/json/") =>
@@ -124,7 +127,7 @@ final class Gateway(
             getChart(ex, java.net.URLDecoder.decode(
               p.stripPrefix("/chart/"), "UTF-8"))
           case _ => respond(ex, 404, s"no route ${ex.getRequestMethod} $path")
-        }
+        } }
       }
     } catch {
       case e: Throwable =>

@@ -51,11 +51,11 @@ object StreamOps {
     * count. Restores the previous value; batch fits must run OUTSIDE
     * this wrapper so they keep the session's parallelism.
     *
-    * NOT thread-safe: this mutates SESSION-global conf (like
-    * [[graft.PlanAudit.withConf]]). Safe today because gates run
-    * serially and the wrapper encloses whole regions single-threadedly;
-    * concurrent gate execution would silently race the shuffle/AQE
-    * settings — use separate sessions (`spark.newSession()`) there. */
+    * NOT thread-safe: this mutates SESSION-global conf. Safe today
+    * because gates run serially and the wrapper encloses whole regions
+    * single-threadedly; concurrent gate execution would silently race
+    * the shuffle setting — use separate sessions (`spark.newSession()`)
+    * there. */
   private[streaming] def withStatePartitions[T](spark: SparkSession,
       n: Int)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"

@@ -68,6 +68,30 @@ class ComponentsSpec extends AnyFunSuite {
     } finally spark.conf.unset("graft.cc.driverMaxEdges")
   }
 
+  test("above graft.cc.driverMaxEdges the distributed path reads the " +
+    "cached edges once and leaks no cache") {
+    // every edge row passes one counting (nondeterministic, so never
+    // duplicated by the optimizer) projection; the operator caches the
+    // edge frame before the size probe, so the probe, the symmetric
+    // union and the rounds all read blocks — each row is evaluated once
+    val evals = spark.sparkContext.longAccumulator("cc-edge-evals")
+    val tap = udf { (x: Long) => evals.add(1); x }.asNondeterministic()
+    val es = Seq((1L, 2L), (2L, 3L), (4L, 5L), (6L, 7L), (7L, 8L), (8L, 6L))
+    val edges = es.toDF("a", "b").withColumn("a", tap(col("a")))
+    val viaDriver = cc(es)
+    spark.sharedState.cacheManager.clearCache()
+    spark.conf.set("graft.cc.driverMaxEdges", "2") // 6 edges > 2
+    try {
+      val got = Components.connectedComponents(edges, "a", "b")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == viaDriver)
+      assert(evals.value == es.size,
+        s"edge plan evaluated ${evals.value} rows for ${es.size} edges")
+    } finally spark.conf.unset("graft.cc.driverMaxEdges")
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the operator scope must release the edge cache")
+  }
+
   test("withComponents labels every row; isolated rows are their own " +
     "component; no caches leak") {
     val df = Seq(1L, 2L, 3L, 50L).toDF("id")

@@ -154,32 +154,38 @@ class DedupSpec extends AnyFunSuite {
 
   test("minhashPairs memoizes per corpus plan: a same-plan re-request " +
     "is job-free; changed params or corpus recompute") {
-    Dedup.clearPairsMemo()
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val p1 = Dedup.minhashPairs(docs, "text", "doc_id",
-      threshold = 0.5, portable = true)
-    val baseline = JobCounter.count(spark) {}
-    // a FRESH read of the same path canonicalizes to the same plan —
-    // the memo returns the already-materialized frame, launching no jobs
-    // (the read itself goes outside the counter: parquet schema
-    // discovery runs its own small job)
-    val fresh = spark.read.parquet(s"$dir/documents.parquet")
-    val hits = JobCounter.count(spark) {
-      val p2 = Dedup.minhashPairs(fresh, "text", "doc_id",
-        threshold = 0.5, portable = true)
-      assert(p2 eq p1, "same plan + params must return the memoized frame")
+    def pairs(df: org.apache.spark.sql.DataFrame, threshold: Double = 0.5) =
+      Dedup.minhashPairs(df, "text", "doc_id", threshold = threshold,
+        portable = true)
+    val p1 = Scope.open { _ =>
+      val p1 = pairs(docs)
+      val baseline = JobCounter.count(spark) {}
+      // a FRESH read of the same path canonicalizes to the same plan —
+      // the scope's memo returns the already-materialized frame,
+      // launching no jobs (the read itself goes outside the counter:
+      // parquet schema discovery runs its own small job)
+      val fresh = spark.read.parquet(s"$dir/documents.parquet")
+      val hits = JobCounter.count(spark) {
+        assert(pairs(fresh) eq p1,
+          "same plan + params must return the memoized frame")
+      }
+      assert(hits == baseline,
+        s"memo hit must launch zero jobs (got $hits vs baseline $baseline)")
+      // different threshold → different verify → fresh computation
+      assert(!(pairs(docs, threshold = 0.9) eq p1))
+      // different corpus plan → fresh computation
+      assert(!(pairs(docs.filter(col("doc_id") > 2)) eq p1))
+      p1
     }
-    assert(hits == baseline,
-      s"memo hit must launch zero jobs (got $hits vs baseline $baseline)")
-    // different threshold → different verify → fresh computation
-    val p3 = Dedup.minhashPairs(docs, "text", "doc_id",
-      threshold = 0.9, portable = true)
-    assert(!(p3 eq p1))
-    // different corpus plan → fresh computation
-    val p4 = Dedup.minhashPairs(docs.filter(col("doc_id") > 2), "text",
-      "doc_id", threshold = 0.5, portable = true)
-    assert(!(p4 eq p1))
-    Dedup.clearPairsMemo()
+    // the memo dies with its scope: a new scope, or none, recomputes —
+    // to the same pairs
+    val p5 = Scope.open(_ => pairs(docs))
+    val p6 = pairs(docs)
+    assert(!(p5 eq p1) && !(p6 eq p1) && !(pairs(docs) eq p6))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("id_a", "id_b").collect().toSeq
+    assert(rows(p5) == rows(p1) && rows(p6) == rows(p1))
   }
 
   test("cell models persist under the lineage-cache key: a fresh " +
@@ -188,23 +194,23 @@ class DedupSpec extends AnyFunSuite {
     val lc = new LineageCache(spark,
       java.nio.file.Files.createTempDirectory("graftmodel").toString)
     val e = spark.read.parquet(s"$dir/embeddings.parquet")
-    def run(store: LineageCache) =
+    def query(store: LineageCache) =
       Similarity.ivfTopK(e, id => id < 2, "vec_id", "embedding",
         k = 2, nCells = 2, nprobe = 2, deterministic = true,
         modelKey = Some("spec-corpus|l2"), modelStore = Some(store))
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
         .toSeq
-    Similarity.clearCellModels()
+    // each run in its own scope: a new scope starts with an empty memo,
+    // exactly what a fresh session sees
+    def run(store: LineageCache) = Scope.open(_ => query(store))
     val first = run(lc) // fits, persists the k×d artifact
     assert(lc.contains(
       lc.key("cellmodel", Seq("spec-corpus|l2", "2", "3", "64"))),
       "fit must write the keyed model artifact")
-    Similarity.clearCellModels() // simulate a NEW session (fresh JVM memo)
     var second: Seq[(Long, Int, Long)] = null
     val loadJobs = JobCounter.count(spark) { second = run(lc) }
     // an EMPTY store forces the full driver-loop fit — the baseline the
     // loaded path must beat by at least the fit's corpus passes
-    Similarity.clearCellModels()
     val lc2 = new LineageCache(spark,
       java.nio.file.Files.createTempDirectory("graftmodel2").toString)
     var third: Seq[(Long, Int, Long)] = null
@@ -213,7 +219,18 @@ class DedupSpec extends AnyFunSuite {
       "loaded and re-fitted models must produce identical results")
     assert(loadJobs < fitJobs,
       s"store hit must skip the fit jobs ($loadJobs vs $fitJobs)")
-    Similarity.clearCellModels()
+    // within ONE scope the in-memory memo serves a repeat with the same
+    // modelKey: fewer jobs than the store load, same rows
+    val lc3 = new LineageCache(spark,
+      java.nio.file.Files.createTempDirectory("graftmodel3").toString)
+    Scope.open { _ =>
+      assert(query(lc3) == first)
+      var fourth: Seq[(Long, Int, Long)] = null
+      val memoJobs = JobCounter.count(spark) { fourth = query(lc3) }
+      assert(fourth == first)
+      assert(memoJobs < loadJobs,
+        s"scope memo hit must skip the model load ($memoJobs vs $loadJobs)")
+    }
   }
 
   test("operators leave no cached relations behind") {

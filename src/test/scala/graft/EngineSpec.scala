@@ -527,11 +527,12 @@ class EngineSpec extends AnyFunSuite {
     assert(lit.select("id").collect().map(_.getLong(0)).toSeq == Seq(1L))
   }
 
-  test("fit-input persist (graft.engine.persistFitInputs) does not " +
-    "change pipeline results") {
-    // r17: fit-bearing statements persist their shuffle-tailed input so
-    // the eager fit and the output share one execution — semantics must
-    // be byte-identical with the persist disabled
+  test("fit inputs are cached only inside a scope, released at close; " +
+    "rows match") {
+    // the fit input (`dedup exact` is an aggregate) and the emit layout
+    // are cached in the enclosing scope while the program builds and
+    // runs, released when the caller closes it — and caching must not
+    // change a byte of the result
     import spark.implicits._
     val docs = (0 until 60).map(i =>
       (i.toLong, s"w${i % 7} w${(i * 3) % 11} w${(i * 5) % 13} tail$i"))
@@ -545,16 +546,18 @@ class EngineSpec extends AnyFunSuite {
         |emit packed token_ids 64 2
         |slice columns shard seq n_docs n_tokens input_ids doc_starts
         |""".stripMargin
-    def rows(): Seq[String] = {
-      spark.sharedState.cacheManager.clearCache()
-      graft.hb.Graft.runHb(hb, docs)
-        .orderBy("shard", "seq").collect().map(_.toString).toSeq
+    def rows(): Seq[String] = graft.hb.Graft.runHb(hb, docs)
+      .orderBy("shard", "seq").collect().map(_.toString).toSeq
+    val cm = spark.sharedState.cacheManager
+    cm.clearCache()
+    val unscoped = rows()
+    assert(cm.isEmpty, "with no scope open nothing may be cached")
+    val scoped = Scope.open { _ =>
+      val r = rows()
+      assert(!cm.isEmpty, "inside a scope the fit input must be cached")
+      r
     }
-    val withPersist = rows()
-    spark.conf.set("graft.engine.persistFitInputs", "false")
-    try {
-      val without = rows()
-      assert(withPersist == without)
-    } finally spark.conf.unset("graft.engine.persistFitInputs")
+    assert(cm.isEmpty, "closing the scope must release the fit input")
+    assert(scoped == unscoped)
   }
 }
