@@ -515,7 +515,7 @@ object Ast {
   /** `bpe bytes <textCol> <nMerges>` — the BYTE-LEVEL [[BpeEnc]]:
     * GPT-2-style regex pretokens, byte-alphabet symbols, case and
     * whitespace preserved, lossless `decode bytes` inverse
-    * (operators.Bpe.fitBytes + the codegen'd native encode). Adds
+    * (byte-level operators.Bpe.fit + the codegen'd native encode). Adds
     * `bpe` like [[BpeEnc]]. */
   case class BpeBytesEnc(textCol: String, nMerges: Int) extends Statement
 
@@ -577,7 +577,7 @@ object Ast {
 
   /** `bpe bytes <textCol> using <conf> <nMerges>` — [[BpeBytesEnc]]
     * with the merge table trained on a MODEL configuration
-    * (operators.Bpe.fitBytes at translation time): the offline-fit /
+    * (byte-level operators.Bpe.fit at translation time): the offline-fit /
     * online-encode pairing for the LOSSLESS tokenizer — the stream
     * side is a stateless codegen'd narrow map. */
   case class BpeBytesUsing(textCol: String, conf: String, nMerges: Int)
@@ -585,7 +585,7 @@ object Ast {
 
   /** `bpe <textCol> using <conf> <nMerges>` — the [[BpeEnc]] twin with
     * the merge table trained on a MODEL configuration
-    * (operators.Bpe.fitDelta + the codegen'd native encode). */
+    * (operators.Bpe.fit + the codegen'd native encode). */
   case class BpeUsing(textCol: String, conf: String, nMerges: Int)
       extends Statement
 

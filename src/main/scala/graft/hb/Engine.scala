@@ -452,20 +452,13 @@ object Engine {
         .topFracPerStratum(f.df, st, sc, KEY, p, 100))
 
     case BpeEnc(c, n) =>
-      // merge table trained on the frame itself (bounded driver rows:
-      // one per merge), encoding a pure narrow map; row set unchanged.
-      // fitLocal, not the per-merge fitDelta loop: the STATEMENT path
-      // is the production surface, and the trainer split every real
-      // tokenizer uses is one distributed word count + the merge loop
-      // in driver memory — identical merge list below the maxWords
-      // frequency-truncation knob (BpeSpec pins the property; the
-      // library-level t_bpe_* gates keep exercising the distributed
-      // loop). Same for every statement fit below.
+      // merge table trained on the frame itself (one distributed word
+      // count, the merge loop in driver memory), encoding a pure narrow
+      // map; row set unchanged
       val bpeBase = fitInput(f.df, "bpe")
       f.copy(df = spread(bpeBase).withColumn("bpe",
         graft.operators.Bpe.encodeColFast(
-          col(c), graft.operators.Bpe.fitLocal(bpeBase, c, n,
-            minCount = 1L))))
+          col(c), graft.operators.Bpe.fit(bpeBase, c, n, minCount = 1L))))
 
     case WordPieceEnc(c, n) =>
       // likelihood-ranked fit (bounded driver rows) + the native greedy
@@ -473,7 +466,7 @@ object Engine {
       val wpBase = fitInput(f.df, "wordpiece")
       // one word-frame pass drives the merge fit AND the alphabet
       val (_, vocab) = graft.operators.WordPiece
-        .fitLocalWithVocab(wpBase, c, n, minCount = 1L)
+        .fit(wpBase, c, n, minCount = 1L)
       f.copy(df = spread(wpBase)
         .withColumn("__wps", graft.operators.WordPiece.encodeCol(col(c), vocab))
         .withColumn("wp", array_join(col("__wps"), " "))
@@ -499,7 +492,7 @@ object Engine {
       val bbBase = fitInput(f.df, "bpe bytes")
       f.copy(df = spread(bbBase).withColumn("bpe",
         graft.operators.Bpe.encodeBytesCol(col(c),
-          graft.operators.Bpe.fitLocal(bbBase, c, n, minCount = 1L,
+          graft.operators.Bpe.fit(bbBase, c, n, minCount = 1L,
             byteLevel = true))))
 
     case BpeBytesDecode(c) =>
@@ -544,7 +537,7 @@ object Engine {
         .segmentedCorpus(wpiBase, c, tags)
       // one word-frame pass drives the merge fit AND the alphabet
       val (_, vocab) = graft.operators.WordPiece
-        .fitLocalWithVocab(wpFit, c, n, minCount = 1L)
+        .fit(wpFit, c, n, minCount = 1L)
       val idsCol =
         if (tags.isEmpty)
           graft.operators.WordPiece.encodeIdsCol(col(c), vocab)
@@ -567,7 +560,7 @@ object Engine {
       // the EXACT fit without a second training pass — schema
       // inspection costs zero Spark jobs.
       val biBase = fitInput(f.df, "bpe ids")
-      val merges = graft.operators.Bpe.fitLocal(biBase, c, n,
+      val merges = graft.operators.Bpe.fit(biBase, c, n,
         minCount = 1L, byteLevel = true, specials = tags)
       f.copy(df = spread(biBase)
         .withColumn("token_ids",
@@ -613,7 +606,7 @@ object Engine {
       val renderedDf = graft.Scope.cache(spread(f.df).withColumn(
         "rendered", graft.operators.Sft.render(col(pc), col(rc))),
         "hb sft: rendered frame")
-      val sftMerges = graft.operators.Bpe.fitLocal(renderedDf,
+      val sftMerges = graft.operators.Bpe.fit(renderedDf,
         "rendered", n, minCount = 1L, byteLevel = true, specials = sftSp)
       f.copy(df = renderedDf
         .withColumn("token_ids", graft.operators.Bpe.encodeIdsCol(

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Deterministic byte-pair-encoding tokenizer training — the missing
   * piece between corpus curation and the training run: learn the merge
@@ -13,13 +12,12 @@ import org.apache.spark.storage.StorageLevel
   * frequencies (one shuffle of (word, count) pairs — the only time the
   * corpus itself is touched); every word starts as its character
   * sequence plus a `</w>` end marker, and each of the N rounds (a) sums
-  * adjacent-symbol-pair frequencies over the vocabulary frame, (b)
-  * takes the best pair under the TOTAL order (count DESC, left ASC,
-  * right ASC) — one driver row per round, bounded by contract — and
-  * (c) rewrites the vocabulary with the merge applied greedily
-  * left-to-right (a narrow fold per word; overlapping matches like
-  * `a a a` resolve to merge-at-even-offsets within each run of
-  * consecutive matches, which IS the left-to-right greedy result).
+  * adjacent-symbol-pair frequencies over the vocabulary, (b) takes the
+  * best pair under the TOTAL order (count DESC, left ASC, right ASC)
+  * and (c) rewrites the vocabulary with the merge applied greedily
+  * left-to-right (overlapping matches like `a a a` resolve to
+  * merge-at-even-offsets within each run of consecutive matches, which
+  * IS the left-to-right greedy result).
   *
   * Everything is integer counts and string comparisons — no floats
   * anywhere — so the learned merges are bit-reproducible in any engine
@@ -27,12 +25,12 @@ import org.apache.spark.storage.StorageLevel
   * does exactly that, window functions for the run-parity rule
   * included).
   *
-  * 100 TB shape: iterations run on the vocabulary frame (rows = corpus
-  * distinct words — Heap's-law bounded, ≪ corpus), persisted per round
-  * and exchanged only as (pair, count) partial aggregates; the corpus
-  * never re-enters after the initial word count. Encoding is a pure
-  * narrow map (per-token fold over the ≤N broadcast-as-literals merge
-  * list) — zero shuffles, no model join.
+  * 100 TB shape: the rounds run in driver memory over the collected
+  * distinct-word frame (Heap's-law bounded, ≪ corpus; [[fit]] fails
+  * loudly above [[WordBound]]); the corpus never re-enters after the
+  * initial word count. Encoding is a pure narrow map (per-token fold
+  * over the ≤N broadcast-as-literals merge list) — zero shuffles, no
+  * model join.
   */
 object Bpe {
 
@@ -58,7 +56,13 @@ object Bpe {
     * a carry — `carry==left && x==right` emits the merged symbol and
     * clears the carry (so the right half can't start another match),
     * anything else flushes the carry. Pure narrow expression. */
-  def applyMerge(syms: Column, left: String, right: String): Column = {
+  def applyMerge(syms: Column, left: String, right: String): Column =
+    applyMergeAs(syms, left, right, left + right)
+
+  /** [[applyMerge]] emitting `merged` for each match (WordPiece's join
+    * drops the right part's `##`). */
+  private[graft] def applyMergeAs(syms: Column, left: String, right: String,
+      merged: String): Column = {
     val init = struct(
       array().cast("array<string>").as("out"),
       lit(null).cast("string").as("carry"))
@@ -68,7 +72,7 @@ object Bpe {
         val carry = acc.getField("carry")
         when(carry.isNull, struct(out.as("out"), x.as("carry")))
           .when(carry === lit(left) && x === lit(right),
-            struct(concat(out, array(lit(left + right))).as("out"),
+            struct(concat(out, array(lit(merged))).as("out"),
               lit(null).cast("string").as("carry")))
           .otherwise(struct(concat(out, array(carry)).as("out"),
             x.as("carry")))
@@ -80,12 +84,12 @@ object Bpe {
       })
   }
 
-  /** The word-count frame behind both trainers: one pass over the
+  /** The word-count frame behind the trainer: one pass over the
     * corpus — the ONLY time the corpus is touched. The tokenize/explode
     * map work runs BEFORE the groupBy shuffle, so a row-group-capped
     * input layout would serialize it (the r14 3.6–8.6× finding);
     * decouple from file layout up front. */
-  private def wordFrame(df0: DataFrame, textCol: String): DataFrame = {
+  private[graft] def wordFrame(df0: DataFrame, textCol: String): DataFrame = {
     val df = graft.PlanAudit.repartitionIfLayoutBound(df0)
     df.select(explode(Decontaminate.tokens(col(textCol))).as("__w"))
       .filter(length(col("__w")) > 0)
@@ -103,7 +107,7 @@ object Bpe {
     * `regexp_extract_all` over the same Java pattern the encode
     * scanner replicates (BpeSpec pins scanner ≡ Pattern), so trainer
     * and encoder cut identically. */
-  private def byteFrame(df0: DataFrame, textCol: String,
+  private[graft] def byteFrame(df0: DataFrame, textCol: String,
       specials: Seq[String] = Nil): DataFrame = {
     // layout-decoupled like wordFrame: the regex pretokenizer is the
     // map-side hot loop and must not inherit a row-group-capped scan
@@ -128,266 +132,88 @@ object Bpe {
           i => substring(col("__w"), i, lit(1))).as("__syms"))
   }
 
-  /** Adjacent-pair occurrences of a vocabulary frame, frequency-
-    * weighted: (__l, __r, __f) — one row per pair occurrence. */
-  private def pairRows(vocab: DataFrame): DataFrame = {
-    val n = size(col("__syms"))
-    vocab
-      .select(col("__f"), explode(arrays_zip(
-        slice(col("__syms"), lit(1), greatest(n - 1, lit(0))).as("__l"),
-        slice(col("__syms"), lit(2), greatest(n - 1, lit(0))).as("__r")))
-        .as("__p"))
-      .select(col("__p.__l").as("__l"), col("__p.__r").as("__r"),
-        col("__f"))
+  /** The most distinct words (or pretokens) a driver-local fit holds:
+    * ~1M words is tens of MB of driver heap, and a real corpus's
+    * Heap's-law vocabulary sits far below it. */
+  val WordBound: Int = 1 << 20
+
+  /** Collect a word frame's (word, frequency) rows to the driver — at
+    * most `bound`, and a corpus with MORE distinct units fails naming
+    * the trainer and the bound instead of fitting on a truncated
+    * vocabulary (a truncated fit diverges from the oracle with no
+    * other signal). `bound + 1` rows are collected so the overflow is
+    * seen without a second count job. */
+  private[graft] def collectWords(frame: DataFrame, trainer: String,
+      unit: String, bound: Int = WordBound): Array[(String, Long)] = {
+    // the trainers ignore row order; sorting makes the bounded collect
+    // one top-k job instead of an incremental take over partitions
+    val rows = frame.select(col("__w"), col("__f"))
+      .orderBy(col("__f").desc, col("__w").asc)
+      .limit(bound + 1)
+      .collect() // ≤ bound + 1 rows by construction
+    if (rows.length > bound)
+      throw new IllegalArgumentException(s"$trainer fit: the corpus has " +
+        s"more than $bound distinct $unit, the driver-local trainer's bound")
+    rows.map(r => (r.getString(0), r.getLong(1)))
   }
 
-  /** True iff a symbol array contains the adjacent pair (left, right)
-    * — the narrow pre-filter that keeps the delta trainer's per-round
-    * work on the words a merge actually touches. A plain substring
-    * probe of the NUL-joined symbol string, not an `exists` over an
-    * `arrays_zip` (which would allocate a zipped struct array per word
-    * per round — as expensive as the full pair explode it exists to
-    * avoid). NUL delimiters make symbol boundaries unfakeable for any
-    * text without embedded NULs; a text WITH embedded NULs can only
-    * produce false POSITIVES (an untouched word entering the touched
-    * slice contributes identical −/+ pair rows that cancel in the
-    * aggregate, and `applyMerge` on it is the identity), never false
-    * negatives — correctness holds either way. */
-  private def hasPair(syms: Column, left: String, right: String): Column =
-    concat(lit("\u0000"), array_join(syms, "\u0000"), lit("\u0000"))
-      .contains(lit("\u0000" + left + "\u0000" + right + "\u0000"))
+  /** A word's code points, each as a one-symbol string. */
+  private[operators] def codePoints(w: String): Array[String] = {
+    val out = Array.newBuilder[String]
+    var ci = 0
+    while (ci < w.length) {
+      val l = Character.charCount(w.codePointAt(ci))
+      out += w.substring(ci, ci + l)
+      ci += l
+    }
+    out.result()
+  }
 
   /** Learn `nMerges` merges from the corpus (fewer if the vocabulary
-    * runs out of repeated pairs before that: training stops when the
-    * best pair's weighted count drops below `minCount`).
+    * runs out of repeated pairs first: training stops when the best
+    * pair's weighted count drops below `minCount`).
     *
-    * The executable SPECIFICATION trainer: every round re-aggregates
-    * every adjacent pair over the whole vocabulary frame — exactly the
-    * shape the gate oracle unrolls in SQL. [[fitDelta]] is the
-    * production path (identical merge list, BpeSpec pins the parity
-    * property; per-round work proportional to the words the last merge
-    * TOUCHED, not the vocabulary). */
+    * The corpus is touched exactly once, distributed: the (word, freq)
+    * aggregate of [[wordFrame]] (or, with `byteLevel`, the pretoken
+    * aggregate of [[byteFrame]], whose tables pair with
+    * [[encodeBytesCol]]/[[encodeIdsCol]]). The merge loop then runs in
+    * driver memory over the collected distinct-word frame — Heap's-law
+    * bounded, at most [[WordBound]] rows, failing loudly above — the
+    * split Sennrich's subword-nmt, HuggingFace tokenizers and
+    * SentencePiece all use. In memory the classic indexed trainer
+    * applies: a pair→count map, a pair→touched-words index and a lazy
+    * max-heap under the (count DESC, left ASC, right ASC) total order —
+    * O(touched·log P) per merge, so a 32k-merge fit is driver time, not
+    * 32k Spark rounds (SCALE.md carries the measured wall-clock). The
+    * merge list equals the round-by-round specification the gate oracles
+    * unroll in SQL (BpeSpec pins the parity, word-level, byte-level and
+    * with specials).
+    *
+    * Non-empty `specials` (byte-level only) EXCLUDE the reserved
+    * tokens' literal text from the fit corpus (the HF added_tokens
+    * discipline): only the plain segments around special occurrences
+    * contribute pretoken statistics, so no merge is spent on fragments
+    * of a control tag. Pair with [[encodeIdsCol]]/[[decodeIdsCol]]
+    * under the SAME specials list. */
   def fit(df: DataFrame, textCol: String, nMerges: Int,
-      minCount: Long = 2L): Seq[Merge] = {
-    require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
-    // localCheckpoint (eager), NOT persist: each round must start from
-    // a TRUNCATED plan. A persist chain keeps the full logical lineage,
-    // and nested InMemoryRelations print the prior round's plan twice —
-    // the explain string AQE renders per job DOUBLES per round
-    // (measured: 55 MB of plan text by round 14, OOM soon after).
-    // Truncation caps the plan at one round deep forever. Local (not
-    // reliable) checkpointing trades executor-loss recovery for speed —
-    // right for a driver-bounded iterative fit; a multi-tenant
-    // production cluster would use checkpoint() on a shared path.
-    var vocab = graft.Scope.checkpoint(wordFrame(df, textCol), "bpe: words")
-    val merges = Seq.newBuilder[Merge]
-    var rank = 1
-    var done = false
-    while (rank <= nMerges && !done) {
-      val n = size(col("__syms"))
-      val best = vocab
-        .select(col("__f"), explode(arrays_zip(
-          slice(col("__syms"), lit(1), greatest(n - 1, lit(0))).as("__l"),
-          slice(col("__syms"), lit(2), greatest(n - 1, lit(0))).as("__r")))
-          .as("__p"))
-        .groupBy(col("__p.__l").as("__l"), col("__p.__r").as("__r"))
-        .agg(sum(col("__f")).as("__c"))
-        .orderBy(col("__c").desc, col("__l").asc, col("__r").asc)
-        .limit(1).collect() // exactly one row per round — bounded
-      best.headOption.filter(_.getLong(2) >= minCount) match {
-        case None => done = true
-        case Some(row) =>
-          val m = Merge(rank, row.getString(0), row.getString(1))
-          merges += m
-          vocab = graft.Scope.checkpoint(vocab.select(col("__w"), col("__f"),
-            applyMerge(col("__syms"), m.left, m.right).as("__syms")),
-            s"bpe: round $rank")
-          rank += 1
-      }
-    }
-    merges.result()
-  }
-
-  /** [[fit]] with the pair-count frame maintained INCREMENTALLY — the
-    * classic delta trainer: after applying merge (l, r), only words
-    * that contained the adjacent pair (l, r) change their pair
-    * multiset, so each round (a) takes the best pair from the standing
-    * counts frame under the same (count DESC, left ASC, right ASC)
-    * total order, (b) recomputes pair rows for ONLY the touched words
-    * (old pairs negative, post-merge pairs positive) and (c) folds the
-    * deltas into the counts. Identical merge list to [[fit]] (BpeSpec
-    * pins the property); per-round exchanged bytes drop from every
-    * pair occurrence of every word to the compact (pair, count) frame
-    * plus the touched words' deltas (SCALE.md row), and per-round CPU
-    * drops from an interpreted merge fold over the whole vocabulary to
-    * a narrow `exists` scan plus the fold over the touched slice.
-    *
-    * Still one bounded driver row + one job chain per round —
-    * inherent to the greedy objective (each merge conditions the next
-    * round's counts). For the production 32k-merge regime use
-    * [[fitLocal]]: the corpus-touching word count stays distributed,
-    * the merge loop runs in driver memory over the Heap's-law-bounded
-    * word frame — measured 1 000 merges in ~49 s and 4 000 in ~55 s at
-    * ~1M distinct words (SCALE.md), where this trainer pays one Spark
-    * round PER MERGE. Identical merge list (BpeSpec parity); the
-    * encode side is vocabulary-size-independent either way
-    * (BpeEncodeExpr).
-    * Lineage is truncated EVERY round (`localCheckpoint`, eager — see
-    * [[fit]] for why persist chains are not enough) so plan size and
-    * analysis stay O(1) per round at any `nMerges`. */
-  def fitDelta(df: DataFrame, textCol: String, nMerges: Int,
-      minCount: Long = 2L): Seq[Merge] =
-    fitDeltaFrom(wordFrame(df, textCol), nMerges, minCount)
-
-  /** BYTE-LEVEL fit: [[fitDelta]]'s delta trainer over the pretoken
-    * frame ([[byteFrame]] — case/whitespace-preserving GPT-2 cut, byte
-    * alphabet, no `</w>`). The learned merges pair with
-    * [[encodeBytesCol]]/[[decodeBytesCol]] for a LOSSLESS tokenizer:
-    * decode ∘ encode is byte-identical to the input. Same total order,
-    * same bounded one-driver-row-per-round shape, same SQL
-    * replayability (the t_bpe_bytes oracle unrolls it).
-    *
-    * Non-empty `specials` EXCLUDE the reserved tokens' literal text
-    * from the fit corpus (the HF added_tokens discipline): the text is
-    * segmented around special occurrences
-    * ([[graft.functions.SpecialTokens]]) and only the plain segments
-    * contribute pretoken statistics — so no merge is ever spent
-    * learning fragments of a control tag, and a tag-dense SFT corpus
-    * fits the same table as its tag-free twin. Pair with
-    * [[encodeIdsCol]]/[[decodeIdsCol]] under the SAME specials list. */
-  def fitBytes(df: DataFrame, textCol: String, nMerges: Int,
-      minCount: Long = 2L, specials: Seq[String] = Nil): Seq[Merge] =
-    fitDeltaFrom(byteFrame(df, textCol, specials), nMerges, minCount)
-
-  /** The delta trainer proper, over a prepared (__w, __f, __syms)
-    * vocabulary frame — shared by the word-level and byte-level fits. */
-  private def fitDeltaFrom(vocab0: DataFrame, nMerges: Int,
-      minCount: Long): Seq[Merge] = {
-    require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
-    var vocab = graft.Scope.checkpoint(vocab0, "bpe: words")
-    var counts = graft.Scope.checkpoint(pairRows(vocab)
-      .groupBy(col("__l"), col("__r")).agg(sum(col("__f")).as("__c")),
-      "bpe: pair counts")
-    val merges = Seq.newBuilder[Merge]
-    var rank = 1
-    var done = false
-    while (rank <= nMerges && !done) {
-      val best = counts
-        .orderBy(col("__c").desc, col("__l").asc, col("__r").asc)
-        .limit(1).collect() // exactly one row per round — bounded
-      best.headOption.filter(_.getLong(2) >= minCount) match {
-        case None => done = true
-        case Some(row) =>
-          val m = Merge(rank, row.getString(0), row.getString(1))
-          merges += m
-          val hp = hasPair(col("__syms"), m.left, m.right)
-          // ONE scan of the vocab frame produces both delta signs: each
-          // touched word explodes (old pairs, −f) ⧺ (post-merge pairs,
-          // +f); untouched words are filtered before any pair work
-          def signedPairs(syms: Column, sign: Int): Column = {
-            val n = size(syms)
-            transform(arrays_zip(
-              slice(syms, lit(1), greatest(n - 1, lit(0))).as("__l"),
-              slice(syms, lit(2), greatest(n - 1, lit(0))).as("__r")),
-              p => struct(p.getField("__l").as("__l"),
-                p.getField("__r").as("__r"),
-                (col("__f") * sign).as("__f")))
-          }
-          val deltas = vocab.filter(hp)
-            .select(explode(concat(
-              signedPairs(col("__syms"), -1),
-              signedPairs(applyMerge(col("__syms"), m.left, m.right), 1)))
-              .as("__p"))
-            .select(col("__p.__l").as("__l"), col("__p.__r").as("__r"),
-              col("__p.__f").as("__f"))
-          val nextCounts = graft.Scope.checkpoint(counts
-            .select(col("__l"), col("__r"), col("__c").as("__f"))
-            .union(deltas)
-            .groupBy(col("__l"), col("__r"))
-            .agg(sum(col("__f")).as("__c"))
-            .filter(col("__c") > 0), s"bpe: round $rank counts")
-          val nextVocab = graft.Scope.checkpoint(vocab.select(col("__w"),
-            col("__f"), when(hp, applyMerge(col("__syms"), m.left, m.right))
-              .otherwise(col("__syms")).as("__syms")),
-            s"bpe: round $rank words")
-          counts = nextCounts; vocab = nextVocab
-          rank += 1
-      }
-    }
-    merges.result()
-  }
-
-  /** PRODUCTION-SCALE fit — the answer to the 32k-merge regime where
-    * [[fitDelta]]'s one-Spark-job-plus-one-collect per round is hours
-    * of driver round trips: the merge loop runs ENTIRELY in driver
-    * memory over the collected word frame.
-    *
-    * Why this is the right scale split and not a cheat: the corpus is
-    * touched exactly once, distributed (the same (word, freq)
-    * aggregate every trainer starts with); what iterates 32k times is
-    * the DISTINCT-word frame, which is Heap's-law bounded — ~1M words
-    * ≈ tens of MB — and that is why every real tokenizer trainer
-    * (Sennrich's subword-nmt, HuggingFace tokenizers, SentencePiece)
-    * is single-node after the word count. `maxWords` caps the collect
-    * by contract (top words by (freq DESC, word ASC) — deterministic
-    * frequency truncation, the standard trainer knob; rare words
-    * contribute epsilon pair mass). In memory the classic indexed
-    * trainer applies: a pair→count map, a pair→touched-words index,
-    * and a lazy max-heap under the same (count DESC, left ASC, right
-    * ASC) total order — O(touched·log P) per merge instead of a
-    * cluster job. IDENTICAL merge list to [[fit]]/[[fitDelta]]
-    * whenever the corpus has ≤ `maxWords` distinct words (BpeSpec pins
-    * the property, word-level and byte-level); SCALE.md carries the
-    * measured ≥1k-merge wall-clock. */
-  def fitLocal(df: DataFrame, textCol: String, nMerges: Int,
-      minCount: Long = 2L, maxWords: Int = 1 << 20,
-      byteLevel: Boolean = false,
+      minCount: Long = 2L, byteLevel: Boolean = false,
       specials: Seq[String] = Nil): Seq[Merge] = {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
-    require(maxWords >= 1, s"maxWords must be >= 1, got $maxWords")
     require(specials.isEmpty || byteLevel,
       "special tokens are a byte-level feature")
-    val frame = if (byteLevel) byteFrame(df, textCol, specials)
-      else wordFrame(df, textCol)
-    val collected = frame.select(col("__w"), col("__f"))
-      .orderBy(col("__f").desc, col("__w").asc)
-      .limit(maxWords)
-      .collect() // ≤ maxWords rows BY CONSTRUCTION — the trainer knob
-    // hitting the cap means the word frame was TRUNCATED: above this
-    // knob the merge list can diverge from the distributed fit (and
-    // from a full-vocabulary SQL oracle) with no other runtime signal —
-    // say so once, loudly, so production-scale divergence is diagnosable
-    if (collected.length == maxWords)
-      Console.err.println(
-        s"[graft] WARN bpe-fit-truncated: corpus has > $maxWords distinct " +
-          (if (byteLevel) "pretokens" else "words") +
-          s" — fitLocal kept the top $maxWords by (freq DESC, word ASC); " +
-          "merges may diverge from an untruncated fit (raise maxWords " +
-          "to cover the corpus)")
+    val collected =
+      if (byteLevel) collectWords(byteFrame(df, textCol, specials), "bpe",
+        "pretokens")
+      else collectWords(wordFrame(df, textCol), "bpe", "words")
     // symbol arrays per word: chars [+ </w> in word mode — byteFrame
     // words are already byte-alphabet spellings with no terminal]
-    val words = new Array[Array[String]](collected.length)
-    val freqs = new Array[Long](collected.length)
-    var wi = 0
-    while (wi < collected.length) {
-      val w = collected(wi).getString(0)
-      val chars = Seq.newBuilder[String]
-      var ci = 0
-      while (ci < w.length) {
-        val cp = w.codePointAt(ci)
-        val l = Character.charCount(cp)
-        chars += w.substring(ci, ci + l)
-        ci += l
-      }
-      if (!byteLevel) chars += EndOfWord
-      words(wi) = chars.result().toArray
-      freqs(wi) = collected(wi).getLong(1)
-      wi += 1
+    val words = collected.map { case (w, _) =>
+      if (byteLevel) codePoints(w) else codePoints(w) :+ EndOfWord
     }
-    fitInMemory(words, freqs, nMerges, minCount)
+    fitInMemory(words, collected.map(_._2), nMerges, minCount)
   }
 
-  /** The in-memory indexed delta trainer behind [[fitLocal]]. */
+  /** The in-memory indexed trainer behind [[fit]]. */
   private def fitInMemory(words: Array[Array[String]], freqs: Array[Long],
       nMerges: Int, minCount: Long): Seq[Merge] = {
     import scala.collection.mutable
@@ -491,19 +317,22 @@ object Bpe {
   }
 
   /** Persistent fit — the [[Vocab.fitStored]] contract for merge
-    * tables: the learned (rank, left, right) list is saved as a
-    * ≤`nMerges`-row parquet artifact under a
-    * [[graft.cache.LineageCache]] content key, and a later SESSION
-    * (new JVM, same store root) loads it instead of re-training — so
-    * incremental ingest tokenizes today's batch with YESTERDAY's
-    * vocabulary (subword-id stability across runs is what makes
-    * shipped token streams meaningful). The caller owns key hygiene
-    * exactly as with `vocabKey`: change `bpeKey` when the fit corpus
-    * is supposed to change; otherwise corpus growth does NOT re-train
-    * the merges, by design. */
+    * tables: with a [[graft.cache.LineageCache]] bound, the learned
+    * (rank, left, right) list is saved as a ≤`nMerges`-row parquet
+    * artifact under a content key, and a later SESSION (new JVM, same
+    * store root) loads it instead of re-training — so incremental
+    * ingest tokenizes today's batch with YESTERDAY's vocabulary
+    * (subword-id stability across runs is what makes shipped token
+    * streams meaningful). The caller owns key hygiene exactly as with
+    * `vocabKey`: change `bpeKey` when the fit corpus is supposed to
+    * change; otherwise corpus growth does NOT re-train the merges, by
+    * design. With or without a store the table comes from the one
+    * trainer, [[fit]], and is memoised in the open [[graft.Scope]]
+    * under the store's key parts plus the fit input's plan, so two
+    * statements binding one table fit it once. */
   def fitStored(df: DataFrame, textCol: String, nMerges: Int,
       minCount: Long, bpeKey: String,
-      store: graft.cache.LineageCache,
+      store: Option[graft.cache.LineageCache],
       byteLevel: Boolean = false,
       specials: Seq[String] = Nil): Seq[Merge] = {
     require(specials.isEmpty || byteLevel,
@@ -512,27 +341,33 @@ object Bpe {
     // the mode is part of the artifact key: a byte table and a word
     // table with the same corpus key are DIFFERENT tokenizers — and so
     // is the specials list (it changes the fit corpus's segmentation)
-    // length-prefix each special so the key is INJECTIVE in the list:
-    // plain mkString(",") would collide tags '<a,b>' with '<a' 'b>'
-    // (commas are expressible via the quoted `tags` clause) and
-    // silently reuse the wrong cached tokenizer model
-    val k = store.key(if (byteLevel) "bpebytes" else "bpe",
-      Seq(bpeKey, textCol, nMerges.toString, minCount.toString) ++
-        (if (specials.isEmpty) Nil
-         else Seq("specials",
-           specials.map(s => s"${s.length}:$s").mkString(","))))
-    val mdf = store.getOrCompute(k) {
-      val spark = df.sparkSession
-      import spark.implicits._
-      (if (byteLevel) fitBytes(df, textCol, nMerges, minCount, specials)
-       else fitDelta(df, textCol, nMerges, minCount))
-        .map(m => (m.rank, m.left, m.right))
-        .toDF("rank", "left", "right")
+    val kind = if (byteLevel) "bpebytes" else "bpe"
+    val parts = storeKeyParts(bpeKey, textCol, nMerges, minCount, specials)
+    def fitted = fit(df, textCol, nMerges, minCount, byteLevel, specials)
+    graft.Scope.memo((kind, parts, df.queryExecution.analyzed.canonicalized)) {
+      store.fold(fitted) { lc =>
+        val spark = df.sparkSession
+        import spark.implicits._
+        lc.getOrCompute(lc.key(kind, parts))(fitted
+            .map(m => (m.rank, m.left, m.right)).toDF("rank", "left", "right"))
+          .collect() // ≤ nMerges rows by the fit contract — bounded
+          .map(r => Merge(r.getInt(0), r.getString(1), r.getString(2)))
+          .sortBy(_.rank).toSeq
+      }
     }
-    mdf.collect() // ≤ nMerges rows by the fit contract — bounded
-      .map(r => Merge(r.getInt(0), r.getString(1), r.getString(2)))
-      .sortBy(_.rank).toSeq
   }
+
+  /** A merge-table fit's store-key parts. Each special is
+    * length-prefixed so the key is INJECTIVE in the list: plain
+    * mkString(",") would collide tags '<a,b>' with '<a' 'b>' (commas
+    * are expressible via the quoted `tags` clause) and silently reuse
+    * the wrong cached model. */
+  private[operators] def storeKeyParts(key: String, textCol: String,
+      nMerges: Int, minCount: Long, specials: Seq[String]): Seq[String] =
+    Seq(key, textCol, nMerges.toString, minCount.toString) ++
+      (if (specials.isEmpty) Nil
+       else Seq("specials",
+         specials.map(s => s"${s.length}:$s").mkString(",")))
 
   /** Column-metadata key under which [[mergesMetadata]] publishes a
     * fitted merge table on its encode output column. */
@@ -595,7 +430,7 @@ object Bpe {
     graft.functions.BpeEncodeExpr.bpe_encode(text,
       merges.sortBy(_.rank).map(m => (m.left, m.right)))
 
-  /** Byte-level encode under a [[fitBytes]] table: pretokenize →
+  /** Byte-level encode under a byte-level [[fit]] table: pretokenize →
     * byte-alphabet symbols → pair-rank merges → subwords joined by
     * single spaces. Case, whitespace and every byte survive —
     * [[decodeBytesCol]] inverts it exactly. Codegen'd narrow map. */
@@ -621,7 +456,7 @@ object Bpe {
     graft.functions.BpeEncodeExpr.bpe_encode_ids(text,
       merges.sortBy(_.rank).map(m => (m.left, m.right)), specials)
 
-  /** Lossless id-stream decode under the same [[fitBytes]] table (and
+  /** Lossless id-stream decode under the same byte-level table (and
     * the same specials list — a special id decodes to its literal
     * text). */
   def decodeIdsCol(ids: Column, merges: Seq[Merge],
@@ -670,14 +505,4 @@ object Bpe {
           applyMerge(syms, m.left, m.right)
         })))
   }
-
-  /** fit + encode on the same frame: adds `encCol` (space-joined
-    * subword stream) next to the input columns. `minCount` defaults to
-    * 1 here (merge while any pair repeats at all — the SQL-replayable
-    * unconditional-N semantic the gates pin); pass 2 for the classic
-    * trainer threshold. */
-  def fitEncode(df: DataFrame, textCol: String, nMerges: Int,
-      encCol: String = "bpe", minCount: Long = 1L): DataFrame =
-    df.withColumn(encCol,
-      encodeColFast(col(textCol), fit(df, textCol, nMerges, minCount)))
 }

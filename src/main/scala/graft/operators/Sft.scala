@@ -24,7 +24,7 @@ object Sft {
   val AssistantTag = "<|assistant|>"
 
   /** The chat tags as RESERVED special tokens (r13): pass to
-    * [[Bpe.fitBytes]]/[[Bpe.encodeIdsCol]]/[[Bpe.decodeIdsCol]] so each
+    * [[Bpe.fit]]/[[Bpe.encodeIdsCol]]/[[Bpe.decodeIdsCol]] so each
     * tag is ONE dedicated id above the text vocabulary — never split
     * into byte-level fragments, never merged with adjacent text, and a
     * document containing the literal tag string still encodes it to the

@@ -24,8 +24,8 @@ import org.apache.spark.sql.functions._
   * `c ##a ##t`; merging (`c`,`##a`) yields `ca`).
   *
   * 100 TB design: the corpus is touched ONCE (the word-count frame —
-  * Heap's-law-bounded distinct words); each training round is two
-  * bounded aggregates (pair counts + unit counts) and one driver row.
+  * Heap's-law-bounded distinct words), and the training rounds run in
+  * driver memory over the collected distinct words ([[fit]]).
   * Encoding is ONE native compiled pass per document
   * ([[graft.functions.WordPieceEncodeExpr]] — hash-set membership, the
   * BpeEncodeExpr recipe): a pure narrow map, zero shuffles,
@@ -42,194 +42,57 @@ object WordPiece {
   }
 
   val Unk = "[UNK]"
-  private val ScoreScale = 1000000L
+  private[graft] val ScoreScale = 1000000L
 
   // substring(Column, Column, Column) has no functions._ overload
   private def substring(str: Column, pos: Column, len: Column): Column =
     call_function("substring", str, pos, len)
 
-  /** A word as WordPiece symbols: first char bare, rest `##`-prefixed. */
-  private def pieceSyms(word: Column): Column =
-    transform(sequence(lit(1), length(word)),
-      i => when(i === 1, substring(word, i, lit(1)))
-        .otherwise(concat(lit("##"), substring(word, i, lit(1)))))
-
-  /** Distinct lowercase whitespace words with frequencies and initial
-    * symbol spellings — the only corpus pass of the trainer. Layout-
-    * decoupled ([[graft.PlanAudit.repartitionIfLayoutBound]]): the
-    * tokenize/explode map work runs before the groupBy shuffle and must
-    * not inherit a row-group-capped scan (the r14 3.6–8.6× finding). */
-  private def wordFrame(df0: DataFrame, textCol: String): DataFrame = {
-    val df = graft.PlanAudit.repartitionIfLayoutBound(df0)
-    df.select(explode(Decontaminate.tokens(col(textCol))).as("__w"))
-      .filter(length(col("__w")) > 0)
-      .groupBy(col("__w")).agg(count(lit(1)).as("__f"))
-      .select(col("__w"), col("__f"), pieceSyms(col("__w")).as("__syms"))
-  }
-
-  /** One greedy left-to-right merge pass emitting `merged` for each
-    * non-overlapping adjacent (left, right) — [[Bpe.applyMerge]]'s
-    * carry fold with the WordPiece join rule. */
-  private def applyMergeAs(syms: Column, left: String, right: String,
-      merged: String): Column = {
-    val init = struct(
-      array().cast("array<string>").as("out"),
-      lit(null).cast("string").as("carry"))
-    aggregate(syms, init,
-      (acc, x) => {
-        val out = acc.getField("out")
-        val carry = acc.getField("carry")
-        when(carry.isNull, struct(out.as("out"), x.as("carry")))
-          .when(carry === lit(left) && x === lit(right),
-            struct(concat(out, array(lit(merged))).as("out"),
-              lit(null).cast("string").as("carry")))
-          .otherwise(struct(concat(out, array(carry)).as("out"),
-            x.as("carry")))
-      },
-      acc => {
-        val out = acc.getField("out")
-        val carry = acc.getField("carry")
-        when(carry.isNull, out).otherwise(concat(out, array(carry)))
-      })
-  }
-
-  /** Train `nMerges` likelihood-ranked merges. Each round: pair counts
-    * and unit counts (two bounded aggregates with map-side combine),
-    * one `limit(1).collect()` driver row, one narrow merge pass with
-    * lineage truncated per round (the [[Bpe.fit]] localCheckpoint
-    * discipline). Stops early when no pair reaches `minCount`. */
-  def fit(df: DataFrame, textCol: String, nMerges: Int,
-      minCount: Long = 2L): Seq[Merge] = {
-    require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
-    require(minCount >= 1L, s"minCount must be >= 1, got $minCount")
-    var vocab = graft.Scope.checkpoint(wordFrame(df, textCol),
-      "wordpiece: words")
-    val merges = Seq.newBuilder[Merge]
-    var rank = 1
-    var done = false
-    while (rank <= nMerges && !done) {
-      val n = size(col("__syms"))
-      val pairs = vocab
-        .select(col("__f"), explode(arrays_zip(
-          slice(col("__syms"), lit(1), greatest(n - 1, lit(0))).as("__l"),
-          slice(col("__syms"), lit(2), greatest(n - 1, lit(0))).as("__r")))
-          .as("__p"))
-        .groupBy(col("__p.__l").as("__l"), col("__p.__r").as("__r"))
-        .agg(sum(col("__f")).as("__c"))
-      val units = vocab
-        .select(col("__f"), explode(col("__syms")).as("__u"))
-        .groupBy(col("__u")).agg(sum(col("__f")).as("__uc"))
-      val best = pairs
-        .join(units.select(col("__u").as("__l"), col("__uc").as("__lc")),
-          "__l")
-        .join(units.select(col("__u").as("__r"), col("__uc").as("__rc")),
-          "__r")
-        .select(col("__l"), col("__r"), col("__c"),
-          expr(s"(__c * $ScoreScale) div (__lc * __rc)").as("__s"))
-        .orderBy(col("__s").desc, col("__c").desc, col("__l").asc,
-          col("__r").asc)
-        .limit(1).collect() // exactly one row per round — bounded
-      best.headOption.filter(_.getAs[Long]("__c") >= minCount) match {
-        case None => done = true
-        case Some(row) =>
-          val m = Merge(rank, row.getAs[String]("__l"),
-            row.getAs[String]("__r"), row.getAs[Long]("__s"))
-          merges += m
-          vocab = graft.Scope.checkpoint(vocab.select(col("__w"), col("__f"),
-            applyMergeAs(col("__syms"), m.left, m.right, m.merged)
-              .as("__syms")), s"wordpiece: round $rank")
-          rank += 1
-      }
-    }
-    merges.result()
-  }
-
-  /** PRODUCTION-SCALE fit — the [[Bpe.fitLocal]] split applied to the
-    * likelihood trainer: a real BERT vocabulary is ~30k pieces, and
-    * [[fit]] pays two aggregates + one collect + one checkpoint PER
-    * MERGE (~60k sequential Spark jobs — hours of driver round trips).
-    * Here the corpus is touched exactly once, distributed (the same
-    * (word, freq) aggregate), and the merge loop runs in driver memory
-    * over the collected Heap's-law-bounded word frame — the split every
-    * real tokenizer trainer uses. `maxWords` caps the collect by
-    * contract (top words by (freq DESC, word ASC) — deterministic
-    * frequency truncation, the standard trainer knob).
+  /** Train `nMerges` likelihood-ranked merges (fewer when no pair
+    * reaches `minCount`) and return them with the final vocabulary —
+    * the corpus alphabet (every word-initial and `##`-continuation
+    * character) plus each merge's joined piece, sorted.
+    *
+    * The [[Bpe.fit]] split applied to the likelihood trainer: the
+    * corpus is touched exactly once, distributed (the (word, freq)
+    * aggregate of [[Bpe.wordFrame]]); the merge loop and the alphabet both
+    * come from the collected distinct-word frame in driver memory (at
+    * most [[Bpe.WordBound]] words, failing loudly above). A real BERT
+    * vocabulary is ~30k pieces, and a round-by-round Spark fit would
+    * pay two aggregates + one collect per merge.
     *
     * The in-memory loop maintains pair counts AND unit counts so the
-    * likelihood score `(pc·1e6) div (uc_l·uc_r)` replays [[fit]]'s
-    * fixed-point arithmetic exactly, under the same total order
-    * (score DESC, pair count DESC, left ASC, right ASC). Unlike the
-    * raw-count BPE heap, a merge moves the score of every pair sharing
-    * a unit with (left, right, merged) — so next to the pair→words
-    * occurrence index the loop keeps a unit→pairs index and re-pushes
-    * fresh heap entries for every pair whose pc OR endpoint uc changed;
-    * lazy deletion validates both components at pop. IDENTICAL merge
-    * list to [[fit]] whenever the corpus has ≤ `maxWords` distinct
-    * words (WordPieceSpec pins the property); SCALE.md carries the
-    * measured ≥1k-merge wall-clock. */
-  def fitLocal(df: DataFrame, textCol: String, nMerges: Int,
-      minCount: Long = 2L, maxWords: Int = 1 << 20): Seq[Merge] =
-    fitLocalFromFrame(wordFrame(df, textCol), nMerges, minCount, maxWords)
-
-  /** [[fitLocal]] + [[vocabulary]] over ONE word-frame pass (r17, guide
-    * §6 scan reuse): every fit-then-encode consumer previously built
-    * `wordFrame` twice — once for the merge trainer's truncated
-    * collect, once for the alphabet collect — i.e. two full
-    * tokenize+explode+aggregate passes over the corpus. The frame is
-    * cached for the two bounded collects and released; results are
-    * bit-identical (same frame, same collects). */
-  def fitLocalWithVocab(df: DataFrame, textCol: String, nMerges: Int,
-      minCount: Long = 2L,
-      maxWords: Int = 1 << 20): (Seq[Merge], Seq[String]) =
-    graft.Scope.nested { sc =>
-      val wf = sc.cache(wordFrame(df, textCol), "wordpiece: words")
-      val merges = fitLocalFromFrame(wf, nMerges, minCount, maxWords)
-      val chars = wf.select(explode(col("__syms")).as("__u"))
-        .distinct().collect().map(_.getString(0)) // alphabet-bounded
-      (merges, (chars.toSeq ++ merges.map(_.merged)).distinct.sorted)
-    }
-
-  private def fitLocalFromFrame(wf: DataFrame, nMerges: Int,
-      minCount: Long, maxWords: Int): Seq[Merge] = {
+    * likelihood score `(pc·1e6) div (uc_l·uc_r)` is the fixed-point
+    * arithmetic the SQL oracle replays, under the total order (score
+    * DESC, pair count DESC, left ASC, right ASC). Unlike the raw-count
+    * BPE heap, a merge moves the score of every pair sharing a unit
+    * with (left, right, merged) — so next to the pair→words occurrence
+    * index the loop keeps a unit→pairs index and re-pushes fresh heap
+    * entries for every pair whose pc OR endpoint uc changed; lazy
+    * deletion validates both components at pop. WordPieceSpec pins the
+    * merge list to the round-by-round specification; SCALE.md carries
+    * the measured ≥1k-merge wall-clock. */
+  def fit(df: DataFrame, textCol: String, nMerges: Int,
+      minCount: Long = 2L): (Seq[Merge], Seq[String]) = {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
     require(minCount >= 1L, s"minCount must be >= 1, got $minCount")
-    require(maxWords >= 1, s"maxWords must be >= 1, got $maxWords")
-    val collected = wf.select(col("__w"), col("__f"))
-      .orderBy(col("__f").desc, col("__w").asc)
-      .limit(maxWords)
-      .collect() // ≤ maxWords rows BY CONSTRUCTION — the trainer knob
-    // truncation is a silent oracle-divergence risk above the knob —
-    // warn once so it is diagnosable at production scale (ADVICE r15)
-    if (collected.length == maxWords)
-      Console.err.println(
-        s"[graft] WARN wordpiece-fit-truncated: corpus has > $maxWords " +
-          s"distinct words — fitLocal kept the top $maxWords by " +
-          "(freq DESC, word ASC); merges may diverge from an untruncated " +
-          "fit (raise maxWords to cover the corpus)")
-    val words = new Array[Array[String]](collected.length)
-    val freqs = new Array[Long](collected.length)
-    var wi = 0
-    while (wi < collected.length) {
-      val w = collected(wi).getString(0)
-      // WordPiece spelling, split per CODE POINT (pieceSyms uses Spark
-      // substring — code-point units): first bare, rest ##-prefixed
-      val syms = Seq.newBuilder[String]
-      var ci = 0
-      while (ci < w.length) {
-        val cp = w.codePointAt(ci)
-        val l = Character.charCount(cp)
-        val c = w.substring(ci, ci + l)
-        syms += (if (ci == 0) c else "##" + c)
-        ci += l
-      }
-      words(wi) = syms.result().toArray
-      freqs(wi) = collected(wi).getLong(1)
-      wi += 1
+    // the BPE word frame: distinct lowercase whitespace words
+    val collected = Bpe.collectWords(Bpe.wordFrame(df, textCol),
+      "wordpiece", "words")
+    // WordPiece spelling, split per CODE POINT (Spark's substring
+    // units): first bare, rest ##-prefixed
+    val words = collected.map { case (w, _) =>
+      Bpe.codePoints(w).zipWithIndex
+        .map { case (c, i) => if (i == 0) c else "##" + c }
     }
-    fitInMemory(words, freqs, nMerges, minCount)
+    // the initial spellings of the full distinct-word set ARE the
+    // alphabet; read before the trainer rewrites them in place
+    val alphabet = words.iterator.flatten.toSet
+    val merges = fitInMemory(words, collected.map(_._2), nMerges, minCount)
+    (merges, (alphabet.toSeq ++ merges.map(_.merged)).distinct.sorted)
   }
 
-  /** The in-memory indexed likelihood trainer behind [[fitLocal]]. */
+  /** The in-memory indexed likelihood trainer behind [[fit]]. */
   private def fitInMemory(words: Array[Array[String]], freqs: Array[Long],
       nMerges: Int, minCount: Long): Seq[Merge] = {
     import scala.collection.mutable
@@ -397,81 +260,67 @@ object WordPiece {
   }
 
   /** Persistent fit — the [[Bpe.fitStored]] contract for the WordPiece
-    * family: the learned merge list trains ONCE (via the production
-    * [[fitLocal]] path), persists as a ≤`nMerges`-row parquet artifact
-    * under a [[graft.cache.LineageCache]] content key, and a later
-    * SESSION (new JVM, same store root) loads it instead of
-    * re-training — piece-id stability across incremental ingest runs.
-    * Key hygiene is the caller's: change `wpKey` when the fit corpus is
-    * supposed to change; otherwise corpus growth does NOT re-train, by
-    * design. */
+    * family: with a [[graft.cache.LineageCache]] bound, the learned
+    * merge list persists as a ≤`nMerges`-row parquet artifact under a
+    * content key, and a later SESSION (new JVM, same store root) loads
+    * it instead of re-training — piece-id stability across incremental
+    * ingest runs. Key hygiene is the caller's: change `wpKey` when the
+    * fit corpus is supposed to change; otherwise corpus growth does NOT
+    * re-train, by design. A specials list changes the FIT CORPUS (tag
+    * text excluded from the statistics), so it is part of the key. */
   def fitStored(df: DataFrame, textCol: String, nMerges: Int,
       minCount: Long, wpKey: String,
-      store: graft.cache.LineageCache,
+      store: Option[graft.cache.LineageCache],
       specials: Seq[String] = Nil): Seq[Merge] = {
-    // a specials list changes the FIT CORPUS (tag text excluded from
-    // the statistics), so it is part of the artifact key — length-
-    // prefixed per special for injectivity (the Bpe.fitStored rule)
-    val k = store.key("wordpiece",
-      Seq(wpKey, textCol, nMerges.toString, minCount.toString) ++
-        specialsKeyPart(specials))
-    val fitDf = graft.functions.SpecialTokens
-      .segmentedCorpus(df, textCol, specials)
-    val mdf = store.getOrCompute(k) {
+    val parts = Bpe.storeKeyParts(wpKey, textCol, nMerges, minCount,
+      specials)
+    def fitted = fitOnce(df, textCol, nMerges, minCount, parts, specials)._1
+    store.fold(fitted) { lc =>
       val spark = df.sparkSession
       import spark.implicits._
-      fitLocal(fitDf, textCol, nMerges, minCount)
-        .map(m => (m.rank, m.left, m.right, m.scoreFp))
-        .toDF("rank", "left", "right", "score_fp")
+      lc.getOrCompute(lc.key("wordpiece", parts))(fitted
+          .map(m => (m.rank, m.left, m.right, m.scoreFp))
+          .toDF("rank", "left", "right", "score_fp"))
+        .collect() // ≤ nMerges rows by the fit contract — bounded
+        .map(r => Merge(r.getInt(0), r.getString(1), r.getString(2),
+          r.getLong(3)))
+        .sortBy(_.rank).toSeq
     }
-    mdf.collect() // ≤ nMerges rows by the fit contract — bounded
-      .map(r => Merge(r.getInt(0), r.getString(1), r.getString(2),
-        r.getLong(3)))
-      .sortBy(_.rank).toSeq
   }
-
-  private def specialsKeyPart(specials: Seq[String]): Seq[String] =
-    if (specials.isEmpty) Nil
-    else Seq("specials",
-      specials.map(s => s"${s.length}:$s").mkString(","))
 
   /** The ENCODER-ready persisted artifact: the final vocabulary
     * (corpus alphabet + merged pieces) under the same store contract as
-    * [[fitStored]] — the alphabet scan is itself a corpus pass, so a
-    * reload must skip it too for the zero-refit-jobs property
-    * (StoredModelSpec pins it). One artifact = one encoder: a session
-    * that loads this list encodes identically forever. */
+    * [[fitStored]], so a reload skips the corpus pass too (the
+    * zero-refit-jobs property StoredModelSpec pins). One artifact = one
+    * encoder: a session that loads this list encodes identically
+    * forever. */
   def vocabularyStored(df: DataFrame, textCol: String, nMerges: Int,
       minCount: Long, wpKey: String,
-      store: graft.cache.LineageCache,
+      store: Option[graft.cache.LineageCache],
       specials: Seq[String] = Nil): Seq[String] = {
-    val k = store.key("wordpiece_vocab",
-      Seq(wpKey, textCol, nMerges.toString, minCount.toString) ++
-        specialsKeyPart(specials))
-    val vdf = store.getOrCompute(k) {
+    val parts = Bpe.storeKeyParts(wpKey, textCol, nMerges, minCount,
+      specials)
+    def fitted = fitOnce(df, textCol, nMerges, minCount, parts, specials)._2
+    store.fold(fitted) { lc =>
       val spark = df.sparkSession
       import spark.implicits._
-      // the alphabet scan runs over the same specials-excluded corpus
-      // as the merges (a tag's literal characters must not leak in)
-      vocabulary(graft.functions.SpecialTokens
-          .segmentedCorpus(df, textCol, specials), textCol,
-        fitStored(df, textCol, nMerges, minCount, wpKey, store, specials))
-        .toDF("piece")
+      lc.getOrCompute(lc.key("wordpiece_vocab", parts))(fitted.toDF("piece"))
+        .collect() // alphabet + merges rows by the fit contract — bounded
+        .map(_.getString(0)).toSeq.sorted
     }
-    // alphabet + merges rows by the vocabulary contract — bounded
-    vdf.collect().map(_.getString(0)).toSeq.sorted
   }
 
-  /** The final vocabulary for [[fit]]'s merges over `df`: every
-    * word-initial and `##`-continuation character of the corpus plus
-    * each merge's joined piece. */
-  def vocabulary(df: DataFrame, textCol: String,
-      merges: Seq[Merge]): Seq[String] = {
-    val chars = wordFrame(df, textCol)
-      .select(explode(col("__syms")).as("__u"))
-      .distinct().collect().map(_.getString(0)) // alphabet-bounded
-    (chars.toSeq ++ merges.map(_.merged)).distinct.sorted
-  }
+  /** [[fit]] over the specials-excluded corpus, once per (key parts,
+    * fit input plan) in the open [[graft.Scope]]: a key's merge and
+    * vocabulary artifacts, and every statement binding the same table,
+    * share one fit. */
+  private def fitOnce(df: DataFrame, textCol: String, nMerges: Int,
+      minCount: Long, parts: Seq[String],
+      specials: Seq[String]): (Seq[Merge], Seq[String]) =
+    graft.Scope.memo(("wordpiece", parts,
+        df.queryExecution.analyzed.canonicalized))(
+      fit(graft.functions.SpecialTokens.segmentedCorpus(df, textCol,
+        specials), textCol, nMerges, minCount))
 
   /** The shippable vocab.txt-equivalent table: `(id, piece)` with
     * `[UNK]` at id 0 and the vocabulary in its deterministic sorted

@@ -1846,7 +1846,7 @@ object TextGates {
     // replays all 8 rounds as unrolled SQL (operators.Bpe scaladoc).
     Gate("t_bpe_train", (s, d) => {
       import s.implicits._
-      graft.operators.Bpe.fitDelta(t(s, d, "documents"), "text", 8,
+      graft.operators.Bpe.fit(t(s, d, "documents"), "text", 8,
         minCount = 1L)
         .map(m => (m.rank, m.left, m.right, m.merged))
         .toDF("rank", "left", "right", "merged")
@@ -1862,7 +1862,7 @@ object TextGates {
 
     Gate("t_bpe_encode", (s, d) => {
       val docs = t(s, d, "documents")
-      val merges = graft.operators.Bpe.fitLocal(docs, "text", 8,
+      val merges = graft.operators.Bpe.fit(docs, "text", 8,
         minCount = 1L)
       docs.select(col("doc_id"),
         graft.operators.Bpe.encodeColFast(col("text"), merges).as("bpe"))
@@ -1879,7 +1879,7 @@ object TextGates {
     Gate("t_wordpiece_train", (s, d) => {
       import s.implicits._
       graft.operators.WordPiece.fit(t(s, d, "documents"), "text", 6,
-        minCount = 1L)
+        minCount = 1L)._1
         .map(m => (m.rank, m.left, m.right, m.merged, m.scoreFp))
         .toDF("rank", "left", "right", "merged", "score_fp")
         .orderBy(col("rank"))
@@ -1903,7 +1903,7 @@ object TextGates {
     Gate("t_wordpiece", (s, d) => {
       val docs = t(s, d, "documents")
       val vocab = graft.operators.WordPiece
-        .fitLocalWithVocab(docs, "text", 6, minCount = 1L)._2
+        .fit(docs, "text", 6, minCount = 1L)._2
       graft.operators.WordPiece.encode(docs, "doc_id", "text", vocab)
         .orderBy(col("doc_id"))
     },
@@ -1918,7 +1918,7 @@ object TextGates {
     Gate("t_wordpiece_export_rt", (s, d) => {
       val docs = t(s, d, "documents")
       val vocab = graft.operators.WordPiece
-        .fitLocalWithVocab(docs, "text", 6, minCount = 1L)._2
+        .fit(docs, "text", 6, minCount = 1L)._2
       val path = java.nio.file.Files
         .createTempDirectory("graft_bert_rt").toString + "/vocab.txt"
       graft.sinks.TokenizerFiles.writeBertVocab(path, vocab)
@@ -1936,7 +1936,7 @@ object TextGates {
       val docs = t(s, d, "documents")
       graft.operators.WordPiece.vocabFrame(s,
         graft.operators.WordPiece
-          .fitLocalWithVocab(docs, "text", 6, minCount = 1L)._2)
+          .fit(docs, "text", 6, minCount = 1L)._2)
         .orderBy(col("id"))
     },
       Some("WITH " + wordPieceCtesSql(6) + ",\n" +
@@ -1955,17 +1955,16 @@ object TextGates {
           |ORDER BY id ASC NULLS FIRST""".stripMargin)),
 
     // Production-VOCAB-SCALE WordPiece fit (r12): >=1k likelihood-ranked
-    // merges trained by WordPiece.fitLocal — the driver in-memory
-    // trainer over the collected distinct-word frame maintaining pair
-    // AND unit counts (where WordPiece.fit would be >=1k sequential
-    // two-aggregate Spark rounds — hours at a real 30k BERT vocab).
-    // Same trigram fixture + truncation knob as t_bpe_train_big; a
-    // 1k-round likelihood fit can't unroll in SQL, so the oracle checks
-    // the greedy-encode reconstruction invariant (pieces glue back to
-    // the token stream — the corpus has no '#' characters, so ' ##' is
-    // unambiguously the continuation marker) plus counts;
-    // merge-for-merge semantics are pinned by WordPieceSpec's
-    // fitLocal ≡ fit parity property.
+    // merges trained by WordPiece.fit — the driver in-memory trainer
+    // over the collected distinct-word frame maintaining pair AND unit
+    // counts (a round-by-round Spark fit would be >=1k sequential
+    // two-aggregate rounds — hours at a real 30k BERT vocab). Same
+    // trigram fixture as t_bpe_train_big; a 1k-round likelihood fit
+    // can't unroll in SQL, so the oracle checks the greedy-encode
+    // reconstruction invariant (pieces glue back to the token stream —
+    // the corpus has no '#' characters, so ' ##' is unambiguously the
+    // continuation marker) plus counts; merge-for-merge semantics are
+    // pinned by WordPieceSpec's parity with the specification trainer.
     Gate("t_wordpiece_train_big", (s, d) => {
       // spread BEFORE the trigram assembly: the heavy projection must
       // sit above the added exchange, or the single-row-group scan
@@ -1980,18 +1979,16 @@ object TextGates {
           slice(tk, lit(3), g).as("c")),
         t3 => concat_ws("_", t3.getField("a"), t3.getField("b"),
           t3.getField("c")))
-      // cached in the gate's scope: the trigram assembly feeds THREE
-      // eager passes (fitLocal word count, vocabulary collect, the encode
-      // output) — one fill, the rest read blocks (r17, guide §6 scan
-      // reuse)
+      // cached in the gate's scope: the trigram assembly feeds the fit's
+      // word count AND the encode output — one fill, the other reads
+      // blocks (r17, guide §6 scan reuse)
       val fx = graft.Scope.cache(
         docs.select(col("doc_id"), array_join(tri, " ").as("fx")),
         "t_wordpiece_train_big: trigrams")
       // vocabulary from the FULL frame (alphabet-complete, so the
-      // greedy encode never UNKs and the reconstruction is exact);
-      // fit + alphabet share one word-frame pass (r17)
+      // greedy encode never UNKs and the reconstruction is exact)
       val (merges, vocab) = graft.operators.WordPiece
-        .fitLocalWithVocab(fx, "fx", 1024, minCount = 1L, maxWords = 8192)
+        .fit(fx, "fx", 1024, minCount = 1L)
       require(merges.size >= 1000,
         s"wordpiece train_big expected >= 1000 merges, got ${merges.size}")
       val enc = graft.operators.WordPiece.encodeCol(col("fx"), vocab)
@@ -2057,16 +2054,16 @@ object TextGates {
              |ORDER BY doc_id ASC NULLS FIRST""".stripMargin)),
 
     // Production-VOCAB-SCALE BPE fit (r11): >=1k merges trained by
-    // fitLocal — the driver in-memory trainer over the collected
+    // Bpe.fit — the driver in-memory trainer over the collected
     // distinct-word frame (Heap's-law bounded; the split every real
-    // tokenizer trainer uses) — where fitDelta would be >=1k sequential
-    // Spark rounds. The corpus vocabulary is ~30 words, so the fixture
-    // synthesizes a 16k+-distinct-word frame from TRIGRAM tokens
-    // (deterministic, SQL-replayable). A 1.5k-round fit can't unroll in
-    // SQL, so the oracle checks the t_bpe_encode_big segmentation
-    // invariant (subwords concatenate back to the token stream) plus
-    // counts; merge-for-merge semantics are pinned by BpeSpec's
-    // fitLocal ≡ fit/fitDelta parity property.
+    // tokenizer trainer uses) — where a round-by-round Spark fit would
+    // be >=1k sequential rounds. The corpus vocabulary is ~30 words, so
+    // the fixture synthesizes a 16k+-distinct-word frame from TRIGRAM
+    // tokens (deterministic, SQL-replayable). A 1k-round fit can't
+    // unroll in SQL, so the oracle checks the t_bpe_encode_big
+    // segmentation invariant (subwords concatenate back to the token
+    // stream) plus counts; merge-for-merge semantics are pinned by
+    // BpeSpec's parity with the specification trainer.
     Gate("t_bpe_train_big", (s, d) => {
       // spread before the trigram assembly (see t_wordpiece_train_big)
       val docs = graft.PlanAudit.repartitionIfLayoutBound(
@@ -2087,13 +2084,9 @@ object TextGates {
       val fx = graft.Scope.cache(
         docs.select(col("doc_id"), array_join(tri, " ").as("fx")),
         "t_bpe_train_big: trigrams")
-      // fit on the FULL frame with the production truncation knob
-      // engaged (top 8k words by (freq desc, word asc) — the 16k/27k
-      // frames truncate at every sf, which also pins the gate's fit
-      // cost scale-INVARIANT); encode-probe a deterministic 20% hash
+      // fit on the FULL frame; encode-probe a deterministic 20% hash
       // sample — the invariant needs a probe, not the corpus
-      val merges = graft.operators.Bpe.fitLocal(fx, "fx", 1024,
-        minCount = 1L, maxWords = 8192)
+      val merges = graft.operators.Bpe.fit(fx, "fx", 1024, minCount = 1L)
       require(merges.size >= 1000,
         s"train_big expected >= 1000 merges, got ${merges.size}")
       val enc = graft.operators.Bpe.encodeColFast(col("fx"), merges)
@@ -2138,7 +2131,7 @@ object TextGates {
         lit("  #"), (col("doc_id") % 100).cast("string"),
         lit(", End.\n\ttail  42 "))
       val docs = t(s, d, "documents").select(col("doc_id"), fx.as("fx"))
-      val merges = graft.operators.Bpe.fitLocal(docs, "fx", 6,
+      val merges = graft.operators.Bpe.fit(docs, "fx", 6,
         minCount = 1L, byteLevel = true)
       val enc = graft.operators.Bpe.encodeBytesCol(col("fx"), merges)
       docs.select(col("doc_id"), enc.as("bpe"),
@@ -2156,12 +2149,7 @@ object TextGates {
     // rounds) + ONE codegen'd encode pass + one keyed aggregate.
     Gate("t_tokenizer_fertility", (s, d) => {
       val docs = t(s, d, "documents")
-      // fitLocal, not the per-merge fitBytes delta loop: this is an
-      // OBSERVABILITY gate, not trainer coverage (t_bpe_train keeps the
-      // distributed loop exercised) — identical merges below maxWords
-      // (BpeSpec parity, byte-level included), ~18 fewer driver-loop
-      // jobs per run (r17)
-      val merges = graft.operators.Bpe.fitLocal(docs, "text", 6,
+      val merges = graft.operators.Bpe.fit(docs, "text", 6,
         minCount = 1L, byteLevel = true)
       val ids = graft.operators.Bpe.encodeIdsCol(col("text"), merges)
       docs.select(col("lang"),
@@ -2215,7 +2203,7 @@ object TextGates {
       val dir = java.nio.file.Files
         .createTempDirectory("graft_gpt2_rt").toString
       graft.sinks.TokenizerFiles.writeGpt2(dir,
-        graft.operators.Bpe.fitLocal(docs, "fx", 6, minCount = 1L,
+        graft.operators.Bpe.fit(docs, "fx", 6, minCount = 1L,
           byteLevel = true))
       val loaded = graft.sinks.TokenizerFiles.readGpt2(dir)
       val enc = graft.operators.Bpe.encodeBytesCol(col("fx"), loaded)
@@ -2236,7 +2224,7 @@ object TextGates {
         lit("  #"), (col("doc_id") % 100).cast("string"),
         lit(", End.\n\ttail  42 "))
       val docs = t(s, d, "documents").select(col("doc_id"), fx.as("fx"))
-      val merges = graft.operators.Bpe.fitLocal(docs, "fx", 6,
+      val merges = graft.operators.Bpe.fit(docs, "fx", 6,
         minCount = 1L, byteLevel = true)
       graft.operators.Bpe.vocabFrame(s, merges).orderBy(col("id"))
     },
@@ -2274,7 +2262,7 @@ object TextGates {
         lit("  #"), (col("doc_id") % 100).cast("string"),
         lit(", End.\n\ttail  42 "))
       val docs = t(s, d, "documents").select(col("doc_id"), fx.as("fx"))
-      val merges = graft.operators.Bpe.fitLocal(docs, "fx", 6,
+      val merges = graft.operators.Bpe.fit(docs, "fx", 6,
         minCount = 1L, byteLevel = true)
       val ids = graft.operators.Bpe.encodeIdsCol(col("fx"), merges)
       docs.select(col("doc_id"),
@@ -2309,7 +2297,7 @@ object TextGates {
       val sp = graft.operators.Sft.Specials
       val rendered = pairs.withColumn("rendered",
         graft.operators.Sft.render(col("prompt"), col("response")))
-      val merges = graft.operators.Bpe.fitLocal(rendered, "rendered", 6,
+      val merges = graft.operators.Bpe.fit(rendered, "rendered", 6,
         minCount = 1L, byteLevel = true, specials = sp)
       val base = 256 + merges.size
       val ids = graft.operators.Bpe.encodeIdsCol(col("rendered"),
@@ -2342,7 +2330,7 @@ object TextGates {
         .filter(length(col("response")) > 0)
       val rendered = pairs.withColumn("rendered",
         graft.operators.Sft.render(col("prompt"), col("response")))
-      val fitted = graft.operators.Bpe.fitLocal(rendered, "rendered", 6,
+      val fitted = graft.operators.Bpe.fit(rendered, "rendered", 6,
         minCount = 1L, byteLevel = true, specials = graft.operators.Sft.Specials)
       val dir = java.nio.file.Files
         .createTempDirectory("graft_gpt2_sp_rt").toString
@@ -2447,7 +2435,7 @@ object TextGates {
         .filter(length(col("response")) > 0)
       val rendered = pairs.withColumn("rendered",
         graft.operators.Sft.render(col("prompt"), col("response")))
-      val merges = graft.operators.Bpe.fitLocal(rendered, "rendered", 6,
+      val merges = graft.operators.Bpe.fit(rendered, "rendered", 6,
         minCount = 1L, byteLevel = true)
       rendered.select(col("doc_id"),
           size(graft.operators.Bpe.encodeIdsCol(col("rendered"), merges))
@@ -2662,7 +2650,7 @@ object TextGates {
         lit("  #"), (col("doc_id") % 100).cast("string"),
         lit(", End.\n\ttail  42 "))
       val docs = t(s, d, "documents").select(col("doc_id"), fx.as("fx"))
-      val merges = graft.operators.Bpe.fitLocal(docs, "fx", 6,
+      val merges = graft.operators.Bpe.fit(docs, "fx", 6,
         minCount = 1L, byteLevel = true)
       val enc = docs.select(col("doc_id"),
         graft.operators.Bpe.encodeIdsCol(col("fx"), merges).as("ids"))
@@ -2867,7 +2855,7 @@ object TextGates {
     Gate("t_wordpiece_ids", (s, d) => {
       val docs = t(s, d, "documents")
       val vocab = graft.operators.WordPiece
-        .fitLocalWithVocab(docs, "text", 6, minCount = 1L)._2
+        .fit(docs, "text", 6, minCount = 1L)._2
       docs.select(col("doc_id"),
         graft.operators.WordPiece.encodeIdsCol(col("text"), vocab)
           .as("__ids"))
@@ -2888,7 +2876,7 @@ object TextGates {
     Gate("t_wordpiece_specials", (s, d) => {
       val docs = t(s, d, "documents")
       val vocab = graft.operators.WordPiece
-        .fitLocalWithVocab(docs, "text", 6, minCount = 1L)._2
+        .fit(docs, "text", 6, minCount = 1L)._2
       val sp = Seq("<|DOC|>", "<|END|>")
       val tagged = docs.select(col("doc_id"),
         concat(lit("<|DOC|> "), col("text"), lit(" <|END|>")).as("tagged"))
@@ -2910,7 +2898,7 @@ object TextGates {
     Gate("t_wordpiece_tags_export_rt", (s, d) => {
       val docs = t(s, d, "documents")
       val vocab = graft.operators.WordPiece
-        .fitLocalWithVocab(docs, "text", 6, minCount = 1L)._2
+        .fit(docs, "text", 6, minCount = 1L)._2
       val sp = Seq("<|DOC|>", "<|END|>")
       val dir = java.nio.file.Files
         .createTempDirectory("graft_bert_tags_rt").toString
@@ -2995,7 +2983,7 @@ object TextGates {
       val fimDf = graft.operators.SpanCorrupt.fim(
         t(s, d, "documents"), "doc_id", "text", fimPermille = 900)
       val sp = graft.operators.SpanCorrupt.FimSpecials
-      val merges = graft.operators.Bpe.fitLocal(fimDf, "fim", 6,
+      val merges = graft.operators.Bpe.fit(fimDf, "fim", 6,
         minCount = 1L, byteLevel = true, specials = sp)
       val base = 256 + merges.size
       val ids = graft.operators.Bpe.encodeIdsCol(col("fim"), merges, sp)
@@ -3120,7 +3108,7 @@ object TextGates {
         .select(col("doc_id"), col("inp"), col("tgt")),
         "t_span_corrupt_ids: corrupted")
       val sp = graft.operators.SpanCorrupt.extraIdSpecials(64)
-      val merges = graft.operators.Bpe.fitLocal(sc, "inp", 6,
+      val merges = graft.operators.Bpe.fit(sc, "inp", 6,
         minCount = 1L, byteLevel = true, specials = sp)
       val base = 256 + merges.size
       val inpIds = graft.operators.Bpe.encodeIdsCol(col("inp"),
@@ -3197,7 +3185,7 @@ object TextGates {
     // tie-breaks and the final joins.
     Gate("t_dpo_artifact", (s, d) => {
       val docs = t(s, d, "documents")
-      val merges = graft.operators.Bpe.fitLocal(docs, "text", 6,
+      val merges = graft.operators.Bpe.fit(docs, "text", 6,
         minCount = 1L, byteLevel = true)
       val ids = docs.select(col("doc_id"),
         array_join(graft.operators.Bpe.encodeIdsCol(col("text"), merges)

@@ -46,7 +46,7 @@ object TokenizerFiles {
   // ---------------------------------------------------------------- GPT-2
 
   /** Write `vocab.json` + `merges.txt` under `dir` for a byte-level
-    * merge list ([[Bpe.fitBytes]]/[[Bpe.fitLocal]] output). A duplicate
+    * merge list (byte-level [[Bpe.fit]] output). A duplicate
     * merged SPELLING keeps only its lowest id in vocab.json (a JSON
     * object cannot carry duplicate keys; the encoder resolves spellings
     * to their lowest id the same way — BpeEncodeExpr.Table.symIds), while
@@ -174,7 +174,7 @@ object TokenizerFiles {
 
   // ----------------------------------------------------------------- BERT
 
-  /** Write a BERT `vocab.txt` for a [[WordPiece.vocabulary]] list:
+  /** Write a BERT `vocab.txt` for a [[WordPiece.fit]] vocabulary:
     * `[UNK]` on line 0, then the vocabulary in sorted order — line
     * number = token id, the [[WordPiece.vocabFrame]] layout. */
   def writeBertVocab(path: String, vocab: Seq[String]): Unit = {

@@ -251,7 +251,11 @@ object StreamHb {
     * encoding under YESTERDAY's vocabulary across restarts — the
     * subword-id stability incremental ingest needs. Key hygiene is the
     * caller's (the Bpe.fitStored contract): rename the configuration
-    * when the fit corpus is supposed to change. */
+    * when the fit corpus is supposed to change. With or without a
+    * store, the BPE and WordPiece tables come from their family's one
+    * trainer and are memoised in the open [[graft.Scope]], so two
+    * statements binding one table (`bpe ids … using c` + `decode ids
+    * … using c`) fit it once. */
   def apply(program: Program, stream: DataFrame,
       resolve: String => DataFrame = noResolver,
       store: Option[graft.cache.LineageCache] = None): DataFrame = {
@@ -342,17 +346,8 @@ object StreamHb {
         })
         f.copy(df = graft.operators.Vocab.decodeNarrow(f.df, c, vm))
       case (f, BpeUsing(c, conf, n)) =>
-        val merges = store match {
-          case Some(lc) => graft.operators.Bpe.fitStored(
-            resolve(conf), c, n, 1L, conf, lc)
-          // fitLocal, not the per-merge distributed loop: the
-          // statement surface uses the production trainer split
-          // (identical merges below maxWords — BpeSpec), as in the
-          // batch Engine; the stored tier above amortizes differently
-          // (one fit ever) and keeps the reference-shaped fit
-          case None => graft.operators.Bpe.fitLocal(resolve(conf), c, n,
-            minCount = 1L)
-        }
+        val merges = graft.operators.Bpe.fitStored(resolve(conf), c, n,
+          1L, conf, store)
         f.copy(df = f.df.withColumn("bpe",
           graft.operators.Bpe.encodeColFast(col(c), merges)))
       case (f, UnigramIdsUsing(c, conf, n, tags)) =>
@@ -386,17 +381,8 @@ object StreamHb {
         // part of the store key); the stream side is the stateless
         // greedy id encode, repartitioned off the one-task-per-file
         // source, tags as dedicated ids N+1+k
-        val wpDf = resolve(conf)
-        val vocab = store match {
-          case Some(lc) => graft.operators.WordPiece.vocabularyStored(
-            wpDf, c, n, 1L, conf, lc, specials = tags)
-          case None =>
-            val fitDf = graft.functions.SpecialTokens
-              .segmentedCorpus(wpDf, c, tags)
-            // one word-frame pass for merges AND alphabet (r17)
-            graft.operators.WordPiece
-              .fitLocalWithVocab(fitDf, c, n, minCount = 1L)._2
-        }
+        val vocab = graft.operators.WordPiece.vocabularyStored(
+          resolve(conf), c, n, 1L, conf, store, specials = tags)
         val wpIds =
           if (tags.isEmpty)
             graft.operators.WordPiece.encodeIdsCol(col(c), vocab)
@@ -414,13 +400,8 @@ object StreamHb {
         // `bpe bytes ... using` (reserved tags excluded from it and
         // part of the store key), stream side emits the id ARRAYS plus
         // the row-printable space-joined form
-        val merges = store match {
-          case Some(lc) => graft.operators.Bpe.fitStored(
-            resolve(conf), c, n, 1L, conf, lc, byteLevel = true,
-            specials = tags)
-          case None => graft.operators.Bpe.fitLocal(resolve(conf), c, n,
-            minCount = 1L, byteLevel = true, specials = tags)
-        }
+        val merges = graft.operators.Bpe.fitStored(resolve(conf), c, n,
+          1L, conf, store, byteLevel = true, specials = tags)
         f.copy(df = f.df
           .withColumn("token_ids",
             graft.operators.Bpe.encodeIdsCol(col(c), merges, tags))
@@ -445,13 +426,8 @@ object StreamHb {
         val sftSp = graft.operators.Sft.Specials
         val fitDf = resolve(conf).withColumn("rendered",
           graft.operators.Sft.render(col(pc), col(rc)))
-        val merges = store match {
-          case Some(lc) => graft.operators.Bpe.fitStored(fitDf,
-            "rendered", n, 1L, conf, lc, byteLevel = true,
-            specials = sftSp)
-          case None => graft.operators.Bpe.fitLocal(fitDf, "rendered",
-            n, minCount = 1L, byteLevel = true, specials = sftSp)
-        }
+        val merges = graft.operators.Bpe.fitStored(fitDf, "rendered", n,
+          1L, conf, store, byteLevel = true, specials = sftSp)
         f.copy(df = f.df
           .withColumn("rendered",
             graft.operators.Sft.render(col(pc), col(rc)))
@@ -472,12 +448,8 @@ object StreamHb {
         // offline on the configuration (store-shared with any encode
         // statement on the same column), the stream reports per-doc
         // fertility/compression as a stateless codegen'd narrow map
-        val merges = store match {
-          case Some(lc) => graft.operators.Bpe.fitStored(
-            resolve(conf), c, n, 1L, conf, lc, byteLevel = true)
-          case None => graft.operators.Bpe.fitLocal(resolve(conf), c, n,
-            minCount = 1L, byteLevel = true)
-        }
+        val merges = graft.operators.Bpe.fitStored(resolve(conf), c, n,
+          1L, conf, store, byteLevel = true)
         val nIds = size(graft.operators.Bpe.encodeIdsCol(col(c), merges))
           .cast("long")
         f.copy(df = f.df
@@ -498,23 +470,15 @@ object StreamHb {
         // column the ENCODE statement fit on — the store key includes
         // it, so matching columns share ONE fit and mismatched columns
         // would silently bind a different table
-        val merges = store match {
-          case Some(lc) => graft.operators.Bpe.fitStored(
-            resolve(conf), tc, n, 1L, conf, lc, byteLevel = true)
-          case None => graft.operators.Bpe.fitLocal(resolve(conf), tc,
-            n, minCount = 1L, byteLevel = true)
-        }
+        val merges = graft.operators.Bpe.fitStored(resolve(conf), tc, n,
+          1L, conf, store, byteLevel = true)
         f.copy(df = f.df.withColumn("text_decoded",
           graft.operators.Bpe.decodeIdsCol(col(c), merges)))
       case (f, BpeBytesUsing(c, conf, n)) =>
         // lossless byte-level twin: table fits offline on the
         // configuration, the stream encodes as a stateless narrow map
-        val merges = store match {
-          case Some(lc) => graft.operators.Bpe.fitStored(
-            resolve(conf), c, n, 1L, conf, lc, byteLevel = true)
-          case None => graft.operators.Bpe.fitLocal(resolve(conf), c, n,
-            minCount = 1L, byteLevel = true)
-        }
+        val merges = graft.operators.Bpe.fitStored(resolve(conf), c, n,
+          1L, conf, store, byteLevel = true)
         f.copy(df = f.df.withColumn("bpe",
           graft.operators.Bpe.encodeBytesCol(col(c), merges)))
       case (f, WordPieceUsing(c, conf, n)) =>
@@ -523,13 +487,8 @@ object StreamHb {
         // longest-match narrow map (one fold per word occurrence —
         // streams see each doc once, so the batch path's distinct-word
         // memo buys nothing here)
-        val wpDf = resolve(conf)
-        val vocab = store match {
-          case Some(lc) => graft.operators.WordPiece.vocabularyStored(
-            wpDf, c, n, 1L, conf, lc)
-          case None => graft.operators.WordPiece
-            .fitLocalWithVocab(wpDf, c, n, minCount = 1L)._2
-        }
+        val vocab = graft.operators.WordPiece.vocabularyStored(
+          resolve(conf), c, n, 1L, conf, store)
         // the file source hands a micro-batch ONE task per file — one
         // narrow round-robin exchange spreads the compiled encode
         // across cores (the bpeEncodeStream precedent, StreamOps.scala)

@@ -67,10 +67,11 @@ object StreamOps {
   /** Checkpoint root for the gate-shaped SYNCHRONOUS streaming queries
     * (AvailableNow → memory sink → stop): `graft.stream.checkpointDir`
     * when set (empty string = Spark's default temp-dir behavior), else
-    * `/dev/shm/graft-ckpt` when /dev/shm is a writable directory (the
-    * Linux RAM tmpfs). Rationale (guide §1/§6 — the micro-batch floor is
-    * I/O, not compute, at gate scale): every micro-batch pays offset-log
-    * WAL + commit-log + state-store delta writes into the checkpoint;
+    * `/dev/shm/graft-ckpt` under a local master when /dev/shm is a
+    * writable directory (the Linux RAM tmpfs). Rationale (guide §1/§6
+    * — the micro-batch floor is I/O, not compute, at gate scale): every
+    * micro-batch pays offset-log WAL + commit-log + state-store delta
+    * writes into the checkpoint;
     * measured at sf0.1 those land 40–270 ms/batch on the disk-backed
     * /tmp and are pure overhead for a query whose checkpoint is deleted
     * on stop anyway. Durability was never this shape's contract — Spark
@@ -79,12 +80,16 @@ object StreamOps {
     * a finally). Production streams that must survive a restart pass an
     * EXPLICIT durable location ([[shardAppendStream]]'s `checkpoint`
     * parameter) and never come through here. */
-  private[streaming] def fastCheckpointRoot(
+  private[graft] def fastCheckpointRoot(
       spark: SparkSession): Option[String] =
     spark.conf.getOption("graft.stream.checkpointDir")
       .orElse {
+        // a RAM directory of the driver's node: executors on other
+        // nodes would write their state into their own /dev/shm, so
+        // the default holds only for a local master
         val shm = new java.io.File("/dev/shm")
-        if (shm.isDirectory && shm.canWrite) Some("/dev/shm/graft-ckpt")
+        if (spark.sparkContext.isLocal && shm.isDirectory && shm.canWrite)
+          Some("/dev/shm/graft-ckpt")
         else None
       }
       .filter(_.nonEmpty)
@@ -411,20 +416,16 @@ object StreamOps {
   }
 
   /** Offline-fit / online-encode twin for BPE: the merge table trains
-    * in batch ([[graft.operators.Bpe.fitDelta]], bounded driver rows —
-    * one per merge) and the live stream encodes through the codegen'd
+    * in batch ([[graft.operators.Bpe.fit]]: one distributed word count,
+    * the merge loop in driver memory) and the live stream encodes
+    * through the codegen'd
     * native expression [[graft.operators.Bpe.encodeColFast]] (pinned
     * bit-identical to the HOF spec `encodeCol` by BpeSpec) —
     * stateless, append-mode, nothing but the scan per micro-batch. */
   def bpeEncodeStream(spark: SparkSession, dir: String,
       queryName: String, nMerges: Int = 8): DataFrame = {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    // fitLocal, not the per-merge distributed loop: the offline fit
-    // half of this pairing is the production trainer split (identical
-    // merges below maxWords — BpeSpec parity), same as the statement
-    // surface; fitDelta here cost ~40 driver-loop jobs per run
-    // (profiled r16) for the same merge list
-    val merges = graft.operators.Bpe.fitLocal(docs, "text", nMerges,
+    val merges = graft.operators.Bpe.fit(docs, "text", nMerges,
       minCount = 1L)
     // The file source hands each micro-batch ONE task per file, which
     // serializes the CPU-heavy merge fold (measured 16 s vs the batch

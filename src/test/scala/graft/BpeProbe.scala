@@ -5,7 +5,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
 
 /** Scratch probe for trainer cost — not a spec.
-  * args: nMerges which(fit|delta) [parquetDir] */
+  * args: nMerges which(fit|local|localbytes|wplocal|wpfit|ugtarget)
+  * [parquetDir] — `fit`/`wpfit` run the round-by-round spec trainers,
+  * `local`/`localbytes`/`wplocal` the production driver-local ones. */
 object BpeProbe {
   def main(args: Array[String]): Unit = {
     val spark = Sessions.local()
@@ -47,15 +49,16 @@ object BpeProbe {
     spark.sparkContext.addSparkListener(listener)
     val t0 = System.nanoTime
     val m =
-      if (which == "fit") graft.operators.Bpe.fit(docs, "text", n, 1L)
+      if (which == "fit")
+        SpecTrainers.bpe(graft.operators.Bpe.wordFrame(docs, "text"), n, 1L)
       else if (which == "local")
-        graft.operators.Bpe.fitLocal(docs, "text", n, 1L)
+        graft.operators.Bpe.fit(docs, "text", n, 1L)
       else if (which == "localbytes")
-        graft.operators.Bpe.fitLocal(docs, "text", n, 1L, byteLevel = true)
+        graft.operators.Bpe.fit(docs, "text", n, 1L, byteLevel = true)
       else if (which == "wplocal")
-        graft.operators.WordPiece.fitLocal(docs, "text", n, minCount = 1L)
+        graft.operators.WordPiece.fit(docs, "text", n, minCount = 1L)._1
       else if (which == "wpfit")
-        graft.operators.WordPiece.fit(docs, "text", n, minCount = 1L)
+        SpecTrainers.wordPiece(docs, "text", n, minCount = 1L)
       else if (which == "ugtarget") {
         // production-shape pin: fit to (n − 256) pieces, then reserve
         // the 256-byte fallback pieces on top → exactly n, the
@@ -70,7 +73,7 @@ object BpeProbe {
           s"${(rt.totalMemory - rt.freeMemory) / 1048576}")
         full.map(p => graft.operators.Bpe.Merge(0, p.piece, "")) // size probe
       }
-      else graft.operators.Bpe.fitDelta(docs, "text", n, 1L)
+      else sys.error(s"unknown trainer '$which'")
     spark.range(1).count() // marker job, then drain
     Thread.sleep(2000)
     println(s"== $which n=$n merges=${m.size} " +

@@ -57,8 +57,7 @@ class BpeSpec extends AnyFunSuite {
     assert(a == b)
   }
 
-  test("delta trainer produces the identical merge list to the " +
-      "specification trainer (incl. overlap runs and early stop)") {
+  test("fit equals the spec trainer: overlap runs, minCount stop, layout") {
     // mixed corpus: repeated-char runs (the l==r run-parity case),
     // shared prefixes/suffixes, ties — everything that could make an
     // incrementally-maintained count diverge from recomputation
@@ -66,16 +65,13 @@ class BpeSpec extends AnyFunSuite {
       (i.toLong, s"low lower lowest aaaa baab wide wider widest " +
         s"the then there row$i"))
       .toDF("doc_id", "text")
-    val a = Bpe.fit(docs, "text", 24, minCount = 1L)
-    val b = Bpe.fitDelta(docs, "text", 24, minCount = 1L)
-    assert(a == b, s"naive=$a\ndelta=$b")
+    val spec = SpecTrainers.bpe(Bpe.wordFrame(docs, "text"), 24, 1L)
+    val a = Bpe.fit(docs.coalesce(1), "text", 24, minCount = 1L)
+    assert(a == spec, s"spec=$spec\nfit=$a")
+    assert(Bpe.fit(docs.repartition(13), "text", 24, minCount = 1L) == a)
     // early stop at minCount parity
-    val c = Bpe.fit(docs, "text", 24, minCount = 40L)
-    val dd = Bpe.fitDelta(docs, "text", 24, minCount = 40L)
-    assert(c == dd && c.size < 24)
-    // delta is invariant under repartitioning too
-    val e = Bpe.fitDelta(docs.repartition(13), "text", 24, minCount = 1L)
-    assert(e == b)
+    val c = SpecTrainers.bpe(Bpe.wordFrame(docs, "text"), 24, 40L)
+    assert(Bpe.fit(docs, "text", 24, minCount = 40L) == c && c.size < 24)
   }
 
   test("fitStored: a fresh session loads the merge table, no retrain") {
@@ -86,16 +82,16 @@ class BpeSpec extends AnyFunSuite {
       (i.toLong, "low lower lowest newer wider")).toDF("doc_id", "text")
     var fitted: Seq[Bpe.Merge] = null
     val fitJobs = JobCounter.count(spark) {
-      fitted = Bpe.fitStored(docs, "text", 6, 1L, "corpus@v1", store)
+      fitted = Bpe.fitStored(docs, "text", 6, 1L, "corpus@v1", Some(store))
     }
-    assert(fitted == Bpe.fitDelta(docs, "text", 6, minCount = 1L))
+    assert(fitted == Bpe.fit(docs, "text", 6, minCount = 1L))
     // a fresh store handle on the same root simulates a new session;
     // the load may only pay parquet-footer reads, never the per-round
     // trainer jobs
     val store2 = new graft.cache.LineageCache(spark, root)
     var loaded: Seq[Bpe.Merge] = null
     val jobs = JobCounter.count(spark) {
-      loaded = Bpe.fitStored(docs, "text", 6, 1L, "corpus@v1", store2)
+      loaded = Bpe.fitStored(docs, "text", 6, 1L, "corpus@v1", Some(store2))
     }
     assert(fitJobs > jobs,
       s"cached fitStored ran $jobs job(s) vs $fitJobs to fit — it retrained")
@@ -104,18 +100,19 @@ class BpeSpec extends AnyFunSuite {
     // same merges (key hygiene is the caller's, by contract)
     val grown = docs.union(Seq((99L, "zzz zzz zzz zzz zzz zzz"))
       .toDF("doc_id", "text"))
-    assert(Bpe.fitStored(grown, "text", 6, 1L, "corpus@v1", store2)
+    assert(Bpe.fitStored(grown, "text", 6, 1L, "corpus@v1", Some(store2))
       == fitted)
     // the byte-level mode stores under a DIFFERENT artifact key (a
     // byte table and a word table with the same corpus key are
     // different tokenizers), reloads without retraining, and matches
     // the direct fit
-    val bFitted = Bpe.fitStored(docs, "text", 6, 1L, "corpus@v1", store2,
-      byteLevel = true)
-    assert(bFitted == Bpe.fitBytes(docs, "text", 6, minCount = 1L))
+    val bFitted = Bpe.fitStored(docs, "text", 6, 1L, "corpus@v1",
+      Some(store2), byteLevel = true)
+    assert(bFitted == Bpe.fit(docs, "text", 6, minCount = 1L,
+      byteLevel = true))
     assert(bFitted != fitted, "byte and word tables must differ")
     val store3 = new graft.cache.LineageCache(spark, root)
-    assert(Bpe.fitStored(docs, "text", 6, 1L, "corpus@v1", store3,
+    assert(Bpe.fitStored(docs, "text", 6, 1L, "corpus@v1", Some(store3),
       byteLevel = true) == bFitted)
   }
 
@@ -144,7 +141,7 @@ class BpeSpec extends AnyFunSuite {
       alpha(rnd.nextInt(alpha.length))).mkString
     val corpus = Seq.tabulate(400)(i =>
       (i.toLong, Seq.fill(12)(word()).mkString(" "))).toDF("doc_id", "text")
-    val merges = Bpe.fitDelta(corpus, "text", 300, minCount = 1L)
+    val merges = Bpe.fit(corpus, "text", 300, minCount = 1L)
     assert(merges.size >= 256, s"only ${merges.size} merges learned")
     // driver-side reference: the naive all-merges-in-rank-order greedy
     // fold — the exact algorithm encodeCol's HOF expresses
@@ -205,36 +202,39 @@ class BpeSpec extends AnyFunSuite {
     }
   }
 
-  test("fitLocal (driver in-memory trainer) produces the identical " +
-      "merge list to fit/fitDelta — word-level and byte-level") {
+  test("fit equals the spec trainer word-level, byte-level, with specials") {
     val docs = Seq.tabulate(40)(i =>
       (i.toLong, s"The Spark spark scan TABLE value part hash row$i mix"))
       .toDF("doc_id", "text")
-    val a = Bpe.fit(docs, "text", 12, minCount = 1L)
-    val b = Bpe.fitDelta(docs, "text", 12, minCount = 1L)
-    val c = Bpe.fitLocal(docs, "text", 12, minCount = 1L)
-    assert(a == c && b == c, s"\nfit:      $a\nfitLocal: $c")
-    val bd = Bpe.fitBytes(docs, "text", 12, minCount = 1L)
-    val bl = Bpe.fitLocal(docs, "text", 12, minCount = 1L,
-      byteLevel = true)
-    assert(bd == bl, s"\nfitBytes: $bd\nfitLocal: $bl")
+    val w = Bpe.fit(docs, "text", 12, minCount = 1L)
+    assert(w == SpecTrainers.bpe(Bpe.wordFrame(docs, "text"), 12, 1L))
+    val b = Bpe.fit(docs, "text", 12, minCount = 1L, byteLevel = true)
+    assert(b == SpecTrainers.bpe(Bpe.byteFrame(docs, "text"), 12, 1L))
     // byte-level with reserved specials (the sft / `bpe ids … tags`
-    // statement shape): the tag text must leave the fit corpus the
-    // same way on both paths — they share byteFrame's segmentation
+    // statement shape): the tag text leaves the fit corpus through
+    // byteFrame's segmentation
     val sp = Seq("<|U|>", "<|A|>")
     val tagged = docs.selectExpr("doc_id",
       "concat('<|U|> ', text, ' <|A|>') AS text")
-    val sd = Bpe.fitBytes(tagged, "text", 12, minCount = 1L,
+    val s = Bpe.fit(tagged, "text", 12, minCount = 1L, byteLevel = true,
       specials = sp)
-    val sl = Bpe.fitLocal(tagged, "text", 12, minCount = 1L,
-      byteLevel = true, specials = sp)
-    assert(sd == sl, s"\nfitBytes+sp: $sd\nfitLocal+sp: $sl")
-    // the minCount stop rule carries over
-    assert(Bpe.fitLocal(Seq((1L, "ab cd ef")).toDF("doc_id", "text"),
-      "text", 5, minCount = 2L).isEmpty)
-    // frequency truncation is deterministic and keeps training alive
-    assert(Bpe.fitLocal(docs, "text", 6, minCount = 1L, maxWords = 5)
-      .nonEmpty)
+    assert(s == SpecTrainers.bpe(Bpe.byteFrame(tagged, "text", sp), 12, 1L))
+    assert(w != b && s.nonEmpty)
+  }
+
+  test("the word collect fails above its bound and names it") {
+    val docs = Seq((1L, "one two three four five six six")).toDF("doc_id",
+      "text")
+    val frame = Bpe.wordFrame(docs, "text")
+    assert(Bpe.collectWords(frame, "bpe", "words", bound = 6).length == 6)
+    val e = intercept[IllegalArgumentException](
+      Bpe.collectWords(frame, "bpe", "words", bound = 5))
+    assert(e.getMessage.contains("bpe fit") &&
+      e.getMessage.contains("more than 5 distinct words"), e.getMessage)
+    val p = intercept[IllegalArgumentException](Bpe.collectWords(
+      Bpe.byteFrame(docs, "text"), "bpe", "pretokens", bound = 5))
+    assert(p.getMessage.contains("more than 5 distinct pretokens"))
+    assert(Bpe.WordBound == (1 << 20))
   }
 
   // ---- byte-level, case-preserving mode (r11) ----
@@ -278,7 +278,8 @@ class BpeSpec extends AnyFunSuite {
     val corpus = Seq.tabulate(30)(i =>
       (i.toLong, s"The Low lower  LOWEST\n\tmix ${i % 7} 中文 end."))
       .toDF("doc_id", "text")
-    val merges = Bpe.fitBytes(corpus, "text", 24, minCount = 1L)
+    val merges = Bpe.fit(corpus, "text", 24, minCount = 1L,
+      byteLevel = true)
     assert(merges.nonEmpty)
     val probes = (Seq.tabulate(200)(i => (i.toLong, randomText(rnd, 60)))
       :+ (9001L, "Hello  World\n\tMixed CASE 42!")).toDF("doc_id", "text")
@@ -297,7 +298,8 @@ class BpeSpec extends AnyFunSuite {
     val corpus = Seq.tabulate(30)(i =>
       (i.toLong, s"The Low lower  LOWEST\n\tmix ${i % 7} end."))
       .toDF("doc_id", "text")
-    val merges = Bpe.fitBytes(corpus, "text", 16, minCount = 1L)
+    val merges = Bpe.fit(corpus, "text", 16, minCount = 1L,
+      byteLevel = true)
     val probes = (Seq.tabulate(120)(i => (i.toLong, randomText(rnd, 50)))
       :+ (9001L, "The  QUICK\tbrown 42!")).toDF("doc_id", "text")
     val out = probes.select(col("text"),
@@ -328,7 +330,8 @@ class BpeSpec extends AnyFunSuite {
   test("byte-level: case and whitespace SURVIVE the tokenizer (the " +
       "artifact-losslessness the word-level mode deliberately lacks)") {
     val corpus = Seq((1L, "Data data DATA  data\ndata")).toDF("doc_id", "text")
-    val merges = Bpe.fitBytes(corpus, "text", 8, minCount = 1L)
+    val merges = Bpe.fit(corpus, "text", 8, minCount = 1L,
+      byteLevel = true)
     val probe = Seq((1L, "Data  DATA\ndata")).toDF("doc_id", "text")
     val enc = probe.select(
       Bpe.encodeBytesCol(col("text"), merges).as("b"),
@@ -356,7 +359,8 @@ class BpeSpec extends AnyFunSuite {
       Seq("x", " 42", ",", " ok"))
     val corpus = Seq.tabulate(20)(i => (i.toLong, "the cat the cat"))
       .toDF("doc_id", "text")
-    val merges = Bpe.fitBytes(corpus, "text", 12, minCount = 1L)
+    val merges = Bpe.fit(corpus, "text", 12, minCount = 1L,
+      byteLevel = true)
     // 'Ġ' (mapped 0x20) appears inside learned merge symbols: the
     // space-prefixed word is ONE token family, GPT-2-style
     assert(merges.exists(m => (m.left + m.right).contains('Ġ')),
@@ -377,9 +381,10 @@ class BpeSpec extends AnyFunSuite {
     val twin = Seq.tabulate(30)(i =>
       Seq((2L * i, s" ask ${i % 5} thing "), (2L * i + 1, " answer it")))
       .flatten.toDF("doc_id", "text")
-    val merges = Bpe.fitBytes(tagged, "text", 12, minCount = 1L,
-      specials = sp)
-    assert(merges == Bpe.fitBytes(twin, "text", 12, minCount = 1L),
+    val merges = Bpe.fit(tagged, "text", 12, minCount = 1L,
+      byteLevel = true, specials = sp)
+    assert(merges == Bpe.fit(twin, "text", 12, minCount = 1L,
+      byteLevel = true),
       "specials leaked into the fit statistics")
     val base = 256 + merges.size
     // a special alone is exactly ONE reserved id; tags embedded without

@@ -487,7 +487,8 @@ class EngineSpec extends AnyFunSuite {
     val tapped = Bpe.mergesFromMetadata(out.schema, "token_ids")
     assert(tapped.isDefined, "token_ids carries no merge metadata")
     // the published table IS the statement's fit
-    assert(tapped.get == Bpe.fitBytes(docs, "text", 4, minCount = 1L))
+    assert(tapped.get ==
+      Bpe.fit(docs, "text", 4, minCount = 1L, byteLevel = true))
     // tapping + the GPT-2 file round-trip is schema-only: ZERO Spark
     // jobs beyond the JobCounter marker baseline — the proof the
     // flagship's artifact assert no longer pays a second fit

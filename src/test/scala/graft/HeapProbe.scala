@@ -55,14 +55,14 @@ object HeapProbe {
       (rows, rows.length.toLong)
     }
 
-    measure("bpe.fitLocal word frame (<=maxWords)", "2^20 words") {
-      val merges = graft.operators.Bpe.fitLocal(docs, "text", 64,
+    measure("bpe.fit word frame (<=WordBound)", "2^20 words") {
+      val merges = graft.operators.Bpe.fit(docs, "text", 64,
         minCount = 1L)
       (merges, merges.size.toLong)
     }
 
-    measure("wordpiece.fitLocal word frame (<=maxWords)", "2^20 words") {
-      val merges = graft.operators.WordPiece.fitLocal(docs, "text", 64,
+    measure("wordpiece.fit word frame (<=WordBound)", "2^20 words") {
+      val (merges, _) = graft.operators.WordPiece.fit(docs, "text", 64,
         minCount = 1L)
       (merges, merges.size.toLong)
     }

@@ -27,7 +27,8 @@ class SftSpec extends AnyFunSuite {
       (6L, "trailing space ", " leading space"))
       .toDF("doc_id", "prompt", "response")
       .withColumn("rendered", Sft.render(col("prompt"), col("response")))
-    val merges = Bpe.fitBytes(pairs, "rendered", 12, minCount = 1L)
+    val merges = Bpe.fit(pairs, "rendered", 12, minCount = 1L,
+      byteLevel = true)
     val rows = pairs.select(
         Bpe.encodeIdsCol(Sft.renderPrefix(col("prompt")), merges)
           .as("pre"),
@@ -67,8 +68,8 @@ class SftSpec extends AnyFunSuite {
       (4L, "a", "b"))
       .toDF("doc_id", "prompt", "response")
       .withColumn("rendered", Sft.render(col("prompt"), col("response")))
-    val merges = Bpe.fitBytes(pairs, "rendered", 12, minCount = 1L,
-      specials = sp)
+    val merges = Bpe.fit(pairs, "rendered", 12, minCount = 1L,
+      byteLevel = true, specials = sp)
     val base = 256 + merges.size
     val rows = pairs.select(
         Bpe.encodeIdsCol(Sft.renderPrefix(col("prompt")), merges, sp)

@@ -19,9 +19,9 @@ object SpanIdsProbe {
       .select(col("doc_id"), col("inp"), col("tgt"))
     val sc = time("corrupt+checkpoint") { sc0.localCheckpoint(true) }
     val sp = graft.operators.SpanCorrupt.extraIdSpecials(64)
-    val merges = time("fitBytes(inp, 6, sp)") {
-      graft.operators.Bpe.fitBytes(sc, "inp", 6, minCount = 1L,
-        specials = sp)
+    val merges = time("byte-level fit(inp, 6, sp)") {
+      graft.operators.Bpe.fit(sc, "inp", 6, minCount = 1L,
+        byteLevel = true, specials = sp)
     }
     val base = 256 + merges.size
     val inpIds = graft.operators.Bpe.encodeIdsCol(col("inp"), merges, sp)

@@ -21,6 +21,25 @@ class StoredModelSpec extends AnyFunSuite {
     (i.toLong, "hugging huggable hug bugs bug running runner"))
     .toDF("doc_id", "text")
 
+  /** [[corpus]] as `documents.parquet` in a fresh directory, and the
+    * resolver that binds it as configuration `corpus`. */
+  private def corpusTable(prefix: String)
+      : (String, String => org.apache.spark.sql.DataFrame) = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    corpus.coalesce(1).write.mode("overwrite")
+      .parquet(s"$dir/staging")
+    // single-file layout the glob-filtered file source expects
+    val part = java.nio.file.Files.list(
+      java.nio.file.Paths.get(s"$dir/staging")).toArray
+      .map(_.toString).filter(_.endsWith(".parquet")).head
+    java.nio.file.Files.copy(java.nio.file.Paths.get(part),
+      java.nio.file.Paths.get(s"$dir/documents.parquet"))
+    (dir, {
+      case "corpus" => spark.read.parquet(s"$dir/documents.parquet")
+      case other => throw new NoSuchElementException(other)
+    })
+  }
+
   test("WordPiece.fitStored/vocabularyStored: a fresh session loads " +
       "the artifacts, no retrain, identical model") {
     val root = java.nio.file.Files
@@ -30,19 +49,20 @@ class StoredModelSpec extends AnyFunSuite {
     var fitted: Seq[WordPiece.Merge] = null
     var vocab: Seq[String] = null
     val fitJobs = JobCounter.count(spark) {
-      fitted = WordPiece.fitStored(docs, "text", 8, 1L, "corpus@v1", store)
+      fitted = WordPiece.fitStored(docs, "text", 8, 1L, "corpus@v1",
+        Some(store))
       vocab = WordPiece.vocabularyStored(docs, "text", 8, 1L,
-        "corpus@v1", store)
+        "corpus@v1", Some(store))
     }
-    assert(fitted == WordPiece.fit(docs, "text", 8, minCount = 1L))
-    assert(vocab == WordPiece.vocabulary(docs, "text", fitted).sorted)
+    assert((fitted, vocab) == WordPiece.fit(docs, "text", 8, minCount = 1L))
     val store2 = new LineageCache(spark, root)
     var loaded: Seq[WordPiece.Merge] = null
     var loadedVocab: Seq[String] = null
     val jobs = JobCounter.count(spark) {
-      loaded = WordPiece.fitStored(docs, "text", 8, 1L, "corpus@v1", store2)
+      loaded = WordPiece.fitStored(docs, "text", 8, 1L, "corpus@v1",
+        Some(store2))
       loadedVocab = WordPiece.vocabularyStored(docs, "text", 8, 1L,
-        "corpus@v1", store2)
+        "corpus@v1", Some(store2))
     }
     assert(fitJobs > jobs,
       s"cached fitStored ran $jobs job(s) vs $fitJobs to fit — it retrained")
@@ -52,7 +72,7 @@ class StoredModelSpec extends AnyFunSuite {
     val grown = docs.union(Seq((99L, "zzz zzz zzz zzz"))
       .toDF("doc_id", "text"))
     assert(WordPiece.vocabularyStored(grown, "text", 8, 1L,
-      "corpus@v1", store2) == vocab)
+      "corpus@v1", Some(store2)) == vocab)
   }
 
   test("Unigram.fitStored: a fresh session loads the piece table, " +
@@ -86,20 +106,7 @@ class StoredModelSpec extends AnyFunSuite {
       "beyond the bounded artifact reads — and encode identically") {
     val root = java.nio.file.Files
       .createTempDirectory("hb_store").toString
-    val dir = java.nio.file.Files
-      .createTempDirectory("hb_store_data").toString
-    corpus.coalesce(1).write.mode("overwrite")
-      .parquet(s"$dir/staging")
-    // single-file layout the glob-filtered file source expects
-    val part = java.nio.file.Files.list(
-      java.nio.file.Paths.get(s"$dir/staging")).toArray
-      .map(_.toString).filter(_.endsWith(".parquet")).head
-    java.nio.file.Files.copy(java.nio.file.Paths.get(part),
-      java.nio.file.Paths.get(s"$dir/documents.parquet"))
-    val resolve: String => org.apache.spark.sql.DataFrame = {
-      case "corpus" => spark.read.parquet(s"$dir/documents.parquet")
-      case other => throw new NoSuchElementException(other)
-    }
+    val (dir, resolve) = corpusTable("hb_store_data")
     val wpProg = "wordpiece text using corpus 6\nslice columns doc_id wp\n"
     val ugProg = "unigram text using corpus 8\nslice columns doc_id ug\n"
     // session 1: fit + persist while translating
@@ -157,18 +164,18 @@ class StoredModelSpec extends AnyFunSuite {
     // length-prefixed key must keep them distinct for all 3 families
     val a = Seq("<a,b>")
     val b = Seq("<a", "b>")
-    val wpA = WordPiece.vocabularyStored(docs, "text", 4, 1L, "k", store,
-      specials = a)
-    val wpB = WordPiece.vocabularyStored(docs, "text", 4, 1L, "k", store,
-      specials = b)
+    val wpA = WordPiece.vocabularyStored(docs, "text", 4, 1L, "k",
+      Some(store), specials = a)
+    val wpB = WordPiece.vocabularyStored(docs, "text", 4, 1L, "k",
+      Some(store), specials = b)
     assert(wpA == wpB, "same corpus stats — vocab equal, keys distinct")
     val ugA = Unigram.fitStored(docs, "text", 8, "k", store, specials = a)
     val ugB = Unigram.fitStored(docs, "text", 8, "k", store, specials = b)
     assert(ugA == ugB)
     val bpA = graft.operators.Bpe.fitStored(docs, "text", 4, 1L, "k",
-      store, byteLevel = true, specials = a)
+      Some(store), byteLevel = true, specials = a)
     val bpB = graft.operators.Bpe.fitStored(docs, "text", 4, 1L, "k",
-      store, byteLevel = true, specials = b)
+      Some(store), byteLevel = true, specials = b)
     // byte fits EXCLUDE tag text: '<a,b>' and '<a'/'b>' segment the
     // corpus identically here (no tag occurs in it) so the merge
     // tables match — but each list must have hit its own key slot
@@ -177,5 +184,24 @@ class StoredModelSpec extends AnyFunSuite {
     assert(slots != null && slots.length >= 6,
       s"expected >= 6 distinct store slots, got ${slots.length}: " +
         slots.map(_.getName).mkString(", "))
+  }
+
+  test("store and no store fit the same model: `bpe`, `bpe ids … tags` " +
+      "and `wordpiece` return identical rows") {
+    val (dir, resolve) = corpusTable("hb_paths_data")
+    Seq("bpe text using corpus 6\nslice columns doc_id bpe\n",
+      "bpe ids text using corpus 6 tags '<|x|>' 'hug'\n" +
+        "slice columns doc_id ids_str\n",
+      "wordpiece text using corpus 6\nslice columns doc_id wp\n")
+      .zipWithIndex.foreach { case (prog, i) =>
+        val store = new LineageCache(spark, java.nio.file.Files
+          .createTempDirectory("hb_paths_store").toString)
+        def rows(q: String, st: Option[LineageCache]) =
+          graft.streaming.StreamHb.runTable(spark, dir, "documents", prog,
+            q, resolve, st).orderBy("doc_id").collect().map(_.toSeq).toSeq
+        val plain = rows(s"paths_none_$i", None)
+        assert(plain.nonEmpty)
+        assert(rows(s"paths_store_$i", Some(store)) == plain, prog)
+      }
   }
 }

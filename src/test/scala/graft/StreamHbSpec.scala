@@ -187,4 +187,33 @@ class StreamHbSpec extends AnyFunSuite {
     assert(streamed.nonEmpty)
     assert(streamed.toSeq == batch.toSeq)
   }
+
+  test("a table bound twice in one scope is fitted once, with or " +
+      "without a store") {
+    // a fresh read per binding, like the gates' resolvers
+    val resolve: String => org.apache.spark.sql.DataFrame = {
+      case "corpus" => spark.read.parquet(s"$dir/documents.parquet")
+      case other => throw new NoSuchElementException(other)
+    }
+    val base = JobCounter.count(spark)(())
+    val read = JobCounter.count(spark)(resolve("corpus")) - base
+    val once = "bpe ids text using corpus 6\n"
+    val twice = once + "decode ids token_ids using corpus 6\n"
+    def jobs(text: String, store: Boolean): Int = {
+      val st = Option.when(store)(new cache.LineageCache(spark,
+        java.nio.file.Files.createTempDirectory("fit_once").toString))
+      JobCounter.count(spark) {
+        Scope.open(_ => StreamHb(HbParser.parse(text), docsStream, resolve,
+          st))
+      }
+    }
+    for (store <- Seq(false, true)) {
+      val one = jobs(once, store)
+      val two = jobs(twice, store)
+      assert(one - base > read, s"store=$store: the fit launched no jobs")
+      // the second binding pays at most its own read, never a refit
+      assert(two - one <= read,
+        s"store=$store: $one job(s) for one binding, $two for two")
+    }
+  }
 }

@@ -141,4 +141,22 @@ class StreamSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(cBefore.forall { case (id, sh, _) => expected(id) == sh })
   }
+
+  test("fast checkpoint root: /dev/shm under a local master, an " +
+      "explicit empty value turns it off") {
+    assert(spark.sparkContext.isLocal)
+    val key = "graft.stream.checkpointDir"
+    val prev = spark.conf.getOption(key)
+    try {
+      spark.conf.unset(key)
+      val shm = new java.io.File("/dev/shm")
+      assert(StreamOps.fastCheckpointRoot(spark) ==
+        Option.when(shm.isDirectory && shm.canWrite)("/dev/shm/graft-ckpt"))
+      spark.conf.set(key, "")
+      assert(StreamOps.fastCheckpointRoot(spark).isEmpty)
+      spark.conf.set(key, "/tmp/graft-ckpt-explicit")
+      assert(StreamOps.fastCheckpointRoot(spark) ==
+        Some("/tmp/graft-ckpt-explicit"))
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }

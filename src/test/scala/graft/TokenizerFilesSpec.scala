@@ -21,7 +21,7 @@ class TokenizerFilesSpec extends AnyFunSuite {
       "table and the loaded table encodes + decodes identically") {
     val docs = Seq.tabulate(30)(i =>
       (i.toLong, s"The Quick  brown\tfox #$i, End.\n")).toDF("doc_id", "text")
-    val merges = Bpe.fitBytes(docs, "text", 12, minCount = 1L)
+    val merges = Bpe.fit(docs, "text", 12, minCount = 1L, byteLevel = true)
     assert(merges.nonEmpty)
     val dir = tmp("gpt2_rt")
     TokenizerFiles.writeGpt2(dir, merges)
@@ -74,10 +74,10 @@ class TokenizerFilesSpec extends AnyFunSuite {
       "different training than merges.txt)") {
     val docs = Seq.tabulate(20)(i =>
       (i.toLong, "low lower lowest newer wider")).toDF("doc_id", "text")
-    val a = Bpe.fitBytes(docs, "text", 6, minCount = 1L)
-    val b = Bpe.fitBytes(docs.select(col("doc_id"),
+    val a = Bpe.fit(docs, "text", 6, minCount = 1L, byteLevel = true)
+    val b = Bpe.fit(docs.select(col("doc_id"),
       concat(col("text"), lit(" zebra zebra zebra zebra")).as("text")),
-      "text", 6, minCount = 1L)
+      "text", 6, minCount = 1L, byteLevel = true)
     assume(a != b)
     val dirA = tmp("gpt2_a"); val dirB = tmp("gpt2_b")
     TokenizerFiles.writeGpt2(dirA, a)
@@ -107,8 +107,7 @@ class TokenizerFilesSpec extends AnyFunSuite {
       "loaded list encodes identically (ids included)") {
     val docs = Seq.tabulate(25)(i =>
       (i.toLong, "hugging huggable hug bugs bug")).toDF("doc_id", "text")
-    val merges = WordPiece.fit(docs, "text", 8, minCount = 1L)
-    val vocab = WordPiece.vocabulary(docs, "text", merges)
+    val (_, vocab) = WordPiece.fit(docs, "text", 8, minCount = 1L)
     val path = s"${tmp("bert_rt")}/vocab.txt"
     TokenizerFiles.writeBertVocab(path, vocab)
     val loaded = TokenizerFiles.readBertVocab(path)
@@ -171,8 +170,8 @@ class TokenizerFilesSpec extends AnyFunSuite {
       (i.toLong, s"<|user|> ask thing $i <|assistant|> answer"))
       .toDF("doc_id", "text")
     val sp = Seq("<|user|>", "<|assistant|>")
-    val merges = Bpe.fitBytes(docs, "text", 8, minCount = 1L,
-      specials = sp)
+    val merges = Bpe.fit(docs, "text", 8, minCount = 1L,
+      byteLevel = true, specials = sp)
     val dir = tmp("gpt2_sp")
     TokenizerFiles.writeGpt2(dir, merges, sp)
     val (loadedM, loadedSp) = TokenizerFiles.readGpt2WithSpecials(dir)
@@ -204,8 +203,7 @@ class TokenizerFilesSpec extends AnyFunSuite {
       (i.toLong, s"<|DOC|> some words here $i <|END|>"))
       .toDF("doc_id", "text")
     val sp = Seq("<|DOC|>", "<|END|>")
-    val merges = WordPiece.fit(docs, "text", 6, minCount = 1L)
-    val vocab = WordPiece.vocabulary(docs, "text", merges)
+    val (_, vocab) = WordPiece.fit(docs, "text", 6, minCount = 1L)
     val dir = tmp("bert_sp")
     TokenizerFiles.writeBert(dir, vocab, sp)
     val (v2, sp2) = TokenizerFiles.readBertWithSpecials(dir)

@@ -17,14 +17,14 @@ class WordPieceSpec extends AnyFunSuite {
     // likelihood ratio picks (x, ##y) first
     val docs = Seq(
       (1L, "xy xy xy aa aa aa aa ab ba ab ba aab baa")).toDF("doc_id", "text")
-    val merges = WordPiece.fit(docs, "text", 1, minCount = 1L)
+    val (merges, _) = WordPiece.fit(docs, "text", 1, minCount = 1L)
     assert(merges.head.left == "x" && merges.head.right == "##y")
     assert(merges.head.merged == "xy")
   }
 
   test("## join rule chains through later merges") {
     val docs = Seq((1L, "zzz zzz zzz")).toDF("doc_id", "text")
-    val merges = WordPiece.fit(docs, "text", 2, minCount = 1L)
+    val (merges, _) = WordPiece.fit(docs, "text", 2, minCount = 1L)
     // round 1 merges two adjacent ##-or-initial z's; round 2 completes
     val syms = merges.map(_.merged)
     assert(syms.contains("zzz") || syms.contains("##zzz"))
@@ -54,11 +54,10 @@ class WordPieceSpec extends AnyFunSuite {
       (1L, "the cat sat on the mat"),
       (2L, "the cats sat"),
       (3L, "a mat on a cat")).toDF("doc_id", "text")
-    val merges = WordPiece.fit(docs, "text", 4, minCount = 1L)
+    val (merges, vocab) = WordPiece.fit(docs, "text", 4, minCount = 1L)
     assert(merges.size == 4)
     assert(merges.map(_.rank) == Seq(1, 2, 3, 4))
     assert(merges.forall(_.scoreFp > 0))
-    val vocab = WordPiece.vocabulary(docs, "text", merges)
     val enc = WordPiece.encode(docs, "doc_id", "text", vocab)
       .orderBy("doc_id").collect()
     assert(enc.length == 3)
@@ -81,8 +80,7 @@ class WordPieceSpec extends AnyFunSuite {
     val docs = words.grouped(6).zipWithIndex
       .map { case (ws, i) => (i.toLong, ws.mkString(" ")) }.toSeq
       .toDF("doc_id", "text")
-    val merges = WordPiece.fit(docs, "text", 5, minCount = 1L)
-    val vocab = WordPiece.vocabulary(docs, "text", merges)
+    val (_, vocab) = WordPiece.fit(docs, "text", 5, minCount = 1L)
     // fold path per word, reassembled like the old join form
     val foldRef = docs.select(col("doc_id"),
       flatten(transform(
@@ -109,8 +107,7 @@ class WordPieceSpec extends AnyFunSuite {
     assert(out.map(vf) === Seq("a", "##b", "[UNK]"))
   }
 
-  test("fitLocal (driver in-memory likelihood trainer) produces the " +
-      "identical merge list to fit") {
+  test("fit equals the likelihood spec trainer, minCount stop, layout") {
     // random small-alphabet corpus: plenty of unit-count churn, so the
     // likelihood scores of UNTOUCHED pairs move between rounds — the
     // case the unit→pairs re-push index exists for
@@ -122,15 +119,20 @@ class WordPieceSpec extends AnyFunSuite {
     val docs = words.grouped(9).zipWithIndex
       .map { case (ws, i) => (i.toLong, ws.mkString(" ")) }.toSeq
       .toDF("doc_id", "text")
-    val a = WordPiece.fit(docs, "text", 20, minCount = 1L)
-    val b = WordPiece.fitLocal(docs, "text", 20, minCount = 1L)
-    assert(a == b, s"\nfit:      $a\nfitLocal: $b")
-    // minCount stop rule carries over (every pair unique → below 2)
-    assert(WordPiece.fitLocal(Seq((1L, "ab cd ef")).toDF("doc_id", "text"),
-      "text", 5, minCount = 2L).isEmpty)
-    // frequency truncation is deterministic and keeps training alive
-    assert(WordPiece.fitLocal(docs, "text", 6, minCount = 1L, maxWords = 5)
-      .nonEmpty)
+    val spec = SpecTrainers.wordPiece(docs, "text", 20, minCount = 1L)
+    val (a, vocab) = WordPiece.fit(docs.coalesce(1), "text", 20,
+      minCount = 1L)
+    assert(a == spec, s"\nspec: $spec\nfit:  $a")
+    assert(WordPiece.fit(docs.repartition(13), "text", 20,
+      minCount = 1L)._1 == a)
+    // the vocabulary is the corpus alphabet plus every merged piece
+    val alpha = words.flatMap(w =>
+      w.head.toString +: w.tail.map(c => s"##$c")).distinct
+    assert(vocab == (alpha ++ a.map(_.merged)).distinct.sorted)
+    // minCount stop rule (every pair unique → below 2)
+    val one = Seq((1L, "ab cd ef")).toDF("doc_id", "text")
+    assert(WordPiece.fit(one, "text", 5, minCount = 2L)._1.isEmpty)
+    assert(SpecTrainers.wordPiece(one, "text", 5, minCount = 2L).isEmpty)
   }
 
   test("non-BMP pieces: the native encode counts CODE POINTS like the " +
