@@ -68,3 +68,24 @@ final class LineageCache(spark: SparkSession, root: String) {
     else out
   }
 }
+
+object LineageCache {
+
+  /** The one path every stored model takes (each family's `fitStored`
+    * and the Engine's `… using` statements): `fit` returns the bounded
+    * model table, which is saved under `store.key(kind, parts)` when a
+    * store is bound (a later session loads it instead of refitting) and
+    * collected to its driver-side form. The collected model is memoised
+    * in the open [[graft.Scope]] under (kind, key parts, the fit inputs'
+    * canonicalized analyzed plans), so statements binding one model fit
+    * it once. The plans are in the memo key on purpose: without a store
+    * a configuration name promises nothing about its data, and a memo
+    * hit on two different frames bound under one name in one scope
+    * would be a silent wrong model. */
+  def model[M](store: Option[LineageCache], kind: String, parts: Seq[String],
+      inputs: DataFrame*)(fit: => DataFrame)(collect: DataFrame => M): M =
+    graft.Scope.memo((kind, parts,
+        inputs.map(_.queryExecution.analyzed.canonicalized))) {
+      collect(store.fold(fit)(lc => lc.getOrCompute(lc.key(kind, parts))(fit)))
+    }
+}

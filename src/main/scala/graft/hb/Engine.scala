@@ -170,7 +170,93 @@ object Engine {
     if (shuffles) graft.Scope.cache(df, s"hb $kind: fit input") else df
   }
 
-  def applyStatement(f: HbFrame, st: Statement): HbFrame = st match {
+  /** The resolver of a run with no configuration namespace (a bare
+    * batch [[run]], or StreamHb.apply without one): a `… using <conf>`
+    * statement is rejected with itself and the configuration named. */
+  val noResolver: String => DataFrame =
+    conf => throw new NoSuchElementException(conf)
+
+  /** The batch frame `conf` names, for the `… using` statement `st`. */
+  private def bind(st: Statement, resolve: String => DataFrame,
+      conf: String): DataFrame =
+    if (resolve eq noResolver)
+      throw new IllegalArgumentException(
+        s"`${Printer.print(st).trim}` binds model configuration " +
+          s"'$conf' but no resolver was provided — run it through " +
+          "StreamHb.apply(program, stream, resolve)")
+    else resolve(conf)
+
+  // ---- one encode body per tokenizer family: the batch statement fits
+  // on its own input (fitInput), its `… using` twin on the resolved
+  // configuration, and both encode through the same helper, so the two
+  // forms emit the same columns. `spread` is a no-op on a stream.
+
+  private def bpeEncode(df: DataFrame, c: String,
+      merges: Seq[graft.operators.Bpe.Merge]): DataFrame =
+    spread(df).withColumn("bpe",
+      graft.operators.Bpe.encodeColFast(col(c), merges))
+
+  private def bpeBytesEncode(df: DataFrame, c: String,
+      merges: Seq[graft.operators.Bpe.Merge]): DataFrame =
+    spread(df).withColumn("bpe",
+      graft.operators.Bpe.encodeBytesCol(col(c), merges))
+
+  private def wordPieceEncode(df: DataFrame, c: String,
+      vocab: Seq[String]): DataFrame =
+    withPieces(spread(df),
+      graft.operators.WordPiece.encodeCol(col(c), vocab), "wp")
+
+  private def wordPieceIdsEncode(df: DataFrame, c: String,
+      vocab: Seq[String], tags: Seq[String]): DataFrame =
+    withIds(spread(df),
+      if (tags.isEmpty) graft.operators.WordPiece.encodeIdsCol(col(c), vocab)
+      else graft.operators.WordPiece.encodeIdsCol(col(c), vocab, tags, 16))
+
+  private def unigramEncode(df: DataFrame, c: String,
+      model: Seq[graft.operators.Unigram.Piece]): DataFrame =
+    withPieces(spread(df),
+      graft.operators.Unigram.encodeCol(col(c), model), "ug")
+
+  private def unigramIdsEncode(df: DataFrame, c: String,
+      model: Seq[graft.operators.Unigram.Piece],
+      tags: Seq[String]): DataFrame =
+    withIds(spread(df),
+      if (tags.isEmpty) graft.operators.Unigram.encodeIdsCol(col(c), model)
+      else graft.operators.Unigram.encodeIdsCol(col(c), model, tags, 6))
+
+  /** A piece array as its space-joined `out` column plus `n_pieces`. */
+  private def withPieces(df: DataFrame, pieces: Column,
+      out: String): DataFrame =
+    df.withColumn("__ps", pieces)
+      .withColumn(out, array_join(col("__ps"), " "))
+      .withColumn("n_pieces",
+        when(col("__ps").isNotNull, size(col("__ps")).cast("long")))
+      .drop("__ps")
+
+  /** `token_ids` plus its row-printable `ids_str` and `n_ids`. */
+  private def withIds(df: DataFrame, ids: Column): DataFrame =
+    df.withColumn("token_ids", ids)
+      .withColumn("ids_str",
+        concat_ws(" ", col("token_ids").cast("array<string>")))
+      .withColumn("n_ids",
+        when(col("token_ids").isNotNull,
+          size(col("token_ids")).cast("long")))
+
+  /** Translate one statement. `resolve` binds the MODEL configurations
+    * the `… using <conf>` statements name: each model fits EAGERLY here,
+    * on the resolved batch frame (bounded driver state by each
+    * operator's fit contract), and the statement compiles to the
+    * family's zero-shuffle narrow encoder or scorer — the offline-fit /
+    * online-score pairing StreamHb runs over a stream. Every such model
+    * goes through [[graft.cache.LineageCache.model]]: memoised in the
+    * open [[graft.Scope]] (two statements binding one model fit it
+    * once) and, with a `store` bound, persisted under the configuration
+    * NAME + fit parameters, so a later session translates the same
+    * program with zero refit jobs. Key hygiene is the caller's: rename
+    * the configuration when its data is supposed to change. */
+  def applyStatement(f: HbFrame, st: Statement,
+      resolve: String => DataFrame = noResolver,
+      store: Option[graft.cache.LineageCache] = None): HbFrame = st match {
     case Comment(_) => f
 
     case CreateColumn(name, e) =>
@@ -456,44 +542,47 @@ object Engine {
       // count, the merge loop in driver memory), encoding a pure narrow
       // map; row set unchanged
       val bpeBase = fitInput(f.df, "bpe")
-      f.copy(df = spread(bpeBase).withColumn("bpe",
-        graft.operators.Bpe.encodeColFast(
-          col(c), graft.operators.Bpe.fit(bpeBase, c, n, minCount = 1L))))
+      f.copy(df = bpeEncode(bpeBase, c,
+        graft.operators.Bpe.fit(bpeBase, c, n, minCount = 1L)))
+
+    case BpeUsing(c, conf, n) =>
+      f.copy(df = bpeEncode(f.df, c, graft.operators.Bpe.fitStored(
+        bind(st, resolve, conf), c, n, 1L, conf, store)))
 
     case WordPieceEnc(c, n) =>
       // likelihood-ranked fit (bounded driver rows) + the native greedy
       // encode as a pure narrow map — no join, row set unchanged
       val wpBase = fitInput(f.df, "wordpiece")
       // one word-frame pass drives the merge fit AND the alphabet
-      val (_, vocab) = graft.operators.WordPiece
-        .fit(wpBase, c, n, minCount = 1L)
-      f.copy(df = spread(wpBase)
-        .withColumn("__wps", graft.operators.WordPiece.encodeCol(col(c), vocab))
-        .withColumn("wp", array_join(col("__wps"), " "))
-        .withColumn("n_pieces",
-          when(col("__wps").isNotNull, size(col("__wps")).cast("long")))
-        .drop("__wps"))
+      f.copy(df = wordPieceEncode(wpBase, c,
+        graft.operators.WordPiece.fit(wpBase, c, n, minCount = 1L)._2))
+
+    case WordPieceUsing(c, conf, n) =>
+      f.copy(df = wordPieceEncode(f.df, c,
+        graft.operators.WordPiece.vocabularyStored(bind(st, resolve, conf),
+          c, n, 1L, conf, store)))
 
     case UnigramEnc(c, n) =>
       // candidate fit + one Viterbi-EM round (bounded model rows), then
       // the native compiled DP encode as a pure narrow map
       val ugBase = fitInput(f.df, "unigram")
-      val model = graft.operators.Unigram.fitEm(ugBase, c, n)
-      f.copy(df = spread(ugBase)
-        .withColumn("__ups", graft.operators.Unigram.encodeCol(col(c), model))
-        .withColumn("ug", array_join(col("__ups"), " "))
-        .withColumn("n_pieces",
-          when(col("__ups").isNotNull, size(col("__ups")).cast("long")))
-        .drop("__ups"))
+      f.copy(df = unigramEncode(ugBase, c,
+        graft.operators.Unigram.fitEm(ugBase, c, n)))
+
+    case UnigramUsing(c, conf, n) =>
+      f.copy(df = unigramEncode(f.df, c, graft.operators.Unigram.fitStored(
+        bind(st, resolve, conf), c, n, conf, store)))
 
     case BpeBytesEnc(c, n) =>
       // byte-level twin: case/whitespace-preserving, lossless under
       // `decode bytes`; same bounded-fit + narrow-encode shape
       val bbBase = fitInput(f.df, "bpe bytes")
-      f.copy(df = spread(bbBase).withColumn("bpe",
-        graft.operators.Bpe.encodeBytesCol(col(c),
-          graft.operators.Bpe.fit(bbBase, c, n, minCount = 1L,
-            byteLevel = true))))
+      f.copy(df = bpeBytesEncode(bbBase, c, graft.operators.Bpe.fit(
+        bbBase, c, n, minCount = 1L, byteLevel = true)))
+
+    case BpeBytesUsing(c, conf, n) =>
+      f.copy(df = bpeBytesEncode(f.df, c, graft.operators.Bpe.fitStored(
+        bind(st, resolve, conf), c, n, 1L, conf, store, byteLevel = true)))
 
     case BpeBytesDecode(c) =>
       // stateless narrow map — no model, stream-safe
@@ -513,19 +602,14 @@ object Engine {
       // zero piece statistics) and each occurrence ONE dedicated id
       // above the sorted piece layout
       val ugiBase = fitInput(f.df, "unigram ids")
-      val ugFit = graft.functions.SpecialTokens
-        .segmentedCorpus(ugiBase, c, tags)
-      val model = graft.operators.Unigram.fitEm(ugFit, c, n)
-      val ugIds =
-        if (tags.isEmpty) graft.operators.Unigram.encodeIdsCol(col(c), model)
-        else graft.operators.Unigram.encodeIdsCol(col(c), model, tags, 6)
-      f.copy(df = spread(ugiBase)
-        .withColumn("token_ids", ugIds)
-        .withColumn("ids_str",
-          concat_ws(" ", col("token_ids").cast("array<string>")))
-        .withColumn("n_ids",
-          when(col("token_ids").isNotNull,
-            size(col("token_ids")).cast("long"))))
+      f.copy(df = unigramIdsEncode(ugiBase, c,
+        graft.operators.Unigram.fitEm(graft.functions.SpecialTokens
+          .segmentedCorpus(ugiBase, c, tags), c, n), tags))
+
+    case UnigramIdsUsing(c, conf, n, tags) =>
+      f.copy(df = unigramIdsEncode(f.df, c,
+        graft.operators.Unigram.fitStored(bind(st, resolve, conf), c, n,
+          conf, store, specials = tags), tags))
 
     case WordPieceIdsEnc(c, n, tags) =>
       // BERT trainer-input twin of `wordpiece`: same fit + final
@@ -533,23 +617,15 @@ object Engine {
       // reserve specials exactly as `bpe ids`' clause (fit-excluded,
       // dedicated ids N+1+k, case-exact through the lowercasing walk)
       val wpiBase = fitInput(f.df, "wordpiece ids")
-      val wpFit = graft.functions.SpecialTokens
-        .segmentedCorpus(wpiBase, c, tags)
       // one word-frame pass drives the merge fit AND the alphabet
-      val (_, vocab) = graft.operators.WordPiece
-        .fit(wpFit, c, n, minCount = 1L)
-      val idsCol =
-        if (tags.isEmpty)
-          graft.operators.WordPiece.encodeIdsCol(col(c), vocab)
-        else
-          graft.operators.WordPiece.encodeIdsCol(col(c), vocab, tags, 16)
-      f.copy(df = spread(wpiBase)
-        .withColumn("token_ids", idsCol)
-        .withColumn("ids_str",
-          concat_ws(" ", col("token_ids").cast("array<string>")))
-        .withColumn("n_ids",
-          when(col("token_ids").isNotNull,
-            size(col("token_ids")).cast("long"))))
+      f.copy(df = wordPieceIdsEncode(wpiBase, c,
+        graft.operators.WordPiece.fit(graft.functions.SpecialTokens
+          .segmentedCorpus(wpiBase, c, tags), c, n, minCount = 1L)._2, tags))
+
+    case WordPieceIdsUsing(c, conf, n, tags) =>
+      f.copy(df = wordPieceIdsEncode(f.df, c,
+        graft.operators.WordPiece.vocabularyStored(bind(st, resolve, conf),
+          c, n, 1L, conf, store, specials = tags), tags))
 
     case BpeIdsEnc(c, n, tags) =>
       // trainer-input twin of `bpe bytes`: same fit, ids instead of
@@ -571,6 +647,17 @@ object Engine {
           when(col("token_ids").isNotNull,
             size(col("token_ids")).cast("long"))))
 
+    case BpeIdsUsing(c, conf, n, tags) =>
+      // trainer-input ids at ingest: same byte fit as `bpe bytes …
+      // using` (reserved tags excluded from it and part of the store
+      // key); adds the row-printable space-joined `ids_str`
+      val merges = graft.operators.Bpe.fitStored(bind(st, resolve, conf),
+        c, n, 1L, conf, store, byteLevel = true, specials = tags)
+      f.copy(df = withIds(f.df,
+          graft.operators.Bpe.encodeIdsCol(col(c), merges, tags))
+        .withMetadata("token_ids",
+          graft.operators.Bpe.mergesMetadata(merges, tags)))
+
     case BpeIdsDecode(c) =>
       // batch inverse under the SAME table: the merges (+ specials)
       // ride on the ids column's metadata from this program's encode
@@ -585,6 +672,17 @@ object Engine {
       val sp = graft.operators.Bpe.specialsFromMetadata(f.df.schema, c)
       f.copy(df = spread(f.df).withColumn("text_decoded",
         graft.operators.Bpe.decodeIdsCol(col(c), merges, sp)))
+
+    case BpeIdsDecodeUsing(c, conf, n, tc) =>
+      // lossless inverse under the SAME table: the fit column is the
+      // `of` clause (default "text"), which must name the column the
+      // ENCODE statement fit on — the model key includes it, so matching
+      // columns share ONE fit and mismatched columns would silently bind
+      // a different table
+      val merges = graft.operators.Bpe.fitStored(bind(st, resolve, conf),
+        tc, n, 1L, conf, store, byteLevel = true)
+      f.copy(df = f.df.withColumn("text_decoded",
+        graft.operators.Bpe.decodeIdsCol(col(c), merges)))
 
     case SftChat(pc, rc, n) =>
       // chat-template trainer inputs in one statement: render with the
@@ -618,6 +716,28 @@ object Engine {
         .withColumn("n_ids",
           when(col("token_ids").isNotNull,
             size(col("token_ids")).cast("long"))))
+
+    case SftUsing(pc, rc, conf, n) =>
+      // SFT trainer inputs at ingest: the specials-aware byte table fits
+      // on the configuration's RENDERED pairs (reserved chat tags, tag
+      // text excluded from the fit; the specials list is part of the
+      // model key); the frame renders + encodes + reports the exact
+      // boundary as a narrow map. Same collision discipline as `sft`
+      Seq("rendered", "token_ids", "ids_str", "loss_start", "n_ids")
+        .foreach(c => require(!f.df.columns.contains(c),
+          s"sft: frame already has a '$c' column — rename it first"))
+      val sftSp = graft.operators.Sft.Specials
+      val fitDf = bind(st, resolve, conf).withColumn("rendered",
+        graft.operators.Sft.render(col(pc), col(rc)))
+      val merges = graft.operators.Bpe.fitStored(fitDf, "rendered", n,
+        1L, conf, store, byteLevel = true, specials = sftSp)
+      f.copy(df = withIds(f.df.withColumn("rendered",
+            graft.operators.Sft.render(col(pc), col(rc))),
+          graft.operators.Bpe.encodeIdsCol(col("rendered"), merges, sftSp))
+        .withMetadata("token_ids",
+          graft.operators.Bpe.mergesMetadata(merges, sftSp))
+        .withColumn("loss_start",
+          graft.operators.Sft.lossStart(col(pc), merges, sftSp)))
 
     case RebalanceBy(strat, ts, salt, w) =>
       // ids are the frame index; percentages to match `mix`/`split`
@@ -677,24 +797,119 @@ object Engine {
       f.copy(df = graft.operators.Sampling
         .epochShards(f.df, "shuffle_pos", n))
 
-    // the `using` statements bind a MODEL configuration by name — only
-    // a runner that owns a configuration resolver can translate them
-    // (StreamHb.apply with `resolve`: the offline-fit/online-score
-    // pairing). A plain batch Engine run has no configuration
-    // namespace, so reject by name instead of resolving something
-    // silently wrong. Batch authoring of the same semantics is the
-    // SurprisalOf/ClassifierOf configuration sources.
-    case st @ (_: ScoreUsing | _: ClassifyUsing | _: EncodeUsing |
-        _: DecodeUsing | _: BpeUsing | _: BpeBytesUsing |
-        _: WordPieceUsing | _: UnigramUsing | _: DeconUsing |
-        _: SemDeconUsing | _: BpeIdsUsing | _: WordPieceIdsUsing |
-        _: UnigramIdsUsing | _: BpeIdsDecodeUsing |
-        _: FertilityUsing | _: SftUsing | _: LangIdUsing) =>
-      throw new IllegalArgumentException(
-        s"`${Printer.print(st).trim}` binds a model configuration — " +
-          "run it through StreamHb.apply(program, stream, resolve) " +
-          "(or author the batch form with the SurprisalOf/ClassifierOf " +
-          "configuration sources)")
+    // ---- offline-fit / online-score: the model fits on the resolved
+    // configuration, the frame side is a stateless narrow map
+    case ScoreUsing(c, conf, b, salt) =>
+      val ref = bind(st, resolve, conf)
+      val (mp, mc) = graft.cache.LineageCache.model(store, "surprisal",
+        Seq(conf, c, b.toString, salt), ref)(
+        graft.operators.Surprisal.fit(ref, c, b, salt))(
+        graft.operators.Surprisal.modelMaps)
+      f.copy(df = graft.operators.Surprisal
+        .withScoresNarrow(f.df, mp, mc, c, b, salt))
+
+    case ClassifyUsing(c, pos, neg, b, salt) =>
+      val (p, n) = (bind(st, resolve, pos), bind(st, resolve, neg))
+      val (mp, mn, np, nn) = graft.cache.LineageCache.model(store,
+        "classifier", Seq(pos, neg, c, b.toString, salt), p, n)(
+        graft.operators.Classifier.fit(p, n, c, b, salt))(
+        graft.operators.Classifier.modelMaps)
+      f.copy(df = graft.operators.Classifier
+        .withMarginsNarrow(f.df, mp, mn, np, nn, c, b, salt))
+
+    case LangIdUsing(c, conf) =>
+      // trainable language ID: the multiclass trigram NB fits on the
+      // labeled configuration (its `lang` column); the frame side is the
+      // zero-shuffle literal-map argmax — no-evidence rows keep NULLs.
+      // The key carries the EFFECTIVE buckets/salt (the fit defaults)
+      // like the classifier/surprisal keys: if those defaults are ever
+      // surfaced or changed, a persisted store must not serve a model
+      // fit under different hashing parameters
+      val seeds = bind(st, resolve, conf)
+      val maps = graft.cache.LineageCache.model(store, "langid",
+        Seq(conf, c, "4096", "lid"), seeds)(
+        graft.operators.LangId.fit(seeds, "lang", c))(
+        graft.operators.LangId.modelMaps)
+      f.copy(df = graft.operators.LangId.withLangNarrow(f.df, maps, c))
+
+    case EncodeUsing(c, conf, size) =>
+      f.copy(df = graft.operators.Vocab.encodeNarrow(f.df, c,
+        graft.operators.Vocab.fitStored(bind(st, resolve, conf), c, size,
+          conf, store)))
+
+    case DecodeUsing(c, conf, size) =>
+      // the model fits on the configuration's TEXT column ("text" by the
+      // corpus contract), so it is the model `encode text using` binds;
+      // the frame side inverts the id arrays
+      f.copy(df = graft.operators.Vocab.decodeNarrow(f.df, c,
+        graft.operators.Vocab.fitStored(bind(st, resolve, conf), "text",
+          size, conf, store)))
+
+    case FertilityUsing(c, conf, n) =>
+      // tokenizer observability: the byte table (shared with any encode
+      // statement on the same column) fits on the configuration, the
+      // frame reports per-doc fertility/compression as a narrow map
+      val merges = graft.operators.Bpe.fitStored(bind(st, resolve, conf),
+        c, n, 1L, conf, store, byteLevel = true)
+      val nIds = size(graft.operators.Bpe.encodeIdsCol(col(c), merges))
+        .cast("long")
+      f.copy(df = f.df
+        .withColumn("words",
+          graft.functions.TextSignals.tokens(col(c)).cast("long"))
+        .withColumn("chars", length(col(c)).cast("long"))
+        .withColumn("n_ids", nIds)
+        .withColumn("fertility_permille",
+          when(col("words") > 0, expr("n_ids * 1000L div words")))
+        .withColumn("compression_permille",
+          when(col("n_ids") > 0, expr("chars * 1000L div n_ids"))))
+
+    case DeconUsing(c, conf, n) =>
+      // decontamination: the eval configuration's distinct n-grams
+      // collect into ONE literal array (require-bounded, the
+      // narrow-scorer contract) and the frame side is a stateless
+      // arrays_overlap — no aggregation, no state, append-safe
+      val evalGrams = graft.operators.Decontaminate.ngramRows(
+        bind(st, resolve, conf).select(lit(0L).as("__eid"), col(c)),
+        "__eid", graft.operators.Decontaminate.tokens(col(c)), n)
+        .select("gram").distinct().collect().map(_.getString(0))
+      require(evalGrams.length <= 65536,
+        s"decon using: ${evalGrams.length} distinct eval grams exceed " +
+          "the 65536 literal bound — decontaminate in batch (DeconOf)")
+      val toks = graft.operators.Decontaminate.tokens(col(c))
+      val slices = (0 until n).map { i =>
+        val sl = if (i == 0) toks
+          else slice(toks, lit(i + 1), greatest(size(toks) - i, lit(0)))
+        sl.as(s"g$i")
+      }
+      val grams = filter(
+        transform(arrays_zip(slices: _*), z =>
+          when(z.getField(s"g${n - 1}").isNotNull,
+            concat_ws(" ", (0 until n).map(i => z.getField(s"g$i")): _*))),
+        g => g.isNotNull)
+      f.copy(df = f.df.withColumn("contaminated",
+        coalesce(arrays_overlap(grams,
+          array(evalGrams.map(lit).toSeq: _*)), lit(false))))
+
+    case SemDeconUsing(c, conf, thr) =>
+      // SEMANTIC decon: the eval configuration's quantized vectors +
+      // norms collect into ONE typed literal pair (require-bounded, the
+      // DeconUsing discipline) and the frame side is the native
+      // codegen'd MaxCosQ narrow map — no join, no state, append-safe
+      val qc = graft.operators.Similarity.quantize(col(c))
+      val ev = bind(st, resolve, conf)
+        .select(graft.operators.Similarity.quantize(col(c)).as("__ev"))
+        .select(col("__ev"),
+          graft.operators.Similarity.normQ(col("__ev")).as("__en"))
+        .collect()
+      require(ev.length <= 4096,
+        s"decon semantic using: ${ev.length} eval vectors exceed the " +
+          "4096 literal bound — decontaminate in batch (SemDeconOf)")
+      val evals = ev.map(_.getSeq[Long](0)).toSeq
+      val norms = ev.map(_.getDouble(1)).toSeq
+      f.copy(df = f.df
+        .withColumn("max_cos_fp", graft.functions.MaxCosQ.max_cos_q(
+          qc, typedlit(evals), typedlit(norms)))
+        .withColumn("contaminated", col("max_cos_fp") >= thr))
 
     case SplitBy(pcts, by, salt) =>
       val labels = pcts.length match {

@@ -328,8 +328,8 @@ object Bpe {
     * change; otherwise corpus growth does NOT re-train the merges, by
     * design. With or without a store the table comes from the one
     * trainer, [[fit]], and is memoised in the open [[graft.Scope]]
-    * under the store's key parts plus the fit input's plan, so two
-    * statements binding one table fit it once. */
+    * ([[graft.cache.LineageCache.model]]), so two statements binding
+    * one table fit it once. */
   def fitStored(df: DataFrame, textCol: String, nMerges: Int,
       minCount: Long, bpeKey: String,
       store: Option[graft.cache.LineageCache],
@@ -343,18 +343,14 @@ object Bpe {
     // is the specials list (it changes the fit corpus's segmentation)
     val kind = if (byteLevel) "bpebytes" else "bpe"
     val parts = storeKeyParts(bpeKey, textCol, nMerges, minCount, specials)
-    def fitted = fit(df, textCol, nMerges, minCount, byteLevel, specials)
-    graft.Scope.memo((kind, parts, df.queryExecution.analyzed.canonicalized)) {
-      store.fold(fitted) { lc =>
-        val spark = df.sparkSession
-        import spark.implicits._
-        lc.getOrCompute(lc.key(kind, parts))(fitted
-            .map(m => (m.rank, m.left, m.right)).toDF("rank", "left", "right"))
-          .collect() // ≤ nMerges rows by the fit contract — bounded
-          .map(r => Merge(r.getInt(0), r.getString(1), r.getString(2)))
-          .sortBy(_.rank).toSeq
-      }
-    }
+    val spark = df.sparkSession
+    import spark.implicits._
+    graft.cache.LineageCache.model(store, kind, parts, df)(
+      fit(df, textCol, nMerges, minCount, byteLevel, specials)
+        .map(m => (m.rank, m.left, m.right)).toDF("rank", "left", "right"))(
+      _.collect() // ≤ nMerges rows by the fit contract — bounded
+        .map(r => Merge(r.getInt(0), r.getString(1), r.getString(2)))
+        .sortBy(_.rank).toSeq)
   }
 
   /** A merge-table fit's store-key parts. Each special is

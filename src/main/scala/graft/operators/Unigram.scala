@@ -188,36 +188,33 @@ object Unigram {
   }
 
   /** Persistent fit — the [[Bpe.fitStored]] contract for the
-    * unigram family: the refined piece table ([[fitEm]]) persists as a
-    * bounded parquet artifact under a [[graft.cache.LineageCache]]
-    * content key; a later SESSION (new JVM, same store root) loads it
-    * instead of re-running the candidate fit + EM pass — segmentation
-    * stability across incremental ingest runs. Key hygiene is the
-    * caller's: change `ugKey` when the fit corpus is supposed to
-    * change; otherwise corpus growth does NOT re-train, by design. */
+    * unigram family: with a [[graft.cache.LineageCache]] bound, the
+    * refined piece table ([[fitEm]]) persists as a bounded parquet
+    * artifact under a content key; a later SESSION (new JVM, same store
+    * root) loads it instead of re-running the candidate fit + EM pass —
+    * segmentation stability across incremental ingest runs. Key hygiene
+    * is the caller's: change `ugKey` when the fit corpus is supposed to
+    * change; otherwise corpus growth does NOT re-train, by design. With
+    * or without a store the table is memoised in the open
+    * [[graft.Scope]] ([[graft.cache.LineageCache.model]]). */
   def fitStored(df: DataFrame, textCol: String, topMulti: Int,
-      ugKey: String, store: graft.cache.LineageCache,
+      ugKey: String, store: Option[graft.cache.LineageCache],
       maxPieceLen: Int = 6, specials: Seq[String] = Nil): Seq[Piece] = {
     // specials change the fit corpus (tag text excluded) → part of the
     // key, length-prefixed for injectivity (the Bpe.fitStored rule)
-    val k = store.key("unigram",
+    val parts =
       Seq(ugKey, textCol, topMulti.toString, maxPieceLen.toString) ++
         (if (specials.isEmpty) Nil
          else Seq("specials",
-           specials.map(s => s"${s.length}:$s").mkString(","))))
-    val pdf = store.getOrCompute(k) {
-      val spark = df.sparkSession
-      import spark.implicits._
-      fitEm(graft.functions.SpecialTokens
-          .segmentedCorpus(df, textCol, specials),
-        textCol, topMulti, maxPieceLen)
-        .map(p => (p.piece, p.freq, p.costBits))
-        .toDF("piece", "freq", "cost_bits")
-    }
-    // ≤ alphabet + topMulti rows by the fit contract — bounded
-    pdf.collect()
-      .map(r => Piece(r.getString(0), r.getLong(1), r.getInt(2)))
-      .sortBy(_.piece).toSeq
+           specials.map(s => s"${s.length}:$s").mkString(",")))
+    graft.cache.LineageCache.model(store, "unigram", parts, df)(
+      modelFrame(df.sparkSession, fitEm(graft.functions.SpecialTokens
+        .segmentedCorpus(df, textCol, specials),
+        textCol, topMulti, maxPieceLen)))(
+      // ≤ alphabet + topMulti rows by the fit contract — bounded
+      _.collect()
+        .map(r => Piece(r.getString(0), r.getLong(1), r.getInt(2)))
+        .sortBy(_.piece).toSeq)
   }
 
   /** Reserved byte-fallback piece spelling for byte value `b` —

@@ -145,25 +145,21 @@ object Vocab {
   }
 
   /** Persistent fit — the cell-model contract (Similarity.modelStore)
-    * for vocabularies: the fitted (token, id, n) frame is saved as a
-    * ≤`size`-row parquet artifact under a [[graft.cache.LineageCache]]
-    * content key, and a later SESSION (new JVM, same store root) loads
-    * it instead of re-counting the corpus — so incremental ingest
-    * encodes with yesterday's ids (id stability is what makes shipped
-    * token ids meaningful across runs). The caller owns key hygiene
-    * exactly as with `modelKey`: change `vocabKey` when the fit corpus
-    * is supposed to change; otherwise growth does NOT re-rank the
-    * vocabulary, by design. Artifact is ≤ size rows — bounded. */
+    * for vocabularies: with a [[graft.cache.LineageCache]] bound, the
+    * fitted (token, id, n) frame is saved as a ≤`size`-row parquet
+    * artifact under a content key, and a later SESSION (new JVM, same
+    * store root) loads it instead of re-counting the corpus — so
+    * incremental ingest encodes with yesterday's ids (id stability is
+    * what makes shipped token ids meaningful across runs). The caller
+    * owns key hygiene exactly as with `modelKey`: change `vocabKey`
+    * when the fit corpus is supposed to change; otherwise growth does
+    * NOT re-rank the vocabulary, by design. Returns the [[vocabMap]]
+    * form, memoised in the open [[graft.Scope]]
+    * ([[graft.cache.LineageCache.model]]). */
   def fitStored(df: DataFrame, textCol: String, size: Int,
-      vocabKey: String, store: graft.cache.LineageCache): DataFrame = {
-    val k = store.key("vocab", Seq(vocabKey, textCol, size.toString))
-    store.getOrCompute(k)(fit(df, textCol, size))
-  }
-
-  /** fit + encode with the persistent vocabulary tier. */
-  def fitEncodeStored(df: DataFrame, idCol: String, textCol: String,
-      size: Int, vocabKey: String,
-      store: graft.cache.LineageCache): DataFrame =
-    encode(df, idCol, textCol,
-      fitStored(df, textCol, size, vocabKey, store))
+      vocabKey: String,
+      store: Option[graft.cache.LineageCache]): Map[String, Int] =
+    graft.cache.LineageCache.model(store, "vocab",
+      Seq(vocabKey, textCol, size.toString), df)(fit(df, textCol, size))(
+      vocabMap)
 }

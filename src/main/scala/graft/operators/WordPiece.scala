@@ -274,18 +274,16 @@ object WordPiece {
       specials: Seq[String] = Nil): Seq[Merge] = {
     val parts = Bpe.storeKeyParts(wpKey, textCol, nMerges, minCount,
       specials)
-    def fitted = fitOnce(df, textCol, nMerges, minCount, parts, specials)._1
-    store.fold(fitted) { lc =>
-      val spark = df.sparkSession
-      import spark.implicits._
-      lc.getOrCompute(lc.key("wordpiece", parts))(fitted
-          .map(m => (m.rank, m.left, m.right, m.scoreFp))
-          .toDF("rank", "left", "right", "score_fp"))
-        .collect() // ≤ nMerges rows by the fit contract — bounded
+    val spark = df.sparkSession
+    import spark.implicits._
+    graft.cache.LineageCache.model(store, "wordpiece", parts, df)(
+      fitSegmented(df, textCol, nMerges, minCount, specials)._1
+        .map(m => (m.rank, m.left, m.right, m.scoreFp))
+        .toDF("rank", "left", "right", "score_fp"))(
+      _.collect() // ≤ nMerges rows by the fit contract — bounded
         .map(r => Merge(r.getInt(0), r.getString(1), r.getString(2),
           r.getLong(3)))
-        .sortBy(_.rank).toSeq
-    }
+        .sortBy(_.rank).toSeq)
   }
 
   /** The ENCODER-ready persisted artifact: the final vocabulary
@@ -300,27 +298,20 @@ object WordPiece {
       specials: Seq[String] = Nil): Seq[String] = {
     val parts = Bpe.storeKeyParts(wpKey, textCol, nMerges, minCount,
       specials)
-    def fitted = fitOnce(df, textCol, nMerges, minCount, parts, specials)._2
-    store.fold(fitted) { lc =>
-      val spark = df.sparkSession
-      import spark.implicits._
-      lc.getOrCompute(lc.key("wordpiece_vocab", parts))(fitted.toDF("piece"))
-        .collect() // alphabet + merges rows by the fit contract — bounded
-        .map(_.getString(0)).toSeq.sorted
-    }
+    val spark = df.sparkSession
+    import spark.implicits._
+    graft.cache.LineageCache.model(store, "wordpiece_vocab", parts, df)(
+      fitSegmented(df, textCol, nMerges, minCount, specials)._2
+        .toDF("piece"))(
+      // alphabet + merges rows by the fit contract — bounded
+      _.collect().map(_.getString(0)).toSeq.sorted)
   }
 
-  /** [[fit]] over the specials-excluded corpus, once per (key parts,
-    * fit input plan) in the open [[graft.Scope]]: a key's merge and
-    * vocabulary artifacts, and every statement binding the same table,
-    * share one fit. */
-  private def fitOnce(df: DataFrame, textCol: String, nMerges: Int,
-      minCount: Long, parts: Seq[String],
-      specials: Seq[String]): (Seq[Merge], Seq[String]) =
-    graft.Scope.memo(("wordpiece", parts,
-        df.queryExecution.analyzed.canonicalized))(
-      fit(graft.functions.SpecialTokens.segmentedCorpus(df, textCol,
-        specials), textCol, nMerges, minCount))
+  /** [[fit]] over the specials-excluded corpus. */
+  private def fitSegmented(df: DataFrame, textCol: String, nMerges: Int,
+      minCount: Long, specials: Seq[String]): (Seq[Merge], Seq[String]) =
+    fit(graft.functions.SpecialTokens.segmentedCorpus(df, textCol,
+      specials), textCol, nMerges, minCount)
 
   /** The shippable vocab.txt-equivalent table: `(id, piece)` with
     * `[UNK]` at id 0 and the vocabulary in its deterministic sorted

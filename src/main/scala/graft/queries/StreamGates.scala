@@ -1,11 +1,83 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.streaming.StreamOps
+import graft.streaming.{StreamHb, StreamOps}
 import Gate.t
 
 /** Streaming + event-time windowing gates. */
 object StreamGates {
+
+  // ----- offline-fit / online-score pairings, written in the closed
+  // DSL: a `score/classify/encode/bpe … using <config>` statement fits
+  // its model on a batch MODEL configuration (resolver-bound, the
+  // Configurations discipline) and compiles the stream side to the
+  // zero-shuffle narrow scorer. Each pairing is ONE gate function, run
+  // under two names (st_surprisal_score and st_hb_surprisal, …) with
+  // one oracle: the translation, not just the operator, is what they pin.
+
+  private type GateFn = (SparkSession, String) => DataFrame
+
+  private def documents(s: SparkSession, d: String,
+      sources: String*): DataFrame =
+    Gate.t(s, d, "documents").filter(col("source").isin(sources: _*))
+
+  private val surprisalUsing: GateFn = (s, d) =>
+    StreamHb.runTable(s, d, "documents",
+      """score text using ref
+        |slice columns doc_id n_pairs surprisal_sum avg1000
+        |""".stripMargin, "st_hb_surprisal_out",
+      resolve = {
+        case "ref" => documents(s, d, "src0", "src1")
+        case other => throw new NoSuchElementException(other)
+      })
+      .orderBy(col("doc_id"))
+
+  private val surprisalOracle = "WITH " + TextGates.surprisalCtes("") +
+    "\n" + """SELECT d.doc_id, a.n_pairs, a.surprisal_sum, a.avg1000
+      |FROM documents d LEFT JOIN agg a ON d.doc_id = a.doc_id
+      |ORDER BY d.doc_id ASC NULLS FIRST""".stripMargin
+
+  private val classifyUsing: GateFn = (s, d) =>
+    StreamHb.runTable(s, d, "documents",
+      """classify text using pos neg
+        |slice columns doc_id n_tokens margin_sum margin1000
+        |""".stripMargin, "st_hb_classify_out",
+      resolve = {
+        case "pos" => documents(s, d, "src0", "src1")
+        case "neg" => documents(s, d, "src2", "src3")
+        case other => throw new NoSuchElementException(other)
+      })
+      .orderBy(col("doc_id"))
+
+  private val classifyOracle = "WITH " + TextGates.classifierCtes("") +
+    "\n" + """SELECT d.doc_id, f.n_tokens, f.margin_sum, f.margin1000
+      |FROM documents d LEFT JOIN fin f ON d.doc_id = f.doc_id
+      |ORDER BY d.doc_id ASC NULLS FIRST""".stripMargin
+
+  private val encodeUsing: GateFn = (s, d) =>
+    StreamHb.runTable(s, d, "documents",
+      """encode text using corpus 64
+        |""".stripMargin, "st_hb_encode_out",
+      resolve = {
+        case "corpus" => Gate.t(s, d, "documents")
+        case other => throw new NoSuchElementException(other)
+      })
+      .select(col("doc_id"),
+        when(col("token_ids").isNotNull,
+          concat_ws(" ", col("token_ids"))).as("token_ids_str"))
+      .orderBy(col("doc_id"))
+
+  private val bpeUsing: GateFn = (s, d) =>
+    StreamHb.runTable(s, d, "documents",
+      """bpe text using corpus 8
+        |slice columns doc_id bpe
+        |""".stripMargin, "st_hb_bpe_out",
+      resolve = {
+        case "corpus" => Gate.t(s, d, "documents")
+        case other => throw new NoSuchElementException(other)
+      })
+      .orderBy(col("doc_id"))
 
   val gates: Seq[Gate] = Seq(
 
@@ -211,96 +283,27 @@ object StreamGates {
     // append mode). Every document flows through — no-evidence docs
     // keep NULL stats (a stream cannot drop rows by aggregation) —
     // and the oracle replays the whole thing with a LEFT JOIN.
-    Gate("st_surprisal_score",
-      (s, d) => StreamOps.surprisalScoreStream(s, d,
-        "st_surprisal_score_out")
-        .orderBy(col("doc_id")),
-      Some("WITH " + TextGates.surprisalCtes("") + "\n" +
-        """SELECT d.doc_id, a.n_pairs, a.surprisal_sum, a.avg1000
-          |FROM documents d LEFT JOIN agg a ON d.doc_id = a.doc_id
-          |ORDER BY d.doc_id ASC NULLS FIRST""".stripMargin)),
+    Gate("st_surprisal_score", surprisalUsing, Some(surprisalOracle)),
 
     // Offline-fit / online-encode: the vocabulary fits in batch, the
     // live stream tokenizes through the narrow literal-map path —
     // same ids as t_vocab_encode, same oracle.
-    Gate("st_vocab_encode",
-      (s, d) => StreamOps.vocabEncodeStream(s, d, "st_vocab_encode_out")
-        .orderBy(col("doc_id")),
-      Some(TextGates.vocabOracleSql)),
+    Gate("st_vocab_encode", encodeUsing, Some(TextGates.vocabOracleSql)),
 
     // Offline-train / online-tokenize for BPE: the merge table trains
     // in batch, the stream encodes through the pure column expression
     // — same subword streams as t_bpe_encode, same oracle.
-    Gate("st_bpe_encode",
-      (s, d) => StreamOps.bpeEncodeStream(s, d, "st_bpe_encode_out")
-        .orderBy(col("doc_id")),
-      Some(TextGates.bpeEncodeOracleSql)),
+    Gate("st_bpe_encode", bpeUsing, Some(TextGates.bpeEncodeOracleSql)),
 
     // The hashed-NB twin: seed classifier fit in batch, margins scored
     // on the live stream through the same stateless narrow-map shape.
-    Gate("st_nb_score",
-      (s, d) => StreamOps.classifierScoreStream(s, d, "st_nb_score_out")
-        .orderBy(col("doc_id")),
-      Some("WITH " + TextGates.classifierCtes("") + "\n" +
-        """SELECT d.doc_id, f.n_tokens, f.margin_sum, f.margin1000
-          |FROM documents d LEFT JOIN fin f ON d.doc_id = f.doc_id
-          |ORDER BY d.doc_id ASC NULLS FIRST""".stripMargin)),
+    Gate("st_nb_score", classifyUsing, Some(classifyOracle)),
 
-    // ----- `.hb`-authored offline-fit / online-score (r10): the four
-    // StreamOps pairings above, now written in the closed DSL — a
-    // `score/classify/encode/bpe … using <config>` statement fits its
-    // model on a batch MODEL configuration (resolver-bound, the
-    // Configurations discipline) and compiles the stream side to the
-    // same zero-shuffle narrow scorer. Same oracles as the StreamOps
-    // twins — the translation, not just the operator, is what these
-    // gates pin.
-    Gate("st_hb_surprisal",
-      (s, d) => graft.streaming.StreamHb.runTable(s, d, "documents",
-        """score text using ref
-          |slice columns doc_id n_pairs surprisal_sum avg1000
-          |""".stripMargin, "st_hb_surprisal_out",
-        resolve = {
-          case "ref" => Gate.t(s, d, "documents")
-            .filter(col("source").isin("src0", "src1"))
-          case other => throw new NoSuchElementException(other)
-        })
-        .orderBy(col("doc_id")),
-      Some("WITH " + TextGates.surprisalCtes("") + "\n" +
-        """SELECT d.doc_id, a.n_pairs, a.surprisal_sum, a.avg1000
-          |FROM documents d LEFT JOIN agg a ON d.doc_id = a.doc_id
-          |ORDER BY d.doc_id ASC NULLS FIRST""".stripMargin)),
+    Gate("st_hb_surprisal", surprisalUsing, Some(surprisalOracle)),
 
-    Gate("st_hb_classify",
-      (s, d) => graft.streaming.StreamHb.runTable(s, d, "documents",
-        """classify text using pos neg
-          |slice columns doc_id n_tokens margin_sum margin1000
-          |""".stripMargin, "st_hb_classify_out",
-        resolve = {
-          case "pos" => Gate.t(s, d, "documents")
-            .filter(col("source").isin("src0", "src1"))
-          case "neg" => Gate.t(s, d, "documents")
-            .filter(col("source").isin("src2", "src3"))
-          case other => throw new NoSuchElementException(other)
-        })
-        .orderBy(col("doc_id")),
-      Some("WITH " + TextGates.classifierCtes("") + "\n" +
-        """SELECT d.doc_id, f.n_tokens, f.margin_sum, f.margin1000
-          |FROM documents d LEFT JOIN fin f ON d.doc_id = f.doc_id
-          |ORDER BY d.doc_id ASC NULLS FIRST""".stripMargin)),
+    Gate("st_hb_classify", classifyUsing, Some(classifyOracle)),
 
-    Gate("st_hb_encode",
-      (s, d) => graft.streaming.StreamHb.runTable(s, d, "documents",
-        """encode text using corpus 64
-          |""".stripMargin, "st_hb_encode_out",
-        resolve = {
-          case "corpus" => Gate.t(s, d, "documents")
-          case other => throw new NoSuchElementException(other)
-        })
-        .select(col("doc_id"),
-          when(col("token_ids").isNotNull,
-            concat_ws(" ", col("token_ids"))).as("token_ids_str"))
-        .orderBy(col("doc_id")),
-      Some(TextGates.vocabOracleSql)),
+    Gate("st_hb_encode", encodeUsing, Some(TextGates.vocabOracleSql)),
 
     // Streaming ingestion writes the training store: each arriving doc
     // appends under its deterministic hash shard — the continuous
@@ -362,17 +365,7 @@ object StreamGates {
         .orderBy(col("doc_id")),
       Some(TextGates.vocabDecodeOracleSql)),
 
-    Gate("st_hb_bpe",
-      (s, d) => graft.streaming.StreamHb.runTable(s, d, "documents",
-        """bpe text using corpus 8
-          |slice columns doc_id bpe
-          |""".stripMargin, "st_hb_bpe_out",
-        resolve = {
-          case "corpus" => Gate.t(s, d, "documents")
-          case other => throw new NoSuchElementException(other)
-        })
-        .orderBy(col("doc_id")),
-      Some(TextGates.bpeEncodeOracleSql)),
+    Gate("st_hb_bpe", bpeUsing, Some(TextGates.bpeEncodeOracleSql)),
 
     // WordPiece offline-fit/online-encode (r11): vocabulary fits on
     // the batch configuration at translation time, the live stream
@@ -476,7 +469,7 @@ object StreamGates {
       val schema = s.read.parquet(s"$d/documents.parquet").schema
       val stream = s.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet").parquet(d)
-      graft.streaming.StreamHb.runToMemory(s,
+      graft.streaming.StreamHb.runToMemory(
         """wordpiece ids tagged using corpus 6 tags '<|DOC|>' '<|END|>'
           |slice columns doc_id ids_str n_ids
           |""".stripMargin, tagged(stream), "st_hb_wordpiece_tags_out",
@@ -522,7 +515,7 @@ object StreamGates {
       val schema = s.read.parquet(s"$d/documents.parquet").schema
       val stream = s.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet").parquet(d)
-      graft.streaming.StreamHb.runToMemory(s,
+      graft.streaming.StreamHb.runToMemory(
         """unigram ids tagged using corpus 16 tags '<|DOC|>' '<|END|>'
           |slice columns doc_id ids_str n_ids
           |""".stripMargin, tagged(stream), "st_hb_unigram_tags_out",
@@ -570,7 +563,7 @@ object StreamGates {
               .as("response"))
           .filter(length(col("response")) > 0)
       }
-      graft.streaming.StreamHb.runToMemory(s,
+      graft.streaming.StreamHb.runToMemory(
         """sft prompt response using corpus 6
           |slice columns doc_id ids_str n_ids loss_start
           |""".stripMargin, toPairs(stream), "st_hb_sft_out",

@@ -2751,11 +2751,11 @@ object TextGates {
         .createTempDirectory("graft_ug_fb").toString
       val store1 = new graft.cache.LineageCache(s, root)
       graft.operators.Unigram.fitStored(docs, "text", 16, "fbcorpus",
-        store1)
+        Some(store1))
       val store2 = new graft.cache.LineageCache(s, root)
       val model = graft.operators.Unigram.withByteFallback(
         graft.operators.Unigram.fitStored(docs, "text", 16, "fbcorpus",
-          store2))
+          Some(store2)))
       val path = root + "/pieces_fb.tsv"
       graft.sinks.TokenizerFiles.writeUnigramTsv(path, model)
       val loaded = graft.sinks.TokenizerFiles.readUnigramTsv(path)

@@ -30,39 +30,21 @@ object StreamOps {
     * Measured at sf0.1 (~2 MB events, 32-core master):
     * st_stream_join 10.6 s at 32 state partitions → 1.8 s at ≤4;
     * tumbling/session aggs ~2×. So derive the count from the input
-    * volume: one partition per `graft.stream.stateBytesPerPartition`
-    * (default 16 MB), capped at the cluster parallelism — large inputs
-    * still get every core, tiny micro-batches stop paying for 32 empty
-    * state stores. Parameterized for production; correctness is
-    * partition-count-independent (the driver already runs the same
+    * volume: one partition per [[StateBytesPerPartition]], capped at
+    * the cluster parallelism — large inputs still get every core, tiny
+    * micro-batches stop paying for 32 empty state stores; correctness
+    * is partition-count-independent (the driver already runs the same
     * gates at several core counts). */
-  private[streaming] def stateParallelism(spark: SparkSession,
+  private[graft] def stateParallelism(spark: SparkSession,
       inputBytes: Long): Int = {
-    val perPart = spark.conf
-      .get("graft.stream.stateBytesPerPartition", (16L << 20).toString)
-      .toLong max 1L
     val cap = spark.sparkContext.defaultParallelism.toLong max 1L
-    math.max(1L, math.min(cap, (inputBytes + perPart - 1) / perPart)).toInt
+    math.max(1L, math.min(cap,
+      (inputBytes + StateBytesPerPartition - 1) / StateBytesPerPartition))
+      .toInt
   }
 
-  /** Run `body` (build sink + start + drain a streaming query) with
-    * `spark.sql.shuffle.partitions` temporarily set to `n`: the value
-    * is read once at query start and becomes the state partition
-    * count. Restores the previous value; batch fits must run OUTSIDE
-    * this wrapper so they keep the session's parallelism.
-    *
-    * NOT thread-safe: this mutates SESSION-global conf. Safe today
-    * because gates run serially and the wrapper encloses whole regions
-    * single-threadedly; concurrent gate execution would silently race
-    * the shuffle setting — use separate sessions (`spark.newSession()`)
-    * there. */
-  private[streaming] def withStatePartitions[T](spark: SparkSession,
-      n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, prev)
-  }
+  /** Input volume per state partition: 16 MB. */
+  private val StateBytesPerPartition = 16L << 20
 
   /** Checkpoint root for the gate-shaped SYNCHRONOUS streaming queries
     * (AvailableNow → memory sink → stop): `graft.stream.checkpointDir`
@@ -104,7 +86,7 @@ object StreamOps {
     * checkpoint root applied — the one place the checkpoint lifecycle
     * (create unique dir → run → delete) lives. Falls back to Spark's
     * own temp-checkpoint handling when no root resolves. */
-  private[graft] def runDrained(spark: SparkSession,
+  private def runDrained(spark: SparkSession,
       w: org.apache.spark.sql.streaming.DataStreamWriter[
         org.apache.spark.sql.Row]): Unit =
     fastCheckpointRoot(spark) match {
@@ -127,7 +109,7 @@ object StreamOps {
 
   /** Size of one test table's parquet file(s) — the per-batch input
     * volume the gate-shaped AvailableNow queries replay. */
-  private[streaming] def tableBytes(dir: String, table: String): Long = {
+  private[graft] def tableBytes(dir: String, table: String): Long = {
     val f = new java.io.File(dir, s"$table.parquet")
     if (f.isFile) f.length
     else Option(f.listFiles).getOrElse(Array.empty[java.io.File])
@@ -135,10 +117,37 @@ object StreamOps {
       .map(_.length).sum
   }
 
-  /** Tumbling event-time window aggregation with a watermark: the
-    * canonical streaming shape (readStream → withWatermark → window agg).
-    * Runs the events parquet through a real streaming query into a memory
-    * sink and returns the completed result. */
+  /** The one gate-shaped run: start `df` as an AvailableNow query into
+    * a memory sink named `queryName`, drain it ([[runDrained]]) and
+    * return the sink's rows as a frame of `df`'s session. A stateful
+    * query pins its state partition count from
+    * `spark.sql.shuffle.partitions` when it starts; `inputBytes` >= 0
+    * runs the query on a CLONE of the session whose conf carries
+    * [[stateParallelism]] of that volume (and whose streaming listeners
+    * are the session's), so the shared session's conf is never written
+    * and concurrent callers cannot race it. */
+  private[graft] def runToMemory(df: DataFrame, outputMode: String,
+      queryName: String, inputBytes: Long = -1L): DataFrame = {
+    val spark = df.sparkSession
+    val session =
+      if (inputBytes < 0) spark
+      else {
+        val clone = org.apache.spark.sql.GraftSqlBridge.cloneSession(spark)
+        clone.conf.set("spark.sql.shuffle.partitions",
+          stateParallelism(spark, inputBytes).toString)
+        spark.streams.listListeners().foreach(clone.streams.addListener)
+        clone
+      }
+    runDrained(session, org.apache.spark.sql.GraftSqlBridge
+      .ofRows(session, df.queryExecution.analyzed).writeStream
+      .outputMode(outputMode)
+      .format("memory")
+      .queryName(queryName)
+      .trigger(Trigger.AvailableNow()))
+    org.apache.spark.sql.GraftSqlBridge.ofRows(spark,
+      session.table(queryName).queryExecution.analyzed)
+  }
+
   /** Stream the events table (single parquet file — the streaming file
     * source wants a directory, so glob-filter the parent) with `ts`
     * normalized from long nanos (nanosAsLong, see Sessions) to a
@@ -155,26 +164,20 @@ object StreamOps {
     else raw
   }
 
+  /** Tumbling event-time window aggregation with a watermark: the
+    * canonical streaming shape (readStream → withWatermark → window agg).
+    * Runs the events parquet through a real streaming query into a memory
+    * sink and returns the completed result. */
   def tumblingAgg(spark: SparkSession, dir: String, queryName: String,
-      windowLen: String = "1 hour"): DataFrame = {
-    val events = readEventsStream(spark, dir)
-    val agg = events
+      windowLen: String = "1 hour"): DataFrame =
+    runToMemory(readEventsStream(spark, dir)
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), windowLen), col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast(dec6)).cast(DoubleType).as("sum_value"))
       .select(col("window.start").as("window_start"), col("event_type"),
-        col("n"), col("sum_value"))
-    withStatePartitions(spark,
-      stateParallelism(spark, tableBytes(dir, "events"))) {
-      runDrained(spark, agg.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow()))
-    }
-    spark.table(queryName)
-  }
+        col("n"), col("sum_value")),
+      "complete", queryName, tableBytes(dir, "events"))
 
   /** Session windows (gap-based) — Spark's session_window works for both
     * batch and streaming groupBy; used in batch form by the gate so the
@@ -227,13 +230,7 @@ object StreamOps {
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(fn)
       .toDF("user_id", "session_start", "session_last", "n_events")
-    withStatePartitions(spark,
-      stateParallelism(spark, tableBytes(dir, "events"))) {
-      runDrained(spark, closed.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(queryName).trigger(Trigger.AvailableNow()))
-    }
-    spark.table(queryName)
+    runToMemory(closed, "append", queryName, tableBytes(dir, "events"))
   }
 
   /** Streaming exact dedup on a key set with watermark-bounded state —
@@ -250,19 +247,12 @@ object StreamOps {
     * because the single-file glob yields one micro-batch (and the
     * driver corpus spans ≪ the 30-day default horizon regardless). */
   def streamingDedup(spark: SparkSession, dir: String, queryName: String,
-      keys: Seq[String], horizon: String = "30 days"): DataFrame = {
-    val deduped = readEventsStream(spark, dir)
+      keys: Seq[String], horizon: String = "30 days"): DataFrame =
+    runToMemory(readEventsStream(spark, dir)
       .withWatermark("ts", horizon)
       .dropDuplicatesWithinWatermark(keys.head, keys.tail: _*)
-      .select(keys.map(col): _*)
-    withStatePartitions(spark,
-      stateParallelism(spark, tableBytes(dir, "events"))) {
-      runDrained(spark, deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(queryName).trigger(Trigger.AvailableNow()))
-    }
-    spark.table(queryName)
-  }
+      .select(keys.map(col): _*),
+      "append", queryName, tableBytes(dir, "events"))
 
   /** Stream-stream interval join: conversions — each 'click' joined to
     * the same user's 'purchase' events landing within [0, maxDelay]
@@ -311,13 +301,7 @@ object StreamOps {
           col("click_ts") + expr(s"INTERVAL $maxDelayMinutes MINUTES"))
       .select(col("c_user").as("user_id"), col("click_id"),
         col("purchase_id"))
-    withStatePartitions(spark,
-      stateParallelism(spark, tableBytes(dir, "events"))) {
-      runDrained(spark, joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(queryName).trigger(Trigger.AvailableNow()))
-    }
-    spark.table(queryName)
+    runToMemory(joined, "append", queryName, tableBytes(dir, "events"))
   }
 
   /** Stream-static enrichment: the stream joins a static dimension frame
@@ -326,22 +310,14 @@ object StreamOps {
     * attribute. The classic "enrich events with the customer table"
     * shape; state-free apart from the aggregation. */
   def staticEnrich(spark: SparkSession, dir: String, queryName: String,
-      dim: DataFrame, dimKey: String, dimAttr: String): DataFrame = {
-    val ev = readEventsStream(spark, dir)
-    val joined = ev
+      dim: DataFrame, dimKey: String, dimAttr: String): DataFrame =
+    runToMemory(readEventsStream(spark, dir)
       .join(broadcast(dim.select(col(dimKey), col(dimAttr))),
         col("user_id") === col(dimKey))
       .groupBy(col(dimAttr))
       .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(dec6)).cast(DoubleType).as("sum_value"))
-    withStatePartitions(spark,
-      stateParallelism(spark, tableBytes(dir, "events"))) {
-      runDrained(spark, joined.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(queryName).trigger(Trigger.AvailableNow()))
-    }
-    spark.table(queryName)
-  }
+        sum(col("value").cast(dec6)).cast(DoubleType).as("sum_value")),
+      "complete", queryName, tableBytes(dir, "events"))
 
   /** Sliding window aggregation (windowLen every slide). */
   def slidingAgg(events: DataFrame, windowLen: String,
@@ -351,112 +327,6 @@ object StreamOps {
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n"))
-
-  /** Spread a per-doc compute-heavy stream off the one-task-per-file
-    * source: the file source hands each micro-batch ONE task per file,
-    * serializing the narrow scorer/encoder folds (guide §2.5 input
-    * skew; measured 16 s vs 1.7 s for the BPE fold at sf0.1). One
-    * round-robin exchange of the raw rows per micro-batch. */
-  private def spreadStream(df: DataFrame): DataFrame =
-    df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-
-  /** The documents table as a stream (schema from the batch file, same
-    * glob-filtered file source as readEventsStream). */
-  private def readDocsStream(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
-  }
-
-  private def runAppend(df: DataFrame, queryName: String): DataFrame = {
-    val spark = df.sparkSession
-    runDrained(spark, df.writeStream.outputMode("append").format("memory")
-      .queryName(queryName).trigger(Trigger.AvailableNow()))
-    spark.table(queryName)
-  }
-
-  /** Offline-fit / online-score: the LM-surprisal quality signal over
-    * the LIVE documents stream. The hashed-bigram model fits in batch
-    * on the reference slice (src0/src1 — yesterday's curated corpus),
-    * collapses to driver maps (≤ B entries by contract), and the stream
-    * is scored by [[graft.operators.Surprisal.withScoresNarrow]] — a
-    * pure narrow map, so the scorer is stateless, append-mode, and
-    * every micro-batch cost is the scan. The batch/stream pairing a
-    * production quality gate actually runs (CCNet online). */
-  def surprisalScoreStream(spark: SparkSession, dir: String,
-      queryName: String, buckets: Int = 4096,
-      salt: String = "lm"): DataFrame = {
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val ref = docs.filter(col("source").isin("src0", "src1"))
-    val (mp, mc) = graft.operators.Surprisal.modelMaps(
-      graft.operators.Surprisal.fit(ref, "text", buckets, salt))
-    runAppend(graft.operators.Surprisal.withScoresNarrow(
-        spreadStream(readDocsStream(spark, dir)), mp, mc, "text",
-        buckets, salt)
-      .select(col("doc_id"), col("n_pairs"), col("surprisal_sum"),
-        col("avg1000")), queryName)
-  }
-
-  /** Offline-fit / online-encode: the frequency vocabulary fits in
-    * batch, the live documents stream encodes through
-    * [[graft.operators.Vocab.encodeNarrow]] — a stateless narrow map
-    * (the tokenize-the-firehose pairing). Emits the space-joined
-    * scalar form of the ids. */
-  def vocabEncodeStream(spark: SparkSession, dir: String,
-      queryName: String, size: Int = 64): DataFrame = {
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val vm = graft.operators.Vocab.vocabMap(
-      graft.operators.Vocab.fit(docs, "text", size))
-    runAppend(graft.operators.Vocab.encodeNarrow(
-        spreadStream(readDocsStream(spark, dir)), "text", vm)
-      .select(col("doc_id"),
-        when(col("token_ids").isNotNull,
-          concat_ws(" ", col("token_ids"))).as("token_ids_str")),
-      queryName)
-  }
-
-  /** Offline-fit / online-encode twin for BPE: the merge table trains
-    * in batch ([[graft.operators.Bpe.fit]]: one distributed word count,
-    * the merge loop in driver memory) and the live stream encodes
-    * through the codegen'd
-    * native expression [[graft.operators.Bpe.encodeColFast]] (pinned
-    * bit-identical to the HOF spec `encodeCol` by BpeSpec) —
-    * stateless, append-mode, nothing but the scan per micro-batch. */
-  def bpeEncodeStream(spark: SparkSession, dir: String,
-      queryName: String, nMerges: Int = 8): DataFrame = {
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val merges = graft.operators.Bpe.fit(docs, "text", nMerges,
-      minCount = 1L)
-    // The file source hands each micro-batch ONE task per file, which
-    // serializes the CPU-heavy merge fold (measured 16 s vs the batch
-    // scan's 1.7 s at sf0.1 — batch splits the file, streaming does
-    // not). One narrow round-robin exchange of the raw text per
-    // micro-batch spreads the encode across cores; the expression
-    // dominates the shuffle by an order of magnitude.
-    runAppend(spreadStream(readDocsStream(spark, dir))
-      .select(col("doc_id"),
-        graft.operators.Bpe.encodeColFast(col("text"), merges).as("bpe")),
-      queryName)
-  }
-
-  /** Offline-fit / online-score twin for the hashed-NB seed classifier:
-    * positive/negative seed models fit in batch, the stream scored by
-    * [[graft.operators.Classifier.withMarginsNarrow]] — same stateless
-    * narrow-map shape as [[surprisalScoreStream]]. */
-  def classifierScoreStream(spark: SparkSession, dir: String,
-      queryName: String, buckets: Int = 4096,
-      salt: String = "nb"): DataFrame = {
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val pos = docs.filter(col("source").isin("src0", "src1"))
-    val neg = docs.filter(col("source").isin("src2", "src3"))
-    val (mp, mn, np, nn) = graft.operators.Classifier.modelMaps(
-      graft.operators.Classifier.fit(pos, neg, "text", buckets, salt))
-    runAppend(graft.operators.Classifier.withMarginsNarrow(
-        spreadStream(readDocsStream(spark, dir)), mp, mn, np, nn, "text",
-        buckets, salt)
-      .select(col("doc_id"), col("n_tokens"), col("margin_sum"),
-        col("margin1000")), queryName)
-  }
 
   /** Streaming ingestion into the training-store layout — the
     * continuous counterpart of [[graft.sinks.Sinks.writeShards]]:

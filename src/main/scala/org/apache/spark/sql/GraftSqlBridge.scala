@@ -3,6 +3,7 @@ package org.apache.spark.sql
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.types.StructType
 
 /** Bridge into the `private[sql]` Column ⇄ Expression converters (Spark 4
@@ -33,4 +34,16 @@ object GraftSqlBridge {
       schema: StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession]
       .internalCreateDataFrame(rdd, schema)
+
+  /** A new session sharing `spark`'s context and cached data, with a
+    * COPY of its conf, temp views and function registry — what a query
+    * that needs its own conf values runs on, so the shared session's
+    * conf is never written. */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
+
+  /** `plan` as a DataFrame of `spark` (a plan built in another session,
+    * e.g. a clone, carried back to the caller's). */
+  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 }

@@ -5,21 +5,32 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source scans for mechanisms the engine keeps ONE of. */
 object SourceScan {
 
-  /** `path:line: token` for every line under `roots` (Scala sources,
-    * recursively) that contains one of `forbidden`. */
-  def hits(roots: Seq[String], forbidden: Seq[String]): Seq[String] = {
-    val dirs = roots.map(new java.io.File(_))
-    assert(dirs.forall(_.isDirectory), "run from the repository root")
+  /** `(path:line, text)` for every line under `roots` (Scala sources,
+    * recursively; a root may be one file). */
+  def lines(roots: Seq[String]): Seq[(String, String)] = {
+    val files0 = roots.map(new java.io.File(_))
+    assert(files0.forall(_.exists), "run from the repository root")
     def files(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles.toSeq.sortBy(_.getName).flatMap(files)
       else if (f.getName.endsWith(".scala")) Seq(f) else Nil
     for {
-      f <- dirs.flatMap(files)
+      f <- files0.flatMap(files)
       (line, i) <- java.nio.file.Files.readAllLines(f.toPath).toArray
         .toSeq.map(_.toString).zipWithIndex
-      p <- forbidden if line.contains(p)
-    } yield s"${f.getPath}:${i + 1}: $p"
+    } yield (s"${f.getPath}:${i + 1}", line)
   }
+
+  /** `path:line: token` for every line under `roots` that contains one
+    * of `forbidden`. */
+  def hits(roots: Seq[String], forbidden: Seq[String]): Seq[String] =
+    for ((at, line) <- lines(roots); p <- forbidden if line.contains(p))
+      yield s"$at: $p"
+
+  /** `path:line: match` for every match of `pattern` under `roots`. */
+  def matches(roots: Seq[String],
+      pattern: scala.util.matching.Regex): Seq[String] =
+    for ((at, line) <- lines(roots); m <- pattern.findAllIn(line).toSeq)
+      yield s"$at: $m"
 }
 
 /** The engine has ONE way to materialise and label — [[graft.Scope]]. A
@@ -47,5 +58,32 @@ class OneTrainerPerFamilySpec extends AnyFunSuite {
     val hits = SourceScan.hits(Seq("src/main/scala"),
       Seq("fitDelta", "fitBytes", "fitLocal", "maxWords"))
     assert(hits.isEmpty, hits.mkString("one trainer per family:\n", "\n", ""))
+  }
+}
+
+/** One statement translator: [[graft.hb.Engine.applyStatement]]
+  * translates every `.hb` statement, `… using` included. StreamHb keeps
+  * only what is streaming-specific, and StreamOps neither hand-writes a
+  * model pairing nor writes the shared session's conf. */
+class OneTranslatorSpec extends AnyFunSuite {
+
+  private val streaming = "src/main/scala/graft/streaming"
+
+  test("StreamHb translates no `… using` statement and calls no " +
+      "operator but Dedup.fingerprint") {
+    val src = Seq(s"$streaming/StreamHb.scala")
+    val hits = SourceScan.matches(src, """\w+Using\(""".r) ++
+      SourceScan.matches(src, """graft\.operators\.[\w.]*""".r)
+        .filterNot(_.endsWith(": graft.operators.Dedup.fingerprint"))
+    assert(hits.isEmpty, hits.mkString("translate in Engine:\n", "\n", ""))
+  }
+
+  test("StreamOps defines no scorer or encoder stream and sets no " +
+      "session conf") {
+    val src = Seq(s"$streaming/StreamOps.scala")
+    val hits =
+      SourceScan.matches(src, """def \w*(ScoreStream|EncodeStream)""".r) ++
+        SourceScan.hits(src, Seq("spark.conf.set"))
+    assert(hits.isEmpty, hits.mkString("one translator:\n", "\n", ""))
   }
 }

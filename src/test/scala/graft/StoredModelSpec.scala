@@ -83,13 +83,14 @@ class StoredModelSpec extends AnyFunSuite {
     val docs = corpus
     var fitted: Seq[Unigram.Piece] = null
     val fitJobs = JobCounter.count(spark) {
-      fitted = Unigram.fitStored(docs, "text", 12, "corpus@v1", store)
+      fitted = Unigram.fitStored(docs, "text", 12, "corpus@v1", Some(store))
     }
     assert(fitted == Unigram.fitEm(docs, "text", 12).sortBy(_.piece))
     val store2 = new LineageCache(spark, root)
     var loaded: Seq[Unigram.Piece] = null
     val jobs = JobCounter.count(spark) {
-      loaded = Unigram.fitStored(docs, "text", 12, "corpus@v1", store2)
+      loaded = Unigram.fitStored(docs, "text", 12, "corpus@v1",
+        Some(store2))
     }
     assert(fitJobs > jobs,
       s"cached fitStored ran $jobs job(s) vs $fitJobs to fit — it refit")
@@ -169,8 +170,10 @@ class StoredModelSpec extends AnyFunSuite {
     val wpB = WordPiece.vocabularyStored(docs, "text", 4, 1L, "k",
       Some(store), specials = b)
     assert(wpA == wpB, "same corpus stats — vocab equal, keys distinct")
-    val ugA = Unigram.fitStored(docs, "text", 8, "k", store, specials = a)
-    val ugB = Unigram.fitStored(docs, "text", 8, "k", store, specials = b)
+    val ugA = Unigram.fitStored(docs, "text", 8, "k", Some(store),
+      specials = a)
+    val ugB = Unigram.fitStored(docs, "text", 8, "k", Some(store),
+      specials = b)
     assert(ugA == ugB)
     val bpA = graft.operators.Bpe.fitStored(docs, "text", 4, 1L, "k",
       Some(store), byteLevel = true, specials = a)

@@ -46,7 +46,7 @@ class StreamHbSpec extends AnyFunSuite {
   }
 
   test("dedup exact on a stream keeps one row per fingerprint") {
-    val out = StreamHb.runToMemory(spark,
+    val out = StreamHb.runToMemory(
       "dedup exact text\nslice columns doc_id text\n",
       docsStream, "streamhb_dedup")
     val batchDistinct = spark.read.parquet(s"$dir/documents.parquet")
@@ -197,8 +197,6 @@ class StreamHbSpec extends AnyFunSuite {
     }
     val base = JobCounter.count(spark)(())
     val read = JobCounter.count(spark)(resolve("corpus")) - base
-    val once = "bpe ids text using corpus 6\n"
-    val twice = once + "decode ids token_ids using corpus 6\n"
     def jobs(text: String, store: Boolean): Int = {
       val st = Option.when(store)(new cache.LineageCache(spark,
         java.nio.file.Files.createTempDirectory("fit_once").toString))
@@ -207,13 +205,39 @@ class StreamHbSpec extends AnyFunSuite {
           st))
       }
     }
-    for (store <- Seq(false, true)) {
+    for {
+      (once, second) <- Seq(
+        "bpe ids text using corpus 6\n" ->
+          "decode ids token_ids using corpus 6\n",
+        "encode text using corpus 64\n" ->
+          "decode token_ids using corpus 64\n",
+        "unigram text using corpus 16\n" ->
+          "unigram ids text using corpus 16\n")
+      store <- Seq(false, true)
+    } {
       val one = jobs(once, store)
-      val two = jobs(twice, store)
+      val two = jobs(once + second, store)
       assert(one - base > read, s"store=$store: the fit launched no jobs")
       // the second binding pays at most its own read, never a refit
       assert(two - one <= read,
-        s"store=$store: $one job(s) for one binding, $two for two")
+        s"store=$store, $once: $one job(s) for one binding, $two for two")
+    }
+  }
+
+  test("batch and `… using` give the same rows for the six tokenizer " +
+      "families that share an encode body") {
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    Seq("bpe text" -> 8, "bpe bytes text" -> 6, "wordpiece text" -> 6,
+      "wordpiece ids text" -> 6, "unigram text" -> 16,
+      "unigram ids text" -> 16).zipWithIndex.foreach { case ((st, n), i) =>
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.orderBy("doc_id").collect().map(_.toSeq).toSeq
+      val batch = rows(Graft.runHb(s"$st $n\n", docs))
+      val streamed = rows(StreamHb.runToMemory(
+        s"$st using corpus $n\n", docsStream, s"streamhb_paths_$i",
+        resolve = { case "corpus" => docs }))
+      assert(batch.nonEmpty)
+      assert(streamed == batch, st)
     }
   }
 }

@@ -159,4 +159,50 @@ class StreamSpec extends AnyFunSuite {
         Some("/tmp/graft-ckpt-explicit"))
     } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
+
+  test("a stateful run takes its state partitions from a session clone: " +
+      "the shared session's shuffle partitions are never written") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.streaming.{StreamingQueryListener,
+      StreamingQueryProgress}
+    val key = "spark.sql.shuffle.partitions"
+    val own = spark.conf.get(key)
+    val want = StreamOps.stateParallelism(spark,
+      StreamOps.tableBytes(dir, "events"))
+    assert(want.toString != own,
+      s"the check needs a state partition count other than the session's $own")
+    val progress =
+      new java.util.concurrent.ConcurrentLinkedQueue[StreamingQueryProgress]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(
+          e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(
+          e: StreamingQueryListener.QueryProgressEvent): Unit =
+        progress.add(e.progress): Unit
+      override def onQueryTerminated(
+          e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    // read the shared session's value for as long as the query drains
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    @volatile var draining = true
+    val poller = new Thread(() =>
+      while (draining) { seen.add(spark.conf.get(key)); Thread.sleep(1) })
+    spark.streams.addListener(listener)
+    poller.start()
+    try StreamOps.tumblingAgg(spark, dir, "streamspec_state_parts")
+    finally {
+      draining = false
+      poller.join()
+      spark.streams.removeListener(listener)
+    }
+    assert(seen.asScala.toSet == Set(own))
+    assert(spark.conf.get(key) == own)
+    // progress events arrive asynchronously
+    def ours = progress.asScala.filter(_.name == "streamspec_state_parts")
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (ours.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(ours.nonEmpty, "no progress reported")
+    assert(ours.last.stateOperators.map(_.numShufflePartitions).toSeq ==
+      Seq(want.toLong))
+  }
 }

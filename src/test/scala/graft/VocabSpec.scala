@@ -36,29 +36,30 @@ class VocabSpec extends AnyFunSuite {
       .createTempDirectory("vocab_store").toString
     val store = new graft.cache.LineageCache(spark, root)
     // first call fits and writes the artifact
-    var fitted: org.apache.spark.sql.DataFrame = null
+    var fitted: Map[String, Int] = null
     val fitJobs = JobCounter.count(spark) {
-      fitted = Vocab.fitStored(docs, "text", 3, "corpus@v1", store)
+      fitted = Vocab.fitStored(docs, "text", 3, "corpus@v1", Some(store))
     }
-    val first = fitted.collect().map(_.toString).sorted.toSeq
+    assert(fitted == Vocab.vocabMap(Vocab.fit(docs, "text", 3)))
     // a fresh store handle on the same root simulates a new session
     // (the cache is on-disk, not in-memory); the second construction
     // may only pay parquet-footer reads, never the count/rank/write
     // jobs of a refit
     val store2 = new graft.cache.LineageCache(spark, root)
-    var loaded: org.apache.spark.sql.DataFrame = null
+    var loaded: Map[String, Int] = null
     val jobs = JobCounter.count(spark) {
-      loaded = Vocab.fitStored(docs, "text", 3, "corpus@v1", store2)
+      loaded = Vocab.fitStored(docs, "text", 3, "corpus@v1", Some(store2))
     }
     assert(fitJobs > jobs,
       s"cached fitStored ran $jobs job(s) vs $fitJobs to fit — it refit")
-    assert(loaded.inputFiles.forall(_.contains(root)))
-    assert(loaded.collect().map(_.toString).sorted.toSeq == first)
+    assert(store2.contains(store2.key("vocab", Seq("corpus@v1", "text", "3"))))
+    assert(loaded == fitted)
     // ...and the stored ids drive encoding of NEW documents: the id
     // map is yesterday's, growth does not re-rank
     val newDocs = Seq((9L, "c c c c a")).toDF("id", "text")
-    val enc = Vocab.fitEncodeStored(newDocs, "id", "text", 3,
-      "corpus@v1", store2).select("token_ids").head().getSeq[Int](0)
+    val enc = Vocab.encodeNarrow(newDocs, "text",
+      Vocab.fitStored(newDocs, "text", 3, "corpus@v1", Some(store2)))
+      .select("token_ids").head().getSeq[Int](0)
     assert(enc == Seq(3, 3, 3, 3, 1)) // c stays id 3 despite dominating
   }
 
