@@ -25,8 +25,8 @@ object SimilarityGates {
     * a wrong answer — the oracle re-derives the fit from the data).
     * In-JVM memo only: the r16 honesty rule removed the persistent
     * target/modelstore tier from the gates (a timed run must compute
-    * from the parquet inputs), and Bench/BenchOne clear the memo before
-    * every timed run — within one gate run the memo still shares the
+    * from the parquet inputs), and the memo is `Scope.memo`, which dies
+    * with the gate run's scope — within one gate run it still shares the
     * coarse-cell fit between the IVF and PQ levels. */
   private def embKey(d: String): String = {
     val f = new java.io.File(d, "embeddings.parquet")

@@ -91,7 +91,9 @@ final class Gateway(
     val s = HttpServer.create(
       new InetSocketAddress(InetAddress.getLoopbackAddress, port), 0)
     s.createContext("/", handler _)
-    s.setExecutor(null) // single-threaded: Spark actions serialize anyway
+    // single-threaded by choice: one request at a time until requests
+    // get their own job groups, pools and cancellation
+    s.setExecutor(null)
     s.start()
     server = Some(s)
     s.getAddress.getPort

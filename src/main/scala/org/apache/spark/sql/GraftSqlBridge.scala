@@ -46,4 +46,10 @@ object GraftSqlBridge {
     * e.g. a clone, carried back to the caller's). */
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** Block until every event posted to `spark`'s listener bus so far has
+    * reached every listener; false when `timeoutMs` passed first. */
+  def drainListenerBus(spark: SparkSession, timeoutMs: Long): Boolean =
+    try { spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs); true }
+    catch { case _: java.util.concurrent.TimeoutException => false }
 }

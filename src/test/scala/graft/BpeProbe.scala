@@ -1,7 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
 
 /** Scratch probe for trainer cost — not a spec.
@@ -38,17 +36,8 @@ object BpeProbe {
       else Seq.tabulate(25)(i =>
         (i.toLong, s"low lower lowest aaaa baab wide wider widest " +
           s"the then there row$i")).toDF("doc_id", "text")
-    val shuffleBytes = new AtomicLong
-    val shuffleRecs = new AtomicLong
-    val listener = new SparkListener {
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-        shuffleBytes.addAndGet(s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-        shuffleRecs.addAndGet(s.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten)
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val t0 = System.nanoTime
-    val m =
+    val instrument = new Instrument(spark)
+    val (m, span) = instrument.span(which) {
       if (which == "fit")
         SpecTrainers.bpe(graft.operators.Bpe.wordFrame(docs, "text"), n, 1L)
       else if (which == "local")
@@ -74,11 +63,10 @@ object BpeProbe {
         full.map(p => graft.operators.Bpe.Merge(0, p.piece, "")) // size probe
       }
       else sys.error(s"unknown trainer '$which'")
-    spark.range(1).count() // marker job, then drain
-    Thread.sleep(2000)
-    println(s"== $which n=$n merges=${m.size} " +
-      s"secs=${(System.nanoTime - t0) / 1e9} " +
-      s"shufMB=${shuffleBytes.get / 1048576.0} shufRecs=${shuffleRecs.get}")
+    }
+    instrument.close()
+    println(s"== $which n=$n merges=${m.size} secs=${span.wallMs / 1e3} " +
+      s"shufMB=${span("shuffle_write_bytes") / 1048576.0}")
     spark.stop()
   }
 }

@@ -427,9 +427,8 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("pivot with explicit values declares the schema, no discovery job") {
-    // JobCounter: thread-safe counter + drain-to-stability after a
-    // marker job (FIFO bus) — no racy fixed sleeps; the marker's
-    // constant cost cancels against the measured empty-body baseline
+    // JobCounter counts the jobs of one Instrument span; any constant
+    // cost cancels against the measured empty-body baseline
     val baseline = JobCounter.count(spark) {}
     var withValues: DataFrame = null
     val buildJobs = JobCounter.count(spark) {
@@ -490,7 +489,7 @@ class EngineSpec extends AnyFunSuite {
     assert(tapped.get ==
       Bpe.fit(docs, "text", 4, minCount = 1L, byteLevel = true))
     // tapping + the GPT-2 file round-trip is schema-only: ZERO Spark
-    // jobs beyond the JobCounter marker baseline — the proof the
+    // jobs beyond the JobCounter empty-body baseline — the proof the
     // flagship's artifact assert no longer pays a second fit
     val baseline = JobCounter.count(spark) {}
     val tapJobs = JobCounter.count(spark) {

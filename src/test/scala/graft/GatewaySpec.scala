@@ -271,8 +271,7 @@ class GatewaySpec extends AnyFunSuite {
         s"""{"name": "cached1", "hb": ${quote(hb)}}""").statusCode() == 200)
       val r1 = get(base, "/data/json/cached1")
       assert(r1.statusCode() == 200, r1.body())
-      // the job-count proof: JobCounter includes its marker's constant
-      // cost, which an empty body measures as the baseline
+      // the job-count proof: against the jobs an empty body counts
       val baseline = JobCounter.count(spark) {}
       val n2 = JobCounter.count(spark) {
         val r2 = get(base, "/data/json/cached1")

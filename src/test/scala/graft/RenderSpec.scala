@@ -219,6 +219,8 @@ class RenderSpec extends AnyFunSuite {
   test("the 7-program corpus renders: prose + code blocks that " +
       "re-parse (no sources needed — presentation only)") {
     val corpusDir = "/root/reference/tests/transformations"
+    assume(new java.io.File(corpusDir).isDirectory,
+      s"the reference corpus $corpusDir is absent")
     val names = new java.io.File(corpusDir).listFiles()
       .map(_.getName).filter(_.endsWith(".hb")).sorted
     assert(names.length == 7)
