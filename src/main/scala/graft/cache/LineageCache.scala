@@ -46,27 +46,6 @@ final class LineageCache(spark: SparkSession, root: String) {
       df.write.mode("overwrite").parquet(path(k))
       spark.read.parquet(path(k))
     }
-
-  /** Cached run of a statement chain: longest cached prefix is reused,
-    * the remainder computed and checkpointed at the end. */
-  def runChain(sourceId: String, source: DataFrame,
-      statements: Seq[(String, DataFrame => DataFrame)]): DataFrame = {
-    val names = statements.map(_._1)
-    // find longest cached prefix
-    val cachedIdx = (statements.indices.reverse)
-      .find(i => contains(key(sourceId, names.take(i + 1))))
-    val (start, df0) = cachedIdx match {
-      case Some(i) =>
-        (i + 1, spark.read.parquet(path(key(sourceId, names.take(i + 1)))))
-      case None => (0, source)
-    }
-    val out = statements.drop(start).foldLeft(df0) {
-      case (df, (_, fn)) => fn(df)
-    }
-    if (start < statements.size)
-      getOrCompute(key(sourceId, names))(out)
-    else out
-  }
 }
 
 object LineageCache {

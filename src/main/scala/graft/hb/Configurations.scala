@@ -104,7 +104,11 @@ object Configurations {
       stratumField: String, textField: String, size: Int)
       extends ConfSource
 
-  case class Conf(source: ConfSource, statements: Seq[Statement])
+  /** `header`: the program header the chain runs under — the Runner
+    * reads only its `series:` key (keyed execution, Engine.run), which
+    * also enters the lineage key. */
+  case class Conf(source: ConfSource, statements: Seq[Statement],
+      header: Header = Header(Map(), Map(), Map()))
 
   /** Build a Conf from `.hb` text (header `provider:`/`table:` ignored —
     * the source is given explicitly). */
@@ -130,116 +134,70 @@ object Configurations {
       cache: Option[LineageCache] = None,
       truncatePlans: Boolean = false) {
 
+    /** Resolved configurations by lineage key: a configuration name
+      * promises nothing across `run` calls, its content does. */
     private val memo = scala.collection.mutable.Map[String, DataFrame]()
 
-    /** Lineage key of a configuration: source identity + printed
-      * statement chain, recursively (Types.fs:182-190 scheme). */
-    def lineageKey(configs: Map[String, Conf], name: String): String = {
-      val c = configs(name)
+    /** Lineage key of a configuration: source identity, the `series:`
+      * header when set, and the printed statement chain, recursively
+      * (Types.fs:182-190 scheme). Pure — plans nothing; a cycle raises
+      * IllegalArgumentException, an unknown name NoSuchElementException. */
+    def lineageKey(configs: Map[String, Conf], name: String): String =
+      keyOf(configs, name, Set.empty)
+
+    private def keyOf(configs: Map[String, Conf], name: String,
+        visiting: Set[String]): String = {
+      if (visiting.contains(name))
+        throw new IllegalArgumentException(
+          s"configuration cycle through '$name'")
+      val c = confOf(configs, name)
+      def k(n: String) = keyOf(configs, n, visiting + name)
       val src = c.source match {
         case TableSource(t) => s"table:$t"
-        case MergeOf(cs) =>
-          cs.map(lineageKey(configs, _)).mkString("merge(", ",", ")")
-        case JoinOf(l, r, f) =>
-          s"join(${lineageKey(configs, l)},${lineageKey(configs, r)},$f)"
+        case MergeOf(cs) => cs.map(k).mkString("merge(", ",", ")")
+        case JoinOf(l, r, f) => s"join(${k(l)},${k(r)},$f)"
         case DeconOf(cp, ev, id, tx, n) =>
-          s"decon(${lineageKey(configs, cp)},${lineageKey(configs, ev)}," +
-            s"$id,$tx,$n)"
+          s"decon(${k(cp)},${k(ev)},$id,$tx,$n)"
         case SemDeconOf(cp, ev, id, vc, th) =>
-          s"semdecon(${lineageKey(configs, cp)},${lineageKey(configs, ev)}," +
-            s"$id,$vc,$th)"
+          s"semdecon(${k(cp)},${k(ev)},$id,$vc,$th)"
         case NearDupOf(cp, rf, id, tx, th) =>
-          s"neardup(${lineageKey(configs, cp)},${lineageKey(configs, rf)}," +
-            s"$id,$tx,$th)"
-        case ScrubOf(cp, ev, id, tx, k) =>
-          s"scrubof(${lineageKey(configs, cp)},${lineageKey(configs, ev)}," +
-            s"$id,$tx,$k)"
+          s"neardup(${k(cp)},${k(rf)},$id,$tx,$th)"
+        case ScrubOf(cp, ev, id, tx, n) =>
+          s"scrubof(${k(cp)},${k(ev)},$id,$tx,$n)"
         case AsofOf(l, r, lt, rt, lk, rk, rv, px) =>
-          s"asof(${lineageKey(configs, l)},${lineageKey(configs, r)}," +
-            s"$lt,$rt,${lk.mkString("+")},${rk.mkString("+")}," +
-            s"${rv.mkString("+")},$px)"
+          s"asof(${k(l)},${k(r)},$lt,$rt,${lk.mkString("+")}," +
+            s"${rk.mkString("+")},${rv.mkString("+")},$px)"
         case RangeOf(pt, iv, pf, sf, ef, pk, ik, w) =>
-          s"range(${lineageKey(configs, pt)},${lineageKey(configs, iv)}," +
-            s"$pf,$sf,$ef,${pk.mkString("+")},${ik.mkString("+")},$w)"
-        case RetrieveOf(cp, sd, id, tx, vc, k, df) =>
-          s"retrieve(${lineageKey(configs, cp)},${lineageKey(configs, sd)}," +
-            s"$id,$tx,$vc,$k,$df)"
+          s"range(${k(pt)},${k(iv)},$pf,$sf,$ef,${pk.mkString("+")}," +
+            s"${ik.mkString("+")},$w)"
+        case RetrieveOf(cp, sd, id, tx, vc, n, df) =>
+          s"retrieve(${k(cp)},${k(sd)},$id,$tx,$vc,$n,$df)"
         case DsirOf(rw, tg, id, tx, pct, b) =>
-          s"dsir(${lineageKey(configs, rw)},${lineageKey(configs, tg)}," +
-            s"$id,$tx,$pct,$b)"
+          s"dsir(${k(rw)},${k(tg)},$id,$tx,$pct,$b)"
         case SurprisalOf(cp, rf, id, tx, b, sa, mx) =>
-          s"surprisal(${lineageKey(configs, cp)},${lineageKey(configs, rf)}," +
-            s"$id,$tx,$b,$sa,$mx)"
+          s"surprisal(${k(cp)},${k(rf)},$id,$tx,$b,$sa,$mx)"
         case ClassifierOf(cp, ps, ns, id, tx, b, sa, mn) =>
-          s"classifier(${lineageKey(configs, cp)},${lineageKey(configs, ps)}," +
-            s"${lineageKey(configs, ns)},$id,$tx,$b,$sa,$mn)"
-        case DriftOf(a, b, tx, k) =>
-          s"drift(${lineageKey(configs, a)},${lineageKey(configs, b)}," +
-            s"$tx,$k)"
+          s"classifier(${k(cp)},${k(ps)},${k(ns)},$id,$tx,$b,$sa,$mn)"
+        case DriftOf(a, b, tx, n) => s"drift(${k(a)},${k(b)},$tx,$n)"
         case CoverageOf(cp, vc, st, tx, sz) =>
-          s"coverage(${lineageKey(configs, cp)},${lineageKey(configs, vc)}," +
-            s"$st,$tx,$sz)"
+          s"coverage(${k(cp)},${k(vc)},$st,$tx,$sz)"
       }
-      (src +: c.statements.map(Printer.print)).mkString(":")
+      val series = c.header.props.get("series").fold("")(s => s" series($s)")
+      ((src + series) +: c.statements.map(Printer.print)).mkString(":")
     }
 
-    def run(configs: Map[String, Conf], name: String): DataFrame =
-      runRec(configs, name, Set.empty)
+    private def confOf(configs: Map[String, Conf], name: String): Conf =
+      configs.getOrElse(name,
+        throw new NoSuchElementException(s"no configuration '$name'"))
 
-    private def runRec(configs: Map[String, Conf], name: String,
-        visiting: Set[String]): DataFrame = {
-      require(!visiting.contains(name),
-        s"configuration cycle through '$name'")
-      memo.getOrElseUpdate(name, {
-        val c = configs.getOrElse(name,
-          throw new NoSuchElementException(s"no configuration '$name'"))
-        // label the EAGER jobs a configuration fires while it builds
-        // (statement fits, decon gram collects, scrub digests) with
-        // the configuration name (guide §1.5) — the profile/UI view
-        // of a multi-stage pipeline is unreadable without it
-        def compute: DataFrame = graft.Scope.labeled(s"hb conf:$name")(
-          computeInner(configs, name, visiting))
-        def computeInner(configs: Map[String, Conf], name: String,
-            visiting: Set[String]): DataFrame = {
-          val c = configs(name)
-          def sub(n0: String) = runRec(configs, n0, visiting + name)
-          val source = c.source match {
-            case TableSource(t) => resolveTable(t)
-            case MergeOf(cs) => Graft.merge(cs.map(sub))
-            case JoinOf(l, r, f) => Graft.join(sub(l), sub(r), f)
-            case DeconOf(cp, ev, id, tx, n) =>
-              Graft.decontaminate(sub(cp), sub(ev), id, tx, n)
-            case SemDeconOf(cp, ev, id, vc, th) =>
-              Graft.semanticDecon(sub(cp), sub(ev), id, vc, th)
-            case NearDupOf(cp, rf, id, tx, th) =>
-              Graft.nearDups(sub(cp), sub(rf), id, tx, th)
-            case ScrubOf(cp, ev, id, tx, k) =>
-              Graft.scrubAgainst(sub(cp), sub(ev), id, tx, k)
-            case AsofOf(l, r, lt, rt, lk, rk, rv, px) =>
-              Graft.asof(sub(l), sub(r), lt, rt, lk, rk, rv, px)
-            case RangeOf(pt, iv, pf, sf, ef, pk, ik, w) =>
-              Graft.rangeJoin(sub(pt), sub(iv), pf, sf, ef, pk, ik, w)
-            case RetrieveOf(cp, sd, id, tx, vc, k, df) =>
-              Graft.retrieve(sub(cp), sub(sd), id, tx, vc, k, df)
-            case DsirOf(rw, tg, id, tx, pct, b) =>
-              Graft.dsirSelect(sub(rw), sub(tg), id, tx, pct, b)
-            case SurprisalOf(cp, rf, id, tx, b, sa, mx) =>
-              Graft.surprisalKeep(sub(cp), sub(rf), id, tx, b, sa, mx)
-            case ClassifierOf(cp, ps, ns, id, tx, b, sa, mn) =>
-              Graft.classifierKeep(sub(cp), sub(ps), sub(ns), id, tx, b,
-                sa, mn)
-            case DriftOf(a, b, tx, k) =>
-              Graft.drift(sub(a), sub(b), tx, k)
-            case CoverageOf(cp, vc, st, tx, sz) =>
-              Graft.vocabCoverage(sub(cp), sub(vc), st, tx, sz)
-          }
-          Engine.run(
-            Program(Header(Map(), Map(), Map()), c.statements), source)
-        }
+    /** The configuration's result frame, resolved once per lineage key
+      * (through the LineageCache when one is bound). */
+    def run(configs: Map[String, Conf], name: String): DataFrame = {
+      val key = lineageKey(configs, name)
+      memo.getOrElseUpdate(key, {
+        def compute = build(configs, name)(Engine.run(_, _))
         val resolved = cache match {
-          case Some(lc) =>
-            val key = lc.key("conf", Seq(lineageKey(configs, name)))
-            lc.getOrCompute(key)(compute)
+          case Some(lc) => lc.getOrCompute(lc.key("conf", Seq(key)))(compute)
           case None => compute
         }
         if (truncatePlans)
@@ -247,5 +205,55 @@ object Configurations {
         else resolved
       })
     }
+
+    /** The chart view of a configuration: its chain run KEEPING the
+      * engine key and row order (Engine.runKeyed). Operands resolve
+      * through [[run]]; the keyed frame itself is neither memoised nor
+      * cached, since the cache holds result frames. */
+    def runKeyed(configs: Map[String, Conf], name: String): DataFrame =
+      build(configs, name)(Engine.runKeyed)
+
+    /** Resolve `name`'s source and run its chain with `engine`. The
+      * EAGER jobs a configuration fires while it builds (statement fits,
+      * decon gram collects, scrub digests) carry the configuration name
+      * (guide §1.5): the profile view of a multi-stage pipeline is
+      * unreadable without it. */
+    private def build(configs: Map[String, Conf], name: String)(
+        engine: (Program, DataFrame) => DataFrame): DataFrame =
+      graft.Scope.labeled(s"hb conf:$name") {
+        val c = confOf(configs, name)
+        def sub(n: String) = run(configs, n)
+        val source = c.source match {
+          case TableSource(t) => resolveTable(t)
+          case MergeOf(cs) => Graft.merge(cs.map(sub))
+          case JoinOf(l, r, f) => Graft.join(sub(l), sub(r), f)
+          case DeconOf(cp, ev, id, tx, n) =>
+            Graft.decontaminate(sub(cp), sub(ev), id, tx, n)
+          case SemDeconOf(cp, ev, id, vc, th) =>
+            Graft.semanticDecon(sub(cp), sub(ev), id, vc, th)
+          case NearDupOf(cp, rf, id, tx, th) =>
+            Graft.nearDups(sub(cp), sub(rf), id, tx, th)
+          case ScrubOf(cp, ev, id, tx, k) =>
+            Graft.scrubAgainst(sub(cp), sub(ev), id, tx, k)
+          case AsofOf(l, r, lt, rt, lk, rk, rv, px) =>
+            Graft.asof(sub(l), sub(r), lt, rt, lk, rk, rv, px)
+          case RangeOf(pt, iv, pf, sf, ef, pk, ik, w) =>
+            Graft.rangeJoin(sub(pt), sub(iv), pf, sf, ef, pk, ik, w)
+          case RetrieveOf(cp, sd, id, tx, vc, k, df) =>
+            Graft.retrieve(sub(cp), sub(sd), id, tx, vc, k, df)
+          case DsirOf(rw, tg, id, tx, pct, b) =>
+            Graft.dsirSelect(sub(rw), sub(tg), id, tx, pct, b)
+          case SurprisalOf(cp, rf, id, tx, b, sa, mx) =>
+            Graft.surprisalKeep(sub(cp), sub(rf), id, tx, b, sa, mx)
+          case ClassifierOf(cp, ps, ns, id, tx, b, sa, mn) =>
+            Graft.classifierKeep(sub(cp), sub(ps), sub(ns), id, tx, b,
+              sa, mn)
+          case DriftOf(a, b, tx, k) =>
+            Graft.drift(sub(a), sub(b), tx, k)
+          case CoverageOf(cp, vc, st, tx, sz) =>
+            Graft.vocabCoverage(sub(cp), sub(vc), st, tx, sz)
+        }
+        engine(Program(c.header, c.statements), source)
+      }
   }
 }

@@ -1,6 +1,7 @@
 package graft.server
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.cfg.JsonNodeFeature
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -10,8 +11,9 @@ import java.util.Base64
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
-import graft.hb.{Ast, Engine, Graft, HbParser}
+import graft.hb.HbParser
 import graft.hb.Ast.{Header, Program, Statement}
+import graft.hb.Configurations.{Conf, JoinOf, MergeOf, Runner, TableSource}
 import graft.sources.{Ingest, Providers}
 
 /** The reference's HTTP gateway surface, reconstructed from its
@@ -37,14 +39,35 @@ import graft.sources.{Ingest, Providers}
   * on every route; wrong or missing key → 401.
   *
   * Spark-first shape: uploads only PARSE (cheap, validated); each GET
-  * declares the whole plan — provider scan through the fused statement
-  * chain — and runs it in the shared session, so Catalyst fuses the
-  * chain exactly as in library use. Workbench-shape configurations
-  * resolve recursively (merge/join of other configurations, with cycle
-  * detection); results are bounded by `maxRows` like
-  * [[graft.sinks.Sinks.matrixJson]] — the reference's gateway serves
-  * whole CouchDB documents, so gateway responses are BY CONTRACT
-  * document-sized (use the parquet/shard sinks for bulk output).
+  * translates the uploads it reaches into
+  * [[graft.hb.Configurations.Conf]]s and resolves them with one
+  * [[graft.hb.Configurations.Runner]] per request — provider scan
+  * through the fused statement chain, in the shared session, so
+  * Catalyst fuses the chain exactly as in library use. Workbench-shape
+  * configurations resolve recursively (merge/join of other
+  * configurations; the Runner rejects cycles); results are bounded by
+  * `maxRows` like [[graft.sinks.Sinks.matrixJson]] — the reference's
+  * gateway serves whole CouchDB documents, so gateway responses are BY
+  * CONTRACT document-sized (use the parquet/shard sinks for bulk
+  * output). Uploaded headers resolve with `resolveEnv = false` (see
+  * [[table]]).
+  *
+  * With a [[graft.cache.LineageCache]] configured, every resolved
+  * configuration — merge/join operands included — is stored under its
+  * Runner lineage key (`Runner.lineageKey`): the reference's per-stage
+  * CouchDB cache (workers/calculator.worker/src/Program.fs:86-88;
+  * tools/workbench/src/Types.fs:182-190), re-expressed as
+  * content-keyed parquet. Shared operands across configurations
+  * compute once; a changed upload derives a new key, so invalidation
+  * is structural, not TTL-based. Caveat (by design, like the
+  * reference): the gateway caches LINEAGE, not upstream freshness — a
+  * cached frame is served until its configuration TEXT changes. That
+  * covers REST/OData providers AND file-backed ones (parquet/localdata
+  * paths under `dataDir`): rewriting the file behind an unchanged path
+  * does NOT invalidate the cached frame. Operators running with a cache
+  * who re-ingest in place should either version the path in the
+  * configuration (the structural way) or run without `--cache-dir` for
+  * mutable inputs.
   *
   * The server binds the LOOPBACK interface only — the deployment
   * surface of this library is the cluster driver, and the zero-egress
@@ -58,7 +81,10 @@ final class Gateway(
     maxRows: Int = 100000,
     cache: Option[graft.cache.LineageCache] = None) {
 
+  /** Writes object properties sorted: a table's content id is canonical
+    * JSON ([[tableId]]). */
   private val mapper = new ObjectMapper()
+    .configure(JsonNodeFeature.WRITE_PROPERTIES_SORTED, true)
   /** `{name, hb}` uploads: full programs, header = provider. */
   private val programs = TrieMap[String, Program]()
   /** Workbench-shape uploads: source doc + transformation names. */
@@ -112,23 +138,29 @@ final class Gateway(
         ex.getResponseHeaders.set("WWW-Authenticate", "Basic realm=\"graft\"")
         respond(ex, 401, "unauthorized")
       } else {
+        val method = ex.getRequestMethod
         val path = ex.getRequestURI.getPath
+        val route = Seq("/data/json/", "/html/", "/chart/")
+          .find(path.startsWith)
+        val name = route.fold("")(r =>
+          java.net.URLDecoder.decode(path.stripPrefix(r), "UTF-8"))
+        val label = route.fold(s"gateway $method $path")(r =>
+          s"gateway $method ${r.init} $name")
         // one scope per request: frames cached while resolving (fit
         // inputs, emit layouts) live until the response rows are taken
-        // or the lineage parquet is written, then are released
-        graft.Scope.open { _ => (ex.getRequestMethod, path) match {
-          case ("PUT", "/admin/configuration") => putConfiguration(ex)
-          case ("PUT", "/admin/transformation") => putTransformation(ex)
-          case ("GET", p) if p.startsWith("/data/json/") =>
-            getData(ex, java.net.URLDecoder.decode(
-              p.stripPrefix("/data/json/"), "UTF-8"))
-          case ("GET", p) if p.startsWith("/html/") =>
-            getHtml(ex, java.net.URLDecoder.decode(
-              p.stripPrefix("/html/"), "UTF-8"))
-          case ("GET", p) if p.startsWith("/chart/") =>
-            getChart(ex, java.net.URLDecoder.decode(
-              p.stripPrefix("/chart/"), "UTF-8"))
-          case _ => respond(ex, 404, s"no route ${ex.getRequestMethod} $path")
+        // or the lineage parquet is written, then are released; every
+        // job the request launches carries its route and configuration
+        graft.Scope.open { _ => graft.Scope.labeled(label) {
+          (method, route) match {
+            case ("PUT", None) if path == "/admin/configuration" =>
+              putConfiguration(ex)
+            case ("PUT", None) if path == "/admin/transformation" =>
+              putTransformation(ex)
+            case ("GET", Some("/data/json/")) => getData(ex, name)
+            case ("GET", Some("/html/")) => getHtml(ex, name)
+            case ("GET", Some("/chart/")) => getChart(ex, name)
+            case _ => respond(ex, 404, s"no route $method $path")
+          }
         } }
       }
     } catch {
@@ -210,43 +242,29 @@ final class Gateway(
     }
   }
 
-  // ---- data ----
+  // ---- data: every GET resolves through one Configurations.Runner ----
 
-  private def getData(ex: HttpExchange, name: String): Unit = {
-    val lk = if (cache.isDefined) lineageKeyOf(name, Set.empty) else None
-    lk.flatMap(k => Option(responses.get(k))) match {
-      case Some((body, truncated)) =>
-        // repeat GET of unchanged content: zero Spark jobs
-        if (truncated) ex.getResponseHeaders.set("X-Truncated", "true")
-        respond(ex, 200, body)
-      case None => resolve(name, Set.empty) match {
-        case None => respond(ex, 404, s"no configuration '$name'")
-        case Some(df) =>
-          // take one past the bound: a client must be able to tell a
-          // complete result from a clipped one, so when the plan yields
-          // more than maxRows the response carries X-Truncated and the
-          // extra row is dropped
-          val rows = df.toJSON.take(maxRows + 1)
-          val truncated = rows.length > maxRows
-          val body = rows.take(maxRows).mkString("[", ",", "]")
-          lk.foreach(k => responses.put(k, (body, truncated)): Unit)
-          if (truncated) ex.getResponseHeaders.set("X-Truncated", "true")
-          respond(ex, 200, body)
-      }
+  private def getData(ex: HttpExchange, name: String): Unit =
+    serve(ex, name, "") { (runner, confs) =>
+      // take one past the bound: a client must be able to tell a
+      // complete result from a clipped one, so when the plan yields
+      // more than maxRows the response carries X-Truncated and the
+      // extra row is dropped
+      val rows = runner.run(confs, name).toJSON.take(maxRows + 1)
+      (rows.take(maxRows).mkString("[", ",", "]"), rows.length > maxRows)
     }
-  }
 
   /** The visualizer surface over HTTP: a `{name, hb}` program's
     * literate `!#…!#` blocks as prose around the re-printed statements
     * plus the bounded result table (hb.Render — the same row-bounded
-    * contract as the JSON route). Workbench-shape configurations have
-    * no program text to render → 404 names the constraint. */
+    * contract as the JSON route). The table is the Runner's frame, so
+    * the html view shares the LineageCache frame with /data/json.
+    * Workbench-shape configurations have no program text to render →
+    * 404 names the constraint. */
   private def getHtml(ex: HttpExchange, name: String): Unit =
     programs.get(name) match {
       case Some(p) =>
-        // through resolve(): the html view shares the LineageCache
-        // frame with /data/json instead of re-running the plan
-        val df = resolve(name, Set.empty).get
+        val df = new Runner(spark, table, cache).run(confsFrom(name), name)
         val html = graft.hb.Render.html(p, Some(df),
           maxRows = math.min(maxRows, 1000))
         val bytes = html.getBytes(UTF_8)
@@ -264,185 +282,122 @@ final class Gateway(
 
   /** Chart-series JSON — the reference visualizer's end product
     * (tools/visualizer/web/src/Server/Reader.fs:189-231): the named
-    * configuration re-run KEEPING the engine key and row order, then
-    * emitted as an array of per-column series of `{"x","y"}` points
-    * (list keys joined "-", numbers bare, text quoted — see
-    * [[graft.hb.Render.seriesJson]]). Cached in the response LRU under
-    * the lineage key like the JSON route: a repeat GET of unchanged
-    * content runs zero Spark jobs. */
-  private def getChart(ex: HttpExchange, name: String): Unit = {
-    // gate on cache.isDefined like the JSON route: a cache-less gateway
-    // is the documented mode for mutable inputs, and an unconditional
-    // response LRU there would keep serving a stale chart after the
-    // underlying parquet changes while /data/json recomputes
-    val lk =
-      if (cache.isDefined) lineageKeyOf(name, Set.empty).map("chart:" + _)
-      else None
-    lk.flatMap(k => Option(responses.get(k))) match {
-      case Some((body, truncated)) =>
-        if (truncated) ex.getResponseHeaders.set("X-Truncated", "true")
-        respond(ex, 200, body)
-      case None => resolveKeyed(name) match {
-        case None => respond(ex, 404, s"no configuration '$name'")
-        case Some(df) =>
-          val (body, truncated) =
-            graft.hb.Render.seriesJsonTruncating(df, maxRows)
-          lk.foreach(k => responses.put(k, (body, truncated)): Unit)
-          if (truncated) ex.getResponseHeaders.set("X-Truncated", "true")
-          respond(ex, 200, body)
-      }
+    * configuration re-run KEEPING the engine key and row order
+    * (`Runner.runKeyed`), then emitted as an array of per-column series
+    * of `{"x","y"}` points (list keys joined "-", numbers bare, text
+    * quoted — see [[graft.hb.Render.seriesJson]]). */
+  private def getChart(ex: HttpExchange, name: String): Unit =
+    serve(ex, name, "chart:") { (runner, confs) =>
+      graft.hb.Render.seriesJsonTruncating(runner.runKeyed(confs, name),
+        maxRows)
     }
+
+  /** Respond with `name`'s rendered body: from the response LRU under
+    * `tag` + its lineage key when a LineageCache is configured (a repeat
+    * GET of unchanged content runs zero Spark jobs), else rendered by
+    * one request-scoped Runner. The LRU is gated on the cache like the
+    * frames are: a cache-less gateway is the documented mode for
+    * mutable inputs, and a response LRU there would keep serving a
+    * stale body after the underlying parquet changes. */
+  private def serve(ex: HttpExchange, name: String, tag: String)(
+      render: (Runner, Map[String, Conf]) => (String, Boolean)): Unit = {
+    val confs = confsFrom(name)
+    if (!confs.contains(name))
+      return respond(ex, 404, s"no configuration '$name'")
+    val runner = new Runner(spark, table, cache)
+    val key = cache.map(_ => tag + runner.lineageKey(confs, name))
+    val (body, truncated) = key.flatMap(k => Option(responses.get(k)))
+      .getOrElse {
+        val out = render(runner, confs)
+        key.foreach(responses.put(_, out))
+        out
+      }
+    if (truncated) ex.getResponseHeaders.set("X-Truncated", "true")
+    respond(ex, 200, body)
   }
 
-  /** [[resolve]]'s keyed twin for the chart route: the key column and
-    * the frame order are the series payload, so no `.result` strip and
-    * no frame-level lineage cache (the cached parquet holds RESULT
-    * frames; charts cache at the response layer instead). */
-  private def resolveKeyed(name: String): Option[DataFrame] =
-    programs.get(name) match {
+  /** The uploads `name` reaches, translated into Runner configurations
+    * when the GET arrives: a program becomes its header's table plus
+    * its statements (the header also carries `series:`), a workbench
+    * document its merge/join of other configurations or its source
+    * document's table, plus the named transformation chains in listed
+    * order. Operands that name no upload are left out, so the Runner
+    * raises `no configuration '<n>'` for them. */
+  private def confsFrom(name: String): Map[String, Conf] = {
+    def translate(n: String): Option[Conf] = programs.get(n) match {
       case Some(p) =>
-        Some(Engine.runKeyed(p, Providers.fromHeader(spark, p.header,
-          dataDir, fetch, resolveEnv = false)))
-      case None => configurations.get(name).map { case (src, ts) =>
-        val source = resolveSource(src, Set(name))
-        val stmts = ts.flatMap(t => transformations.getOrElse(t,
-          throw new NoSuchElementException(s"no transformation '$t'")))
-        Engine.runKeyed(Program(Header(Map(), Map(), Map()), stmts), source)
-      }
-    }
-
-  /** Run a configuration by name: `{name, hb}` programs resolve their
-    * provider from the header; workbench documents resolve their
-    * source (recursively for merge/join) and fold the named
-    * transformation chains in listed order.
-    *
-    * With a [[graft.cache.LineageCache]] configured, every resolved
-    * configuration — nested merge/join operands included — goes through
-    * `getOrCompute` under its recursive lineage key: the reference's
-    * per-stage CouchDB cache (workers/calculator.worker/src/
-    * Program.fs:86-88; tools/workbench/src/Types.fs:182-190),
-    * re-expressed as content-keyed parquet. Shared operands across
-    * configurations compute once; a changed upload derives a new key,
-    * so invalidation is structural, not TTL-based. Caveat (by design,
-    * like the reference): the gateway caches LINEAGE, not upstream
-    * freshness — a cached frame is served until its configuration TEXT
-    * changes. That covers REST/OData providers AND file-backed ones
-    * (parquet/localdata paths under `dataDir`): rewriting the file
-    * behind an unchanged path does NOT invalidate the cached frame.
-    * Operators running with a cache who re-ingest in place should
-    * either version the path in the configuration (the structural way)
-    * or run without `--cache-dir` for mutable inputs. */
-  private def resolve(name: String, visiting: Set[String]): Option[DataFrame] = {
-    if (visiting.contains(name))
-      throw new IllegalArgumentException(
-        s"configuration cycle through '$name'")
-    def compute: Option[DataFrame] = programs.get(name) match {
-      case Some(p) =>
-        Some(Graft.run(p, Providers.fromHeader(spark, p.header, dataDir,
-          fetch, resolveEnv = false)))
-      case None => configurations.get(name).map { case (src, ts) =>
-        val source = resolveSource(src, visiting + name)
-        val stmts = ts.flatMap(t => transformations.getOrElse(t,
-          throw new NoSuchElementException(s"no transformation '$t'")))
-        Engine.run(Program(Header(Map(), Map(), Map()), stmts), source)
-      }
-    }
-    (cache, lineageKeyOf(name, visiting)) match {
-      case (Some(lc), Some(lk)) =>
-        Some(lc.getOrCompute(lc.key("gateway", Seq(lk)))(compute.get))
-      case _ => compute
-    }
-  }
-
-  /** Recursive content key of a configuration: provider header (or
-    * source document) plus the printed statement chain, with merge/join
-    * operands replaced by THEIR lineage keys — the
-    * [[graft.hb.Configurations.Runner.lineageKey]] scheme applied to
-    * the gateway's upload store. None for unknown names (the 404
-    * path). Pure — computes no Spark plan. */
-  private def lineageKeyOf(name: String, visiting: Set[String]): Option[String] = {
-    if (visiting.contains(name))
-      throw new IllegalArgumentException(
-        s"configuration cycle through '$name'")
-    programs.get(name) match {
-      case Some(p) =>
-        val h = p.header
-        val hdr = (h.props.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" } ++
-          h.lists.toSeq.sortBy(_._1)
-            .map { case (k, v) => s"$k=[${v.mkString("\u0000")}]" } ++
-          h.meta.toSeq.sortBy(_._1).map { case (k, v) => s"meta.$k=$v" })
-          .mkString(";")
-        Some((s"hb{$hdr}" +: p.transformations.map(graft.hb.Printer.print))
-          .mkString(":"))
-      case None => configurations.get(name).map { case (src, ts) =>
-        def subKey(n: String): String =
-          lineageKeyOf(n, visiting + name).getOrElse(
-            throw new NoSuchElementException(s"no configuration '$n'"))
-        val srcKey = text(src, "provider").getOrElse("parquet") match {
-          case "merge" =>
-            src.get("datasets").asScala.toSeq.map(_.asText())
-              .map(subKey).mkString("merge(", ",", ")")
-          case "join" =>
-            val l = text(src, "left").getOrElse("")
-            val r = text(src, "right").getOrElse("")
-            s"join(${subKey(l)},${subKey(r)}," +
-              s"${text(src, "field").getOrElse("")})"
-          // localdata/provider documents are self-contained: the JSON
-          // text IS the content (inline rows, urls, paths included)
-          case _ => s"src:${src.toString}"
+        val h = mapper.createObjectNode()
+        p.header.props.foreach { case (k, v) => h.put(k, v) }
+        p.header.lists.foreach { case (k, vs) =>
+          vs.foldLeft(h.putArray(k))(_.add(_))
         }
-        val stmts = ts.flatMap(t => transformations.getOrElse(t,
-          throw new NoSuchElementException(s"no transformation '$t'"))
-          .map(graft.hb.Printer.print))
-        (srcKey +: stmts).mkString(":")
+        Some(Conf(TableSource(tableId("hb", h)), p.transformations, p.header))
+      case None => configurations.get(n).map { case (src, ts) =>
+        def field(k: String) = text(src, k).getOrElse(
+          throw new IllegalArgumentException(s"join needs '$k'"))
+        val source = text(src, "provider") match {
+          case Some("merge") =>
+            MergeOf(src.get("datasets").asScala.toSeq.map(_.asText()))
+          case Some("join") =>
+            JoinOf(field("left"), field("right"), field("field"))
+          case _ => TableSource(tableId("source", src))
+        }
+        Conf(source, ts.flatMap(t => transformations.getOrElse(t,
+          throw new NoSuchElementException(s"no transformation '$t'"))))
       }
     }
+    def reach(acc: Map[String, Conf], n: String): Map[String, Conf] =
+      if (acc.contains(n)) acc
+      else translate(n).fold(acc) { c =>
+        val operands = c.source match {
+          case MergeOf(cs) => cs
+          case JoinOf(l, r, _) => Seq(l, r)
+          case _ => Nil
+        }
+        operands.foldLeft(acc + (n -> c))(reach)
+      }
+    reach(Map.empty, name)
   }
 
-  /** Workbench `Source.ToString()` document shapes (Types.fs:74-129):
-    * localdata carries inline columns+rows; merge/join reference OTHER
-    * configurations by name; anything else is a provider header
-    * (rest/odata/parquet/git) dispatched like an `.hb` upload. */
-  private def resolveSource(src: JsonNode, visiting: Set[String]): DataFrame =
-    text(src, "provider").getOrElse("parquet") match {
-      case "localdata" =>
-        val cols = src.get("columns").asScala.toSeq.map(_.asText())
-        val rows = src.get("rows").asScala.toSeq.map(_.asScala.toSeq.map {
-          case n if n.isIntegralNumber => n.asLong(): Any
-          case n if n.isFloatingPointNumber => n.asDouble(): Any
-          case n if n.isBoolean => n.asBoolean(): Any
-          case n if n.isNull => null: Any
-          case n => n.asText(): Any
-        })
-        Ingest.localData(spark, cols, rows)
-      case "merge" =>
-        val names = src.get("datasets").asScala.toSeq.map(_.asText())
-        Graft.merge(names.map(n => resolve(n, visiting).getOrElse(
-          throw new NoSuchElementException(s"no configuration '$n'"))))
-      case "join" =>
-        def side(k: String) = {
-          val n = text(src, k).getOrElse(
-            throw new IllegalArgumentException(s"join needs '$k'"))
-          resolve(n, visiting).getOrElse(
-            throw new NoSuchElementException(s"no configuration '$n'"))
-        }
-        Graft.join(side("left"), side("right"),
-          text(src, "field").getOrElse(
-            throw new IllegalArgumentException("join needs 'field'")))
-      case _ =>
-        val props = src.properties().asScala
-          .filter(e => e.getValue.isValueNode)
-          .map(e => e.getKey -> e.getValue.asText()).toMap
-        val lists = src.properties().asScala
-          .filter(e => e.getValue.isArray)
-          .map(e => e.getKey ->
-            e.getValue.asScala.toSeq.map(_.asText())).toMap
-        // resolveEnv OFF for every uploaded header: a client-chosen
-        // `user: $GRAFT_MASTER_KEY` + client-chosen url would exfiltrate
-        // arbitrary server environment variables as basic auth
-        Providers.fromHeader(spark, Header(props, lists, Map()), dataDir,
-          fetch, resolveEnv = false)
+  /** A table's content id: the uploaded program header (`hb`) or
+    * workbench source document (`source`) as canonical JSON. The
+    * document IS the content — inline rows, urls and paths included —
+    * so the id keys the lineage. */
+  private def tableId(kind: String, doc: JsonNode): String =
+    mapper.writeValueAsString(mapper.createObjectNode().set(kind, doc))
+
+  /** The Runner's table resolver, the inverse of [[tableId]]: workbench
+    * `localdata` documents carry inline columns and rows
+    * (Types.fs:74-129); every other document is a provider header
+    * (rest/odata/parquet/git) dispatched like an `.hb` upload's. */
+  private def table(id: String): DataFrame = {
+    val doc = mapper.readTree(id).properties().iterator().next()
+    val (kind, src) = (doc.getKey, doc.getValue)
+    if (kind == "source" && text(src, "provider").contains("localdata")) {
+      val cols = src.get("columns").asScala.toSeq.map(_.asText())
+      val rows = src.get("rows").asScala.toSeq.map(_.asScala.toSeq.map {
+        case n if n.isIntegralNumber => n.asLong(): Any
+        case n if n.isFloatingPointNumber => n.asDouble(): Any
+        case n if n.isBoolean => n.asBoolean(): Any
+        case n if n.isNull => null: Any
+        case n => n.asText(): Any
+      })
+      Ingest.localData(spark, cols, rows)
+    } else {
+      val props = src.properties().asScala
+        .filter(e => e.getValue.isValueNode)
+        .map(e => e.getKey -> e.getValue.asText()).toMap
+      val lists = src.properties().asScala
+        .filter(e => e.getValue.isArray)
+        .map(e => e.getKey ->
+          e.getValue.asScala.toSeq.map(_.asText())).toMap
+      // resolveEnv OFF for every uploaded header: a client-chosen
+      // `user: $GRAFT_MASTER_KEY` + client-chosen url would exfiltrate
+      // arbitrary server environment variables as basic auth
+      Providers.fromHeader(spark, Header(props, lists, Map()), dataDir,
+        fetch, resolveEnv = false)
     }
+  }
 
   private def text(n: JsonNode, field: String): Option[String] =
     Option(n.get(field)).filter(v => !v.isNull).map(_.asText())

@@ -91,19 +91,4 @@ class CombinatorSpec extends AnyFunSuite {
     // and determinism: same chain, same key
     assert(cache.key("s", Seq("a", "b")) == cache.key("s", Seq("a", "b")))
   }
-
-  test("lineage cache reuses a shared chain prefix") {
-    val dir = java.nio.file.Files.createTempDirectory("graftcache").toString
-    val cache = new LineageCache(spark, dir)
-    var computes = 0
-    val chain = Seq[(String, org.apache.spark.sql.DataFrame =>
-        org.apache.spark.sql.DataFrame)](
-      "double" -> { df => computes += 1
-        df.withColumn("d", df("integer") * 2) })
-    val a = cache.runChain("src1", f1, chain)
-    assert(a.count() == 3 && computes == 1)
-    val b = cache.runChain("src1", f1, chain)
-    assert(b.count() == 3 && computes == 1) // cache hit, no recompute
-    assert(b.columns.contains("d"))
-  }
 }

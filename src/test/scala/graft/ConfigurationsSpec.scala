@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.cache.LineageCache
+import graft.hb.Ast
 import graft.hb.Configurations._
 import graft.sources.Ingest
 
@@ -52,6 +53,46 @@ class ConfigurationsSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       new Runner(spark, tables).run(cyclic, "x")
     }
+  }
+
+  test("a cached Runner rejects cycles and names unknown operands") {
+    val cache = new LineageCache(spark,
+      java.nio.file.Files.createTempDirectory("graftcycle").toString)
+    val cyclic = Map(
+      "x" -> Conf(MergeOf(Seq("y")), Nil),
+      "y" -> Conf(MergeOf(Seq("x")), Nil))
+    val e = intercept[IllegalArgumentException] {
+      new Runner(spark, tables, Some(cache)).run(cyclic, "x")
+    }
+    assert(e.getMessage.contains("cycle"), e.getMessage)
+    val dangling = Map("x" -> Conf(MergeOf(Seq("gone")), Nil))
+    val u = intercept[NoSuchElementException] {
+      new Runner(spark, tables, Some(cache)).run(dangling, "x")
+    }
+    assert(u.getMessage == "no configuration 'gone'", u.getMessage)
+  }
+
+  test("one Runner keys resolved frames by content, not by name") {
+    val r = new Runner(spark, tables)
+    val first = r.run(Map("x" -> Conf(TableSource("sprints_a"), Nil)), "x")
+    assert(first.count() == 2)
+    val second = r.run(Map("x" -> Conf(TableSource("sprints_b"), Nil)), "x")
+    assert(second.collect().map(_.getAs[String]("Sprint")).toSeq == Seq("S3"))
+  }
+
+  test("a series: header reaches the chain and the lineage key") {
+    val series = Ast.Header(Map("series" -> "Team"), Map(), Map())
+    val stmts = conf(TableSource("meta"),
+      "create column n 1\ncreate column run (expanding sum [n])").statements
+    val cfgs = Map(
+      "flat" -> Conf(TableSource("meta"), stmts),
+      "keyed" -> Conf(TableSource("meta"), stmts, series))
+    val r = new Runner(spark, tables)
+    assert(r.lineageKey(cfgs, "flat") != r.lineageKey(cfgs, "keyed"))
+    def runs(n: String) = r.run(cfgs, n).collect()
+      .map(x => x.getAs[String]("Sprint") -> x.getAs[Any]("run")).toMap
+    // per-team running sums restart at each team; the flat chain does not
+    assert(runs("keyed")("S3") != runs("flat")("S3"))
   }
 
   test("DeconOf binds an eval configuration; .hb chain applies the policy") {

@@ -239,6 +239,51 @@ class GatewaySpec extends AnyFunSuite {
     }
   }
 
+  test("a LineageCache-backed gateway rejects cycles too (500, cycle)") {
+    val lc = new graft.cache.LineageCache(spark,
+      java.nio.file.Files.createTempDirectory("gwcycle").toString)
+    val gw = new Gateway(spark, Key, dataDir = "/root/testdata/sf0.001",
+      cache = Some(lc))
+    val base = s"http://127.0.0.1:${gw.start(0)}"
+    try {
+      assert(put(base, "/admin/configuration",
+        """{"_id": "c2", "transformations": [],
+          |"source": {"provider": "merge", "datasets": ["c3"]}}"""
+          .stripMargin).statusCode() == 200)
+      assert(put(base, "/admin/configuration",
+        """{"_id": "c3", "transformations": [],
+          |"source": {"provider": "join", "left": "c2", "right": "c2",
+          |"field": "k"}}""".stripMargin).statusCode() == 200)
+      Seq("/data/json/c2", "/chart/c3").foreach { path =>
+        val res = get(base, path)
+        assert(res.statusCode() == 500, res.body())
+        assert(res.body().contains("cycle"), res.body())
+      }
+    } finally gw.stop()
+  }
+
+  test("every job of a first GET carries the route and configuration " +
+      "name") {
+    withGateway { base =>
+      val hb = """provider: parquet
+        |table: documents
+        |
+        |only (lang = 'de')
+        |slice columns doc_id lang
+        |""".stripMargin
+      assert(put(base, "/admin/configuration",
+        s"""{"name": "labelled", "hb": ${quote(hb)}}""").statusCode() == 200)
+      val instrument = new Instrument(spark)
+      val (res, span) =
+        try instrument.span("get")(get(base, "/data/json/labelled"))
+        finally instrument.close()
+      assert(res.statusCode() == 200, res.body())
+      assert(span.jobs.nonEmpty)
+      assert(span.jobs.forall(_.label.contains("gateway GET /data/json " +
+        "labelled")), span.jobs.map(_.label).mkString("\n"))
+    }
+  }
+
   test("configuration names with spaces resolve (URL-encoded like the " +
     "corpus program 'Logic Commit Frequency')") {
     withGateway { base =>

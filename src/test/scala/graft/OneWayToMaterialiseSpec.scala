@@ -105,3 +105,20 @@ class OneHarnessSpec extends AnyFunSuite {
     assert(hits.isEmpty, hits.mkString("measure with Instrument:\n", "\n", ""))
   }
 }
+
+/** One configuration resolver: [[graft.hb.Configurations.Runner]]. The
+  * Gateway translates its uploads into configurations and resolves every
+  * route through a Runner, so it neither runs a chain nor reads the
+  * LineageCache itself, and no second lineage-key or chain-cache path
+  * comes back. */
+class OneResolverSpec extends AnyFunSuite {
+
+  test("no second resolver under src/main and no direct chain run in " +
+      "the server") {
+    val hits = SourceScan.hits(Seq("src/main/scala"),
+      Seq("lineageKeyOf", "resolveSource", "resolveKeyed", "runChain")) ++
+      SourceScan.hits(Seq("src/main/scala/graft/server"),
+        Seq("Engine.run", "Engine.runKeyed", "Graft.run", "getOrCompute("))
+    assert(hits.isEmpty, hits.mkString("resolve through Runner:\n", "\n", ""))
+  }
+}
