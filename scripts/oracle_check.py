@@ -34,6 +34,26 @@ def norm_cell(v):
         pass
     return str(v)
 
+def host_mem_total():
+    """The host's MemTotal as printed by /proc/meminfo, or "unknown"."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return "%.1f GiB" % (int(line.split()[1]) / 2**20)
+    except OSError:
+        pass
+    return "unknown"
+
+# DuckDB running out of memory is a limit of the host (or of --memlimit),
+# not a verdict on the gate, so its board line says so; it still counts
+# as not passing
+OOM = "ORACLE_OOM (host limit)"
+
+def is_oom(e):
+    return isinstance(e, duckdb.OutOfMemoryException) or \
+        "Out of Memory" in str(e)
+
 def rows_of(rel):
     cols = rel.columns
     order = sorted(range(len(cols)), key=lambda i: cols[i])
@@ -217,7 +237,8 @@ def main():
             try:
                 witness_check(name, path)
             except Exception as e:
-                results[name] = f"WITNESS_ERROR {e}"
+                label = OOM if is_oom(e) else "WITNESS_ERROR"
+                results[name] = f"{label} {e}"
                 rec(name, err=f"witness: {e}", witness=True)
             continue
         # guard the SPARK-DUMP read too: after a previous gate's oracle
@@ -260,8 +281,10 @@ def main():
             ocols, otypes, orows = timed(
                 lambda: rows_of(con.sql(oracles[name])))
         except Exception as e:
-            results[name] = f"ORACLE_SQL_ERROR {e}"
-            rec(name, spark_rows=len(grows), err=f"oracle sql: {e}")
+            label = OOM if is_oom(e) else "ORACLE_SQL_ERROR"
+            results[name] = f"{label} {e}"
+            rec(name, spark_rows=len(grows),
+                err=f"{'oracle oom' if is_oom(e) else 'oracle sql'}: {e}")
             continue
         if gcols != ocols:
             results[name] = f"SCHEMA_MISMATCH spark={gcols} oracle={ocols}"
@@ -335,7 +358,16 @@ def main():
         if flag == "FAIL":
             bad += 1
         print(f"[{flag}] {name}: {res}")
-    print(f"\n{len(results) - bad}/{len(results)} pass")
+    # the limits an ORACLE_OOM line ran under
+    memlimit = argv[argv.index("--memlimit") + 1] if "--memlimit" in argv \
+        else "unset, DuckDB default"
+    try:
+        memlimit += ": " + con.sql(
+            "SELECT current_setting('memory_limit')").fetchone()[0]
+    except Exception:
+        pass
+    print(f"\nhost MemTotal {host_mem_total()}; DuckDB --memlimit {memlimit}")
+    print(f"{len(results) - bad}/{len(results)} pass")
     sys.exit(1 if bad else 0)
 
 if __name__ == "__main__":

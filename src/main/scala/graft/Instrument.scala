@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.json.JsonMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
@@ -103,10 +104,12 @@ final class Instrument(spark: SparkSession) extends AutoCloseable {
     open = acc
     try {
       val cg0 = CodeGenerator.compileTime
+      val compiles0 = compiles()
       val t0 = System.nanoTime()
       val out = body
       val wallMs = (System.nanoTime() - t0) / 1e6
-      acc.add("codegen_ns" -> (CodeGenerator.compileTime - cg0))
+      acc.add("codegen_ns" -> (CodeGenerator.compileTime - cg0),
+        "codegen_compiles" -> (compiles() - compiles0))
       val complete = drain() && drained
       (out, acc.synchronized(Span(key, wallMs, acc.jobs.values.toSeq,
         acc.totals.toMap, acc.batches.toSeq, complete)))
@@ -122,6 +125,11 @@ final class Instrument(spark: SparkSession) extends AutoCloseable {
 }
 
 object Instrument {
+
+  /** Janino compiles so far: every miss of Spark's compiled-class cache
+    * records one compile time. */
+  private def compiles(): Long =
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** How long a span waits for the listener bus to drain; a span that
     * timed out reads `complete = false`. */
@@ -146,9 +154,11 @@ object Instrument {
     * stages); `actions` and their Catalyst `analysis_ms`,
     * `optimization_ms` and `planning_ms` (every finished query
     * execution, micro-batches included); `codegen_ns`, the exact Janino
-    * compile time (`CodeGenerator.compileTime`). `jobMs` is the time at
-    * least one job ran, `driverGapMs` the rest of the wall: parsing,
-    * compiling, planning, driver-side loops and job launch latency.
+    * compile time (`CodeGenerator.compileTime`), and `codegen_compiles`,
+    * the number of classes Janino compiled (misses of the compiled-class
+    * cache). `jobMs` is the time at least one job ran, `driverGapMs` the
+    * rest of the wall: parsing, compiling, planning, driver-side loops
+    * and job launch latency.
     * `complete` is false when a drain timed out. */
   final case class Span(key: String, wallMs: Double, jobs: Seq[Job],
       totals: Map[String, Long], batches: Seq[Batch], complete: Boolean) {

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.functions.HoistLiterals
+
 /** Shared SparkSession configuration for the driver entry points
   * (Verify/Bench) and the test suites, so correctness-relevant settings
   * live in exactly one place.
@@ -22,6 +24,14 @@ object Sessions {
     *   TIMESTAMP, not TIMESTAMP_NTZ — watermarks and epoch casts
     *   require the instant type, and with a UTC session zone the two
     *   readings denote the same instant (DuckDB oracle parity holds).
+    * - [[graft.functions.HoistLiterals]]: filter and projection
+    *   constants leave the generated Java, so a program that differs
+    *   from an earlier one only in its literals reuses the compiled
+    *   classes.
+    * - codegen.cache.maxEntries 4096 (Spark's default is 100): a full
+    *   catalogue pass compiles about 2,400 distinct classes, and at 100
+    *   entries single gates evicted their own classes mid-run. A static
+    *   conf, so it is set here, before the session exists.
     */
   def builder(master: String, cores: String): SparkSession.Builder =
     SparkSession.builder()
@@ -33,6 +43,8 @@ object Sessions {
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
+      .withExtensions(_.injectColumnar(_ => HoistLiterals.columnar))
 
   /** Default worker threads: measured at sf0.1 the per-task overhead of
     * 32 tiny tasks per stage outweighs the parallelism (105 s total vs

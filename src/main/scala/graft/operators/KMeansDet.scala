@@ -63,8 +63,8 @@ object KMeansDet {
       k: Int, iters: Int = 10): Model = graft.Scope.nested { sc =>
     // k = 1 is legal (the reference's `k-means (1)` reduces the whole
     // frame to one cluster): init picks the single median row, every
-    // iteration computes the global mean, assignExpr degenerates to
-    // lit(0) — no special casing needed beyond allowing it here
+    // iteration computes the global mean, the assignment always picks
+    // cluster 0 — no special casing needed beyond allowing it here
     require(k >= 1, s"k must be >= 1, got $k")
     require(iters > 0, s"iters must be > 0, got $iters")
     require(features.nonEmpty, "k-means needs at least one feature column")
@@ -95,7 +95,7 @@ object KMeansDet {
       features.indices.map(i => r.getDouble(i + 1)).toArray)
     // the k quantile ranks are distinct for any n >= k, so this only
     // fires on a broken ordinal — but a short centroid array would
-    // otherwise surface as an opaque index error in assignExpr
+    // otherwise fit fewer than k clusters without a word
     require(cents.length == k,
       s"init produced ${cents.length} centroids, expected $k")
     for (_ <- 1 to iters) {
@@ -168,8 +168,8 @@ object KMeansDet {
     vec.isNotNull && size(vec) === d && forall(vec, usable)
 
   /** Argmin assignment over an ARRAY column — the high-dimension form.
-    * Same semantics as assignExpr (left-fold squared distance in dim
-    * order, first index achieving the min), via the native
+    * Same semantics as [[assignExprCols]] (left-fold squared distance in
+    * dim order, first index achieving the min), via the native
     * graft.functions.ArgminDist expression: centroids ride as a codegen
     * reference object, so the generated source is IDENTICAL across
     * Lloyd iterations and Spark's codegen cache compiles the kernel
@@ -398,40 +398,18 @@ object KMeansDet {
 
   /** Scalar-column assignment through the SAME native kernel as the
     * vector path: pack the cast features into an array and argmin with
-    * [[graft.functions.ArgminDist]]. Semantics identical to
-    * [[assignExpr]] (left-fold (xᵢ−cᵢ)² in dimension order, lowest
-    * index wins ties — KMeansSpec pins the equivalence), but the
-    * centroids ride in a codegen REFERENCE OBJECT, so the generated
-    * source is identical across Lloyd iterations: one janino compile
+    * [[graft.functions.ArgminDist]]: left-fold (xᵢ−cᵢ)² in dimension
+    * order, lowest index wins ties (KMeansDetSpec pins it against the
+    * literal column form kept in the test tree), but the centroids ride
+    * in a codegen REFERENCE OBJECT, so the generated source is
+    * identical across Lloyd iterations: one janino compile
     * per fit instead of one per iteration (a7_kmeans measured 60
     * codegen compiles ≈ 0.4 s/run on the literal form). Callers
-    * guard/filter unusable rows exactly as for assignExpr. */
+    * guard/filter unusable rows. */
   private[graft] def assignExprCols(cents: Array[Array[Double]],
       feats: Seq[Column]): Column =
     graft.functions.ArgminDist.argmin_dist(
       array(feats.map(_.cast(DoubleType)): _*), cents)
-
-  /** Argmin of squared distance over `cents` order, lowest cluster id
-    * taking ties: array_position(dists, array_min(dists)) − 1 — the
-    * first index achieving the minimum. Semantically identical to the
-    * pairwise CASE chain (j wins iff dist(j) <= every later dist), but
-    * each distance expression appears ONCE: the chain duplicated every
-    * dist k−1 times, which at d = 64, k = 16 meant ~15k expression
-    * nodes and ~30 s of janino per (re)compile — six times per fit,
-    * because each iteration's centroid literals are a new expression
-    * (measured 172 s fit / 45 s label; the array form is seconds).
-    * Distances are squares, so the -0.0 = 0.0 comparison wrinkle can't
-    * arise. */
-  private[graft] def assignExpr(cents: Array[Array[Double]],
-      feats: Seq[Column]): Column = {
-    def dist(j: Int): Column = feats.zipWithIndex.map { case (f, i) =>
-      val x = f.cast(DoubleType) // pin coercion: double minus double
-      (x - lit(cents(j)(i))) * (x - lit(cents(j)(i)))
-    }.reduce(_ + _)
-    val dists = array(cents.indices.map(dist): _*)
-    (array_position(dists, array_min(dists)) - 1)
-      .cast(org.apache.spark.sql.types.IntegerType)
-  }
 
   private def lexCompare(a: Array[Double], b: Array[Double]): Int = {
     var i = 0
@@ -455,7 +433,7 @@ object KMeansDet {
     *
     *  - per-point squared distances left-fold (x − c)² in dimension
     *    order via list_reduce over a list(... ORDER BY dim) — the same
-    *    IEEE addition sequence as assignExpr's fixed `+` chain;
+    *    IEEE addition sequence as ArgminDist's dimension loop;
     *  - the assignment takes the LOWEST cluster id among equal minima
     *    (ROW_NUMBER ORDER BY dist, j ≡ the CASE chain's tie-break);
     *  - centroid means are exact DECIMAL(30,6) sums cast once to

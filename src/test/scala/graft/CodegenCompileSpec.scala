@@ -40,13 +40,16 @@ class CodegenCompileSpec extends AnyFunSuite {
     * - s_ann_pq           → DotQ (+ stored-model ADC path)
     * - s_ann_topk         → MaxCosQ
     * - a7_kmeans          → ArgminDist
+    * - e12_modulo         → HoistedLiteral (`only (bucket % 3 = 1)` and
+    *   the `create column` constants; every filter and projection
+    *   constant of the catalogue goes through it)
     */
   private val representatives = Seq(
     "t_langid_nb", "t_lm_surprisal", "t_nb_classify",
     "t_bpe_encode", "hb_bpe_ids", "hb_wordpiece_ids", "hb_unigram_ids",
     "t_span_corrupt_ids", "t_bpe_specials",
     "d_minhash_lsh", "d_simhash", "d_substring_dedup",
-    "s_ann_rplsh", "s_ann_pq", "s_ann_topk", "a7_kmeans")
+    "s_ann_rplsh", "s_ann_pq", "s_ann_topk", "a7_kmeans", "e12_modulo")
 
   test("representative gates execute with codegen fallback disabled " +
       "(CODEGEN_ONLY factory, no whole-stage fallback)") {

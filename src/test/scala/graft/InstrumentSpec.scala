@@ -33,7 +33,26 @@ class InstrumentSpec extends AnyFunSuite {
     for (p <- Seq("analysis_ms", "optimization_ms", "planning_ms"))
       assert(s.totals.get(p).exists(_ >= 0), s"$p missing: ${s.totals}")
     assert(s.totals.get("codegen_ns").exists(_ >= 0), s.totals)
+    assert(s.totals.get("codegen_compiles").exists(_ >= 0), s.totals)
+    assert((s("codegen_compiles") > 0) == (s("codegen_ns") > 0), s.totals)
     assert(s.batches.isEmpty)
+  }
+
+  test("codegen_compiles: a program that differs from an earlier one " +
+      "only in an `only` literal compiles what an exact re-run compiles") {
+    val events = spark.range(0, 1000, 1, 2).select(col("id").as("user_id"),
+      (col("id") % 5).cast("string").as("event_type"),
+      (col("id") * 1.5).as("value"))
+    def run(r: Int) = graft.hb.Graft.runHb(
+      s"only !(user_id % 4 = $r)\nslice columns event_type value\n" +
+        "group by event_type -> mean\n", events).collect()
+    val first = run(1)
+    val (again, rerun) = measured(run(1))
+    val (other, variant) = measured(run(2))
+    assert(again sameElements first)
+    assert(!(other sameElements first))
+    assert(variant("codegen_compiles") == rerun("codegen_compiles"),
+      s"re-run ${rerun.totals}, variant ${variant.totals}")
   }
 
   test("a gate-shaped stream: per-batch durations, including the " +

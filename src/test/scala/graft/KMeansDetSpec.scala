@@ -26,7 +26,7 @@ class KMeansDetSpec extends AnyFunSuite {
     val df = Ingest.localData(spark, Seq("id", "f1", "f2"), rows)
     val both = df.select(
       KMeansDet.assignExprCols(cents, Seq(col("f1"), col("f2"))).as("a"),
-      KMeansDet.assignExpr(cents, Seq(col("f1"), col("f2"))).as("b"))
+      SpecKMeans.assignExpr(cents, Seq(col("f1"), col("f2"))).as("b"))
       .collect()
     both.foreach(r => assert(r.getInt(0) == r.getInt(1),
       s"kernel ${r.getInt(0)} != literal ${r.getInt(1)}"))

@@ -61,6 +61,19 @@ class OneTrainerPerFamilySpec extends AnyFunSuite {
   }
 }
 
+/** One k-means assignment kernel: [[operators.KMeansDet]] assigns
+  * through [[functions.ArgminDist]], whose centroids ride in a codegen
+  * reference object. The literal column form, which writes k·d new
+  * constants into the plan every Lloyd iteration, lives in the tests
+  * (`SpecKMeans`) as the parity oracle. */
+class OneAssignmentKernelSpec extends AnyFunSuite {
+
+  test("no literal-bearing k-means assignment under src/main") {
+    val hits = SourceScan.matches(Seq("src/main/scala"), """\bassignExpr\b""".r)
+    assert(hits.isEmpty, hits.mkString("assign through ArgminDist:\n", "\n", ""))
+  }
+}
+
 /** One statement translator: [[graft.hb.Engine.applyStatement]]
   * translates every `.hb` statement, `… using` included. StreamHb keeps
   * only what is streaming-specific, and StreamOps neither hand-writes a
