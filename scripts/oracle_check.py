@@ -152,15 +152,18 @@ def main():
                 json.dump(records, f, indent=1, sort_keys=True)
     dumped = {n for n in os.listdir(outdir)
               if os.path.isdir(os.path.join(outdir, n))}
+    expected = set(oracles)
     # --only a,b,c: check just these gates (parallel-worker slicing)
     if "--only" in argv:
-        dumped &= set(argv[argv.index("--only") + 1].split(","))
+        only = set(argv[argv.index("--only") + 1].split(","))
+        dumped &= only
+        expected &= only
     # a gate that failed inside graft.Verify leaves NO dump directory —
     # without this it would silently vanish from the report entirely.
     # --subset: the Verify run was deliberately filtered to a few gates
     # (local iteration), so missing dumps are expected, not failures.
     if "--subset" not in sys.argv:
-        for name in sorted(set(oracles) - dumped):
+        for name in sorted(expected - dumped):
             results[name] = "NO_SPARK_DUMP (gate failed in Verify?)"
             rec(name, err="no spark dump")
     # --witness a,b,c (or "all"): witness-mode compare for gates whose

@@ -168,16 +168,18 @@ object PlanAudit {
     * projected frame; inheriting a wide layout tuned for the heavy scan
     * stages makes every fit job pay `cores` tasks of pure scheduling
     * (s_ann_pq measured 122 jobs × 32 tasks at sf0.1 — ~0.4 s/job of
-    * overhead on 2000 rows). One task per `graft.fit.bytesPerTask`
-    * (default 32 MB), capped at the cluster parallelism; `bytes <= 0`
-    * (unknown) keeps the cluster width — never shrink blind. */
+    * overhead on 2000 rows). One task per [[FitBytesPerTask]], capped
+    * at the cluster parallelism; `bytes <= 0` (unknown) keeps the
+    * cluster width — never shrink blind. */
   def fitParallelism(spark: SparkSession, bytes: Long): Int = {
     val par = spark.sparkContext.defaultParallelism max 1
     if (bytes <= 0) return par
-    val perTask = spark.conf
-      .get("graft.fit.bytesPerTask", (32L << 20).toString).toLong max 1L
-    math.max(1L, math.min(par.toLong, (bytes + perTask - 1) / perTask)).toInt
+    math.max(1L, math.min(par.toLong,
+      (bytes + FitBytesPerTask - 1) / FitBytesPerTask)).toInt
   }
+
+  /** Input bytes per task of a small-model fit pass. */
+  private val FitBytesPerTask = 32L << 20
 
   /** Dev tool: dump formatted physical plans for representative gates. */
   def main(args: Array[String]): Unit = {

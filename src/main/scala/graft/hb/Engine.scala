@@ -1074,12 +1074,6 @@ object Engine {
             s" to `keys`, got ${Printer.print(predE)}")
         compileExpr(predE, f)
       }
-      // plan-keyed model memo (the Dedup.minhashPairs discipline): the
-      // statement can't name its corpus, but the canonicalized plan
-      // identifies it within the session, so repeated programs over the
-      // same frame share one Lloyd fit per (k, iters, d) configuration
-      lazy val planKey = Some(
-        s"hb|${f.df.queryExecution.analyzed.canonicalized.hashCode}|$vecCol")
       val res = mode match {
         case AnnIndex.Exact =>
           val queries = f.df.filter(compileExpr(predE, f))
@@ -1089,13 +1083,12 @@ object Engine {
           // the statement pins the oracle-checked configuration: 16
           // codes per subspace, exact re-rank of a 50-row shortlist
           graft.operators.Similarity.pqTopK(f.df, keyPred, KEY, vecCol,
-            k, m = m, codes = 16, rerank = 50, modelKey = planKey)
+            k, m = m, codes = 16, rerank = 50)
         case AnnIndex.Ivf(n) =>
-          // deterministic cells: the .hb surface promises the engine-
-          // replayable ranking (the gate oracle re-derives the fit)
+          // KMeansDet cells: the ranking replays in any engine (the
+          // gate oracle re-derives the fit)
           graft.operators.Similarity.ivfTopK(f.df, keyPred, KEY, vecCol,
-            k, nCells = n, nprobe = 4, deterministic = true,
-            modelKey = planKey)
+            k, nCells = n, nprobe = 4)
         case AnnIndex.Mmr(lam) =>
           graft.operators.Similarity.mmrTopK(f.df, keyPred, KEY, vecCol,
             k, pool = 50, lambdaTenths = lam)

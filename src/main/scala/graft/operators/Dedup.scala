@@ -228,7 +228,7 @@ object Dedup {
     // Incremental-ingest tier: with `refStore = (cache, refKey)` set,
     // the REFERENCE side's shingle and signature frames persist as
     // parquet artifacts under LineageCache content keys (the cell-model
-    // discipline, Similarity.fitCellsMemo) — a later session dedups a
+    // discipline, Similarity.fitModels) — a later session dedups a
     // new batch against yesterday's corpus by scanning the stored
     // frames instead of re-shingling/re-signing the whole reference.
     // The caller owns key hygiene: change refKey when the reference

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DecimalType, DoubleType}
 
 /** Deterministic Lloyd's k-means — engine-portable clustering.
   *
@@ -58,73 +58,14 @@ object KMeansDet {
       f =!= lit(Double.PositiveInfinity) && f =!= lit(Double.NegativeInfinity)
 
   /** Fit on the non-null feature rows of `df`. `tieBreak` must complete
-    * the feature columns to a total order (any unique row id). */
+    * the feature columns to a total order (any unique row id). The cast
+    * features pack into one array column, as [[assignExprCols]] packs
+    * them, and run the one Lloyd loop ([[fitVecs]]). */
   def fit(df: DataFrame, features: Seq[String], tieBreak: Seq[Column],
-      k: Int, iters: Int = 10): Model = graft.Scope.nested { sc =>
-    // k = 1 is legal (the reference's `k-means (1)` reduces the whole
-    // frame to one cluster): init picks the single median row, every
-    // iteration computes the global mean, the assignment always picks
-    // cluster 0 — no special casing needed beyond allowing it here
-    require(k >= 1, s"k must be >= 1, got $k")
-    require(iters > 0, s"iters must be > 0, got $iters")
+      k: Int, iters: Int = 10): Model = {
     require(features.nonEmpty, "k-means needs at least one feature column")
-    val pts = sc.cache(df
-      .select(features.map(f => col(f).cast(DoubleType).as(f))
-        :+ struct(tieBreak: _*).as("__tb"): _*)
-      // post-cast guard: catches nulls, non-castable values AND NaN —
-      // a NaN feature would pass isNotNull but vanish from the decimal
-      // sum while still counting in count(), silently skewing centroids
-      .filter(features.map(f => usable(col(f))).reduce(_ && _)),
-      "kmdet: points")
-    val order = features.map(col(_).asc) :+ col("__tb").asc
-    // ordinal width follows the FRAME's partitioning, not the shuffle
-    // constant: the fit frame is small/projected, and a 32-way range
-    // exchange of a 1-partition frame is pure task overhead (r16)
-    val (ordDf, n) = Ordinals.withGlobalOrdinalTotal(pts, "__rn", order,
-      numPartitions = pts.rdd.getNumPartitions max 1)
-    require(n >= k, s"k-means needs at least k=$k rows, got $n")
-    val ranks = (0 until k).map(j => ((2L * j + 1) * n) / (2L * k) + 1)
-    // k rows collect; the rank order is applied DRIVER-side (an
-    // orderBy here planned a range exchange + sampling job per fit)
-    val initRows = ordDf
-      .filter(col("__rn").isin(ranks: _*))
-      .select(col("__rn") +: features.map(col): _*)
-      .collect()
-      .sortBy(_.getLong(0))
-    var cents = initRows.map(r =>
-      features.indices.map(i => r.getDouble(i + 1)).toArray)
-    // the k quantile ranks are distinct for any n >= k, so this only
-    // fires on a broken ordinal — but a short centroid array would
-    // otherwise fit fewer than k clusters without a word
-    require(cents.length == k,
-      s"init produced ${cents.length} centroids, expected $k")
-    for (_ <- 1 to iters) {
-      // per-cluster exact-decimal means (queries.Det shape: decimal sum
-      // is order-independent, the one decimal→double cast rounds the
-      // same everywhere)
-      val aggs = features.map { f =>
-        (sum(col(f).cast(dec6)).cast(DoubleType) / count(col(f)))
-          .as(s"__m_$f")
-      }
-      val stats = pts
-        .groupBy(assignExprCols(cents, features.map(col)).as("__cl"))
-        .agg(aggs.head, aggs.tail: _*)
-        .collect()
-        .map(r => r.getAs[Int]("__cl") ->
-          features.map(f => r.getAs[Double](s"__m_$f")).toArray)
-        .toMap
-      cents = cents.zipWithIndex.map { case (prev, j) =>
-        stats.getOrElse(j, prev) // empty cluster keeps its centroid
-      }
-    }
-    // canonical relabel: output id = rank of the centroid in
-    // lexicographic order (original id breaks exact-tie centroids)
-    val sortedIdx = cents.indices.sortWith { (a, b) =>
-      val c = lexCompare(cents(a), cents(b)); if (c != 0) c < 0 else a < b
-    }
-    val perm = Array.ofDim[Int](k)
-    sortedIdx.zipWithIndex.foreach { case (j, rank) => perm(j) = rank }
-    Model(cents, perm)
+    fitVecs(df, Seq((array(features.map(col(_).cast(DoubleType)): _*),
+      features.size, k)), tieBreak, iters).head
   }
 
   /** Canonical cluster-id expression for a fitted model over arbitrary
@@ -181,210 +122,148 @@ object KMeansDet {
       vec: Column): Column =
     graft.functions.ArgminDist.argmin_dist(vec, cents)
 
-  /** fit over an array<double> column of fixed dimension `d` (the
-    * embedding shape). Identical mathematics to `fit` — quantile-row
-    * init over the element-lexicographic order, exact DECIMAL(30,6)
-    * means, empty cluster keeps its centroid, canonical relabel — so
-    * `oracleSql` replicates it given a relation that extracts the `d`
-    * elements as columns. Rows that are not `usableVec` are skipped. */
+  /** Fit over an array<double> column of fixed dimension `d` (the
+    * embedding shape): [[fitVecs]] with one vector. `oracleSql`
+    * replicates it given a relation that extracts the `d` elements as
+    * columns. Rows that are not `usableVec` are skipped. */
   def fitVec(df: DataFrame, vecCol: String, d: Int, tieBreak: Seq[Column],
-      k: Int, iters: Int = 10): Model = graft.Scope.nested { sc =>
-    require(k >= 1, s"k must be >= 1, got $k")
-    require(iters > 0, s"iters must be > 0, got $iters")
-    require(d >= 1, s"need at least one dimension, got $d")
-    def el(i: Int) = element_at(col("__vec"), i + 1)
-    val pts = sc.cache(df
-      .select(transform(col(vecCol), _.cast(DoubleType)).as("__vec"),
-        struct(tieBreak: _*).as("__tb"))
-      .filter(usableVec(col("__vec"), d)), "kmdet: points")
-    val order = (0 until d).map(i => el(i).asc) :+ col("__tb").asc
-    // see fit: ordinal width follows the frame's partitioning
-    val (ordDf, n) = Ordinals.withGlobalOrdinalTotal(pts, "__rn", order,
-      numPartitions = pts.rdd.getNumPartitions max 1)
-    require(n >= k, s"k-means needs at least k=$k rows, got $n")
-    val ranks = (0 until k).map(j => ((2L * j + 1) * n) / (2L * k) + 1)
-    // driver-side rank sort — see fit
-    val initRows = ordDf
-      .filter(col("__rn").isin(ranks: _*))
-      .select(col("__rn"), col("__vec"))
-      .collect()
-      .sortBy(_.getLong(0))
-    var cents = initRows.map(_.getSeq[Double](1).toArray)
-    require(cents.length == k,
-      s"init produced ${cents.length} centroids, expected $k")
-    for (_ <- 1 to iters) {
-      val aggs = (0 until d).map { i =>
-        (sum(el(i).cast(dec6)).cast(DoubleType) / count(el(i)))
-          .as(s"__m_$i")
-      }
-      val stats = pts
-        .groupBy(assignExprVec(cents, col("__vec")).as("__cl"))
-        .agg(aggs.head, aggs.tail: _*)
-        .collect()
-        .map(r => r.getAs[Int]("__cl") ->
-          (0 until d).map(i => r.getAs[Double](s"__m_$i")).toArray)
-        .toMap
-      cents = cents.zipWithIndex.map { case (prev, j) =>
-        stats.getOrElse(j, prev)
-      }
-    }
-    val sortedIdx = cents.indices.sortWith { (a, b) =>
-      val c = lexCompare(cents(a), cents(b)); if (c != 0) c < 0 else a < b
-    }
-    val perm = Array.ofDim[Int](k)
-    sortedIdx.zipWithIndex.foreach { case (j, rank) => perm(j) = rank }
-    Model(cents, perm)
-  }
+      k: Int, iters: Int = 10): Model =
+    fitVecs(df, Seq((col(vecCol), d, k)), tieBreak, iters).head
 
-  /** Fit `vecCols.size` SAME-DIMENSION vector columns of one frame with
-    * a single synchronized Lloyd loop — the fused form of calling
-    * [[fitVec]] once per column. Mathematics per column IDENTICAL to
-    * fitVec (KMeansDetSpec pins model equality): rows explode to
-    * (subspace, vector) with the per-row usable filter applied per
-    * exploded row (the same row multiset each per-column fit filters);
-    * init is each subspace's quantile rows over its own element-
-    * lexicographic order; and each iteration's centroid update groups
-    * by (subspace, cluster) FIRST, so every group sums exactly the
-    * rows the per-column fit's (cluster) group did — exact
-    * DECIMAL(30,6) sums are order-free, so fusing changes nothing.
+  /** The one Lloyd loop. Each entry of `specs` is (vector expression,
+    * its dimension `d`, its `k`) and gets its own model; the entries
+    * share one loop over one cached frame. m separate fits would run
+    * m·iters tiny aggregate-collect jobs whose ~60–100 ms launch latency
+    * dominates at small data (s_ann_pq profiled ~120 jobs, r16); this
+    * runs `iters` (guide §2 job-latency floor).
     *
-    * Why fuse (guide §2 job-latency floor): m independent fits run
-    * m·iters tiny aggregate-collect jobs whose ~60–100 ms job-launch
-    * latency dominates at small per-subspace data (s_ann_pq profiled
-    * ~120 jobs, r16); the fused loop runs `iters` jobs total. The m
-    * ordinal init scans stay per-subspace (each orders by different
-    * keys) and overlap from a small pool (§2.6). Assignment dispatches
-    * on the subspace id through a CASE of [[graft.functions.ArgminDist]]
-    * kernels — centroids ride as codegen reference objects, so the
-    * generated source is identical across iterations (one compile per
-    * fit, as in fitVec). */
-  def fitVecMulti(df: DataFrame, vecCols: Seq[String], d: Int,
-      tieBreak: Seq[Column], k: Int, iters: Int = 10): Seq[Model] =
-    fitVecMultiSpec(df, vecCols.map(c => (c, d, k)), tieBreak, iters)
-
-  /** The general form of [[fitVecMulti]]: each entry of `specs` is
-    * (vector column, its dimension, its k) — mixed dimensions and
-    * cluster counts share the one fused Lloyd loop. Per-entry
-    * mathematics identical to [[fitVec]] (KMeansDetSpec). pqTopK fuses
-    * only its m d/m-dim codebooks here and deliberately keeps the d-dim
-    * IVF coarse-cell fit OUT of the fused loop: the round aggregate
-    * widens to the largest dimension for every exploded row, and fusing
-    * the IVF fit measured 5 → 38 s of task time (d=64, m=8). */
-  def fitVecMultiSpec(df: DataFrame, specs: Seq[(String, Int, Int)],
-      tieBreak: Seq[Column], iters: Int = 10): Seq[Model] = {
+    *  - points: rows explode to (entry, vector); a row is skipped for
+    *    an entry whose vector is not `usableVec`;
+    *  - init: each entry's k quantile rows of its element-lexicographic
+    *    order (rank ((2j+1)·n)/(2k) + 1, ties by `tieBreak`); the
+    *    entries' ordinal jobs overlap from a small pool (§2.6);
+    *  - round: ONE aggregate groups by (entry, cluster), so every group
+    *    sums exactly the rows a one-entry fit's cluster group does, and
+    *    exact DECIMAL(30,6) sums are order-free: fusing changes no bit
+    *    (KMeansDetSpec). Assignment dispatches on the entry through a
+    *    CASE of ArgminDist kernels, so the generated source is the same
+    *    every round (one compile per fit); an empty cluster keeps its
+    *    centroid;
+    *  - relabel: output id = rank of the centroid in lexicographic
+    *    order (the original id breaks exact-tie centroids).
+    *
+    * The round aggregate widens to the largest `d` for every exploded
+    * row, so pqTopK keeps its d-dim IVF cell fit OUT of its d/m-dim
+    * codebook loop (fusing them measured 5 → 38 s of task time at
+    * d = 64, m = 8). */
+  def fitVecs(df: DataFrame, specs: Seq[(Column, Int, Int)],
+      tieBreak: Seq[Column], iters: Int = 10): Seq[Model] =
+      graft.Scope.nested { sc =>
+    // k = 1 is legal (the reference's `k-means (1)` reduces the whole
+    // frame to one cluster): init picks the single median row, every
+    // round computes the global mean, the assignment always picks
+    // cluster 0 — no special casing needed beyond allowing it here
     require(iters > 0, s"iters must be > 0, got $iters")
-    require(specs.nonEmpty, "fitVecMultiSpec needs at least one column")
-    specs.foreach { case (c, dd, kk) =>
-      require(dd >= 1, s"$c: need at least one dimension, got $dd")
-      require(kk >= 1, s"$c: k must be >= 1, got $kk")
+    require(specs.nonEmpty, "k-means needs at least one vector")
+    specs.foreach { case (_, d, k) =>
+      require(d >= 1, s"need at least one dimension, got $d")
+      require(k >= 1, s"k must be >= 1, got $k")
     }
     val m = specs.size
-    if (m == 1) {
-      val (c, dd, kk) = specs.head
-      return Seq(fitVec(df, c, dd, tieBreak, kk, iters))
-    }
     val dims = specs.map(_._2)
-    val ks = specs.map(_._3)
     def el(i: Int) = element_at(col("__vec"), i + 1)
-    // per-row usable filter per SUBSPACE dimension — the same row
-    // multiset each per-column fitVec filters
-    val usableBySub = specs.zipWithIndex.map { case ((_, dd, _), s) =>
-      col("__s") === lit(s) && usableVec(col("__vec"), dd)
-    }.reduce(_ || _)
-    graft.Scope.nested { sc =>
-      // filled ONCE before the concurrent init scans (the r15/r16 lesson:
-      // a concurrent first fill recomputes the projection per future); the
-      // fill also warms every block the loop reads
-      val pts = sc.cache(df
-        .select(struct(tieBreak: _*).as("__tb"),
-          posexplode(array(specs.map { case (c, _, _) =>
-            transform(col(c), _.cast(DoubleType)) }: _*)))
-        .withColumnRenamed("pos", "__s")
-        .withColumnRenamed("col", "__vec")
-        .filter(usableBySub), "kmdet-multi: points")
-      val partsN = (try pts.rdd.getNumPartitions
-        catch { case _: Throwable => 1 }) max 1
-      // per-subspace quantile init — independent ordinal job chains,
-      // overlapped (guide §2.6); the only remaining per-subspace jobs
-      val pool = java.util.concurrent.Executors
-        .newFixedThreadPool(math.min(m, 4))
-      val initCents: Array[Array[Array[Double]]] =
-        try {
-          implicit val ec =
-            scala.concurrent.ExecutionContext.fromExecutor(pool)
-          val futs = (0 until m).map { s =>
-            scala.concurrent.Future {
-              graft.Scope.labeled(s"kmdet-multi: init $s") {
-              val k = ks(s)
-              val sub = pts.filter(col("__s") === s)
-              val order =
-                (0 until dims(s)).map(i => el(i).asc) :+ col("__tb").asc
-              val (ordDf, n) = Ordinals.withGlobalOrdinalTotal(sub,
-                "__rn", order, numPartitions = partsN)
-              require(n >= k,
-                s"k-means needs at least k=$k rows, got $n (subspace $s)")
-              val ranks =
-                (0 until k).map(j => ((2L * j + 1) * n) / (2L * k) + 1)
-              // driver-side rank sort — see fit
-              val initRows = ordDf
-                .filter(col("__rn").isin(ranks: _*))
-                .select(col("__rn"), col("__vec"))
-                .collect()
-                .sortBy(_.getLong(0))
-              val cs = initRows.map(_.getSeq[Double](1).toArray)
-              require(cs.length == k,
-                s"init produced ${cs.length} centroids, expected $k" +
-                  s" (subspace $s)")
-              cs
-            } }
-          }
-          futs.map(f => scala.concurrent.Await
-            .result(f, scala.concurrent.duration.Duration.Inf)).toArray
-        } finally pool.shutdown()
-      var cents = initCents
-      val maxDim = dims.max
-      for (t <- 1 to iters) {
-        // ONE aggregate job updates every subspace's centroids
-        val assign = (1 until m).foldLeft(
-          when(col("__s") === lit(0),
-            assignExprVec(cents(0), col("__vec")))) { (acc, s) =>
-          acc.when(col("__s") === lit(s),
-            assignExprVec(cents(s), col("__vec")))
+    // filled ONCE before the concurrent init scans (the r15/r16 lesson:
+    // a concurrent first fill recomputes the projection per future); the
+    // fill also warms every block the loop reads
+    val pts = sc.cache(df
+      .select(struct(tieBreak: _*).as("__tb"),
+        posexplode(array(specs.map { case (v, _, _) =>
+          v.cast(ArrayType(DoubleType)) }: _*)))
+      .withColumnRenamed("pos", "__s")
+      .withColumnRenamed("col", "__vec")
+      .filter(dims.zipWithIndex.map { case (d, s) =>
+        col("__s") === s && usableVec(col("__vec"), d) }.reduce(_ || _)),
+      "kmdet: points")
+    // ordinal width follows the FRAME's partitioning, not the shuffle
+    // constant: the fit frame is small/projected, and a 32-way range
+    // exchange of a 1-partition frame is pure task overhead (r16)
+    val parts = pts.rdd.getNumPartitions max 1
+    def init(s: Int): Array[Array[Double]] =
+      graft.Scope.labeled(s"kmdet: init $s") {
+        val k = specs(s)._3
+        val order = (0 until dims(s)).map(i => el(i).asc) :+ col("__tb").asc
+        val (ordDf, n) = Ordinals.withGlobalOrdinalTotal(
+          pts.filter(col("__s") === s), "__rn", order, numPartitions = parts)
+        require(n >= k, s"k-means needs at least k=$k rows, got $n")
+        val ranks = (0 until k).map(j => ((2L * j + 1) * n) / (2L * k) + 1)
+        // k rows collect; the rank order is applied DRIVER-side (an
+        // orderBy here planned a range exchange + sampling job per fit)
+        val cs = ordDf.filter(col("__rn").isin(ranks: _*))
+          .select(col("__rn"), col("__vec")).collect()
+          .sortBy(_.getLong(0)).map(_.getSeq[Double](1).toArray)
+        // the k quantile ranks are distinct for any n >= k, so this only
+        // fires on a broken ordinal — but a short centroid array would
+        // otherwise fit fewer than k clusters without a word
+        require(cs.length == k,
+          s"init produced ${cs.length} centroids, expected $k")
+        cs
+      }
+    var cents = inParallel(m)(init)
+    // per-cluster exact-decimal means (queries.Det shape: the decimal
+    // sum is order-independent, the one decimal→double cast rounds the
+    // same everywhere), aggregated to the WIDEST dimension: a shorter
+    // entry's extra columns aggregate nulls and are never read
+    val aggs = (0 until dims.max).map { i =>
+      (sum(el(i).cast(dec6)).cast(DoubleType) / count(el(i))).as(s"__m_$i")
+    }
+    for (t <- 1 to iters) {
+      val assign = (1 until m).foldLeft(
+        when(col("__s") === 0, assignExprVec(cents(0), col("__vec")))) {
+        (acc, s) => acc.when(col("__s") === s,
+          assignExprVec(cents(s), col("__vec")))
+      }
+      val stats = graft.Scope.labeled(s"kmdet: round $t")(pts
+        .groupBy(col("__s"), assign.as("__cl"))
+        .agg(aggs.head, aggs.tail: _*)
+        .collect())
+        .map { r =>
+          val s = r.getAs[Int]("__s")
+          (s, r.getAs[Int]("__cl")) ->
+            (0 until dims(s)).map(i => r.getAs[Double](s"__m_$i")).toArray
         }
-        // aggregate to the WIDEST dimension; a shorter subspace's extra
-        // columns aggregate nulls (count 0, mean null) and are never
-        // read below — each (s, cl) group reads exactly dims(s) means
-        val aggs = (0 until maxDim).map { i =>
-          (sum(el(i).cast(dec6)).cast(DoubleType) / count(el(i)))
-            .as(s"__m_$i")
-        }
-        val stats = graft.Scope.labeled(s"kmdet-multi: round $t")(pts
-          .groupBy(col("__s"), assign.as("__cl"))
-          .agg(aggs.head, aggs.tail: _*)
-          .collect())
-          .map { r =>
-            val s = r.getAs[Int]("__s")
-            (s, r.getAs[Int]("__cl")) ->
-              (0 until dims(s)).map(i => r.getAs[Double](s"__m_$i")).toArray
-          }
-          .toMap
-        cents = Array.tabulate(m) { s =>
-          cents(s).zipWithIndex.map { case (prev, j) =>
-            stats.getOrElse((s, j), prev) // empty cluster keeps centroid
-          }
+        .toMap
+      cents = Array.tabulate(m) { s =>
+        cents(s).zipWithIndex.map { case (prev, j) =>
+          stats.getOrElse((s, j), prev) // empty cluster keeps its centroid
         }
       }
-      (0 until m).map { s =>
-        val cs = cents(s)
-        val sortedIdx = cs.indices.sortWith { (a, b) =>
-          val c = lexCompare(cs(a), cs(b)); if (c != 0) c < 0 else a < b
-        }
-        val perm = Array.ofDim[Int](ks(s))
-        sortedIdx.zipWithIndex.foreach { case (j, rank) => perm(j) = rank }
-        Model(cs, perm)
-      }
+    }
+    cents.toSeq.map { cs =>
+      val perm = Array.ofDim[Int](cs.length)
+      cs.indices.sortWith { (a, b) =>
+        val c = lexCompare(cs(a), cs(b)); if (c != 0) c < 0 else a < b
+      }.zipWithIndex.foreach { case (j, rank) => perm(j) = rank }
+      Model(cs, perm)
     }
   }
+
+  /** `f(0) … f(n-1)`, run from a pool of at most 4 threads created here,
+    * so they inherit the caller's scope and job label; inline for
+    * n = 1. */
+  private def inParallel[T: scala.reflect.ClassTag](n: Int)(
+      f: Int => T): Array[T] =
+    if (n == 1) Array(f(0))
+    else {
+      val pool = java.util.concurrent.Executors
+        .newFixedThreadPool(math.min(n, 4))
+      try {
+        implicit val ec =
+          scala.concurrent.ExecutionContext.fromExecutor(pool)
+        val futs = (0 until n).map(i => scala.concurrent.Future(f(i)))
+        futs.map(scala.concurrent.Await
+          .result(_, scala.concurrent.duration.Duration.Inf)).toArray
+      } finally pool.shutdown()
+    }
 
   /** Canonical cluster id for an array<double> column; NULL for rows
     * that are not `usableVec`. */

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.cache.LineageCache
 
 /** Embedding similarity — deterministic cosine, brute-force and IVF
   * approximate nearest neighbors, cosine near-dup (library surface for
@@ -96,161 +97,108 @@ object Similarity {
         col("cosine"))
   }
 
-  /** Memo for deterministic cell models. The IVF index and the KMeans
-    * cosine dedup quantize the SAME (corpus, L2-normalized, k, iters)
-    * cells; a pipeline that runs both in one output action should pay
-    * for one Lloyd fit, not two — each fit is `iters`+1 full passes of
-    * driver-loop jobs, the dominant cost of both operators. The operator
-    * cannot see data identity, so sharing is OPT-IN via an explicit
-    * caller-provided corpus key (callers must change the key when the
-    * corpus changes); k/iters/d are folded into the memo key so
-    * differently-parameterized fits never collide. The in-memory tier is
-    * [[graft.Scope.memo]] — it lives as long as the enclosing scope.
-    * Entries are k·d doubles — bounded. */
-  /** Persistent tier under the scope memo: with `modelStore` set,
-    * a fitted model is ALSO saved as a k×d-row parquet artifact keyed
-    * by `LineageCache.key("cellmodel", modelKey|k|iters|d)` — the same
-    * content-keyed scheme that checkpoints transformation chains — and
-    * a later SESSION (new JVM, same store root) loads the centroids
-    * instead of re-running the Lloyd driver loop, so incremental ingest
-    * re-probes the SAME cells across restarts (the reuse the
-    * reference's CouchDB cache gives its transformations,
-    * workers/calculator.worker/src/Program.fs:86-88). The caller owns
-    * key hygiene exactly as with `modelKey`: change the key when the
-    * corpus changes. Artifact size is k·d doubles — trivially bounded. */
-  private def fitCellsMemo(modelKey: Option[String],
-      store: Option[graft.cache.LineageCache], e: DataFrame,
-      vecCol: String, d: Int, tieBreak: Seq[Column], k: Int,
-      iters: Int): KMeansDet.Model = {
-    def fit(): KMeansDet.Model =
-      KMeansDet.fitVec(e, vecCol, d, tieBreak, k, iters)
-    modelKey match {
-      case Some(key) =>
-        graft.Scope.memo(("cellmodel", key, k, iters, d))(store match {
-          case Some(lc) =>
-            val ak = lc.key("cellmodel",
-              Seq(key, k.toString, iters.toString, d.toString))
-            modelFromDf(lc.getOrCompute(ak)(
-              modelToDf(e.sparkSession, fit())))
-          case None => fit()
-        })
-      case None => fit()
-    }
-  }
-
-  /** The m per-subspace PQ codebooks, fit FUSED
-    * ([[KMeansDet.fitVecMulti]] — one aggregate job per Lloyd round for
-    * all m subspaces instead of m·iters tiny jobs; guide §2 job-latency
-    * floor), memoised as one entry under `modelKey` like
-    * [[fitCellsMemo]]. Only for callers WITHOUT a persistent store (the
-    * store tier stays on the per-subspace path). */
-  private def fitSubspacesMemo(modelKey: Option[String], frame: DataFrame,
-      m: Int, sub: Int, tieBreak: Seq[Column], codes: Int,
-      iters: Int): Seq[KMeansDet.Model] = {
-    def fit() = KMeansDet.fitVecMultiSpec(frame,
-      (0 until m).map(s => (s"__pq$s", sub, codes)), tieBreak, iters)
-    modelKey match {
-      case Some(key) =>
-        graft.Scope.memo(("pq codebooks", key, m, codes, iters, sub))(fit())
-      case None => fit()
-    }
-  }
-
-  /** One row per original cluster index: (idx, perm, centroid). */
-  private def modelToDf(spark: org.apache.spark.sql.SparkSession,
-      m: KMeansDet.Model): DataFrame = {
-    import spark.implicits._
-    m.centroids.toSeq.zipWithIndex
-      .map { case (c, i) => (i, m.perm(i), c.toSeq) }
-      .toDF("idx", "perm", "centroid")
-  }
-
-  private def modelFromDf(df: DataFrame): KMeansDet.Model = {
-    val rows = df.orderBy("idx").collect() // k rows — bounded by contract
-    KMeansDet.Model(
-      rows.map(_.getAs[scala.collection.Seq[Double]]("centroid").toArray),
-      rows.map(_.getAs[Int]("perm")))
-  }
-
-  /** IVF ANN: KMeans coarse quantization, probe the `nprobe` nearest
-    * cells per query, exact cosine within probed cells. The only full
-    * scan is cell assignment; centroids broadcast. */
-  /** `deterministic = true` swaps the MLlib cell quantizer for
-    * operators.KMeansDet over the normalized vectors (fitVec, a fixed
-    * `fitIters` Lloyd iterations): cell ids become a pure function of
-    * the corpus, so the whole index — normalization, fit, assignment,
-    * probe ranking, final top-k — is re-derivable in SQL (the s_ann_ivf
-    * oracle) and stable across engine versions. Costs a driver-loop
-    * fit vs kmeans||; the default stays MLlib. `fitIters` defaults to
-    * 3, not MLlib's 5: coarse cells need STABILITY (a fixed, engine-
-    * reproducible partition of the sphere), not convergence — recall
-    * depends on multi-probe covering boundary pairs, not on the cells
-    * being the k-means optimum — and each extra iteration is a full
-    * corpus pass in the driver loop. `modelKey` opts into the shared
-    * cell-model memo (see fitCellsMemo). */
-  def ivfTopK(corpus: DataFrame, queryIds: Column => Column, idCol: String,
-      vecCol: String, k: Int, nCells: Int = 16, nprobe: Int = 4,
-      fitFraction: Double = 1.0, seed: Long = 42L,
-      deterministic: Boolean = false, fitIters: Int = 3,
-      modelKey: Option[String] = None,
-      modelStore: Option[graft.cache.LineageCache] = None): DataFrame =
-      graft.Scope.nested { s =>
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val spark = corpus.sparkSession
-    // cached: the quantize/normalize/vectorize projection feeds the
-    // KMeans fit (multiple passes), the assignment transform, and the
-    // query probe — uncached each consumer recomputes the HOF chain
-    val e = s.cache(corpus
-      .select(col(idCol),
-        transform(col(vecCol), _.cast(DoubleType)).as("__dv"))
-      // cluster the L2-NORMALIZED vectors: Euclidean KMeans on the unit
-      // sphere ≈ cosine cells (‖a−b‖² = 2−2cos); clustering raw vectors
-      // mixes magnitude into the cells and costs recall (DedupSpec
-      // measured 0.54 → normalized ≥0.9 recall@10)
+  /** `id`, `__dv` (the vector cast to double) and `__na`, its
+    * L2-normalization: the space every cell model and codebook is fit
+    * in. Euclidean k-means on the unit sphere ≈ cosine cells
+    * (‖a−b‖² = 2−2cos); clustering raw vectors mixes magnitude into the
+    * cells and costs recall (DedupSpec measured 0.54 → normalized ≥0.9
+    * recall@10). */
+  private def normalized(df: DataFrame, id: Column,
+      vecCol: String): DataFrame =
+    df.select(id, transform(col(vecCol), _.cast(DoubleType)).as("__dv"))
       .withColumn("__l2",
         sqrt(aggregate(col("__dv"), lit(0.0), (a, x) => a + x * x)))
       // guard: an all-zero vector has __l2=0; x/0 would feed
       // NaN/Infinity features into the fit
       .withColumn("__na", transform(col("__dv"),
         x => x / greatest(col("__l2"), lit(1e-30))))
-      .withColumn("__features", array_to_vector(col("__na")))
+
+  /** The k-means models of one corpus, through the one model path
+    * ([[graft.cache.LineageCache.model]]). They are memoised in the
+    * open [[graft.Scope]] under `kind`, the fit parameters and the plan
+    * of the corpus' (id, vector) columns, so ivfTopK, cosineDedupKMeans
+    * and pqTopK over one corpus share one fit, and a call never gets
+    * the models of another corpus. With `modelStore` set they are also
+    * saved as one (idx, perm, centroid) table under
+    * `key(kind, modelKey +: params)`: a later session (new JVM, same
+    * store root) loads the centroids instead of re-running the Lloyd
+    * loop, so incremental ingest re-probes the SAME cells across
+    * restarts (the reuse the reference's CouchDB cache gives its
+    * transformations, workers/calculator.worker/src/Program.fs:86-88).
+    * The store cannot see the data: `modelKey` names the corpus, and
+    * the caller changes it when the corpus changes. Every model has `k`
+    * centroids; `idx` runs over all of them in model order. */
+  private def fitModels(corpus: DataFrame, idCol: String, vecCol: String,
+      modelKey: Option[String], modelStore: Option[LineageCache],
+      kind: String, k: Int, params: Int*)(
+      fit: => Seq[KMeansDet.Model]): Seq[KMeansDet.Model] = {
+    require(modelStore.isEmpty || modelKey.isDefined,
+      "a model store keys its artifacts by modelKey: name the corpus")
+    val spark = corpus.sparkSession
+    import spark.implicits._
+    LineageCache.model(modelStore, kind,
+      modelKey.toSeq ++ (k +: params).map(_.toString),
+      corpus.select(col(idCol), col(vecCol)))(
+      fit.flatMap(m => m.centroids.indices.map(j => (m.perm(j),
+          m.centroids(j).toSeq)))
+        .zipWithIndex.map { case ((p, c), i) => (i, p, c) }
+        .toDF("idx", "perm", "centroid"))(
+      // without a store a local table: collected with no Spark job
+      _.collect().sortBy(_.getInt(0)).grouped(k).map(rows => KMeansDet
+        .Model(rows.map(_.getSeq[Double](2).toArray), rows.map(_.getInt(1))))
+        .toSeq)
+  }
+
+  /** The `nCells` coarse cells of `frame`'s `__na` vectors (d-dim), one
+    * [[KMeansDet.fitVec]] through [[fitModels]]. */
+  private def cellModel(corpus: DataFrame, idCol: String, vecCol: String,
+      modelKey: Option[String], modelStore: Option[LineageCache],
+      frame: DataFrame, tieBreak: Column, d: Int, nCells: Int,
+      iters: Int): KMeansDet.Model =
+    fitModels(corpus, idCol, vecCol, modelKey, modelStore, "cellmodel",
+      nCells, iters, d)(
+      Seq(KMeansDet.fitVec(frame, "__na", d, Seq(tieBreak), nCells, iters)))
+      .head
+
+  /** IVF ANN: KMeansDet coarse quantization of the normalized vectors
+    * (fitVec, a fixed `fitIters` Lloyd iterations), probe the `nprobe`
+    * nearest cells per query, exact cosine within probed cells. The
+    * only full scan is cell assignment; centroids broadcast. Cell ids
+    * are a pure function of the corpus, so the whole index —
+    * normalization, fit, assignment, probe ranking, final top-k — is
+    * re-derivable in SQL (the s_ann_ivf oracle) and stable across
+    * engine versions. `fitIters` defaults to 3: coarse cells need
+    * STABILITY (a fixed, engine-reproducible partition of the sphere),
+    * not convergence — recall depends on multi-probe covering boundary
+    * pairs, not on the cells being the k-means optimum — and each extra
+    * iteration is a full corpus pass in the driver loop. The cell model
+    * goes through [[fitModels]] (`modelKey` names the corpus in a
+    * `modelStore`). */
+  def ivfTopK(corpus: DataFrame, queryIds: Column => Column, idCol: String,
+      vecCol: String, k: Int, nCells: Int = 16, nprobe: Int = 4,
+      fitIters: Int = 3, modelKey: Option[String] = None,
+      modelStore: Option[LineageCache] = None): DataFrame =
+      graft.Scope.nested { s =>
+    val spark = corpus.sparkSession
+    // cached: the normalized/quantized projection feeds the fit
+    // (multiple passes), the assignment and the query probe — uncached
+    // each consumer recomputes the HOF chain
+    val e = s.cache(normalized(corpus, col(idCol), vecCol)
       .withColumn("__v", quantize(col("__dv")))
       .withColumn("__nrm", normQ(col("__v"))), "ivf: vectors")
-    // fitFraction < 1 trains the quantizer on a sample (see
-    // cosineDedupKMeans) — the scale knob; the default keeps the full
-    // fit because cell quality directly buys recall for top-k queries
-    // (measured: 0.54 → 0.38 recall@10 on near-random data at 0.2)
+    val d = vecDim(e, "__na")
+    val m = cellModel(corpus, idCol, vecCol, modelKey, modelStore, e,
+      col(idCol), d, nCells, fitIters)
     // assigned feeds the probe and the scoring joins — cache it (filled
     // before those two branches race it), return the (queries × k)-row
     // result eagerly
-    val (assigned, cents) = if (deterministic) {
-      val d = vecDim(e, "__na")
-      val m = fitCellsMemo(modelKey, modelStore, e, "__na", d,
-        Seq(col(idCol)), nCells, fitIters)
-      val asg = e
-        .withColumn("__cell", KMeansDet.labelExprVec(m, col("__na"), d))
-        .select(col(idCol), col("__v"), col("__nrm"), col("__cell"))
-      (asg, KMeansDet.canonicalCentroids(m).zipWithIndex
-        .map { case (c, i) => (i, c) }.toSeq)
-    } else {
-      val sampled =
-        if (fitFraction < 1.0) e.sample(withReplacement = false,
-          fitFraction, seed)
-        else e
-      val fitFrame =
-        if (fitFraction < 1.0 && sampled.limit(nCells).count() < nCells) e
-        else sampled
-      val model = new KMeans().setK(nCells).setSeed(seed).setMaxIter(5)
-        .setFeaturesCol("__features").fit(fitFrame)
-      (model.transform(e)
-        .select(col(idCol), col("__v"), col("__nrm"),
-          col("prediction").as("__cell")),
-        model.clusterCenters.zipWithIndex.map { case (c, i) =>
-          (i, c.toArray) }.toSeq)
-    }
-    s.cache(assigned, "ivf: cell assignment")
-    val centDf = spark.createDataFrame(cents).toDF("__cell", "__cvd")
+    val assigned = s.cache(e
+      .withColumn("__cell", KMeansDet.labelExprVec(m, col("__na"), d))
+      .select(col(idCol), col("__v"), col("__nrm"), col("__cell")),
+      "ivf: cell assignment")
+    val centDf = spark.createDataFrame(KMeansDet.canonicalCentroids(m)
+        .zipWithIndex.map { case (c, i) => (i, c) }.toSeq)
+      .toDF("__cell", "__cvd")
       .withColumn("__cv", quantize(col("__cvd")))
       .withColumn("__cnrm", normQ(col("__cv")))
     val q = assigned.filter(queryIds(col(idCol)))
@@ -277,6 +225,10 @@ object Similarity {
         col("cosine")), "ivf: output")
   }
 
+  /** pqTopK's spread target: one task per MB of corpus input (see
+    * [[graft.PlanAudit.repartitionIfLayoutBound]]). */
+  private val AdcBytesPerTask = 1L << 20
+
   /** Product-quantization ANN with asymmetric distance (Jégou et al.,
     * "Product Quantization for Nearest Neighbor Search", TPAMI 2011):
     * split the L2-normalized vector into `m` subspaces, vector-quantize
@@ -288,9 +240,9 @@ object Similarity {
     *
     * 100 TB shape: after encoding, a corpus vector is m ints + one
     * long (~20 B vs 256 B floats) — the index that fits in memory when
-    * vectors don't. Codebooks are m·codes centroid rows fit once
-    * (memoizable via `modelKey`/`modelStore`, same contract as
-    * [[ivfTopK]]); encoding is a NARROW map (codegen'd argmin literal
+    * vectors don't. Codebooks are m·codes centroid rows fit once in
+    * one fused Lloyd loop ([[fitModels]], as [[ivfTopK]]'s cells);
+    * encoding is a NARROW map (codegen'd argmin literal
     * expression per subspace — no join); the per-query LUT is built on
     * a (queries × m·codes)-row broadcast frame; scoring is a narrow
     * zip of codes against the broadcast LUT plus one per-query top-k
@@ -314,17 +266,17 @@ object Similarity {
     * centroid reconstruction; ties rank by neighbor id at both
     * stages. */
   /** `nCells = C > 0` composes IVF-PQ: a coarse KMeansDet cell model
-    * (SHARED with [[ivfTopK]] via the same modelKey — one Lloyd fit
-    * serves both indexes) assigns every corpus vector a cell as a
-    * narrow literal expression, queries probe their `nprobe` best
-    * cells against the quantized cell centroids, and the ADC zip runs
-    * only on rows whose cell was probed — the candidate-pruned scan
-    * that makes PQ a two-level index at corpus scale. */
+    * (the one [[ivfTopK]] fits over the same corpus, see [[fitModels]])
+    * assigns every corpus vector a cell as a narrow expression, queries
+    * probe their `nprobe` best cells against the quantized cell
+    * centroids, and the ADC zip runs only on rows whose cell was probed
+    * — the candidate-pruned scan that makes PQ a two-level index at
+    * corpus scale. */
   def pqTopK(corpus: DataFrame, queryIds: Column => Column, idCol: String,
       vecCol: String, k: Int, m: Int = 4, codes: Int = 16,
       fitIters: Int = 3, rerank: Int = 0, nCells: Int = 0,
       nprobe: Int = 4, modelKey: Option[String] = None,
-      modelStore: Option[graft.cache.LineageCache] = None): DataFrame =
+      modelStore: Option[LineageCache] = None): DataFrame =
       graft.Scope.nested { sc =>
     val spark = corpus.sparkSession
     // decouple the fit/code/ADC stages from the input's FILE layout:
@@ -334,18 +286,12 @@ object Similarity {
     // rows. No-op when the input already offers >= cores splits.
     // data-PROPORTIONAL spread width (r17): the PQ encode/ADC is ~1k
     // flops per row — light enough that one task chews MBs — so the
-    // spread caps at one task per graft.spread.adcBytesPerTask
-    // (default 1 MB) instead of always fanning to cluster width; at
-    // corpus scale the cap exceeds the width and nothing changes
-    val adcBpt = spark.conf
-      .get("graft.spread.adcBytesPerTask", (1L << 20).toString).toLong
-    val e0 = graft.PlanAudit.repartitionIfLayoutBound(corpus, adcBpt)
-      .select(col(idCol),
-        transform(col(vecCol), _.cast(DoubleType)).as("__dv"))
-      .withColumn("__l2",
-        sqrt(aggregate(col("__dv"), lit(0.0), (a, x) => a + x * x)))
-      .withColumn("__na", transform(col("__dv"),
-        x => x / greatest(col("__l2"), lit(1e-30))))
+    // spread caps at one task per AdcBytesPerTask instead of always
+    // fanning to cluster width; at corpus scale the cap exceeds the
+    // width and nothing changes
+    val e0 = normalized(
+      graft.PlanAudit.repartitionIfLayoutBound(corpus, AdcBytesPerTask),
+      col(idCol), vecCol)
     // dim off the RAW vector column (transform/normalize preserve
     // element count): the probe over e0 paid the spread exchange and
     // the HOF chain for a max(size) aggregate
@@ -354,23 +300,16 @@ object Similarity {
     val sub = d / m
     // the shared sliced frame is cached and filled ONCE before the fits:
     // an r15 attempt at concurrent fits raced its materialization (every
-    // fit's first job recomputed the projection) and measured slower;
-    // filled first, the m per-subspace Lloyd fits are independent driver-loop
-    // job chains and overlap cleanly (guide §2.6 — actions are only
-    // sequential because the driver calls them sequentially). Each fit
-    // is a handful of tiny jobs, so a small pool is plenty; results are
-    // deterministic regardless of scheduling (independent subspaces).
-    // Measured r16 at sf0.1 (honest cold fit, no persisted store):
-    // s_ann_pq 8 sequential fits ~5 s of fit wall → ~1.6 s concurrent.
+    // fit's first job recomputed the projection) and measured slower
     val sliced = sc.cache((0 until m).foldLeft(e0) { (df, s) =>
       df.withColumn(s"__pq$s", slice(col("__na"), s * sub + 1, sub))
     }, "pq: sliced")
     // the fits read a DATA-PROPORTIONAL view of the materialized frame:
     // `sliced` is deliberately wide for the ADC/encode stages (layout
-    // decoupling above), but a Lloyd fit over it is ~120 tiny jobs and
-    // each would pay `cores` tasks of scheduling on a small corpus —
+    // decoupling above), but a Lloyd fit over it is a chain of tiny jobs
+    // and each would pay `cores` tasks of scheduling on a small corpus —
     // coalesce (no shuffle, reads the cached blocks) to one task per
-    // graft.fit.bytesPerTask, capped at cluster width (PlanAudit)
+    // PlanAudit.FitBytesPerTask, capped at cluster width
     val fitPar = graft.PlanAudit.fitParallelism(spark,
       graft.PlanAudit.inputBytes(corpus))
     val fitFrame =
@@ -378,43 +317,28 @@ object Similarity {
         catch { case _: Throwable => fitPar }))
         sliced.coalesce(fitPar)
       else sliced
-    // the pool's threads are created here, so they inherit this call's
-    // scope and job label (the IVF fit's memo lands in the caller's scope)
-    val fitPool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(m + 1, 4))
-    implicit val fitEc =
-      scala.concurrent.ExecutionContext.fromExecutor(fitPool)
-    // the m codebooks in ONE fused Lloyd loop (fitVecMultiSpec — one
-    // aggregate job per round for all m subspaces; r16 ran m
-    // concurrent per-fit driver loops = m·iters tiny jobs of
-    // job-launch latency). The d-dim IVF cell fit stays a CONCURRENT
-    // future, NOT part of the fused loop: fusing mixed dimensions
-    // widens the round aggregate to the largest dim for every
-    // exploded row (measured 5 → 38 s of task time at d=64, m=8 —
-    // the fused aggregate evaluated 64 decimal sum/count pairs on
-    // every 8-dim subspace row). The persistent-store tier keeps the
-    // per-fit path (each artifact loads/saves independently).
+    // the d-dim IVF cell fit runs as a CONCURRENT future beside the m
+    // codebooks' one fused Lloyd loop (KMeansDet.fitVecs), NOT inside
+    // it: fusing mixed dimensions widens the round aggregate to the
+    // largest dim for every exploded row (measured 5 → 38 s of task
+    // time at d=64, m=8). The pool's thread is created here, so it
+    // inherits this call's scope and job label
+    val fitPool = java.util.concurrent.Executors.newSingleThreadExecutor()
     val cf =
-      if (nCells > 0) Some(scala.concurrent.Future {
-        fitCellsMemo(modelKey, modelStore, fitFrame, "__na", d,
-          Seq(col(idCol)), nCells, fitIters)
-      })
-      else None
-    val models =
-      if (modelStore.isEmpty)
-        fitSubspacesMemo(modelKey, fitFrame, m, sub, Seq(col(idCol)),
-          codes, fitIters)
-      else {
-        val modelFuts = (0 until m).map { s =>
-          scala.concurrent.Future {
-            fitCellsMemo(modelKey.map(k0 => s"$k0|pq$s/$m"), modelStore,
-              fitFrame, s"__pq$s", sub, Seq(col(idCol)), codes, fitIters)
-          }
-        }
-        modelFuts.map(f => scala.concurrent.Await
-          .result(f, scala.concurrent.duration.Duration.Inf))
-      }
-    val cellModel = cf.map(f => scala.concurrent.Await
+      try {
+        implicit val fitEc =
+          scala.concurrent.ExecutionContext.fromExecutor(fitPool)
+        Option.when(nCells > 0)(scala.concurrent.Future {
+          cellModel(corpus, idCol, vecCol, modelKey, modelStore, fitFrame,
+            col(idCol), d, nCells, fitIters)
+        })
+      } finally fitPool.shutdown()
+    val models = fitModels(corpus, idCol, vecCol, modelKey, modelStore,
+      "pqcodebooks", codes, m, fitIters, sub)(
+      KMeansDet.fitVecs(fitFrame,
+        (0 until m).map(s => (col(s"__pq$s"), sub, codes)),
+        Seq(col(idCol)), fitIters))
+    val cells = cf.map(f => scala.concurrent.Await
       .result(f, scala.concurrent.duration.Duration.Inf))
     // quantized codebooks + per-code self-dots, driver-side (m·codes·sub
     // longs — bounded by the codebook contract)
@@ -424,11 +348,10 @@ object Similarity {
     val cn2: Seq[Seq[Long]] =
       cq.map(_.map(cv => cv.map(v => v * v).sum))
     val cn2Lit = typedlit(cn2)
-    fitPool.shutdown()
     val coded0 = sliced.withColumn("__codes",
       array((0 until m).map(s =>
         KMeansDet.labelExprVec(models(s), col(s"__pq$s"), sub)): _*))
-    val coded = cellModel match {
+    val coded = cells match {
       case Some(cm) => coded0.withColumn("__cell",
         KMeansDet.labelExprVec(cm, col("__na"), d))
       case None => coded0.withColumn("__cell", lit(0))
@@ -462,12 +385,12 @@ object Similarity {
         x => x("__row")).as("__lut"))
     // probed cells per query (IVF level only): rank quantized cell
     // centroids by cosine against the query, keep nprobe
-    val lutP = cellModel match {
+    val lutP = cells match {
       case Some(cm) =>
-        val cells = KMeansDet.canonicalCentroids(cm).zipWithIndex.map {
-          case (c, i) => (i, c.toSeq.map(x => math.floor(x * 1e6).toLong))
-        }.toSeq
-        val cellDf = spark.createDataFrame(cells).toDF("__cl", "__cv")
+        val cellDf = spark.createDataFrame(
+            KMeansDet.canonicalCentroids(cm).zipWithIndex.map { case (c, i) =>
+              (i, c.toSeq.map(x => math.floor(x * 1e6).toLong)) }.toSeq)
+          .toDF("__cl", "__cv")
           .withColumn("__cn", normQ(col("__cv")))
         val wc = Window.partitionBy(col("query_id"))
           .orderBy(col("__ccos").desc, col("__cl"))
@@ -907,64 +830,29 @@ object Similarity {
   }
 
   /** Cosine near-dup at open scale — the block column doesn't exist, so
-    * blocks are KMeans cells over the L2-normalized vectors (IVF-style
-    * coarse quantization). Each vector is assigned to its `nAssign`
-    * nearest cells (multi-probe), so a near-dup pair straddling one cell
-    * boundary still shares a cell; candidate pairs exist only within
-    * shared cells — never an all-pairs product. Pair volume scales as
-    * Σ cell² instead of n², and cells are hash-partitionable. The small
-    * drops list is materialized eagerly and the signature cache released
-    * (same lifecycle as graft.operators.Dedup). */
+    * blocks are KMeansDet cells over the L2-normalized vectors (IVF-style
+    * coarse quantization, a full-corpus fit: the same cells as
+    * [[ivfTopK]]'s index, so the whole dedup re-derives in SQL — the
+    * d_embed_cosine_kmeans oracle). Each vector is assigned to its
+    * `nAssign` nearest cells (multi-probe), so a near-dup pair straddling
+    * one cell boundary still shares a cell; candidate pairs exist only
+    * within shared cells — never an all-pairs product. Pair volume
+    * scales as Σ cell² instead of n², and cells are hash-partitionable.
+    * The small drops list is materialized eagerly and the vector cache
+    * released (same lifecycle as graft.operators.Dedup). */
   def cosineDedupKMeans(df: DataFrame, idCol: String, vecCol: String,
       threshold: Double = 0.95, nCells: Int = 16, nAssign: Int = 2,
-      fitFraction: Double = 0.2, seed: Long = 42L,
-      deterministic: Boolean = false, fitIters: Int = 3,
-      modelKey: Option[String] = None,
-      modelStore: Option[graft.cache.LineageCache] = None): DataFrame =
+      fitIters: Int = 3, modelKey: Option[String] = None,
+      modelStore: Option[LineageCache] = None): DataFrame =
       graft.Scope.nested { sc =>
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
     val spark = df.sparkSession
-    val e = sc.cache(df
-      .select(col(idCol).as("__id"),
-        transform(col(vecCol), _.cast(DoubleType)).as("__dv"))
-      .withColumn("__l2",
-        sqrt(aggregate(col("__dv"), lit(0.0), (a, x) => a + x * x)))
-      // zero-norm guard — see ivfTopK
-      .withColumn("__na", transform(col("__dv"),
-        x => x / greatest(col("__l2"), lit(1e-30))))
-      .withColumn("__features", array_to_vector(col("__na")))
+    val e = sc.cache(normalized(df, col(idCol).as("__id"), vecCol)
       .withColumn("__v", quantize(col("__dv")))
       .withColumn("__nrm", normQ(col("__v"))), "kmeans dedup: vectors")
-    // deterministic: KMeansDet over the normalized vectors, FULL-corpus
-    // fit (sampling would reintroduce engine dependence) — cell ids and
-    // therefore the whole dedup re-derive in SQL (d_embed_cosine_kmeans
-    // oracle). Default: MLlib trained on a bounded sample (the standard
-    // IVF regime — at open scale you never fit on the full corpus);
-    // falls back to the full frame when the sample can't seed k cells
-    val cents = if (deterministic) {
-      val d = vecDim(e, "__na")
-      // same cells as ivfTopK's deterministic index (fitVec is a pure
-      // function of the vector multiset + tieBreak values, and both
-      // operators feed it the same L2-normalized corpus) — so a shared
-      // modelKey makes the dedup reuse the index's fit verbatim
-      val m = fitCellsMemo(modelKey, modelStore, e, "__na", d,
-        Seq(col("__id")), nCells, fitIters)
-      KMeansDet.canonicalCentroids(m).zipWithIndex
-        .map { case (c, i) => (i, c) }.toSeq
-    } else {
-      val sampled =
-        if (fitFraction < 1.0) e.sample(withReplacement = false,
-          fitFraction, seed)
-        else e
-      val fitFrame =
-        if (fitFraction < 1.0 && sampled.limit(nCells).count() < nCells) e
-        else sampled
-      val model = new KMeans().setK(nCells).setSeed(seed).setMaxIter(5)
-        .setFeaturesCol("__features").fit(fitFrame)
-      model.clusterCenters.zipWithIndex.map { case (c, i) =>
-        (i, c.toArray) }.toSeq
-    }
+    val d = vecDim(e, "__na")
+    val cents = KMeansDet.canonicalCentroids(cellModel(df, idCol, vecCol,
+        modelKey, modelStore, e, col("__id"), d, nCells, fitIters))
+      .zipWithIndex.map { case (c, i) => (i, c) }.toSeq
     val centDf = spark.createDataFrame(cents).toDF("__cell", "__cvd")
       .withColumn("__cv", quantize(col("__cvd")))
       .withColumn("__cnrm", normQ(col("__cv")))

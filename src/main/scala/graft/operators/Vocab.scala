@@ -144,7 +144,7 @@ object Vocab {
             .otherwise(coalesce(element_at(inv, i), lit("<oov>")))))))
   }
 
-  /** Persistent fit — the cell-model contract (Similarity.modelStore)
+  /** Persistent fit — the cell-model contract (Similarity.fitModels)
     * for vocabularies: with a [[graft.cache.LineageCache]] bound, the
     * fitted (token, id, n) frame is saved as a ≤`size`-row parquet
     * artifact under a content key, and a later SESSION (new JVM, same

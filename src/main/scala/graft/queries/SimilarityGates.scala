@@ -19,28 +19,6 @@ object SimilarityGates {
   private[queries] val dotQSql: (String, String) => String = (a, b) =>
     s"CAST(list_sum(list_transform(list_zip($a, $b), x -> x[1]*x[2])) AS DOUBLE)"
 
-  /** Model-memo key for an sf dir's embeddings table, FINGERPRINTED
-    * with the parquet bytes+mtime so a REGENERATED corpus at the same
-    * path can never serve a stale in-JVM cell model (staleness would be
-    * a wrong answer — the oracle re-derives the fit from the data).
-    * In-JVM memo only: the r16 honesty rule removed the persistent
-    * target/modelstore tier from the gates (a timed run must compute
-    * from the parquet inputs), and the memo is `Scope.memo`, which dies
-    * with the gate run's scope — within one gate run it still shares the
-    * coarse-cell fit between the IVF and PQ levels. */
-  private def embKey(d: String): String = {
-    val f = new java.io.File(d, "embeddings.parquet")
-    val (len, mt) =
-      if (f.isFile) (f.length, f.lastModified)
-      else {
-        val fs = Option(f.listFiles).getOrElse(Array.empty[java.io.File])
-          .filter(x => x.isFile && x.getName.endsWith(".parquet"))
-        (fs.map(_.length).sum,
-          if (fs.isEmpty) 0L else fs.map(_.lastModified).max)
-      }
-    s"$d/embeddings|l2|$len|$mt"
-  }
-
   /** Prefix the CTE names of one KMeansDet.oracleSql chain so several
     * chains (one per PQ subspace) coexist in a single WITH clause.
     * Column aliases (__rn/__n/__rank) and subquery aliases stay as-is —
@@ -749,21 +727,17 @@ object SimilarityGates {
              |ORDER BY vec_id ASC NULLS FIRST""".stripMargin)),
 
     // Open-scale cosine dedup: no natural block column — blocks are
-    // KMeans cells over normalized vectors, multi-probe (top-2)
-    // assignment so boundary pairs still share a cell. Cell ids are
-    // engine-specific → rows-only; DedupSpec asserts survivor equality
-    // vs the exhaustive pairwise dedup on clustered data.
-    // FULL oracle (rows-only until r5): deterministic mode — KMeansDet
-    // cells over normalized vectors, full-corpus fit — makes the open-
-    // scale cosine dedup a pure function of the corpus: the oracle
-    // re-derives cells, the 2-nearest multi-probe assignment and the
-    // within-cell quantized-cosine verify, and survivor sets must match
-    // row-for-row. (The MLlib sampled-fit default stays; DedupSpec's
-    // survivor-equality test covers it.)
+    // KMeansDet cells over normalized vectors, multi-probe (top-2)
+    // assignment so boundary pairs still share a cell. FULL oracle
+    // (rows-only until r5): the full-corpus deterministic fit makes the
+    // dedup a pure function of the corpus: the oracle re-derives cells,
+    // the 2-nearest multi-probe assignment and the within-cell
+    // quantized-cosine verify, and survivor sets must match row-for-row.
+    // DedupSpec asserts survivor equality vs the exhaustive pairwise
+    // dedup on clustered data.
     Gate("d_embed_cosine_kmeans",
       (s, d) => Similarity.cosineDedupKMeans(t(s, d, "embeddings"),
-        "vec_id", "embedding", threshold = 0.95, deterministic = true,
-        modelKey = Some(embKey(d)))
+        "vec_id", "embedding", threshold = 0.95)
         .select("vec_id").orderBy(col("vec_id")),
       Some {
         val dim = 64
@@ -894,22 +868,19 @@ object SimilarityGates {
              |FROM q ORDER BY vec_id ASC NULLS FIRST""".stripMargin)),
 
     // IVF ANN (the scale path): 16 coarse cells, nprobe=4. FULL oracle
-    // (rows-only until r5): deterministic mode fits the cells with
-    // KMeansDet over the L2-normalized vectors, so the ENTIRE index —
+    // (rows-only until r5): the cells are a KMeansDet fit over the
+    // L2-normalized vectors, so the ENTIRE index —
     // normalization folds, 3 Lloyd iterations (cells need stability,
     // not convergence — see ivfTopK's fitIters note), canonical cell
     // ids, quantized-cosine probe ranking, final top-k — re-derives in
     // SQL. The oracle chains the KMeansDet CTEs (referencing its
     // __c3/__rel/__km internals) with the probe/scoring stages, all in
-    // the exact arithmetic the Spark side uses. The cell model is
-    // SHARED with d_embed_cosine_kmeans via modelKey: same corpus, same
-    // normalization, same (k, iters) → one Lloyd fit per JVM serves
-    // both gates. MLlib remains ivfTopK's default fit; DedupSpec's
-    // recall tests cover that path.
+    // the exact arithmetic the Spark side uses. These are the cells
+    // d_embed_cosine_kmeans and s_ann_ivfpq fit: same corpus, same
+    // normalization, same (k, iters).
     Gate("s_ann_ivf",
       (s, d) => Similarity.ivfTopK(t(s, d, "embeddings"),
-        id => id < 5, "vec_id", "embedding", k = 10,
-        deterministic = true, modelKey = Some(embKey(d)))
+        id => id < 5, "vec_id", "embedding", k = 10)
         .orderBy(col("query_id"), col("rank")),
       Some(SimilarityGates.ivfOracleSql)),
     // Product-quantization ANN with exact re-rank (Jégou et al. TPAMI
@@ -923,13 +894,13 @@ object SimilarityGates {
     Gate("s_ann_pq",
       (s, d) => Similarity.pqTopK(t(s, d, "embeddings"),
         id => id < 5, "vec_id", "embedding", k = 10, m = 8, codes = 16,
-        rerank = 50, modelKey = Some(embKey(d)))
+        rerank = 50)
         .orderBy(col("query_id"), col("rank")),
       Some(pqOracleSql(m = 8, dim = 64, codes = 16, iters = 3,
         rerank = 50, k = 10))),
 
-    // IVF-PQ composition: the same 16 coarse cells s_ann_ivf fits (one
-    // shared Lloyd fit via the model memo) prune the ADC scan to the
+    // IVF-PQ composition: the same 16 coarse cells s_ann_ivf fits
+    // prune the ADC scan to the
     // nprobe=4 probed cells per query before the 8-codebook PQ scoring
     // and exact re-rank — the two-level index shape vector stores run
     // at corpus scale. FULL oracle: the IVF chain + probe CTEs splice
@@ -937,8 +908,7 @@ object SimilarityGates {
     Gate("s_ann_ivfpq",
       (s, d) => Similarity.pqTopK(t(s, d, "embeddings"),
         id => id < 5, "vec_id", "embedding", k = 10, m = 8, codes = 16,
-        rerank = 50, nCells = 16, nprobe = 4,
-        modelKey = Some(embKey(d)))
+        rerank = 50, nCells = 16, nprobe = 4)
         .orderBy(col("query_id"), col("rank")),
       Some(pqOracleSql(m = 8, dim = 64, codes = 16, iters = 3,
         rerank = 50, k = 10, nCells = 16, nprobe = 4))),

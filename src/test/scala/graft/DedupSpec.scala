@@ -196,7 +196,7 @@ class DedupSpec extends AnyFunSuite {
     val e = spark.read.parquet(s"$dir/embeddings.parquet")
     def query(store: LineageCache) =
       Similarity.ivfTopK(e, id => id < 2, "vec_id", "embedding",
-        k = 2, nCells = 2, nprobe = 2, deterministic = true,
+        k = 2, nCells = 2, nprobe = 2,
         modelKey = Some("spec-corpus|l2"), modelStore = Some(store))
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
         .toSeq
@@ -230,6 +230,31 @@ class DedupSpec extends AnyFunSuite {
       assert(fourth == first)
       assert(memoJobs < loadJobs,
         s"scope memo hit must skip the model load ($memoJobs vs $loadJobs)")
+    }
+  }
+
+  test("cell models and codebooks memoise per corpus: two corpora under " +
+    "one modelKey in one scope each get the rows they get alone") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(5)
+    def corpus(shift: Double) = (0 until 96).map { i =>
+      (i.toLong, Array.fill(16)((rnd.nextGaussian() + shift).toFloat))
+    }.toDF("vec_id", "embedding")
+    val corpora = Seq(corpus(0.0), corpus(1.0))
+    def ivf(e: org.apache.spark.sql.DataFrame) =
+      Similarity.ivfTopK(e, id => id < 4, "vec_id", "embedding", k = 5,
+        nCells = 4, nprobe = 1, modelKey = Some("corpus"))
+        .collect().toSeq
+    def pq(e: org.apache.spark.sql.DataFrame) =
+      Similarity.pqTopK(e, id => id < 4, "vec_id", "embedding", k = 5,
+        m = 4, codes = 4, nCells = 4, nprobe = 1,
+        modelKey = Some("corpus")).collect().toSeq
+    val alone = corpora.map(e => Scope.open(_ => (ivf(e), pq(e))))
+    val together = Scope.open(_ => corpora.map(e => (ivf(e), pq(e))))
+    assert(alone(0) != alone(1), "the corpora must rank differently")
+    together.zip(alone).zipWithIndex.foreach { case ((t, a), i) =>
+      assert(t._1 == a._1, s"ivfTopK rows of corpus $i")
+      assert(t._2 == a._2, s"pqTopK rows of corpus $i")
     }
   }
 
@@ -479,22 +504,17 @@ class DedupSpec extends AnyFunSuite {
     val e = rows.toDF("vec_id", "embedding")
     def survivors(df: org.apache.spark.sql.DataFrame) =
       df.select("vec_id").collect().map(_.getLong(0)).toSet
-    val auto = survivors(Similarity.cosineDedupKMeans(e, "vec_id",
+    // the sf0.01 gate data has no near-dups, so the oracle exercises
+    // the drop stage only here
+    val det = survivors(Similarity.cosineDedupKMeans(e, "vec_id",
       "embedding", threshold = 0.95))
     val exhaustive = survivors(Similarity.cosineDedup(
       e.withColumn("one", lit(0)), "vec_id", "embedding", "one",
       threshold = 0.95))
-    assert(auto == exhaustive,
-      s"only-auto=${auto -- exhaustive} only-exh=${exhaustive -- auto}")
-    assert((0 until 10).forall(i => !auto.contains(1000L + i)),
-      "planted twins must drop")
-    // deterministic (KMeansDet-cell) mode must find the same survivors —
-    // the sf0.01 gate data has no near-dups, so the oracle exercises the
-    // drop stage only here
-    val det = survivors(Similarity.cosineDedupKMeans(e, "vec_id",
-      "embedding", threshold = 0.95, deterministic = true))
     assert(det == exhaustive,
       s"only-det=${det -- exhaustive} only-exh=${exhaustive -- det}")
+    assert((0 until 10).forall(i => !det.contains(1000L + i)),
+      "planted twins must drop")
     assert(spark.sharedState.cacheManager.isEmpty)
   }
 

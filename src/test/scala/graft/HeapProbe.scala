@@ -73,8 +73,8 @@ object HeapProbe {
     }
 
     measure("pq codebooks (m*codes*sub doubles)", "8*16*(d/8)") {
-      // the 8 subspace fits + the coarse cell fit pqTopK/ivfTopK pay —
-      // driver-side state is the centroid arrays only
+      // pqTopK's 8 subspace codebooks, one fused fit — driver-side
+      // state is the centroid arrays only
       val e = embs.select(col("vec_id"),
         transform(col("embedding"), _.cast("double")).as("__dv"))
         .withColumn("__l2",
@@ -82,12 +82,10 @@ object HeapProbe {
         .withColumn("__na", transform(col("__dv"),
           x => x / greatest(col("__l2"), lit(1e-30))))
       val d = 64
-      val models = (0 until 8).map { s =>
-        val sliced = e.withColumn("__pq",
-          slice(col("__na"), s * (d / 8) + 1, d / 8))
-        graft.operators.KMeansDet.fitVec(sliced, "__pq", d / 8,
-          Seq(col("vec_id")), 16, 3)
-      }
+      val models = graft.operators.KMeansDet.fitVecs(e,
+        (0 until 8).map(s =>
+          (slice(col("__na"), s * (d / 8) + 1, d / 8), d / 8, 16)),
+        Seq(col("vec_id")), 3)
       (models, models.map(_.centroids.map(_.length.toLong).sum).sum)
     }
 

@@ -134,8 +134,8 @@ class KMeansDetSpec extends AnyFunSuite {
         r(3).asInstanceOf[Seq[Double]]))
       .toDF("id", "v0", "v1", "v2")
     val cols = Seq("v0", "v1", "v2")
-    val fused = KMeansDet.fitVecMulti(df, cols, 2, Seq(col("id")),
-      k = 4, iters = 3)
+    val fused = KMeansDet.fitVecs(df, cols.map(c => (col(c), 2, 4)),
+      Seq(col("id")), iters = 3)
     val single = cols.map(c =>
       KMeansDet.fitVec(df, c, 2, Seq(col("id")), k = 4, iters = 3))
     fused.zip(single).zipWithIndex.foreach { case ((fm, sm), s) =>
@@ -148,8 +148,9 @@ class KMeansDetSpec extends AnyFunSuite {
     val wide = df.withColumn("vw",
       concat(col("v0"), col("v2"))) // 4-dim, always usable
     val specs = Seq(("v0", 2, 4), ("vw", 4, 3), ("v1", 2, 4))
-    val fusedMixed = KMeansDet.fitVecMultiSpec(wide, specs,
-      Seq(col("id")), iters = 3)
+    val fusedMixed = KMeansDet.fitVecs(wide,
+      specs.map { case (c, dd, kk) => (col(c), dd, kk) }, Seq(col("id")),
+      iters = 3)
     val singleMixed = specs.map { case (c, dd, kk) =>
       KMeansDet.fitVec(wide, c, dd, Seq(col("id")), kk, iters = 3) }
     fusedMixed.zip(singleMixed).zipWithIndex.foreach {

@@ -74,6 +74,19 @@ class OneAssignmentKernelSpec extends AnyFunSuite {
   }
 }
 
+/** One k-means: every fit runs [[operators.KMeansDet.fitVecs]], every
+  * fitted model goes through [[cache.LineageCache.model]], and no
+  * randomized quantizer comes back. */
+class OneKMeansSpec extends AnyFunSuite {
+
+  test("no MLlib import, second model memo or second Lloyd loop under " +
+      "src/main") {
+    val hits = SourceScan.matches(Seq("src/main/scala"),
+      """org\.apache\.spark\.ml\b|fitCellsMemo|fitSubspacesMemo|fitVecMulti\b""".r)
+    assert(hits.isEmpty, hits.mkString("one k-means:\n", "\n", ""))
+  }
+}
+
 /** One statement translator: [[graft.hb.Engine.applyStatement]]
   * translates every `.hb` statement, `… using` included. StreamHb keeps
   * only what is streaming-specific, and StreamOps neither hand-writes a
