@@ -32,6 +32,12 @@ object Sessions {
     *   catalogue pass compiles about 2,400 distinct classes, and at 100
     *   entries single gates evicted their own classes mid-run. A static
     *   conf, so it is set here, before the session exists.
+    * - `file:` through [[graft.io.LocalFiles]] (`FileSystem`) and
+    *   [[graft.io.LocalFilesFs]] (`FileContext`, which Spark's
+    *   checkpoint file manager uses): Hadoop's local file system with
+    *   `setPermission` and `getFileLinkStatus` done in the JVM instead
+    *   of by a `chmod`/`readlink` process each. Other schemes keep
+    *   Hadoop's own implementation.
     */
   def builder(master: String, cores: String): SparkSession.Builder =
     SparkSession.builder()
@@ -44,6 +50,9 @@ object Sessions {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", "4096")
+      .config("spark.hadoop.fs.file.impl", classOf[graft.io.LocalFiles].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.io.LocalFilesFs].getName)
       .withExtensions(_.injectColumnar(_ => HoistLiterals.columnar))
 
   /** Default worker threads: measured at sf0.1 the per-task overhead of

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
@@ -46,67 +46,6 @@ object StreamOps {
   /** Input volume per state partition: 16 MB. */
   private val StateBytesPerPartition = 16L << 20
 
-  /** Checkpoint root for the gate-shaped SYNCHRONOUS streaming queries
-    * (AvailableNow → memory sink → stop): `graft.stream.checkpointDir`
-    * when set (empty string = Spark's default temp-dir behavior), else
-    * `/dev/shm/graft-ckpt` under a local master when /dev/shm is a
-    * writable directory (the Linux RAM tmpfs). Rationale (guide §1/§6
-    * — the micro-batch floor is I/O, not compute, at gate scale): every
-    * micro-batch pays offset-log WAL + commit-log + state-store delta
-    * writes into the checkpoint;
-    * measured at sf0.1 those land 40–270 ms/batch on the disk-backed
-    * /tmp and are pure overhead for a query whose checkpoint is deleted
-    * on stop anyway. Durability was never this shape's contract — Spark
-    * itself deletes the temp checkpoint of an unnamed-location memory
-    * sink on stop; we do the same (unique subdir per query, removed in
-    * a finally). Production streams that must survive a restart pass an
-    * EXPLICIT durable location ([[shardAppendStream]]'s `checkpoint`
-    * parameter) and never come through here. */
-  private[graft] def fastCheckpointRoot(
-      spark: SparkSession): Option[String] =
-    spark.conf.getOption("graft.stream.checkpointDir")
-      .orElse {
-        // a RAM directory of the driver's node: executors on other
-        // nodes would write their state into their own /dev/shm, so
-        // the default holds only for a local master
-        val shm = new java.io.File("/dev/shm")
-        if (spark.sparkContext.isLocal && shm.isDirectory && shm.canWrite)
-          Some("/dev/shm/graft-ckpt")
-        else None
-      }
-      .filter(_.nonEmpty)
-
-  private def deleteRec(f: java.io.File): Unit = {
-    val kids = f.listFiles
-    if (kids != null) kids.foreach(deleteRec)
-    f.delete(): Unit
-  }
-
-  /** Start + drain + stop a gate-shaped streaming query with the fast
-    * checkpoint root applied — the one place the checkpoint lifecycle
-    * (create unique dir → run → delete) lives. Falls back to Spark's
-    * own temp-checkpoint handling when no root resolves. */
-  private def runDrained(spark: SparkSession,
-      w: org.apache.spark.sql.streaming.DataStreamWriter[
-        org.apache.spark.sql.Row]): Unit =
-    fastCheckpointRoot(spark) match {
-      case Some(root) =>
-        val r = new java.io.File(root)
-        r.mkdirs()
-        val dir = java.nio.file.Files
-          .createTempDirectory(r.toPath, "q").toFile
-        try {
-          val q = w.option("checkpointLocation", dir.getAbsolutePath)
-            .start()
-          q.processAllAvailable()
-          q.stop()
-        } finally deleteRec(dir)
-      case None =>
-        val q = w.start()
-        q.processAllAvailable()
-        q.stop()
-    }
-
   /** Size of one test table's parquet file(s) — the per-batch input
     * volume the gate-shaped AvailableNow queries replay. */
   private[graft] def tableBytes(dir: String, table: String): Long = {
@@ -118,33 +57,42 @@ object StreamOps {
   }
 
   /** The one gate-shaped run: start `df` as an AvailableNow query into
-    * a memory sink named `queryName`, drain it ([[runDrained]]) and
-    * return the sink's rows as a frame of `df`'s session. A stateful
+    * a memory sink named `queryName`, drain it and return the sink's
+    * rows as a frame of `df`'s session. A stateful
     * query pins its state partition count from
     * `spark.sql.shuffle.partitions` when it starts; `inputBytes` >= 0
     * runs the query on a CLONE of the session whose conf carries
     * [[stateParallelism]] of that volume (and whose streaming listeners
     * are the session's), so the shared session's conf is never written
-    * and concurrent callers cannot race it. */
+    * and concurrent callers cannot race it. One clone per call, so
+    * concurrent callers never share a query-name namespace; once its query
+    * has stopped, the clone's streaming listener bus and that of the clone
+    * Spark made for the query are released
+    * ([[org.apache.spark.sql.GraftSqlBridge.releaseStreams]]). */
   private[graft] def runToMemory(df: DataFrame, outputMode: String,
       queryName: String, inputBytes: Long = -1L): DataFrame = {
     val spark = df.sparkSession
     val session =
       if (inputBytes < 0) spark
       else {
-        val clone = org.apache.spark.sql.GraftSqlBridge.cloneSession(spark)
+        val clone = GraftSqlBridge.cloneSession(spark)
         clone.conf.set("spark.sql.shuffle.partitions",
           stateParallelism(spark, inputBytes).toString)
         spark.streams.listListeners().foreach(clone.streams.addListener)
         clone
       }
-    runDrained(session, org.apache.spark.sql.GraftSqlBridge
+    // the checkpoint is Spark's temporary one, deleted when the query stops
+    val q = GraftSqlBridge
       .ofRows(session, df.queryExecution.analyzed).writeStream
       .outputMode(outputMode)
       .format("memory")
       .queryName(queryName)
-      .trigger(Trigger.AvailableNow()))
-    org.apache.spark.sql.GraftSqlBridge.ofRows(spark,
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.processAllAvailable()
+    q.stop()
+    if (session ne spark) GraftSqlBridge.releaseStreams(q)
+    GraftSqlBridge.ofRows(spark,
       session.table(queryName).queryExecution.analyzed)
   }
 

@@ -1,9 +1,13 @@
 package org.apache.spark.sql
 
 import org.apache.spark.rdd.RDD
+import org.apache.spark.scheduler.SparkListenerInterface
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+import org.apache.spark.sql.internal.SessionState
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 /** Bridge into the `private[sql]` Column ⇄ Expression converters (Spark 4
@@ -52,4 +56,33 @@ object GraftSqlBridge {
   def drainListenerBus(spark: SparkSession, timeoutMs: Long): Boolean =
     try { spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs); true }
     catch { case _: java.util.concurrent.TimeoutException => false }
+
+  /** Unsubscribe from the context's listener bus the streaming listener
+    * buses of the session `query` was started on and of the clone Spark
+    * made to run it, after draining the bus so every listener has seen
+    * the events posted so far. A session's query manager subscribes one
+    * when the session first touches `streams`, and Spark never removes
+    * it; a session clone that ran a query would otherwise be handed
+    * every later streaming event for the rest of the JVM's life. Call it
+    * once `query` has stopped and its session starts no other query. A
+    * session whose query manager was never built is skipped. */
+  def releaseStreams(query: StreamingQuery): Unit = {
+    def field(cls: Class[_], o: AnyRef, name: String): AnyRef = {
+      val f = cls.getDeclaredField(name)
+      f.setAccessible(true)
+      f.get(o)
+    }
+    val started = query.sparkSession
+    drainListenerBus(started, 60000L)
+    for (s <- Seq(started, query.asInstanceOf[StreamingQueryWrapper]
+        .streamingQuery.sparkSessionForStream)) {
+      val manager = field(classOf[SessionState],
+        s.asInstanceOf[classic.SparkSession].sessionState,
+        "streamingQueryManager")
+      if (manager != null)
+        s.sparkContext.listenerBus.removeListener(
+          field(classOf[classic.StreamingQueryManager], manager, "listenerBus")
+            .asInstanceOf[SparkListenerInterface])
+    }
+  }
 }

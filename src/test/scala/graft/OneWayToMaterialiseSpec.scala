@@ -148,3 +148,19 @@ class OneResolverSpec extends AnyFunSuite {
     assert(hits.isEmpty, hits.mkString("resolve through Runner:\n", "\n", ""))
   }
 }
+
+/** One session builder: [[graft.Sessions.builder]] is the only place a
+  * session is built and the only place the `file:` scheme is bound to
+  * [[graft.io]], so no session of the engine, its mains or its specs
+  * misses the in-process local file system. */
+class OneSessionBuilderSpec extends AnyFunSuite {
+
+  test("sessions are built, and the file scheme bound, only in " +
+      "Sessions.scala") {
+    val hits = SourceScan.matches(Seq("src"),
+      ("""SparkSession\.builder\(|"(spark\.hadoop\.)?fs\.""" +
+        """(AbstractFileSystem\.)?file\.impl"""").r)
+      .filterNot(_.startsWith("src/main/scala/graft/Sessions.scala:"))
+    assert(hits.isEmpty, hits.mkString("build sessions in Sessions:\n", "\n", ""))
+  }
+}

@@ -142,24 +142,6 @@ class StreamSpec extends AnyFunSuite {
     assert(cBefore.forall { case (id, sh, _) => expected(id) == sh })
   }
 
-  test("fast checkpoint root: /dev/shm under a local master, an " +
-      "explicit empty value turns it off") {
-    assert(spark.sparkContext.isLocal)
-    val key = "graft.stream.checkpointDir"
-    val prev = spark.conf.getOption(key)
-    try {
-      spark.conf.unset(key)
-      val shm = new java.io.File("/dev/shm")
-      assert(StreamOps.fastCheckpointRoot(spark) ==
-        Option.when(shm.isDirectory && shm.canWrite)("/dev/shm/graft-ckpt"))
-      spark.conf.set(key, "")
-      assert(StreamOps.fastCheckpointRoot(spark).isEmpty)
-      spark.conf.set(key, "/tmp/graft-ckpt-explicit")
-      assert(StreamOps.fastCheckpointRoot(spark) ==
-        Some("/tmp/graft-ckpt-explicit"))
-    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
-
   test("a stateful run takes its state partitions from a session clone: " +
       "the shared session's shuffle partitions are never written") {
     import scala.jdk.CollectionConverters._
@@ -204,5 +186,19 @@ class StreamSpec extends AnyFunSuite {
     assert(ours.nonEmpty, "no progress reported")
     assert(ours.last.stateOperators.map(_.numShufflePartitions).toSeq ==
       Seq(want.toLong))
+  }
+
+  test("stateful runs release their session clones' streaming listener " +
+      "buses: the count stays flat across runs") {
+    import org.apache.spark.sql.SparkInternals.streamListenerBuses
+    // the first run builds the shared session's own query manager
+    StreamOps.tumblingAgg(spark, dir, "streamspec_buses_0").count()
+    val before = streamListenerBuses(spark)
+    for (i <- 1 to 3) {
+      StreamOps.tumblingAgg(spark, dir, s"streamspec_buses_t$i").count()
+      StreamOps.intervalJoin(spark, dir, s"streamspec_buses_j$i",
+        maxDelayMinutes = 60).count()
+    }
+    assert(streamListenerBuses(spark) == before)
   }
 }
